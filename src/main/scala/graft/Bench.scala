@@ -1,6 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
+  /** query name -> anchored seconds at sf0.1 (BASELINE.md), from each
+    * query's [[graft.queries.QueryDef.anchorS]]. */
+  private[graft] lazy val anchors: Map[String, Double] =
+    SparkEntry.defs.flatMap(d => d.anchorS.map(d.name -> _)).toMap
+
   /** Time each prep step; a FAILED prep records -1 (the failed-query
     * convention) instead of its time-to-failure, so the bench artifact
     * shows when the matching query's number silently includes the build it
@@ -13,7 +19,7 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try { prep(spark, sfDir); true }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] prep $name failed: ${e.getMessage}"); false }
       val dt = (System.nanoTime() - t0) / 1e9
       afterEach()
@@ -21,7 +27,7 @@ object Bench {
     }
 
   /** Ambient drift of this run vs the BASELINE.md anchors
-    * ([[BenchAnchors.Sf01]]): (whole-run ratio, median per-query ratio)
+    * ([[anchors]]): (whole-run ratio, median per-query ratio)
     * over the measured queries that HAVE an anchor (failed -1 rows and
     * un-anchored new queries excluded). (-1, -1) when nothing anchored was
     * measured. This is the "Ambient-load protocol" as data: a reader
@@ -29,7 +35,7 @@ object Bench {
     * re-deriving it by hand. */
   private[graft] def drift(results: Map[String, Double]): (Double, Double) = {
     val anchored = results.toSeq.collect {
-      case (n, v) if v >= 0.0 && BenchAnchors.Sf01.contains(n) => (v, BenchAnchors.Sf01(n))
+      case (n, v) if v >= 0.0 && anchors.contains(n) => (v, anchors(n))
     }
     if (anchored.isEmpty) (-1.0, -1.0)
     else {
@@ -43,15 +49,15 @@ object Bench {
   }
 
   /** Per-query 2x-gate breaches as data (VERDICT r13 task 5): the judge's
-    * acceptance gate is measured <= 2x anchor; `anchor_gaps` only says the
-    * table and query set are in sync, so a breach was previously invisible
-    * until someone recomputed 261 ratios by hand. Each entry is
+    * acceptance gate is measured <= 2x anchor; `anchor_gaps` only says
+    * every query is anchored, so a breach was previously invisible until
+    * someone recomputed 261 ratios by hand. Each entry is
     * "query:anchor:measured:ratio" for an anchored, successfully measured
     * row whose ratio exceeds 2.0. Empty = every row inside the gate. */
   private[graft] def gateExceedances(results: Map[String, Double]): Seq[String] =
     results.toSeq.collect {
-      case (n, v) if v >= 0.0 && BenchAnchors.Sf01.get(n).exists(a => v / a > 2.0) =>
-        val a = BenchAnchors.Sf01(n)
+      case (n, v) if v >= 0.0 && anchors.get(n).exists(a => v / a > 2.0) =>
+        val a = anchors(n)
         // Locale.ROOT: the default locale would render comma decimals on
         // e.g. de_DE hosts inside the persisted artifact of record
         String.format(java.util.Locale.ROOT, "%s:%.2f:%.3f:%.2f",
@@ -92,16 +98,13 @@ object Bench {
     (dt, trail.toSeq)
   }
 
-  /** Anchor-table hygiene as data: a query with no anchor silently shrinks
-    * the drift denominators, an anchor naming no query is a rename that
-    * lost its pin. Computed over the FULL query map (not a scoped
+  /** Anchor hygiene as data: a query with no anchor silently shrinks the
+    * drift denominators. Computed over the FULL registry (not a scoped
     * SPARK_GRAFT_ONLY subset) so a dev-loop run doesn't report every
-    * unselected query as a gap. Empty = table and queries in sync. */
+    * unselected query as a gap. Empty = every query anchored. */
   private[graft] def anchorGaps: Seq[String] =
-    (SparkEntry.queries.keySet -- BenchAnchors.Sf01.keySet).toSeq.sorted
-      .map("query_without_anchor:" + _) ++
-      (BenchAnchors.Sf01.keySet -- SparkEntry.queries.keySet).toSeq.sorted
-        .map("anchor_without_query:" + _)
+    SparkEntry.defs.filter(_.anchorS.isEmpty).map(_.name).sorted
+      .map("query_without_anchor:" + _)
 
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
@@ -225,7 +228,7 @@ object Bench {
       System.err.println(s"[bench] warmup dir: $warmDir")
     queries.foreach { case (name, fn) =>
       try fn(spark, warmDir).count()
-      catch { case e: Throwable => System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
+      catch { case NonFatal(e) => System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
     }
     // measurement hygiene: several queries pin localCheckpoint RDD blocks /
     // broadcasts whose cleanup rides on DRIVER GC (ContextCleaner reclaims
@@ -276,7 +279,7 @@ object Bench {
     val repsApply = sfDir.replaceAll("/+$", "").split('/').last == "sf0.1"
     def repsFor(name: String): Int =
       if (!repsApply) 1
-      else BenchAnchors.Sf01.get(name) match {
+      else anchors.get(name) match {
         case Some(a) if a <= 0.25 => 3
         case Some(a) if a <= 1.5  => 2
         case _                    => 1
@@ -286,7 +289,7 @@ object Bench {
       def oneRep(): Double = {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
         // failed-query convention: -1, not time-to-failure (drift and the
         // gate both exclude negative rows)
@@ -305,7 +308,7 @@ object Bench {
       val dt0 = if (times.exists(_ < 0.0)) -1.0 else times.min
       // stall-retry (r18, see [[stallRetry]]): a row still past the 2x
       // gate re-measures up to twice more; the full trail is emitted
-      val anchor = if (repsApply) BenchAnchors.Sf01.get(name) else None
+      val anchor = if (repsApply) anchors.get(name) else None
       val (dt, trail) = stallRetry(dt0, anchor, maxExtra = 2)(oneRep _)
       if (trail.nonEmpty) retryLog(name) = dt0 +: trail
       name -> dt

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Plan auditor: prints `.explain("formatted")` for the named queries (all
   * when none named) so pushdown/broadcast/codegen can be reviewed per round.
@@ -88,7 +89,7 @@ object Explain {
       val audit = auditPlans.contains(name)
       if (audit) spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try all(name)(spark, sfDir).explain("formatted")
-      catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+      catch { case NonFatal(e) => println(s"explain failed: ${e.getMessage}") }
       finally if (audit) spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
     spark.stop()

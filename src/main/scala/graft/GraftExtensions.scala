@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.graft.{ChunkWindows, CosineSimilarity, GraftFunctions, MortonInterleave, SortedIntersectCount}
+import org.apache.spark.sql.graft.GraftFunctions
 
 /** SparkSessionExtensions entry point: ship the engine's native expressions
   * into any session via configuration —
@@ -13,18 +13,7 @@ import org.apache.spark.sql.graft.{ChunkWindows, CosineSimilarity, GraftFunction
   * For an already-constructed session use
   * [[org.apache.spark.sql.graft.GraftFunctions.register]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("cosine_similarity"),
-      GraftFunctions.info("cosine_similarity", classOf[CosineSimilarity]),
-      GraftFunctions.cosineBuilder))
-    e.injectFunction((FunctionIdentifier("chunk_windows"),
-      GraftFunctions.info("chunk_windows", classOf[ChunkWindows]),
-      GraftFunctions.chunkWindowsBuilder))
-    e.injectFunction((FunctionIdentifier("morton_interleave"),
-      GraftFunctions.info("morton_interleave", classOf[MortonInterleave]),
-      GraftFunctions.mortonBuilder))
-    e.injectFunction((FunctionIdentifier("sorted_intersect_count"),
-      GraftFunctions.info("sorted_intersect_count", classOf[SortedIntersectCount]),
-      GraftFunctions.sortedIntersectBuilder))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach(f =>
+      e.injectFunction((FunctionIdentifier(f.name), f.info, f.builder)))
 }

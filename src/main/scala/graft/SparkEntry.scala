@@ -1,21 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.chunk.Chunkers
-import graft.embed.Embedders
-import graft.enrich.{Enrich, FixtureTransport}
-import graft.io.{Readers, Tables}
-import graft.norm.Norm
-import graft.ops.{Chat, Dedup, Multimodal, Similarity, TextAnalysis}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.pipelines.Pipelines
-import graft.streaming.StreamingIngest
-import graft.vector.VectorOps
+import graft.queries._
 
 /** Driver contract (SURVEY.md §7): one named query per implemented operator
   * from the §2 inventory + north-star extensions, each with a DuckDB oracle
-  * where the semantics are ANSI-SQL-expressible.
+  * where the semantics are ANSI-SQL-expressible. Each query is one
+  * [[graft.queries.QueryDef]] in its family object under `graft.queries`;
+  * the contract maps below are derived from that one registry.
   *
   * Oracle-parity conventions (see SURVEY.md §5.1):
   *  - money/value aggregates run on integer cents (`ROUND(x*100)` per row, then
@@ -30,9154 +23,26 @@ import graft.vector.VectorOps
   */
 object SparkEntry {
 
-  /** Generalization ladder for the privacy family: account balance banded
-    * 100 → 1000 → 5000 → dropped, nation/segment kept. Used by
-    * `privacy_generalize` and PrivacySpec's lattice-walk pin. */
-  private[graft] def privacyLadder: Seq[graft.ops.Privacy.GeneralizationLevel] = {
-    val base = Seq("c_nationkey" -> col("c_nationkey"),
-      "c_mktsegment" -> col("c_mktsegment"))
-    Seq(
-      graft.ops.Privacy.GeneralizationLevel("band100",
-        base :+ ("bal_band" -> graft.ops.Privacy.band(col("c_acctbal"), 100.0))),
-      graft.ops.Privacy.GeneralizationLevel("band1000",
-        base :+ ("bal_band" -> graft.ops.Privacy.band(col("c_acctbal"), 1000.0))),
-      graft.ops.Privacy.GeneralizationLevel("band5000",
-        base :+ ("bal_band" -> graft.ops.Privacy.band(col("c_acctbal"), 5000.0))),
-      graft.ops.Privacy.GeneralizationLevel("drop_bal", base))
-  }
-
-  /** Shared body of the stream_stateful_sessions rows: the custom
-    * flatMapGroupsWithState sessionizer (30-min gap, event-time timeout).
-    * Each user's FINAL session is excluded on both sides: whether it was
-    * emitted depends on whether the end-of-stream watermark fired its
-    * timeout — a boundary artifact of draining a finite stream, not of
-    * the operator. Non-final sessions are always closed by their
-    * successor in-batch. File sink, not memory sink: emitted sessions
-    * stay distributed (the memory sink collected millions of rows into
-    * the driver at the sf30 audit and killed the context). `variant`
-    * keeps concurrent postures' sinks from colliding. */
-  private def statefulSessionsQuery(s: SparkSession, dir: String,
-                                    variant: String = ""): DataFrame = {
-    val sessBase = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_stateful_sessions$variant-${s.sparkContext.applicationId}").getAbsolutePath
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(sessBase), true)
-    val out = graft.streaming.StatefulSessionizer.run(s, dir, outDir = Some(sessBase))
-    val finals = graft.streaming.StatefulSessionizer.lastSessionStarts(Tables.events(s, dir))
-    out.join(finals, Seq("user_id", "session_start_s"), "left_anti")
-      .select(col("user_id"), col("session_start_s"), col("n_events"))
-      .orderBy(col("user_id"), col("session_start_s"))
-  }
-
-  private def fixturesDir: String =
-    sys.env.getOrElse("GRAFT_FIXTURES", "/root/repo/fixtures")
-
-  /** Synthetic DOI/journal derivations over `documents` — the reference's
-    * bibliography columns don't exist in the fixture tables, so the funnel
-    * operators run on deterministically derived ones (same expressions in
-    * the oracle SQL). */
-  private val DoiRawSql =
-    """CASE CAST(doc_id % 4 AS INT)
-      | WHEN 0 THEN 'https://doi.org/10.1234/' || source || '.' || doc_id
-      | WHEN 1 THEN 'HTTP://DX.DOI.ORG/10.5678/' || upper(source) || '.' || doc_id
-      | WHEN 2 THEN '10.9990/' || source || '.' || doc_id || '​'
-      | ELSE 'see 10.7770/' || source || '.' || doc_id || ' appendix' END""".stripMargin
-  private val JournalRawSql = "'{' || upper(source) || '}  Journal   of  ' || lang"
-
-  /** The assembled enrichment mini-lifecycle over `documents` (J2+J3+J5+P7+A3)
-    * shared by split_failures / summary_counts / skip_reasons. */
-  private def assembled(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val todo = Enrich.resumeAntiJoin(
-      docs, docs.filter(col("doc_id") % 5 === 0).select("doc_id"), "doc_id")
-    val idMap = docs.filter(col("doc_id") % 7 =!= 0)
-      .select(col("doc_id"), concat(lit("PMC"), col("doc_id")).as("pmcid"))
-    Enrich.enrichJoin(todo, idMap, "doc_id")
-      .withColumn("body_len", length(col("text")))
-      .withColumn("ok",
-        col("pmcid").isNotNull && col("doc_id") % 11 =!= 0 && col("body_len") >= 200)
-      .withColumn("reason",
-        when(col("ok"), lit(null).cast("string"))
-          .when(col("pmcid").isNull,
-            when(col("doc_id") % 3 === 0, lit("idconv HTTP 400")).otherwise(lit("idconv: no PMCID")))
-          .when(col("doc_id") % 11 === 0, lit("PMC fetch failed (batched only)"))
-          .otherwise(lit("abstract_only")))
-  }
-
-  private val AssembledSql =
-    """WITH todo AS (SELECT * FROM documents WHERE doc_id % 5 <> 0),
-      |idmap AS (SELECT doc_id, 'PMC' || doc_id AS pmcid FROM documents WHERE doc_id % 7 <> 0),
-      |assembled AS (
-      |  SELECT t.doc_id, t.lang, i.pmcid, length(t.text) AS body_len,
-      |         (i.pmcid IS NOT NULL AND t.doc_id % 11 <> 0 AND length(t.text) >= 200) AS ok,
-      |         CASE WHEN (i.pmcid IS NOT NULL AND t.doc_id % 11 <> 0 AND length(t.text) >= 200) THEN NULL
-      |              WHEN i.pmcid IS NULL THEN (CASE WHEN t.doc_id % 3 = 0 THEN 'idconv HTTP 400' ELSE 'idconv: no PMCID' END)
-      |              WHEN t.doc_id % 11 = 0 THEN 'PMC fetch failed (batched only)'
-      |              ELSE 'abstract_only' END AS reason
-      |  FROM todo t LEFT JOIN idmap i ON t.doc_id = i.doc_id)""".stripMargin
-
-  /** The token-window chunk relation (32-stride / 40-token windows) shared
-    * by chunk_tokens and pack_sequences — the stride/window constants live
-    * here once per engine (mirrored by [[DuckTokenChunks]]). */
-  private def tokenChunks(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .withColumn("_toks", split(trim(regexp_replace(col("text"), "\\s+", " ")), " "))
-      .withColumn("_n", size(col("_toks")))
-      .filter(col("_n") > 0)
-      .withColumn("chunk_index", explode(expr("sequence(0, cast((_n - 1) div 32 as int))")))
-      .withColumn("_start", col("chunk_index") * 32)
-      .withColumn("n_tokens", least(lit(40), col("_n") - col("_start")).cast("long"))
-
-  private val DuckTokenChunks =
-    """t AS (SELECT doc_id, source, string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS toks FROM documents),
-      |w AS (SELECT doc_id, source, toks, len(toks) AS n, unnest(generate_series(0, (len(toks) - 1) // 32)) AS chunk_index
-      |      FROM t WHERE len(toks) > 0),
-      |tc AS (SELECT doc_id, source, toks, n, CAST(chunk_index AS INT) AS chunk_index,
-      |         CAST(least(40, n - chunk_index * 32) AS BIGINT) AS n_tokens FROM w)""".stripMargin
-
-  /** Synthetic media dimensions from payload bytes — the resize-geometry
-    * fixture (multimodal_resize), mirrored by [[DuckSynthDims]].
-    * multimodal_meta no longer uses this: it decodes REAL container
-    * headers instead (see the query). */
-  private def synthDims(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.withPayload(Tables.documents(spark, dir), "doc_id", "text")
-      .withColumn("n_bytes", expr("octet_length(payload)").cast("long"))
-      .withColumn("width", (lit(32L) + col("n_bytes") % 512).cast("int"))
-      .withColumn("height", (lit(32L) + (col("n_bytes") * 7) % 512).cast("int"))
-
-  /** Shared boilerplate-corpus synthesis (Spark expr + DuckDB CTE pair):
-    * the fixture text carries no newlines or cross-doc chrome, so the
-    * boilerplate rows synthesize a per-source banner/footer every doc of
-    * the source shares (df = docs-per-source, dropped at maxDocFreq 10),
-    * a promo line shared by the doc_id%7 cohort (df crosses the threshold
-    * only at larger SFs — the mid-band), and the sentence-split body.
-    * Lives once so text_boilerplate and curation_full can't drift. */
-  private val BoilerSynthExpr =
-    "'subscribe to the ' || source || ' newsletter' || '\n' || " +
-      "'promo code SAVE' || CAST(doc_id % 7 AS STRING) || '\n' || " +
-      "replace(text, '. ', '\n') || '\n' || " +
-      "'copyright ' || source || ' all rights reserved'"
-
-  /** Probe-only accessors (graft.tools decomposition probes; not part of
-    * any query path). */
-  private[graft] def BoilerSynthExprForProbe: String = BoilerSynthExpr
-  private[graft] def multimodalPayloadsForProbe(s: SparkSession, docs: DataFrame): DataFrame =
-    multimodalPayloadsOf(s, docs)
-
-  /** DuckDB replay of [[BoilerSynthExpr]]: ends in d0(doc_id, source, t). */
-  private val DuckBoilerSynth =
-    """d0 AS (SELECT doc_id, source,
-      |   'subscribe to the ' || source || ' newsletter' || chr(10) ||
-      |   'promo code SAVE' || CAST(doc_id % 7 AS VARCHAR) || chr(10) ||
-      |   replace(text, '. ', chr(10)) || chr(10) ||
-      |   'copyright ' || source || ' all rights reserved' AS t
-      | FROM documents)""".stripMargin
-
-  private val DuckSynthDims =
-    """SELECT doc_id AS media_id,
-      |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-      |  CAST(32 + octet_length(encode(text)) % 512 AS INT) AS width,
-      |  CAST(32 + (octet_length(encode(text)) * 7) % 512 AS INT) AS height
-      |FROM documents""".stripMargin
-
-  /** The minhash-LSH candidate-pair CTE chain (mirrors
-    * [[graft.ops.Dedup.minhashCandidates]] with k=3, 16 hashes, bands of
-    * 2) — shared by dedup_minhash and dedup_clusters so the signature
-    * arithmetic lives once per engine. Ends in a `mh_pairs` relation. */
-  /** The shingle→signature prefix (CTEs t, sh, hashed, seeds, sig) shared
-    * by every minhash replay; [[duckMinhashPairs]] appends the fixed
-    * r = 2 banding, the banding-curve oracle appends per-r bandings. */
-  private def duckMinhashSig(rel: String): String =
-    s"""t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks FROM $rel),
-      |sh AS (SELECT DISTINCT doc_id, unnest(CASE WHEN len(toks) >= 3
-      |         THEN list_transform(generate_series(0, len(toks) - 3), i -> array_to_string(list_slice(toks, i + 1, i + 3), ' '))
-      |         ELSE [array_to_string(toks, ' ')] END) AS shingle FROM t),
-      |hashed AS (SELECT doc_id,
-      |             CAST('0x' || substring(md5(shingle), 1, 15) AS BIGINT) AS m1,
-      |             CAST('0x' || substring(md5(shingle), 17, 14) AS BIGINT) AS m2 FROM sh),
-      |seeds AS (SELECT doc_id, m1, m2, unnest(generate_series(0, 15)) AS seed FROM hashed),
-      |sig AS (SELECT doc_id, seed, MIN(m1 + seed * m2) AS mh FROM seeds GROUP BY 1, 2)""".stripMargin
-
-  private def duckMinhashPairs(rel: String): String =
-    s"""${duckMinhashSig(rel)},
-      |bands AS (SELECT doc_id, seed // 2 AS band_idx,
-      |            MAX(CASE WHEN seed % 2 = 0 THEN mh END) || '|' || MAX(CASE WHEN seed % 2 = 1 THEN mh END) AS band_val
-      |          FROM sig GROUP BY 1, 2),
-      |mh_pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id)""".stripMargin
-
-  private val DuckMinhashPairs = duckMinhashPairs("documents")
-
-  /** [[graft.ops.Dedup.coherentSample]]'s membership replayed as a DuckDB
-    * subquery over `rel`: h0 = MIN 3-shingle 60-bit md5 hash, kept at
-    * h0 % M == 0 with M = greatest(1, |rel| // budget), the budget
-    * interpolated from the SAME shared constant the Scala drivers pass —
-    * shared by every *_tuned oracle so the two engines cannot silently
-    * diverge on the sample. */
-  private def duckCoherentSample(rel: String): String =
-    s"""(SELECT d.doc_id, d.text FROM $rel d JOIN (
-      |     SELECT doc_id, MIN(CAST('0x' || substring(md5(shingle), 1, 15) AS BIGINT)) AS h0
-      |     FROM (SELECT doc_id, unnest(CASE WHEN len(toks) >= 3
-      |              THEN list_transform(generate_series(0, len(toks) - 3), i -> array_to_string(list_slice(toks, i + 1, i + 3), ' '))
-      |              ELSE [array_to_string(toks, ' ')] END) AS shingle
-      |           FROM (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks FROM $rel))
-      |     GROUP BY doc_id) h USING (doc_id)
-      |   WHERE h.h0 % GREATEST(1, (SELECT COUNT(*) FROM $rel) // ${graft.ops.Dedup.DefaultSampleBudgetDocs}) = 0)""".stripMargin
-
-  /** The dedup_lsh_curve oracle replay, relation-parameterized so the
-    * full-corpus row and the fixed-sample tuning row share one generator:
-    * one signature prefix; per-r banding (ordered in-band mh concat),
-    * production-capped bucket pairing, list_intersect verify at
-    * >= 5000 bp, union truth across tiers. */
-  private def duckLshCurve(rel: String): String = {
-    val cap = graft.ops.Dedup.DefaultMaxBucket
-    val tiers = Seq(1, 2, 4)
-    val tierCtes = tiers.map { r =>
-      s"""bands_$r AS (SELECT doc_id, seed // $r AS band_idx,
-        |    array_to_string(list(mh ORDER BY seed), '|') AS band_val
-        |  FROM sig GROUP BY 1, 2),
-        |bc_$r AS (SELECT band_idx, band_val, COUNT(*) AS n FROM bands_$r GROUP BY 1, 2),
-        |pairs_$r AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands_$r a JOIN bands_$r b ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-        |  JOIN bc_$r c ON c.band_idx = a.band_idx AND c.band_val = a.band_val
-        |  WHERE c.n <= $cap),
-        |conf_$r AS (SELECT p.doc_a, p.doc_b FROM pairs_$r p
-        |  JOIN csets sa ON sa.doc_id = p.doc_a JOIN csets sb ON sb.doc_id = p.doc_b
-        |  WHERE (10000 * len(list_intersect(sa.s, sb.s))) // (sa.nsh + sb.nsh - len(list_intersect(sa.s, sb.s))) >= 5000)""".stripMargin
-    }.mkString(",\n")
-    val union = tiers.map(r => s"SELECT doc_a, doc_b FROM conf_$r").mkString(" UNION ")
-    val rows = tiers.map { r =>
-      s"""SELECT CAST($r AS BIGINT) AS rows_per_band, CAST(${16 / r} AS BIGINT) AS n_bands,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM pairs_$r) AS n_candidates,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM conf_$r) AS n_confirmed,
-        |  CASE WHEN (SELECT COUNT(*) FROM pairs_$r) = 0 THEN 0
-        |       ELSE CAST((SELECT COUNT(*) FROM conf_$r) * 10000 // (SELECT COUNT(*) FROM pairs_$r) AS BIGINT) END AS precision_bp,
-        |  CASE WHEN (SELECT COUNT(*) FROM truth) = 0 THEN 10000
-        |       ELSE CAST((SELECT COUNT(*) FROM conf_$r) * 10000 // (SELECT COUNT(*) FROM truth) AS BIGINT) END AS recall_bp""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH ${duckMinhashSig(rel)},
-      |csets AS (SELECT doc_id, list(DISTINCT m1) AS s, COUNT(DISTINCT m1) AS nsh FROM hashed GROUP BY 1),
-      |$tierCtes,
-      |truth AS ($union)
-      |$rows
-      |ORDER BY rows_per_band""".stripMargin
-  }
-
-
-  /** Synthesized conversations shared by chat_qa and chat_render: each
-    * document's sentences become alternating user/assistant turns. Plants:
-    * %7 docs open with the assistant (parity offset), %11 docs carry TWO
-    * user turns up front (strict alternation must flag them). Split is on
-    * the literal '. ' so the DuckDB replay can use its non-regex
-    * string_split. */
-  private def chatConvs(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), expr(
-      """transform(filter(split(text, '\\. '), x -> x <> ''),
-        |  (x, i) -> named_struct(
-        |    'role', CASE WHEN doc_id % 11 = 0 AND i < 2 THEN 'user'
-        |      WHEN (i + CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END) % 2 = 0 THEN 'user'
-        |      ELSE 'assistant' END,
-        |    'content', x))""".stripMargin).as("turns"))
-
-  /** The chat synthesis replayed in DuckDB: sentence list + 1-indexed role
-    * list (generate_series stands in for the lambda index). Shared by both
-    * chat oracles; ends in ch(doc_id, sents, roles). */
-  private val DuckChatConvs =
-    """ch_s AS (SELECT doc_id, list_filter(string_split(text, '. '), x -> x <> '') AS sents FROM documents),
-      |ch AS (SELECT doc_id, sents,
-      |    list_transform(generate_series(1, len(sents)), i ->
-      |      CASE WHEN doc_id % 11 = 0 AND i <= 2 THEN 'user'
-      |           WHEN ((i - 1) + CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END) % 2 = 0 THEN 'user'
-      |           ELSE 'assistant' END) AS roles
-      |  FROM ch_s)""".stripMargin
-
-  /** The preference-pair synthesis + per-pair metric CTE chain (mirrors
-    * [[graft.ops.Chat.prefQa]] over the pref_qa query's overlapping-window
-    * pairs) — shared by pref_qa and pref_bias_card; ends in
-    * m(doc_id, chosen_tokens, rejected_tokens, identical, inter, uni). */
-  private val DuckPrefPairs =
-    """p AS (SELECT doc_id,
-      |    substring(text, 1, CAST((3 * length(text)) // 5 AS INT)) AS chosen,
-      |    CASE WHEN doc_id % 13 = 0 THEN substring(text, 1, CAST((3 * length(text)) // 5 AS INT))
-      |         WHEN doc_id % 17 = 0 THEN ''
-      |         ELSE substring(text, CAST((2 * length(text)) // 5 AS INT) + 1, CAST(length(text) AS INT)) END AS rejected
-      |  FROM documents),
-      |w AS (SELECT doc_id, chosen, rejected,
-      |    list_filter(string_split_regex(lower(chosen), '\s+'), x -> x <> '') AS cw,
-      |    list_filter(string_split_regex(lower(rejected), '\s+'), x -> x <> '') AS rw
-      |  FROM p),
-      |d AS (SELECT doc_id, chosen, rejected, cw, rw,
-      |    list_distinct(cw) AS cd, list_distinct(rw) AS rd FROM w),
-      |m AS (SELECT doc_id,
-      |    CAST(len(cw) AS BIGINT) AS chosen_tokens,
-      |    CAST(len(rw) AS BIGINT) AS rejected_tokens,
-      |    CAST(CASE WHEN chosen = rejected THEN 1 ELSE 0 END AS BIGINT) AS identical,
-      |    CAST(len(list_filter(cd, x -> list_contains(rd, x))) AS BIGINT) AS inter,
-      |    CAST(len(list_distinct(list_concat(cd, rd))) AS BIGINT) AS uni
-      |  FROM d)""".stripMargin
-
-  /** One personalized-PageRank iteration (seed-only teleport and
-    * dangling re-teleport — mirrors
-    * [[graft.ops.Graph.personalizedPageRank]]): g_pr{i-1} → g_pr{i}.
-    * graph_ppr unrolls four. */
-  private def duckPprIter(i: Int): String = {
-    val p = s"g_pr${i - 1}"
-    s"""g_pc$i AS (SELECT e.dst, SUM(r.pr // o.odeg) AS cin
-      |  FROM g_e e JOIN g_odeg o USING (src) JOIN $p r ON r.node = e.src GROUP BY e.dst),
-      |g_pd$i AS (SELECT coalesce(SUM(pr), 0) AS dmass FROM $p WHERE node NOT IN (SELECT src FROM g_odeg)),
-      |g_pr$i AS (SELECT nd.node, nd.is_seed,
-      |    CAST(CASE WHEN nd.is_seed = 1 THEN (15 * CAST(1000000000 AS BIGINT) // 100) // ns.ns ELSE 0 END
-      |      + (85 * (coalesce(c.cin, 0)
-      |        + CASE WHEN nd.is_seed = 1 THEN d.dmass // ns.ns ELSE 0 END)) // 100 AS BIGINT) AS pr
-      |  FROM g_snodes nd CROSS JOIN g_ns ns CROSS JOIN g_pd$i d LEFT JOIN g_pc$i c ON c.dst = nd.node)""".stripMargin
-  }
-
-  /** The synthesized link graph shared by graph_pagerank and
-    * graph_triangles (mirrors the queries' explode synthesis): raw links,
-    * self-loop-free distinct directed edges, out-degrees. */
-  private val DuckGraphEdges =
-    """g_raw AS (SELECT doc_id AS src, unnest([doc_id // 2, doc_id // 4, doc_id % 97]) AS dst FROM documents),
-      |g_e AS (SELECT DISTINCT src, dst FROM g_raw WHERE src <> dst),
-      |g_odeg AS (SELECT src, count(*) AS odeg FROM g_e GROUP BY src)""".stripMargin
-
-  /** One exact-integer PageRank iteration (replays
-    * [[graft.ops.Graph.pageRank]]'s floor-div nano arithmetic verbatim):
-    * g_r{i-1} → contributions, dangling mass, g_r{i}. graph_pagerank
-    * unrolls four. */
-  private def duckPrIter(i: Int): String = {
-    val p = s"g_r${i - 1}"
-    s"""g_c$i AS (SELECT e.dst, SUM(r.pr // o.odeg) AS cin
-      |  FROM g_e e JOIN g_odeg o USING (src) JOIN $p r ON r.node = e.src GROUP BY e.dst),
-      |g_d$i AS (SELECT coalesce(SUM(pr), 0) AS dmass FROM $p WHERE node NOT IN (SELECT src FROM g_odeg)),
-      |g_r$i AS (SELECT nd.node,
-      |    CAST((15 * CAST(1000000000 AS BIGINT) // 100) // nn.n
-      |      + (85 * (coalesce(c.cin, 0) + d.dmass // nn.n)) // 100 AS BIGINT) AS pr
-      |  FROM g_nodes nd CROSS JOIN g_nn nn CROSS JOIN g_d$i d LEFT JOIN g_c$i c ON c.dst = nd.node)""".stripMargin
-  }
-
-  /** Shared replay of [[graft.ops.TextAnalysis.quality]]'s integer score
-    * over `documents` (the curation arithmetic, verbatim): CTE chain
-    * ending in qsc(doc_id, nt, score). Lives ONCE so the consuming
-    * oracles (curation_pipeline, curation_budget, dedup_keep_best) can't
-    * drift apart. */
-  private def duckQualityScore(rel: String): String =
-    s"""qq AS (SELECT doc_id, trim(regexp_replace(text, '\\s+', ' ', 'g')) AS t,
-      |        string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS toks FROM $rel),
-      |qm AS (SELECT doc_id, CAST(length(t) AS BIGINT) AS nc, CAST(len(toks) AS BIGINT) AS nt,
-      |        CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','that'], x))) AS BIGINT) AS stop
-      |      FROM qq),
-      |qsc AS (SELECT doc_id, nt,
-      |        least(40, nt // 4)
-      |          + (CASE WHEN (10000 * stop) // nt BETWEEN 200 AND 6000 THEN 30 ELSE 0 END)
-      |          + (CASE WHEN (1000 * (nc - (nt - 1))) // nt BETWEEN 2500 AND 9000 THEN 30 ELSE 0 END) AS score
-      |       FROM qm)""".stripMargin
-
-  private val DuckQualityScore = duckQualityScore("documents")
-
-  /** Winnowing replay fragment ([[graft.ops.Winnow.fingerprints]] with
-    * k=5, w=4, verbatim arithmetic): 60-bit md5 gram hashes, rightmost-min
-    * pick per w-window, distinct selected positions. Ends with
-    * wfp(doc_id, pos, fp) — the exploded fingerprint relation both the
-    * text_winnowing and dedup_winnow oracles consume. */
-  private def duckWinnowCtes(rel: String, p: String = ""): String =
-    s"""${p}wt AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks FROM $rel),
-      |${p}wg AS (SELECT doc_id, CASE WHEN len(toks) >= 5
-      |        THEN list_transform(range(0, len(toks) - 4), i -> CAST('0x' || substring(md5(array_to_string(toks[i+1:i+5], ' ')), 1, 15) AS BIGINT))
-      |        ELSE [CAST('0x' || substring(md5(array_to_string(toks, ' ')), 1, 15) AS BIGINT)] END AS grams FROM ${p}wt),
-      |${p}wsel AS (SELECT doc_id, grams, list_distinct(list_transform(range(0, len(grams) - least(4, len(grams)) + 1),
-      |        j -> j + list_max(list_filter(list_transform(range(0, least(4, len(grams))),
-      |          t -> CASE WHEN grams[j+t+1] = list_min(grams[j+1:j+least(4, len(grams))]) THEN t ELSE -1 END), x -> x >= 0)))) AS sel FROM ${p}wg),
-      |${p}wfp AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos, grams[CAST(pos + 1 AS INT)] AS fp
-      |        FROM (SELECT doc_id, grams, unnest(sel) AS pos FROM ${p}wsel))""".stripMargin
-
-  /** Bigram-LM replay fragment (Laplace-smoothed, integer bp) over `rel`;
-    * ends with lms(doc_id, n_bigrams, lm_bp). The LM is SELF-TRAINED on
-    * `rel`, so a composed pipeline that gates before scoring must pass its
-    * gated CTE here — the counts, vocabulary, and scores all shift with
-    * the corpus, exactly like the Spark operator. */
-  /** The NB scoring replay (tokenize → hashed bigram buckets → md5
-    * held-out split → ilog2q model/prior/normalizer → per-(doc, class)
-    * score), ending with `sc(doc_id, source, cls, score_q)` — shared by
-    * the classify_nb argmax row and the classify_nb_pr threshold sweep
-    * so the scoring chain lives ONCE. */
-  private def DuckNbScoreCtes: String =
-    s"""toks AS (SELECT doc_id, source,
-      |    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '), t -> t <> '') AS tk
-      |  FROM documents),
-      |bg AS (SELECT doc_id, source, unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS g FROM toks),
-      |b AS (SELECT doc_id, source,
-      |        CAST('0x' || substring(md5('${graft.ops.Dsir.Seed}:' || g), 1, 15) AS BIGINT) % ${graft.ops.Dsir.Buckets} AS bk FROM bg),
-      |hv AS (SELECT doc_id, CAST('0x' || substring(md5(coalesce(CAST(doc_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000 < 2000 AS held FROM documents),
-      |m AS (SELECT source AS cls, bk, CAST(COUNT(*) AS BIGINT) AS n_cb FROM b JOIN hv USING (doc_id) WHERE NOT hv.held GROUP BY 1, 2),
-      |pri AS (SELECT source AS cls, CAST(COUNT(*) AS BIGINT) + 1 AS np FROM documents JOIN hv USING (doc_id)
-      |        WHERE NOT hv.held GROUP BY 1),
-      |tot AS (SELECT m.cls, CAST(SUM(n_cb) AS BIGINT) + ${graft.ops.Dsir.Buckets} AS nt FROM m GROUP BY 1),
-      |norm AS (SELECT t.cls, ${graft.ops.Dsir.ilog2qSql("nt", duck = true)} AS norm_q,
-      |           ${graft.ops.Dsir.ilog2qSql("np", duck = true)} AS prior_q
-      |         FROM tot t JOIN pri ON t.cls = pri.cls),
-      |wts AS (SELECT cls, bk, ${graft.ops.Dsir.ilog2qSql("n_cb + 1", duck = true)} AS w_q FROM m),
-      |held AS (SELECT doc_id, source FROM documents JOIN hv USING (doc_id) WHERE hv.held),
-      |nb AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bg FROM b JOIN hv USING (doc_id) WHERE hv.held GROUP BY 1),
-      |nb2 AS (SELECT h.doc_id, h.source, CAST(coalesce(nb.n_bg, 0) AS BIGINT) AS n_bg
-      |        FROM held h LEFT JOIN nb ON h.doc_id = nb.doc_id),
-      |hits AS (SELECT b.doc_id, w.cls, CAST(SUM(w.w_q) AS BIGINT) AS hit_q
-      |         FROM b JOIN hv USING (doc_id) JOIN wts w ON w.bk = b.bk WHERE hv.held GROUP BY 1, 2),
-      |sc AS (SELECT n2.doc_id, n2.source, nm.cls,
-      |         nm.prior_q + CAST(coalesce(h.hit_q, 0) AS BIGINT) - n2.n_bg * nm.norm_q AS score_q
-      |       FROM nb2 n2 CROSS JOIN norm nm
-      |       LEFT JOIN hits h ON h.doc_id = n2.doc_id AND h.cls = nm.cls)""".stripMargin
-
-  private def duckLmCtes(rel: String): String =
-    s"""lt AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks FROM $rel),
-      |lbg AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 1),
-      |              i -> {'w1': toks[i], 'w2': toks[i+1]})) AS b
-      |       FROM lt WHERE len(toks) >= 2),
-      |lbg2 AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM lbg),
-      |lc2 AS (SELECT w1, w2, COUNT(*) AS n2 FROM lbg2 GROUP BY 1, 2),
-      |lc1 AS (SELECT w1, COUNT(*) AS n1 FROM lbg2 GROUP BY 1),
-      |lv AS (SELECT COUNT(DISTINCT w2) AS vsz FROM lbg2),
-      |lp AS (SELECT w1, w2, (10000 * (n2 + 1)) // (n1 + vsz) AS cond_bp FROM lc2 JOIN lc1 USING (w1), lv),
-      |lms AS (SELECT doc_id, COUNT(*) AS n_bigrams, CAST(SUM(cond_bp) // COUNT(*) AS BIGINT) AS lm_bp
-      |        FROM lbg2 JOIN lp USING (w1, w2) GROUP BY 1)""".stripMargin
-
-  /** Gopher-battery metrics fragment over `rel`; ends with gm(doc_id,
-    * n_words, n_lines, word_len_milli, symbol_bp, bullet_bp, ellipsis_bp,
-    * alpha_bp, stop_hits) — consumers apply their own thresholds. */
-  private def duckGopherMetrics(rel: String): String =
-    s"""gq AS (SELECT doc_id, text, trim(regexp_replace(text, '\\s+', ' ', 'g')) AS t FROM $rel),
-      |gw AS (SELECT doc_id, t,
-      |        list_filter(string_split(lower(t), ' '), x -> x <> '') AS toks,
-      |        list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), l -> l <> '') AS lines
-      |      FROM gq),
-      |gm AS (SELECT doc_id,
-      |        CAST(len(toks) AS BIGINT) AS n_words,
-      |        CAST(len(lines) AS BIGINT) AS n_lines,
-      |        CASE WHEN len(toks) > 0 THEN (1000 * (length(t) - (len(toks) - 1))) // len(toks) ELSE 0 END AS word_len_milli,
-      |        CASE WHEN len(toks) > 0 THEN (10000 * (len(regexp_extract_all(t, '#')) + len(regexp_extract_all(t, '\\.\\.\\.')))) // len(toks) ELSE 0 END AS symbol_bp,
-      |        CASE WHEN len(lines) > 0 THEN (10000 * len(list_filter(lines, l -> regexp_matches(l, '^(\\* |- |•)')))) // len(lines) ELSE 0 END AS bullet_bp,
-      |        CASE WHEN len(lines) > 0 THEN (10000 * len(list_filter(lines, l -> regexp_matches(l, '\\.\\.\\.$$')))) // len(lines) ELSE 0 END AS ellipsis_bp,
-      |        CASE WHEN len(toks) > 0 THEN (10000 * len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))) // len(toks) ELSE 0 END AS alpha_bp,
-      |        CAST(len(list_filter(['the','be','to','of','and','that','have','with'], s -> list_contains(toks, s))) AS BIGINT) AS stop_hits
-      |      FROM gw)""".stripMargin
-
-  /** The Gopher rule battery as (name, DuckDB predicate over the
-    * duckGopherMetrics `gm` columns) — the single source for
-    * text_gopher_rules' per-doc replay and filter_attribution's
-    * ablation table. */
-  private val GopherRulePreds: Seq[(String, String)] = Seq(
-    "r_word_count" -> "n_words BETWEEN 50 AND 100000",
-    "r_word_len" -> "word_len_milli BETWEEN 3000 AND 10000",
-    "r_symbol" -> "symbol_bp <= 1000",
-    "r_bullet" -> "bullet_bp <= 9000",
-    "r_ellipsis" -> "ellipsis_bp <= 3000",
-    "r_alpha" -> "alpha_bp >= 8000",
-    "r_stop" -> "stop_hits >= 2")
-  private val GopherRuleNames: Seq[String] = GopherRulePreds.map(_._1)
-
-  /** Shared replay of the connected-components labeling over `mh_pairs`
-    * (requires [[DuckMinhashPairs]] earlier in the same WITH RECURSIVE):
-    * ends with lab(doc_id, cluster_id) and sz(cluster_id, cluster_size).
-    * Shared by dedup_clusters and dedup_keep_best. */
-  private def duckComponentsLab(rel: String): String =
-    s"""edges AS (SELECT doc_a AS src, doc_b AS dst FROM mh_pairs
-      |          UNION SELECT doc_b, doc_a FROM mh_pairs),
-      |reach(node, lbl) AS (
-      |  SELECT src, src FROM edges
-      |  UNION
-      |  SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.node),
-      |cc AS (SELECT node, MIN(lbl) AS cluster_id FROM reach GROUP BY node),
-      |lab AS (SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id
-      |        FROM $rel d LEFT JOIN cc c ON d.doc_id = c.node),
-      |sz AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM lab GROUP BY 1)""".stripMargin
-
-  private val DuckComponentsLab = duckComponentsLab("documents")
-
-  /** Per-subspace PQ training/encoding CTE chain for the ann_pq oracle —
-    * generated per subspace `s` (16 dims each) so the k-means replay lives
-    * once and the four subspaces can't drift apart. Mirrors
-    * [[graft.ops.Pq.train]] (seed = 8 lowest-id sliced vectors, one Lloyd
-    * round of quantized-cosine assignment + exact-integer sum/count
-    * update) and [[graft.ops.Pq.encode]] (assignment under the trained
-    * book). */
-  private def pqSubCtes(s: Int): String = {
-    val lo = 16 * s + 1
-    def cosRank(simRel: String) =
-      s"""SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY
-         |      (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) DESC, cid) AS rn
-         |    FROM $simRel""".stripMargin
-    def sims(fromRel: String, bookRel: String) =
-      s"""SELECT t.vec_id, c.cid,
-         |    list_sum(list_transform(range(1, 17), i -> (c.s[i] / c.n) * (t.v[i])::DOUBLE)) AS dt,
-         |    list_sum(list_transform(range(1, 17), i -> (c.s[i] / c.n) * (c.s[i] / c.n))) AS na,
-         |    list_sum(list_transform(range(1, 17), i -> (t.v[i])::DOUBLE * (t.v[i])::DOUBLE)) AS nb
-         |  FROM $fromRel t CROSS JOIN $bookRel c""".stripMargin
-    s"""pqsub$s AS (SELECT vec_id, list_slice(vq, $lo, ${lo + 15}) AS v FROM e),
-       |pqseed$s AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid, v AS s, 1::BIGINT AS n
-       |           FROM (SELECT * FROM pqsub$s ORDER BY vec_id LIMIT 8)),
-       |pqsim$s AS (${sims(s"pqsub$s", s"pqseed$s")}),
-       |pqasn$s AS (SELECT vec_id, cid FROM (${cosRank(s"pqsim$s")}) WHERE rn = 1),
-       |pqu$s AS (SELECT a.cid, d.i, SUM(t.v[d.i]) AS si, COUNT(*) AS cnt
-       |        FROM pqasn$s a JOIN pqsub$s t ON t.vec_id = a.vec_id CROSS JOIN dims16 d GROUP BY 1, 2),
-       |pqcn$s AS (SELECT cid, list(si ORDER BY i) AS s, CAST(MAX(cnt) AS BIGINT) AS n FROM pqu$s GROUP BY cid),
-       |pqcb$s AS (SELECT sd.cid, coalesce(c.s, sd.s) AS s, coalesce(c.n, sd.n) AS n
-       |         FROM pqseed$s sd LEFT JOIN pqcn$s c ON sd.cid = c.cid),
-       |pqsim2_$s AS (${sims(s"pqsub$s", s"pqcb$s")}),
-       |pqenc$s AS (SELECT vec_id, cid FROM (${cosRank(s"pqsim2_$s")}) WHERE rn = 1)""".stripMargin
-  }
-
-  /** HLL register-state replay shared by sketch_hll and sketch_hll_merge
-    * (merge-by-max must equal the single-pass state). */
-  private val DuckHllSketch: String =
-    """WITH toks AS (SELECT source, unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS tok FROM documents),
-        |nz AS (SELECT source, tok FROM toks WHERE tok <> ''),
-        |h AS (SELECT source, CAST('0x' || substring(md5(tok), 1, 15) AS BIGINT) AS hh FROM nz),
-        |r AS (SELECT source, CAST(hh & 63 AS INT) AS j,
-        |        CASE WHEN (hh >> 11) = 0 THEN 50 ELSE 50 - length(bin(hh >> 11)) END AS rho
-        |      FROM h),
-        |regs AS (SELECT source, j, MAX(rho) AS m FROM r GROUP BY 1, 2)
-        |SELECT source,
-        |  CAST(64 - COUNT(*) AS INT) AS hll_zeros,
-        |  CAST(SUM(1::BIGINT << (50 - m)) + (64 - COUNT(*)) * (1::BIGINT << 50) AS BIGINT) AS hll_denom_scaled
-        |FROM regs GROUP BY source ORDER BY source""".stripMargin
-
-  /** Shared replay of the quantized-IVF coarse training (seed = 8
-    * lowest-id quantized vectors, TWO Lloyd rounds of exact-integer
-    * sum/count updates), final corpus assignment (`asn3`) and the 3-probe
-    * lists for queries vec_id < 5 (`probes`) — used verbatim by both the
-    * ann_ivf oracle and the composed ann_ivfpq oracle so the coarse
-    * quantizer's arithmetic lives once. Also defines `e` (quantized
-    * vectors) and `dims`. */
-  private val DuckIvfTrainCtes: String = duckIvfTrainCtes()
-
-  /** The same training replay with a pluggable source relation, so the
-    * incremental row can train on a corpus SLICE verbatim, and a CTE-name
-    * prefix `p` so two independent model replays (e.g. the drift row's
-    * original + retrained codebooks) can coexist in one WITH chain. */
-  private def duckIvfTrainCtes(source: String = "embeddings", p: String = "",
-                               limitSql: String = "8"): String =
-    s"""${p}e AS (SELECT vec_id, embedding,
-      |  list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS vq
-      |  FROM $source),
-      |${p}dims AS (SELECT unnest(range(1, 65)) AS i),
-      |${p}seed AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid, vq AS s, 1::BIGINT AS n
-      |         FROM (SELECT * FROM ${p}e ORDER BY vec_id LIMIT $limitSql)),
-      |${p}sim1 AS (SELECT e.vec_id, c.cid,
-      |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n) * (e.vq[i])::DOUBLE)) AS dt,
-      |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n) * (c.s[i] / c.n))) AS na,
-      |    list_sum(list_transform(range(1, 65), i -> (e.vq[i])::DOUBLE * (e.vq[i])::DOUBLE)) AS nb
-      |  FROM ${p}e e CROSS JOIN ${p}seed c),
-      |${p}asn1 AS (SELECT vec_id, cid FROM (
-      |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY
-      |      (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) DESC, cid) AS rn
-      |    FROM ${p}sim1) WHERE rn = 1),
-      |${p}u1 AS (SELECT a.cid, d.i, SUM(e.vq[d.i]) AS si, COUNT(*) AS cnt
-      |       FROM ${p}asn1 a JOIN ${p}e e ON e.vec_id = a.vec_id CROSS JOIN ${p}dims d GROUP BY 1, 2),
-      |${p}c1n AS (SELECT cid, list(si ORDER BY i) AS s, CAST(MAX(cnt) AS BIGINT) AS n FROM ${p}u1 GROUP BY cid),
-      |${p}c1 AS (SELECT sd.cid, coalesce(cn.s, sd.s) AS s, coalesce(cn.n, sd.n) AS n
-      |       FROM ${p}seed sd LEFT JOIN ${p}c1n cn ON sd.cid = cn.cid),
-      |${p}sim2 AS (SELECT e.vec_id, c.cid,
-      |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n) * (e.vq[i])::DOUBLE)) AS dt,
-      |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n) * (c.s[i] / c.n))) AS na,
-      |    list_sum(list_transform(range(1, 65), i -> (e.vq[i])::DOUBLE * (e.vq[i])::DOUBLE)) AS nb
-      |  FROM ${p}e e CROSS JOIN ${p}c1 c),
-      |${p}asn2 AS (SELECT vec_id, cid FROM (
-      |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY
-      |      (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) DESC, cid) AS rn
-      |    FROM ${p}sim2) WHERE rn = 1),
-      |${p}u2 AS (SELECT a.cid, d.i, SUM(e.vq[d.i]) AS si, COUNT(*) AS cnt
-      |       FROM ${p}asn2 a JOIN ${p}e e ON e.vec_id = a.vec_id CROSS JOIN ${p}dims d GROUP BY 1, 2),
-      |${p}c2n AS (SELECT cid, list(si ORDER BY i) AS s, CAST(MAX(cnt) AS BIGINT) AS n FROM ${p}u2 GROUP BY cid),
-      |${p}c2 AS (SELECT c1.cid, coalesce(cn.s, c1.s) AS s, coalesce(cn.n, c1.n) AS n
-      |       FROM ${p}c1 c1 LEFT JOIN ${p}c2n cn ON c1.cid = cn.cid),
-      |${p}sim3 AS (SELECT e.vec_id, c.cid,
-      |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n) * (e.vq[i])::DOUBLE)) AS dt,
-      |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n) * (c.s[i] / c.n))) AS na,
-      |    list_sum(list_transform(range(1, 65), i -> (e.vq[i])::DOUBLE * (e.vq[i])::DOUBLE)) AS nb
-      |  FROM ${p}e e CROSS JOIN ${p}c2 c),
-      |${p}asn3 AS (SELECT vec_id, cid FROM (
-      |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY
-      |      (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) DESC, cid) AS rn
-      |    FROM ${p}sim3) WHERE rn = 1),
-      |${p}probes AS (SELECT vec_id AS query_id, cid FROM (
-      |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY
-      |      (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) DESC, cid) AS rn
-      |    FROM ${p}sim3 WHERE vec_id < 5) WHERE rn <= 3)""".stripMargin
-
-  /** The bitext margin/mutual CTE tail over an upstream `pp(id_a, id_b,
-    * q)` candidate relation (q > 0) — shared by mine_bitext (cross-join
-    * candidates) and mine_bitext_cell (within-IVF-cell candidates). */
-  private def duckBitextTail(k: Int = 4, minMarginBp: Long = 10000L): String =
-    s"""r AS (SELECT *,
-      |        row_number() OVER (PARTITION BY id_a ORDER BY q DESC, id_b) AS rka,
-      |        row_number() OVER (PARTITION BY id_b ORDER BY q DESC, id_a) AS rkb
-      |      FROM pp),
-      |sa AS (SELECT id_a, CAST(SUM(q) AS BIGINT) AS sa, CAST(COUNT(*) AS BIGINT) AS ca
-      |       FROM r WHERE rka <= $k GROUP BY 1),
-      |sb AS (SELECT id_b, CAST(SUM(q) AS BIGINT) AS sb, CAST(COUNT(*) AS BIGINT) AS cb
-      |       FROM r WHERE rkb <= $k GROUP BY 1),
-      |sc AS (SELECT r.id_a, r.id_b, r.rka, r.rkb,
-      |         CAST((2 * q * 10000 * ca * cb) // (sa * cb + sb * ca) AS BIGINT) AS margin_bp
-      |       FROM r JOIN sa USING (id_a) JOIN sb USING (id_b)
-      |       WHERE (rka <= $k OR rkb <= $k) AND sa * cb + sb * ca > 0),
-      |f AS (SELECT id_a, id_b, margin_bp FROM (
-      |        SELECT *, row_number() OVER (PARTITION BY id_a ORDER BY margin_bp DESC, id_b) AS fb
-      |        FROM sc WHERE rka <= $k) WHERE fb = 1),
-      |w AS (SELECT id_a, id_b FROM (
-      |        SELECT *, row_number() OVER (PARTITION BY id_b ORDER BY margin_bp DESC, id_a) AS bb
-      |        FROM sc WHERE rkb <= $k) WHERE bb = 1)
-      |SELECT id_a, id_b, margin_bp FROM f JOIN w USING (id_a, id_b)
-      |WHERE margin_bp >= $minMarginBp
-      |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(0 AS BIGINT)
-      |ORDER BY id_a, id_b""".stripMargin
-
-  /** The four per-subspace encodings joined back into one codes row per
-    * vector — shared by ann_pq and ann_ivfpq. */
-  private val DuckPqCodes: String =
-    """codes AS (SELECT e0.vec_id, e0.cid AS c0, e1.cid AS c1, e2.cid AS c2, e3.cid AS c3
-      |          FROM pqenc0 e0 JOIN pqenc1 e1 USING (vec_id) JOIN pqenc2 e2 USING (vec_id)
-      |               JOIN pqenc3 e3 USING (vec_id))""".stripMargin
-
-  /** ADC score: Σ over the 4 subspaces of the fixed-order centroid·query
-    * dot product (ascending dims inside each subspace, ascending subspace
-    * order) — references `q.embedding` and joined books b0..b3. */
-  private val DuckAdcScore: String =
-    """list_sum(list_transform(range(1, 17), i -> (b0.s[i] / b0.n) * (q.embedding[i])::DOUBLE))
-      |  + list_sum(list_transform(range(1, 17), i -> (b1.s[i] / b1.n) * (q.embedding[i + 16])::DOUBLE))
-      |  + list_sum(list_transform(range(1, 17), i -> (b2.s[i] / b2.n) * (q.embedding[i + 32])::DOUBLE))
-      |  + list_sum(list_transform(range(1, 17), i -> (b3.s[i] / b3.n) * (q.embedding[i + 48])::DOUBLE))""".stripMargin
-
-  /** Full replay of quantized IVF search over a pluggable source
-    * relation: vectors floor-quantized to 2^-20 units, centroids as exact
-    * (sum, n) integer state (merge-order-free on the Spark side), two
-    * Lloyd rounds, 3-probe search, exact-cosine re-rank on the original
-    * floats. Every float here derives from exact integers through
-    * fixed-order folds, so both engines agree bit-for-bit. The default is
-    * the ann_ivf oracle verbatim; the recall row's post-shift tier passes
-    * the negated corpus. */
-  private def duckIvfSearchSql(source: String = "embeddings"): String =
-    s"""WITH ${duckIvfTrainCtes(source)},
-       |members AS (SELECT p.query_id, a.vec_id AS neighbor_id
-       |            FROM asn3 a JOIN probes p ON a.cid = p.cid WHERE a.vec_id <> p.query_id),
-       |qv AS (SELECT vec_id AS query_id, embedding AS qvec FROM $source qsrc WHERE vec_id < 5),
-       |resc AS (SELECT m.query_id, m.neighbor_id, ${duckCosine("emb.embedding", "qv.qvec")} AS sim
-       |         FROM members m JOIN $source emb ON emb.vec_id = m.neighbor_id
-       |         JOIN qv ON qv.query_id = m.query_id),
-       |ranked AS (SELECT query_id, neighbor_id, CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INT) AS rank FROM resc)
-       |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 10
-       |ORDER BY query_id, rank""".stripMargin
-
-  /** Brute-force cosine top-10 replay (the knn_cosine oracle) over a
-    * pluggable source relation — the recall rows reuse it to compute
-    * ground truth over a SHIFTED corpus. */
-  private def duckKnnSql(source: String = "embeddings"): String =
-    s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM $source qs WHERE vec_id < 5),
-       |sims AS (SELECT q.qid, e.vec_id, ${duckCosine("e.embedding", "q.qvec")} AS sim
-       |         FROM $source e CROSS JOIN q WHERE e.vec_id <> q.qid),
-       |ranked AS (SELECT qid, vec_id, CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS INT) AS rank FROM sims)
-       |SELECT qid AS query_id, vec_id AS neighbor_id, rank FROM ranked WHERE rank <= 10
-       |ORDER BY query_id, rank""".stripMargin
-
-  /** The dedup_semantic oracle, threshold-parameterized (2500 = the recall
-    * spot-check row, 8500 = the production posture): the IVF
-    * coarse-training replay (shared fragment: same seeds, two Lloyd
-    * rounds, same tie rule) supplies asn3; pairs within a shared cell
-    * verify by the same fixed-order cosine fold; components over the
-    * confirmed pairs replay as a recursive CTE (the dedup_clusters
-    * pattern); the shared quality replay picks the representative. */
-  private def duckSemanticSql(thresholdBp: Long, limitSql: String = "8"): String =
-    s"""WITH RECURSIVE ${duckIvfTrainCtes(limitSql = limitSql)},
-      |sem_pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      |  FROM asn3 a JOIN asn3 b ON a.cid = b.cid AND a.vec_id < b.vec_id),
-      |${duckSemanticTail(thresholdBp)}""".stripMargin
-
-  /** Shared verify → components → keep-best tail of the semantic-dedup
-    * oracles: consumes a `sem_pairs(id_a, id_b)` CTE, ends with the final
-    * SELECT. Lives once so the flat and hierarchical replays cannot
-    * drift. */
-  private def duckSemanticTail(thresholdBp: Long): String =
-    s"""sem_dup AS (SELECT p.id_a, p.id_b
-      |  FROM sem_pairs p JOIN embeddings ea ON ea.vec_id = p.id_a
-      |                   JOIN embeddings eb ON eb.vec_id = p.id_b
-      |  WHERE CAST(floor(${duckCosine("ea.embedding", "eb.embedding")} * 10000) AS BIGINT) >= $thresholdBp),
-      |sedges AS (SELECT id_a AS src, id_b AS dst FROM sem_dup
-      |           UNION SELECT id_b, id_a FROM sem_dup),
-      |sreach(node, lbl) AS (
-      |  SELECT src, src FROM sedges
-      |  UNION
-      |  SELECT e.src, r.lbl FROM sedges e JOIN sreach r ON e.dst = r.node),
-      |scc AS (SELECT node, MIN(lbl) AS cluster_id FROM sreach GROUP BY node),
-      |slab AS (SELECT em.vec_id, coalesce(c.cluster_id, em.vec_id) AS cluster_id
-      |         FROM embeddings em LEFT JOIN scc c ON em.vec_id = c.node),
-      |ssz AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM slab GROUP BY 1),
-      |$DuckQualityScore,
-      |srep AS (SELECT l.cluster_id, l.vec_id, s.cluster_size, q.score,
-      |           row_number() OVER (PARTITION BY l.cluster_id ORDER BY q.score DESC, l.vec_id) AS rn
-      |         FROM slab l JOIN ssz s ON l.cluster_id = s.cluster_id
-      |                     JOIN qsc q ON q.doc_id = l.vec_id)
-      |SELECT cluster_id, vec_id AS rep_id, cluster_size, score AS quality_score
-      |FROM srep WHERE rn = 1 ORDER BY cluster_id""".stripMargin
-
-  /** The dedup_semantic_scale oracle: full replay of the two-level
-    * codebook ([[graft.ops.Ivf.trainHierarchical]] with childIters=1) —
-    * super train via the shared fragment (dynamic k2 from the corpus),
-    * per-super child seeds (lowest vec_id order, ceil(n_s/100) of them),
-    * one child Lloyd round with stale-keep, final child assignment,
-    * composite cells — then the shared semantic tail over pairs sharing a
-    * (super, child) cell. */
-  /** The two-level codebook CTE chain shared by dedup_semantic_scale and
-    * mine_bitext_scale: super train via the shared fragment (dynamic k2),
-    * per-super child seeds (lowest vec_id order, ceil(n_s/100) of them),
-    * one child Lloyd round with stale-keep, final child assignment —
-    * ending in `hcell(vec_id, cluster)` composite cells. */
-  private def duckHierCellCtes(k2Sql: String, trainSrc: String = "embeddings",
-                               assignSrc: String = null): String = {
-    def childSim(cents: String, rel: String = "sv") =
-      s"""SELECT v.vec_id, v.sc, c.child,
-         |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n) * (v.vq[i])::DOUBLE)) AS dt,
-         |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n) * (c.s[i] / c.n))) AS na,
-         |    list_sum(list_transform(range(1, 65), i -> (v.vq[i])::DOUBLE * (v.vq[i])::DOUBLE)) AS nb
-         |  FROM $rel v JOIN $cents c ON c.sc = v.sc""".stripMargin
-    def childArgmax(sim: String) =
-      s"""SELECT vec_id, sc, child FROM (
-         |    SELECT vec_id, sc, child, row_number() OVER (PARTITION BY vec_id ORDER BY
-         |      (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) DESC, child) AS rn
-         |    FROM $sim) WHERE rn = 1""".stripMargin
-    val trained =
-      s"""${duckIvfTrainCtes(trainSrc, limitSql = k2Sql)},
-      |sv AS (SELECT a.vec_id, a.cid AS sc, e.vq FROM asn3 a JOIN e USING (vec_id)),
-      |scnt AS (SELECT sc, COUNT(*) AS ns FROM sv GROUP BY 1),
-      |cseed AS (SELECT t.sc, CAST(t.rn - 1 AS INT) AS child, t.vq AS s, 1::BIGINT AS n
-      |          FROM (SELECT sc, vec_id, vq, row_number() OVER (PARTITION BY sc ORDER BY vec_id) AS rn FROM sv) t
-      |          JOIN scnt ON scnt.sc = t.sc
-      |          WHERE t.rn <= CAST(ceil(scnt.ns / 100.0) AS BIGINT)),
-      |hsim1 AS (${childSim("cseed")}),
-      |hasn1 AS (${childArgmax("hsim1")}),
-      |hu1 AS (SELECT a.sc, a.child, d.i, SUM(v.vq[d.i]) AS si, COUNT(*) AS cnt
-      |        FROM hasn1 a JOIN sv v ON v.vec_id = a.vec_id CROSS JOIN dims d GROUP BY 1, 2, 3),
-      |hc1n AS (SELECT sc, child, list(si ORDER BY i) AS s, CAST(MAX(cnt) AS BIGINT) AS n FROM hu1 GROUP BY 1, 2),
-      |hc1 AS (SELECT cs.sc, cs.child, coalesce(cn.s, cs.s) AS s, coalesce(cn.n, cs.n) AS n
-      |        FROM cseed cs LEFT JOIN hc1n cn ON cs.sc = cn.sc AND cs.child = cn.child)""".stripMargin
-    if (assignSrc == null)
-      // train and assign over the same relation — the original chain
-      s"""$trained,
-        |hsim2 AS (${childSim("hc1")}),
-        |hasn2 AS (${childArgmax("hsim2")}),
-        |hcell AS (SELECT vec_id, sc * 100000 + child AS cluster FROM hasn2)""".stripMargin
-    else
-      // split chain (the persisted-codebook increment replay): centroids
-      // come from `trainSrc` only; `assignSrc` rows take one super argmax
-      // against the FINAL super centroids (c2 — exactly what
-      // readModel2∘writeModel2 hands assignHierarchical) and one child
-      // argmax against the trained children (hc1). A super cell with no
-      // trained children falls back to child 0, mirroring
-      // Ivf.assignHierarchical's addressable-cell contract.
-      s"""$trained,
-        |fe AS (SELECT vec_id,
-        |  list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS vq
-        |  FROM $assignSrc),
-        |fsim AS (SELECT e.vec_id, c.cid,
-        |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n) * (e.vq[i])::DOUBLE)) AS dt,
-        |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n) * (c.s[i] / c.n))) AS na,
-        |    list_sum(list_transform(range(1, 65), i -> (e.vq[i])::DOUBLE * (e.vq[i])::DOUBLE)) AS nb
-        |  FROM fe e CROSS JOIN c2 c),
-        |fasn AS (SELECT vec_id, cid AS sc FROM (
-        |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY
-        |      (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) DESC, cid) AS rn
-        |    FROM fsim) WHERE rn = 1),
-        |fsv AS (SELECT a.vec_id, a.sc, e.vq FROM fasn a JOIN fe e USING (vec_id)),
-        |fhsim AS (${childSim("hc1", "fsv")}),
-        |fhasn AS (${childArgmax("fhsim")}),
-        |hcell AS (SELECT f.vec_id, f.sc * 100000 + coalesce(h.child, 0) AS cluster
-        |          FROM fasn f LEFT JOIN fhasn h ON h.vec_id = f.vec_id)""".stripMargin
-  }
-
-  /** The dedup_semantic_scale oracle: the shared two-level chain, then
-    * the shared semantic tail over pairs sharing a (super, child) cell. */
-  private def duckSemanticScaleSql(thresholdBp: Long, k2Sql: String): String =
-    s"""WITH RECURSIVE ${duckHierCellCtes(k2Sql)},
-      |sem_pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      |  FROM hcell a JOIN hcell b ON a.cluster = b.cluster AND a.vec_id < b.vec_id),
-      |${duckSemanticTail(thresholdBp)}""".stripMargin
-
-  /** The embed_neardup oracle family: full replay of the LSH blocking +
-    * exact-cosine verify — same ±1 md5-derived planes as ann_lsh (4
-    * tables), bucket self-join for candidates, same floor(cosine·10000)
-    * scoring, `thresholdBp` the verify band (2500 = recall spot-check,
-    * 8500 = production). `autoBits` replays
-    * [[graft.ops.Similarity.numBitsFor]] — width from COUNT(*) via
-    * `least(48, greatest(4, ceil(log2(max(n/1000, 1)))))` — pinning the
-    * auto-sizing path by hash equality; false pins the explicit 8-bit
-    * shape. */
-  private def duckEmbedNeardupSql(thresholdBp: Long, autoBits: Boolean): String = {
-    val bits =
-      if (autoBits)
-        """(SELECT unnest(range(0, (SELECT CAST(least(48, greatest(4,
-          |    CAST(ceil(log2(greatest(CAST(COUNT(*) AS DOUBLE) / 1000.0, 1.0))) AS INT))) AS INT)
-          |  FROM embeddings))) AS b)""".stripMargin
-      else "(SELECT unnest(range(0, 8)) AS b)"
-    s"""WITH planes AS (
-       |  SELECT t, b, list_transform(range(0, 64), i ->
-       |    CASE WHEN CAST('0x' || substring(md5('42|' || t || '|' || b || '|' || i), 1, 1) AS INT) >= 8
-       |         THEN 1.0 ELSE -1.0 END) AS w
-       |  FROM (SELECT unnest(range(0, 4)) AS t), $bits),
-       |proj AS (
-       |  SELECT e.vec_id, p.t, p.b,
-       |    list_sum(list_transform(range(0, 64), i -> p.w[i + 1] * (e.embedding[i + 1])::DOUBLE)) AS pr
-       |  FROM embeddings e CROSS JOIN planes p),
-       |sig AS (SELECT vec_id, t, CAST(SUM(CASE WHEN pr >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS bucket
-       |        FROM proj GROUP BY 1, 2),
-       |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-       |         FROM sig a JOIN sig b ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-       |v AS (SELECT c.id_a, c.id_b,
-       |        CAST(floor(${duckCosine("ea.embedding", "eb.embedding")} * 10000) AS BIGINT) AS sim_bp
-       |      FROM cand c JOIN embeddings ea ON ea.vec_id = c.id_a JOIN embeddings eb ON eb.vec_id = c.id_b)
-       |SELECT id_a, id_b, sim_bp FROM v WHERE sim_bp >= $thresholdBp
-       |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(10000 AS BIGINT)
-       |ORDER BY id_a, id_b""".stripMargin
-  }
-
-  /** The perceptual-hash replay: the payload BODY is exactly the
-    * document's UTF-8 text bytes (the builders append them after each
-    * format's fixed header), so the oracle hashes `hex(encode(text))`
-    * with the same generated integer fragment
-    * ([[graft.ops.Multimodal.dHashSampleCols]] /
-    * [[graft.ops.Multimodal.dHashFromSamplesSql]]) the Spark side runs
-    * over the stripped payload. Ends with the `ph(media_id, phash)` CTE
-    * open for the caller to extend. */
-  /** BPE merge-training replay: the word-frequency CTE (w0/s0), then per
-    * round r: pair counts p_r over s_{r-1}, winner t_r by (cnt DESC, x, y),
-    * merged sequences s_r via the same two-pass space-delimited replace the
-    * Spark side runs ([[graft.ops.Bpe.applyMerge]]). Callers append the
-    * final SELECT over t_1..t_R (merge table) or s_R (vocab). */
-  private def duckBpeCtes(rounds: Int): String = {
-    val sb = new StringBuilder
-    sb ++= """WITH w0 AS (
-      |  SELECT word, CAST(COUNT(*) AS BIGINT) AS n FROM (
-      |    SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS word FROM documents) t
-      |  WHERE word <> '' GROUP BY word),
-      |s0 AS (SELECT word, n,
-      |         concat(trim(regexp_replace(word, '(.)', '\1 ', 'g')), ' </w>') AS seq
-      |       FROM w0)""".stripMargin
-    for (r <- 1 to rounds) {
-      val prev = s"s${r - 1}"
-      sb ++= s""",
-        |p$r AS (SELECT l[i] AS x, l[i + 1] AS y, CAST(SUM(n) AS BIGINT) AS cnt FROM (
-        |    SELECT n, l, unnest(generate_series(1, len(l) - 1)) AS i
-        |    FROM (SELECT n, string_split(seq, ' ') AS l FROM $prev) a
-        |    WHERE len(l) >= 2) b
-        |  GROUP BY 1, 2),
-        |t$r AS (SELECT x, y, cnt FROM p$r ORDER BY cnt DESC, x, y LIMIT 1),
-        |s$r AS (SELECT word, n,
-        |    trim(replace(replace(' ' || seq || ' ',
-        |                         ' ' || t.x || ' ' || t.y || ' ', ' ' || t.x || t.y || ' '),
-        |                 ' ' || t.x || ' ' || t.y || ' ', ' ' || t.x || t.y || ' ')) AS seq
-        |  FROM $prev, t$r t)""".stripMargin
-    }
-    sb.toString
-  }
-
-  private def duckPhashSql(
-      source: String = "SELECT doc_id AS media_id, text FROM documents"): String = {
-    val samples = graft.ops.Multimodal
-      .dHashSampleCols("hx", "blen", duck = true).mkString(",\n    ")
-    s"""WITH p AS (SELECT media_id, hex(encode(text)) AS hx,
-      |    CAST(octet_length(encode(text)) AS BIGINT) AS blen FROM ($source)),
-      |v AS (SELECT media_id,
-      |    $samples
-      |  FROM p),
-      |ph AS (SELECT media_id, ${graft.ops.Multimodal.dHashFromSamplesSql} AS phash FROM v)""".stripMargin
-  }
-
-  /** Cosine similarity in DuckDB with the same left-to-right double fold
-    * Spark's `aggregate(zip_with(...))` performs. */
-  private def duckCosine(a: String, b: String): String =
-    s"""(list_sum(list_transform(list_zip($a, $b), x -> x[1]::DOUBLE * x[2]::DOUBLE))
-       | / (sqrt(list_sum(list_transform($a, x -> x::DOUBLE * x::DOUBLE)))
-       |    * sqrt(list_sum(list_transform($b, x -> x::DOUBLE * x::DOUBLE)))))""".stripMargin
-
-  /** The SQ8 quantization replay (mirrors [[graft.ops.Quantize.int8Codes]]
-    * exactly — clamp, floor-quantize, symmetric integer rounding) as a
-    * reusable CTE chain ending in `c(vec_id, amax_q, codes)`; shared by
-    * embed_quant_int8 and the compressed-store search row. */
-  private val DuckSq8CodesCtes: String =
-    """xq AS (SELECT vec_id,
-      |  list_transform(embedding, x -> CAST(floor(
-      |    greatest(least(CAST(x AS DOUBLE), 17179869184.0), -17179869184.0) * 1048576.0) AS BIGINT)) AS q
-      |  FROM embeddings),
-      |a AS (SELECT vec_id, q,
-      |  CAST(list_aggregate(list_transform(q, v -> abs(v)), 'max') AS BIGINT) AS amax_q FROM xq),
-      |c AS (SELECT vec_id, amax_q,
-      |  list_transform(q, v -> CASE WHEN amax_q = 0 THEN CAST(0 AS BIGINT)
-      |    ELSE CAST(sign(v) AS BIGINT) * ((2 * abs(v) * 127 + amax_q) // (2 * amax_q)) END) AS codes
-      |  FROM a)""".stripMargin
-
-  /** MMR replay: brute-force candidate pool (the duckKnnSql shape kept
-    * inline for its rel values), pairwise candidate similarities, then the
-    * greedy `λ·rel − (1−λ)·max-sim-to-selected` selection UNROLLED as one
-    * CTE chain per pick — selcum_i accumulates the chosen set, pick_i is
-    * the arg-max row (score desc, id) over the not-yet-selected pool. Same
-    * fused-fold cosines as every vector oracle, so scores are bit-equal
-    * and only (query, neighbor, rank) integers cross engines. */
-  private def duckMmrSql(candK: Int, selectK: Int, lambdaBp: Int): String = {
-    val lam = s"($lambdaBp/10000.0)"
-    val om = s"((10000 - $lambdaBp)/10000.0)"
-    val sb = new StringBuilder(
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |sims AS (SELECT q.qid, e.vec_id, ${duckCosine("e.embedding", "q.qvec")} AS rel
-         |         FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |cand AS (SELECT qid, vec_id, rel FROM (
-         |    SELECT qid, vec_id, rel, row_number() OVER (PARTITION BY qid ORDER BY rel DESC, vec_id) AS rnk FROM sims)
-         |  WHERE rnk <= $candK),
-         |psim AS (SELECT a.qid, a.vec_id AS ca, b.vec_id AS cb, ${duckCosine("ea.embedding", "eb.embedding")} AS s
-         |         FROM cand a JOIN cand b ON a.qid = b.qid AND a.vec_id <> b.vec_id
-         |         JOIN embeddings ea ON ea.vec_id = a.vec_id
-         |         JOIN embeddings eb ON eb.vec_id = b.vec_id),
-         |pick1 AS (SELECT qid, vec_id FROM (
-         |    SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY rel DESC, vec_id) AS rn FROM cand) WHERE rn = 1),
-         |selcum1 AS (SELECT qid, vec_id FROM pick1)""".stripMargin)
-    for (i <- 2 to selectK) {
-      sb.append(s""",
-         |pick$i AS (SELECT qid, vec_id FROM (
-         |    SELECT c.qid, c.vec_id, row_number() OVER (PARTITION BY c.qid
-         |        ORDER BY ($lam * c.rel - $om * m.ms) DESC, c.vec_id) AS rn
-         |    FROM cand c
-         |    JOIN (SELECT p.qid, p.ca, MAX(p.s) AS ms FROM psim p
-         |          JOIN selcum${i - 1} s ON s.qid = p.qid AND s.vec_id = p.cb GROUP BY 1, 2) m
-         |      ON m.qid = c.qid AND m.ca = c.vec_id
-         |    WHERE NOT EXISTS (SELECT 1 FROM selcum${i - 1} x WHERE x.qid = c.qid AND x.vec_id = c.vec_id))
-         |  WHERE rn = 1),
-         |selcum$i AS (SELECT * FROM selcum${i - 1} UNION ALL SELECT * FROM pick$i)""".stripMargin)
-    }
-    val outs = (1 to selectK)
-      .map(i => s"SELECT qid, vec_id, $i AS r FROM pick$i")
-      .mkString(" UNION ALL ")
-    sb.append(s"""
-         |SELECT qid AS query_id, vec_id AS neighbor_id, CAST(r AS BIGINT) AS mmr_rank
-         |FROM ($outs) ORDER BY query_id, mmr_rank""".stripMargin)
-    sb.toString
-  }
-
-  /** Full DSIR replay over pluggable corpus/score slices (both predicates
-    * range over `doc_id`): weights from the `corpusPred` rows, scores for
-    * the `scorePred` rows, top-`k` by score. One derivation serves the
-    * one-shot row (both predicates TRUE) and the persisted-weights
-    * increment row — like the IVF train CTEs, the oracle re-derives the
-    * persisted model from the same slice rather than reading the table. */
-  private def duckDsirSql(corpusPred: String, scorePred: String, k: Int,
-                          src: String = "documents"): String = {
-    val tgtList = DsirTargetSources.map(s => s"'$s'").mkString(", ")
-    def I(x: String) = graft.ops.Dsir.ilog2qSql(x, duck = true)
-    s"""WITH toks AS (SELECT doc_id, source,
-      |    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '), t -> t <> '') AS tk
-      |  FROM $src),
-      |bg AS (SELECT doc_id, source, unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS g FROM toks),
-      |b AS (SELECT doc_id, source, source IN ($tgtList) AS tgt,
-      |        CAST('0x' || substring(md5('${graft.ops.Dsir.Seed}:' || g), 1, 15) AS BIGINT) % ${graft.ops.Dsir.Buckets} AS bk FROM bg),
-      |cnt AS (SELECT bk, CAST(COUNT(*) AS BIGINT) AS raw_b, CAST(SUM(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS tgt_b FROM b WHERE $corpusPred GROUP BY 1),
-      |tot AS (SELECT CAST(SUM(raw_b) AS BIGINT) AS raw_tot, CAST(SUM(tgt_b) AS BIGINT) AS tgt_tot FROM cnt),
-      |w AS (SELECT bk, ${I("tgt_b + 1")}
-      |        - ${I(s"tgt_tot + ${graft.ops.Dsir.Buckets}")}
-      |        - ${I("raw_b + 1")}
-      |        + ${I(s"raw_tot + ${graft.ops.Dsir.Buckets}")} AS lrq
-      |      FROM cnt CROSS JOIN tot),
-      |ds AS (SELECT b.doc_id, b.source, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-      |         CAST(SUM(coalesce(w.lrq, 0)) AS BIGINT) AS score_q
-      |       FROM b LEFT JOIN w USING (bk) WHERE $scorePred GROUP BY 1, 2),
-      |fl AS (SELECT d.doc_id, d.source, CAST(coalesce(ds.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-      |         CAST(coalesce(ds.score_q, 0) AS BIGINT) AS score_q
-      |       FROM (SELECT * FROM $src WHERE $scorePred) d LEFT JOIN ds ON d.doc_id = ds.doc_id),
-      |r AS (SELECT *, CAST(row_number() OVER (ORDER BY score_q DESC, doc_id) AS INT) AS sel_rank FROM fl)
-      |SELECT doc_id, source, n_bigrams, score_q, sel_rank FROM r WHERE sel_rank <= $k ORDER BY sel_rank""".stripMargin
-  }
-
-  // ====================================================================
-  // Flagship
-  // ====================================================================
-
   /** Flagship: legacy chunk+embed lifecycle (§3.3) over sf0.001 documents. */
   def entry(spark: SparkSession): DataFrame =
     Pipelines.chunkAndEmbedDocuments(spark, "/root/testdata/sf0.001")
 
-  /** Single source of truth for the persisted minhash corpus index:
-    * corpus slice, k, and numHashes are defined ONCE here and encoded in
-    * the table-name slug, so benchPrepare and the
-    * dedup_incremental_indexed query can never drift apart — a parameter
-    * change renames the tables and forces a rebuild instead of silently
-    * probing an index built with different parameters. */
-  private val MinhashIndexK = 3
-  private val MinhashIndexHashes = 16
-  private val MinhashIndexCorpusMod = 5 // corpus = doc_id % mod =!= 0 slice
-  private def minhashIndexCorpus(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir).filter(col("doc_id") % MinhashIndexCorpusMod =!= 0)
+  /** Every query, grouped by family; the registry refuses a duplicate name. */
+  lazy val defs: Seq[QueryDef] = QueryDef.registry(
+    RelationalQueries.defs ++ NormalizationQueries.defs ++ EnrichmentQueries.defs ++
+      ChunkingQueries.defs ++ DedupQueries.defs ++ VectorQueries.defs ++
+      TextQueries.defs ++ MultimodalQueries.defs ++ EventsQueries.defs ++
+      FixtureQueries.defs)
 
-  /** Catalog names of the persisted minhash corpus index, scoped by
-    * (application, corpus dir, build parameters) so a warmup at one SF can
-    * never serve a probe at another, concurrent test sessions don't
-    * collide, and a parameter drift — including the corpus slice — forces
-    * a rebuild (every parameter in the slug is the SAME constant the build
-    * reads, never a parallel literal). */
-  private def minhashIndexTables(s: SparkSession, dir: String): (String, String) = {
-    val slug = (s.sparkContext.applicationId + "_" + dir +
-      s"_k${MinhashIndexK}_h${MinhashIndexHashes}_mod${MinhashIndexCorpusMod}")
-      .replaceAll("[^a-zA-Z0-9]", "_")
-    (s"graft_mh_bands_$slug", s"graft_mh_sets_$slug")
-  }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    defs.map(d => d.name -> d.build).toMap
 
-  /** Idempotent build-if-missing of the minhash corpus index; returns the
-    * table names. The ONLY call path to [[graft.ops.Dedup
-    * .writeMinhashIndex]] for the bench/oracle index — shared by
-    * benchPrepare and the query body. */
-  private def ensureMinhashIndex(s: SparkSession, dir: String): (String, String) = {
-    val (bandsT, setsT) = minhashIndexTables(s, dir)
-    if (!(s.catalog.tableExists(bandsT) && s.catalog.tableExists(setsT)))
-      graft.ops.Dedup.writeMinhashIndex(minhashIndexCorpus(s, dir), "doc_id", "text",
-        bandsT, setsT, k = MinhashIndexK, numHashes = MinhashIndexHashes)
-    (bandsT, setsT)
-  }
+  /** Oracle SQL (DuckDB dialect): same tables, same column names/order keys. */
+  lazy val oracleSql: Map[String, String] =
+    defs.map(d => d.name -> d.oracle()).toMap
 
-  /** Winnow corpus index: same (application, dir, params) scoping and
-    * %5-slice increment contract as the minhash index. */
-  private def winnowIndexTable(s: SparkSession, dir: String): String = {
-    val slug = (s.sparkContext.applicationId + "_" + dir +
-      s"_k5_w4_mod$MinhashIndexCorpusMod").replaceAll("[^a-zA-Z0-9]", "_")
-    s"graft_winnow_posts_$slug"
-  }
-
-  private def ensureWinnowIndex(s: SparkSession, dir: String): String = {
-    val t = winnowIndexTable(s, dir)
-    if (!s.catalog.tableExists(t))
-      graft.ops.Winnow.writeIndex(minhashIndexCorpus(s, dir), "doc_id", "text", t)
-    t
-  }
-
-  /** Lexical postings index: same (application, dir, params) scoping and
-    * %5-slice increment contract as the minhash index. */
-  private def tfIndexTable(s: SparkSession, dir: String): String = {
-    val slug = (s.sparkContext.applicationId + "_" + dir +
-      s"_mod$MinhashIndexCorpusMod").replaceAll("[^a-zA-Z0-9]", "_")
-    s"graft_tf_posts_$slug"
-  }
-
-  private def ensureTfIndex(s: SparkSession, dir: String): String = {
-    val t = tfIndexTable(s, dir)
-    if (!s.catalog.tableExists(t))
-      graft.ops.Bm25.writeTfIndex(minhashIndexCorpus(s, dir), "doc_id", "text", t)
-    t
-  }
-
-  /** Target slice for the DSIR rows — defined ONCE so the Spark queries
-    * and the generated oracle can never disagree on what "target" means. */
-  private val DsirTargetSources = Seq("src0", "src1", "src2", "src3")
-
-  /** BPE merge-training rounds for the tokenize_bpe rows — small enough
-    * that the oracle's chained round CTEs stay readable, large enough
-    * that merged symbols feed later rounds (multi-char x by round ~3). */
-  private val BpeRounds = 6
-
-  /** The eval_retrieval query battery: (query_id, phrase). Phrases are
-    * picked to discriminate at sf0.01 (5 / 3 / 1 exact-phrase matches);
-    * the card still emits one row per query when a phrase has zero
-    * matches at a smaller SF (the zero-guard path). */
-  private val RetrievalEvalQueries: Seq[(String, Seq[String])] = Seq(
-    "q_fast_table_scan" -> Seq("fast", "table", "scan"),
-    "q_small_query_line" -> Seq("small", "query", "line"),
-    "q_spark_join_window" -> Seq("spark", "join", "window"))
-
-  /** Deterministic HTML page synthesized around each document (ONE
-    * dialect-shared expression — `||`, `replace`, and the literals parse
-    * identically in Spark and DuckDB): head chrome with a style block and
-    * a script containing markup-hostile characters, sentence breaks
-    * promoted to paragraph boundaries, an entity-bearing nav list. The
-    * text_html_extract row runs [[graft.ops.TextAnalysis.htmlExtract]]
-    * over it and must recover clean block text in both engines. */
-  /** Per-cell quota for the mix_topic row: cuts real rows at sf0.01
-    * (~25 vectors/cell) and deeply at sf0.1 (~250/cell). */
-  private val MixTopicQuota = 20
-
-  private val HtmlSynthExpr =
-    """'<html><head><style>p{margin:0}</style>' ||
-      |'<script>var x = 1 < 2 && "q";</script></head><body><h1>' || source ||
-      |'</h1><p>' || replace(text, '. ', '.</p><p>') ||
-      |'</p><ul><li>nav</li><li>links &amp; more</li></ul></body></html>'"""
-      .stripMargin.replace("\n", " ")
-
-  /** Catalog name of the persisted DSIR bucket-weight model — same slug
-    * discipline as the minhash/IVF artifacts: (application, corpus dir,
-    * model parameters), so SFs never cross and parameter drift forces a
-    * rebuild. */
-  private def dsirWeightsTable(s: SparkSession, dir: String): String = {
-    val slug = (s.sparkContext.applicationId + "_" + dir +
-      s"_b${graft.ops.Dsir.Buckets}_s${graft.ops.Dsir.Seed}_mod5_tgt03")
-      .replaceAll("[^a-zA-Z0-9]", "_")
-    s"graft_dsir_w_$slug"
-  }
-
-  /** Idempotent build-if-missing of the persisted DSIR weights over the
-    * corpus slice (doc_id % 5 =!= 0); returns the table name. */
-  private def ensureDsirWeights(s: SparkSession, dir: String): String = {
-    val t = dsirWeightsTable(s, dir)
-    if (!graft.ops.Dsir.weightsExist(s, t)) {
-      val corpus = Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0)
-      graft.ops.Dsir.writeWeights(s, graft.ops.Dsir.bucketWeights(
-        corpus, "doc_id", "text", col("source").isin(DsirTargetSources: _*)), t)
-    }
-    t
-  }
-
-  /** The multimodal fixture payloads shared by the media rows: genuine
-    * PNG/JPEG/WAV headers (round-robin by doc_id, dims/rate derived from
-    * doc_id) built by the public-spec builders, with the document's text
-    * bytes as the stand-in encoded stream. The oracles replay the same
-    * doc_id arithmetic plus each format's fixed header size. */
-  private def multimodalPayloads(s: SparkSession, dir: String): DataFrame =
-    multimodalPayloadsOf(s, Tables.documents(s, dir))
-
-  private def multimodalPayloadsOf(s: SparkSession, docs: DataFrame): DataFrame = {
-    import s.implicits._
-    docs
-      .select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { iter =>
-        iter.map { case (id, text) =>
-          val body = text.getBytes("UTF-8")
-          val w = 32 + ((id * 7) % 2048).toInt
-          val h = 32 + ((id * 13) % 2048).toInt
-          val payload = (id % 3) match {
-            case 0 => Multimodal.buildPng(w, h, body)
-            case 1 => Multimodal.buildJpeg(w, h, body)
-            case _ => Multimodal.buildWav(8000 + (id % 6).toInt * 8000, 1 + (id % 2).toInt, body)
-          }
-          (id, payload)
-        }
-      }.toDF("media_id", "payload")
-  }
-
-  /** The dedup_semantic pipeline body, shared by the recall spot-check
-    * threshold (0.25) and the production posture (0.85): IVF cells →
-    * within-cell cosine verify at `thresholdBp` → connected components →
-    * keep the best-quality representative per cluster. */
-  private def semanticKeepBest(s: SparkSession, dir: String,
-                               thresholdBp: Long, numClusters: Int = 8): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val pairs = Dedup.semanticNearDuplicates(emb, "vec_id", "embedding",
-      numClusters = numClusters, iters = 2, thresholdBp = thresholdBp)
-    semanticKeepBestFromPairs(s, dir, pairs)
-  }
-
-  /** The shared components → quality → keep-best downstream of every
-    * semantic-dedup row (mirrors [[duckSemanticTail]]). */
-  private def semanticKeepBestFromPairs(s: SparkSession, dir: String,
-                                        pairs: DataFrame): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val clustered = graft.ops.Components.clusterDocuments(
-      emb, "vec_id", pairs, "id_a", "id_b")
-    val scored = clustered.join(
-      TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text")
-        .select(col("doc_id").as("vec_id"), col("quality_score")), "vec_id")
-    Dedup.keepBest(scored, "cluster_id", "vec_id", "quality_score")
-      .select(col("cluster_id"), col("vec_id").as("rep_id"),
-        col("cluster_size"), col("quality_score"))
-      .orderBy(col("cluster_id"))
-  }
-
-  /** Catalog name of the maintained per-source aggregate table (the MV
-    * row) — same slug discipline as every persisted artifact. */
-  private def mvStateTable(s: SparkSession, dir: String): String = {
-    val slug = (s.sparkContext.applicationId + "_" + dir + "_src_mod5")
-      .replaceAll("[^a-zA-Z0-9]", "_")
-    s"graft_mv_state_$slug"
-  }
-
-  /** Idempotent build-if-missing of the maintained aggregate over the
-    * corpus slice (doc_id % 5 =!= 0); returns the table name. */
-  private def ensureMvState(s: SparkSession, dir: String): String = {
-    val t = mvStateTable(s, dir)
-    if (!graft.ops.Mv.stateExists(s, t)) {
-      val corpus = Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0)
-      graft.ops.Mv.writeState(s, graft.ops.Mv.aggState(corpus, "source", "n_chars"), t)
-    }
-    t
-  }
-
-  /** GenTable roots of the maintained link-graph state for `dir` —
-    * (directed edges, out-degrees, undirected edges, degrees), scoped
-    * like every other persisted-state slug so SFs never cross. */
-  private def graphStateRoots(s: SparkSession, dir: String): Seq[String] = {
-    val slug = (s.sparkContext.applicationId + "_" + dir + "_src_mod5")
-      .replaceAll("[^a-zA-Z0-9]", "_")
-    Seq("e", "odeg", "und", "deg", "tri").map(w =>
-      graft.io.GenTable.rootFor(s, s"graft_graph_${w}_$slug"))
-  }
-
-  /** Idempotent build-if-missing of the maintained link-graph state over
-    * the base slice (links whose SOURCE doc is outside the %5 delta
-    * slice): the canonical directed/undirected edge tables plus their
-    * node-sized degree states — what a crawl pipeline keeps between
-    * frontier batches so no batch ever re-pays the corpus-sized
-    * distinct/degree shuffles. Returns the four GenTable roots. */
-  private def ensureGraphState(s: SparkSession, dir: String): Seq[String] = {
-    val roots @ Seq(eR, odegR, undR, degR, triR) = graphStateRoots(s, dir)
-    if (!roots.forall(graft.io.GenTable.exists(s, _))) {
-      val base = Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0)
-        .select(col("doc_id").as("src"),
-          explode(array(expr("doc_id div 2"), expr("doc_id div 4"),
-            expr("doc_id % 97"))).as("dst"))
-      val e = graft.ops.Graph.canonicalDirected(base).localCheckpoint()
-      graft.io.GenTable.replace(s, eR, e)
-      graft.io.GenTable.replace(s, odegR, graft.ops.Graph.outDegreesOf(e))
-      val und = graft.ops.Graph.canonicalUndirected(base).localCheckpoint()
-      graft.io.GenTable.replace(s, undR, und)
-      val deg = graft.ops.Graph.degreesOf(und).localCheckpoint()
-      graft.io.GenTable.replace(s, degR, deg)
-      graft.io.GenTable.replace(s, triR, graft.ops.Graph.triangleStateOf(und, deg))
-    }
-    roots
-  }
-
-  /** The incremental bitext delta rule: a FIXED-size-ish frontier batch —
-    * every vec_id divisible by `max(50, n/1000)`, i.e. 2% of a small
-    * corpus but capped near ~1000 vectors as the corpus grows. The cap is
-    * the point: an arriving batch is a training-loop constant, not a
-    * corpus fraction, so the touched-cell count (≤ |Δ|) stays bounded
-    * while the cell count grows — the untouched share approaches 100%
-    * and the per-batch mining work stays delta-proportional. */
-  private def bitextDeltaMod(n: Long): Long = math.max(50L, n / 1000L)
-
-  /** Catalog name (model) + GenTable roots (assignments, per-cell pairs)
-    * of the persisted bitext-mining state for `dir`. */
-  private def bitextStateNames(s: SparkSession, dir: String): (String, String, String) = {
-    val slug = (s.sparkContext.applicationId + "_" + dir + "_bitext_modcap")
-      .replaceAll("[^a-zA-Z0-9]", "_")
-    (s"graft_bitext_m2_$slug",
-      graft.io.GenTable.rootFor(s, s"graft_bitext_asn_$slug"),
-      graft.io.GenTable.rootFor(s, s"graft_bitext_pairs_$slug"))
-  }
-
-  /** Idempotent build-if-missing of the persisted bitext-mining state
-    * over the base corpus (ids outside the delta rule): the two-level
-    * codebook (trained once per epoch — the Θ(n^1.5) assignment cost is
-    * paid HERE, amortized across every subsequent batch), the base
-    * corpus's composite-cell assignments, and its mined pairs tagged by
-    * cell. Returns (model table, assignment root, pairs root). */
-  private def ensureBitextState(s: SparkSession, dir: String): (String, String, String) = {
-    val (mT, asnR, pairsR) = bitextStateNames(s, dir)
-    val built = s.catalog.tableExists(mT + "_super") &&
-      graft.io.GenTable.exists(s, asnR) && graft.io.GenTable.exists(s, pairsR)
-    if (!built) {
-      val emb = Tables.embeddings(s, dir)
-      val m = bitextDeltaMod(emb.count())
-      val base = emb.filter(col("vec_id") % m =!= 0).localCheckpoint(false)
-      val k2 = math.max(4, math.ceil(math.sqrt(base.count().toDouble / 100)).toInt)
-      val m2 = graft.ops.Ivf.trainHierarchical(base, "vec_id", "embedding",
-        k2 = k2, targetCell = 100)
-      graft.ops.Ivf.writeModel2(s, m2, mT)
-      val asn = graft.ops.Ivf.assignHierarchical(base, "vec_id", "embedding", m2)
-        .localCheckpoint(false)
-      graft.io.GenTable.replace(s, asnR, asn)
-      graft.io.GenTable.replace(s, pairsR,
-        graft.ops.Mining.bitextPairsWithCells(base, "vec_id", "embedding",
-          col("vec_id") % 2 === 0, asn, k = 4, minMarginBp = 10000L))
-    }
-    (mT, asnR, pairsR)
-  }
-
-  /** Catalog name of the persisted IVF coarse-quantizer model for `dir` —
-    * the ANN-side analogue of the minhash index slug: scoped by
-    * (application, corpus dir, train parameters) so SFs never cross and
-    * parameter drift forces a rebuild. */
-  private def ivfModelTable(s: SparkSession, dir: String): String = {
-    val slug = (s.sparkContext.applicationId + "_" + dir + "_k8_i2_mod5")
-      .replaceAll("[^a-zA-Z0-9]", "_")
-    s"graft_ivf_model_$slug"
-  }
-
-  /** Idempotent train-if-missing of the persisted IVF model over the
-    * corpus slice (vec_id % 5 =!= 0); returns the table name. */
-  private def ensureIvfModel(s: SparkSession, dir: String): String = {
-    val t = ivfModelTable(s, dir)
-    if (!s.catalog.tableExists(t)) {
-      val corpus = Tables.embeddings(s, dir).filter(col("vec_id") % 5 =!= 0)
-      val model = graft.ops.Ivf.train(corpus, "vec_id", "embedding", k = 8, iters = 2)
-      graft.ops.Ivf.writeModel(s, model, t)
-      // training-time drift reference (mean nearest-centroid distance),
-      // persisted with the model: every increment's staleness check
-      // compares against this
-      graft.ops.Ivf.writeTrainRef(s, t,
-        graft.ops.Ivf.driftStatQ(corpus, "vec_id", "embedding", model))
-    }
-    t
-  }
-
-  /** Day-partitioned events copy for `dir` — the layout a 100 TB event
-    * store actually ships (hive `_day=N/` directories), built once per
-    * (sf dir, source-file stamp) and reused across invocations. The stamp
-    * keys the path to the source parquet's size+mtime so a regenerated
-    * testdata file invalidates the copy instead of serving stale rows. */
-  private[graft] def ensureEventsPartitioned(s: SparkSession, dir: String): String = {
-    val src = new java.io.File(dir, "events.parquet")
-    // keyed by a hash of the FULL canonical dir (two checkouts can share a
-    // basename) + source size/mtime, NOT by applicationId: the layout is
-    // meant to outlive the JVM (Verify and Bench are separate processes
-    // amortizing the same build). Single-writer is assumed — the driver
-    // runs the surfaces sequentially.
-    val dirKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(dir).getCanonicalPath.getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    // full-millisecond mtime in the stamp (a same-second regeneration with
-    // an identical byte length must still invalidate), and the user name in
-    // the path so shared-host tmpdirs don't collide on another user's
-    // leftover (possibly unwritable) layout
-    val user = sys.props.getOrElse("user.name", "anon").replaceAll("[^A-Za-z0-9_-]", "_")
-    val path = s"${sys.props("java.io.tmpdir")}/graft_${user}_events_byday_" +
-      s"${dirKey}_${src.length}_${src.lastModified}"
-    if (!new java.io.File(path, "_SUCCESS").exists)
-      graft.ops.Scale.writeTimePartitioned(
-        Tables.events(s, dir).withColumn("ts_s", expr("ts_us div 1000000L")), path, "ts_s")
-    path
-  }
-
-  /** Untimed-by-the-query-row setup steps Bench runs (and times separately)
-    * BEFORE measuring the matching query: work production amortizes across
-    * runs — e.g. a corpus index built once and probed by every increment —
-    * so the query's bench number is its steady-state cost, and the setup
-    * cost is still visible in the bench output under `prep`. Each entry is
-    * idempotent (skips when its artifact already exists). */
-  def benchPrepare: Map[String, (SparkSession, String) => Unit] = Map(
-    "dedup_incremental_indexed" -> ((s, dir) => { ensureMinhashIndex(s, dir); () }),
-    // the merged-postings probe amortizes the persisted lexical index
-    "index_incremental" -> ((s, dir) => { ensureTfIndex(s, dir); () }),
-    // the winnow-overlap probe amortizes the persisted posting index
-    "dedup_winnow_incremental" -> ((s, dir) => { ensureWinnowIndex(s, dir); () }),
-    // the streaming probe amortizes the same corpus index
-    "stream_dedup_incremental" -> ((s, dir) => { ensureMinhashIndex(s, dir); () }),
-    // the cap-recall study's inc_indexed tier probes the same index
-    "dedup_recall" -> ((s, dir) => { ensureMinhashIndex(s, dir); () }),
-    // the pruned-scan probe amortizes the day-partitioned layout
-    "events_pruned" -> ((s, dir) => { ensureEventsPartitioned(s, dir); () }),
-    // the incremental-assign probe amortizes the persisted IVF model
-    "ann_ivf_incremental" -> ((s, dir) => { ensureIvfModel(s, dir); () }),
-    // the staleness-guard probe reads the same persisted model
-    "ann_ivf_drift" -> ((s, dir) => { ensureIvfModel(s, dir); () }),
-    // the increment-scoring probe amortizes the persisted weight table
-    "dsir_incremental" -> ((s, dir) => { ensureDsirWeights(s, dir); () }),
-    // the streaming scorer reads the same persisted weights
-    "stream_dsir" -> ((s, dir) => { ensureDsirWeights(s, dir); () }),
-    // the increment-merge probe amortizes the maintained aggregate
-    "mv_incremental" -> ((s, dir) => { ensureMvState(s, dir); () }),
-    // the streaming fold reads the same maintained state
-    "stream_mv" -> ((s, dir) => { ensureMvState(s, dir); () }),
-    // the delta-edge probes amortize the maintained link-graph state
-    "graph_pagerank_incremental" -> ((s, dir) => { ensureGraphState(s, dir); () }),
-    "graph_degrees_incremental" -> ((s, dir) => { ensureGraphState(s, dir); () }),
-    "graph_triangles_incremental" -> ((s, dir) => { ensureGraphState(s, dir); () }),
-    // the streaming edge-delta probe reads the same maintained graph state
-    "stream_graph_degrees" -> ((s, dir) => { ensureGraphState(s, dir); () }),
-    // the per-batch mining probe amortizes the epoch codebook + base pairs
-    "mine_bitext_incremental" -> ((s, dir) => { ensureBitextState(s, dir); () })
-  )
-
-  // ====================================================================
-  // Queries
-  // ====================================================================
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---------------- relational core (bench headliners) ----------------
-    "q1_agg" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .filter(expr("l_shipdate < TIMESTAMP_NTZ '1998-09-03 00:00:00'"))
-        .withColumn("qty_c", expr("cast(round(l_quantity * 100) as bigint)"))
-        .withColumn("price_c", expr("cast(round(l_extendedprice * 100) as bigint)"))
-        .withColumn("disc_c", expr("cast(round(l_discount * 100) as bigint)"))
-        .withColumn("tax_c", expr("cast(round(l_tax * 100) as bigint)"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          count(lit(1)).as("count_order"),
-          sum(col("qty_c")).as("sum_qty_c"),
-          sum(col("price_c")).as("sum_base_c"),
-          sum(col("price_c") * (lit(100L) - col("disc_c"))).as("sum_disc_c4"),
-          sum(col("price_c") * (lit(100L) - col("disc_c")) * (lit(100L) + col("tax_c"))).as("sum_charge_c6"))
-        .withColumn("avg_qty_c", expr("sum_qty_c div count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-    "q3_top_orders" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-        .withColumn("price_c", expr("cast(round(l_extendedprice * 100) as bigint)"))
-        .withColumn("disc_c", expr("cast(round(l_discount * 100) as bigint)"))
-      val o = Tables.orders(s, dir).filter(col("o_orderstatus") === "O")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderkey"))
-        .agg(sum(col("price_c") * (lit(100L) - col("disc_c"))).as("revenue_c4"),
-          count(lit(1)).as("n_items"))
-        .orderBy(col("revenue_c4").desc, col("o_orderkey"))
-        .limit(10)
-    }),
-    "q5_revenue_nation" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-        .withColumn("price_c", expr("cast(round(l_extendedprice * 100) as bigint)"))
-        .withColumn("disc_c", expr("cast(round(l_discount * 100) as bigint)"))
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val n = Tables.nation(s, dir)
-      val r = Tables.region(s, dir)
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_regionkey") < 3)
-        .groupBy(col("n_name"))
-        .agg(sum(col("price_c") * (lit(100L) - col("disc_c"))).as("revenue_c4"),
-          count(lit(1)).as("n_items"))
-        .orderBy(col("n_name"))
-    }),
-    "q6_running_window" -> ((s, dir) => {
-      val w = Window.partitionBy(col("l_suppkey"))
-        .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
-      Tables.lineitem(s, dir)
-        .withColumn("qty_c", expr("cast(round(l_quantity * 100) as bigint)"))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("running_qty_c",
-          sum(col("qty_c")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-        .filter(col("rn") <= 20)
-        .select(col("l_suppkey"), col("rn"), col("qty_c"), col("running_qty_c"))
-        .orderBy(col("l_suppkey"), col("rn"))
-    }),
-    "q7_distinct_agg" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"))
-        .agg(countDistinct(col("l_suppkey")).as("n_supps"),
-          countDistinct(col("l_partkey")).as("n_parts"),
-          count(lit(1)).as("n_rows"))
-        .orderBy(col("l_returnflag"))),
-    "q8_rollup" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .withColumn("qty_c", expr("cast(round(l_quantity * 100) as bigint)"))
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("qty_c")).as("sum_qty_c"), count(lit(1)).as("n"))
-        .select(coalesce(col("l_returnflag"), lit("(all)")).as("l_returnflag"),
-          coalesce(col("l_linestatus"), lit("(all)")).as("l_linestatus"),
-          col("sum_qty_c"), col("n"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))),
-    "q10_above_avg" -> ((s, dir) => {
-      // decorrelated form of: orders above their customer's average price
-      val o = Tables.orders(s, dir)
-        .withColumn("price_c", expr("cast(round(o_totalprice * 100) as bigint)"))
-      val avg = o.groupBy(col("o_custkey"))
-        .agg(expr("cast(sum(price_c) div count(1) as bigint)").as("avg_c"))
-      o.join(avg, "o_custkey")
-        .filter(col("price_c") > col("avg_c"))
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_above"))
-        .orderBy(col("o_custkey"))
-    }),
-    "q11_pivot" -> ((s, dir) =>
-      // pivot = groupBy + explicit value list (never value-discovery, which
-      // costs an extra distinct job and nondeterministic column order):
-      // order counts and cents revenue per priority × status
-      Tables.orders(s, dir)
-        .withColumn("price_c", expr("cast(round(o_totalprice * 100) as bigint)"))
-        .groupBy(col("o_orderpriority"))
-        .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(count(lit(1)).as("n"), sum(col("price_c")).as("rev_c"))
-        .select(col("o_orderpriority"),
-          coalesce(col("F_n"), lit(0L)).as("f_n"), coalesce(col("F_rev_c"), lit(0L)).as("f_rev_c"),
-          coalesce(col("O_n"), lit(0L)).as("o_n"), coalesce(col("O_rev_c"), lit(0L)).as("o_rev_c"),
-          coalesce(col("P_n"), lit(0L)).as("p_n"), coalesce(col("P_rev_c"), lit(0L)).as("p_rev_c"))
-        .orderBy(col("o_orderpriority"))),
-    "q15_grouping_sets" -> ((s, dir) =>
-      // ARBITRARY grouping sets — the general form rollup/cube are
-      // special cases of: {(returnflag), (linestatus), ()} in ONE Expand
-      // pass, where a union of three aggregates would scan three times
-      Tables.lineitem(s, dir)
-        .withColumn("qty_c", expr("cast(round(l_quantity * 100) as bigint)"))
-        .groupingSets(
-          Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq.empty[Column]),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(grouping_id().cast("int").as("gid"),
-          sum(col("qty_c")).as("sum_qty_c"), count(lit(1)).as("n"))
-        .select(coalesce(col("l_returnflag"), lit("(all)")).as("l_returnflag"),
-          coalesce(col("l_linestatus"), lit("(all)")).as("l_linestatus"),
-          col("gid"), col("sum_qty_c"), col("n"))
-        .orderBy(col("gid"), col("l_returnflag"), col("l_linestatus"))),
-    "q12_cube" -> ((s, dir) =>
-      // full cube over (returnflag, linestatus) with the grouping-set id
-      // exposed — all four grouping sets in ONE pass (Expand, not a union
-      // of four aggregates)
-      Tables.lineitem(s, dir)
-        .withColumn("qty_c", expr("cast(round(l_quantity * 100) as bigint)"))
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(grouping_id().cast("int").as("gid"),
-          sum(col("qty_c")).as("sum_qty_c"), count(lit(1)).as("n"))
-        .select(coalesce(col("l_returnflag"), lit("(all)")).as("l_returnflag"),
-          coalesce(col("l_linestatus"), lit("(all)")).as("l_linestatus"),
-          col("gid"), col("sum_qty_c"), col("n"))
-        // gid in the sort key: the '(all)' sentinel makes a genuine NULL data
-        // value collide with subtotal rows, so (flag, status) alone would
-        // leave their relative order engine-dependent on nullable inputs
-        .orderBy(col("l_returnflag"), col("l_linestatus"), col("gid"))),
-    "topk_per_key" -> ((s, dir) => {
-      // grouped top-k via the bounded-heap typed aggregator: the exchange
-      // carries ≤ keys×k rows per input partition (map-side partials),
-      // nothing is fully sorted — vs the window form that shuffles and
-      // sorts every row
-      val o = Tables.orders(s, dir)
-        .withColumn("price_c", expr("cast(round(o_totalprice * 100) as bigint)"))
-      graft.ops.TopK.topKPerKey(o, "o_custkey", "o_orderkey", "price_c", k = 3)
-        .orderBy(col("o_custkey"), col("rank"))
-    }),
-    "q13_full_outer" -> ((s, dir) => {
-      // full outer join: per-nation supplier vs customer counts, keeping
-      // nations present on either side only (sentinel-coalesced keys)
-      val sup = Tables.supplier(s, dir).filter(col("s_acctbal") > 5000)
-        .groupBy(col("s_nationkey").as("nationkey")).agg(count(lit(1)).as("n_sup"))
-      val cust = Tables.customer(s, dir).filter(col("c_acctbal") > 5000)
-        .groupBy(col("c_nationkey").as("nationkey")).agg(count(lit(1)).as("n_cust"))
-      sup.join(cust, Seq("nationkey"), "full_outer")
-        .select(col("nationkey"),
-          coalesce(col("n_sup"), lit(0L)).as("n_sup"),
-          coalesce(col("n_cust"), lit(0L)).as("n_cust"))
-        .orderBy(col("nationkey"))
-    }),
-    "q14_window_suite" -> ((s, dir) => {
-      // the window-function breadth pack in ONE pass over one shuffle:
-      // ranking (rank/dense_rank/ntile), offset (lag/lead), and frame
-      // (first/last value) functions share a single window partition
-      val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
-      Tables.orders(s, dir)
-        .filter(col("o_custkey") % 50 === 0)
-        .withColumn("price_c", expr("cast(round(o_totalprice * 100) as bigint)"))
-        .select(col("o_custkey"), col("o_orderkey"),
-          rank().over(w).as("rnk"),
-          dense_rank().over(w).as("drnk"),
-          ntile(4).over(w).as("quartile"),
-          coalesce(lag(col("o_orderkey"), 1).over(w), lit(-1L)).as("prev_order"),
-          coalesce(lead(col("o_orderkey"), 1).over(w), lit(-1L)).as("next_order"),
-          first(col("price_c")).over(w).as("first_price_c"),
-          sum(col("price_c")).over(w.rowsBetween(Window.unboundedPreceding, 0)).as("run_price_c"))
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
-    "q9_setops" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val longDocs = docs.filter(length(col("text")) >= 200).select("doc_id")
-      val seen = docs.filter(col("doc_id") % 5 === 0).select("doc_id")
-      longDocs.except(seen).withColumn("op", lit("except"))
-        .unionByName(longDocs.intersect(seen).withColumn("op", lit("intersect")))
-        .orderBy(col("op"), col("doc_id"))
-    }),
-    "q4_order_priority" -> ((s, dir) => {
-      val big = Tables.lineitem(s, dir).filter(col("l_quantity") > 45).select("l_orderkey")
-      Tables.orders(s, dir)
-        .join(big, col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // ---------------- normalization funnel (P1-P9, J1) ----------------
-    "doi_normalize" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .withColumn("doi_raw", expr(DoiRawSql))
-        .select(col("doc_id"), Norm.normalizeDoi(col("doi_raw")).as("doi_norm"))
-        .orderBy(col("doc_id"))),
-    "normalize_funnel" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .withColumn("doi_raw", expr(DoiRawSql))
-        .withColumn("journal_raw", expr(JournalRawSql))
-        .select(col("doc_id"),
-          Norm.doiExtract(col("doi_raw")).as("doi_extracted"),
-          Norm.stripBraces(col("journal_raw")).as("journal_clean"),
-          Norm.stripBraces(substring(col("text"), 1, 40)).as("title_clean"))
-        .orderBy(col("doc_id"))),
-    "doc_id_derive" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .withColumn("doi_raw", expr(DoiRawSql))
-        .withColumn("doi_norm",
-          when(col("doc_id") % 3 =!= 0, Norm.normalizeDoi(col("doi_raw"))).otherwise(lit(null)))
-        .select(col("doc_id"),
-          Norm.docId(col("doi_norm"), substring(col("text"), 1, 30), upper(col("source"))).as("doc_key"))
-        .orderBy(col("doc_id"))),
-    "json_roundtrip" -> ((s, dir) => {
-      // K1/K2 as a correctness gate, not just a side effect: a documents
-      // slice goes OUT through the JSONL sink and comes back via a
-      // schema-pinned read; the oracle replays the selection straight from
-      // the table, so any sink loss (escaping, types, nulls, dropped rows)
-      // breaks the hash. The tmp path is scoped by application id (no
-      // cross-JVM clobbering) and overwritten per run.
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_json_roundtrip_${s.sparkContext.applicationId}").getAbsolutePath
-      val slice = Tables.documents(s, dir)
-        .filter(col("doc_id") % 13 === 0)
-        .select(col("doc_id"), col("source"), col("lang"), col("text"))
-      graft.io.Writers.jsonSink(slice, path)
-      s.read.schema("doc_id BIGINT, source STRING, lang STRING, text STRING").json(path)
-        .orderBy(col("doc_id"))
-    }),
-    "pmcid_canonical" -> ((s, dir) =>
-      // P9 over a synthesized raw-id funnel covering the forms the
-      // reference's idconv responses carry (sources/pmc.py:162,245-251):
-      // canonical "PMC<digits>", lowercase, bare digits, padded
-      Tables.documents(s, dir)
-        .withColumn("pmcid_raw",
-          when(col("doc_id") % 4 === 0, concat(lit("PMC"), col("doc_id")))
-            .when(col("doc_id") % 4 === 1, concat(lit("pmc"), col("doc_id")))
-            .when(col("doc_id") % 4 === 2, col("doc_id").cast("string"))
-            .otherwise(concat(lit(" PMC"), col("doc_id"), lit(" "))))
-        .select(col("doc_id"), col("pmcid_raw"),
-          Norm.pmcidCanonical(col("pmcid_raw")).as("pmcid"))
-        .orderBy(col("doc_id"))),
-    "html_unescape" -> ((s, dir) => {
-      // P10 (sources/springer.py:108-116): multi-round entity unescape to
-      // fixpoint over a synthesized escaped-payload funnel — named core
-      // set, double-escaped nesting, decimal and hex numeric references.
-      // The operator is the pure-Scala partition-function tier, so the
-      // query exercises it through a typed map; the oracle replays each
-      // round as a cascade-free replace chain (&-producing entities last).
-      import s.implicits._
-      Tables.documents(s, dir)
-        .withColumn("raw",
-          when(col("doc_id") % 5 === 0, lit("Fish &amp; Chips"))
-            .when(col("doc_id") % 5 === 1, lit("&amp;amp; nested"))
-            .when(col("doc_id") % 5 === 2, lit("&lt;p&gt;text&lt;/p&gt;"))
-            .when(col("doc_id") % 5 === 3, lit("q&quot;&apos;&#38;&#x3C;"))
-            .otherwise(lit("no entities here")))
-        .select(col("doc_id"), col("raw"))
-        .as[(Long, String)]
-        .map { case (id, r) => (id, r, Norm.htmlMultiUnescape(r)) }
-        .toDF("doc_id", "raw", "unescaped")
-        .orderBy(col("doc_id"))
-    }),
-    "dedup_exact" -> ((s, dir) =>
-      Dedup.exact(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id"))),
-    "filter_min_fulltext" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .filter(Norm.minFulltextChars(col("text"), 200))
-        .select(col("doc_id"), length(col("text")).cast("long").as("body_len"))
-        .orderBy(col("doc_id"))),
-
-    // ---------------- enrichment lifecycle (J2-J5, A3, G1-G2) ----------------
-    "enrich_pmcid" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val idMap = docs.filter(col("doc_id") % 7 =!= 0)
-        .select(col("doc_id"), concat(lit("PMC"), col("doc_id")).as("pmcid"))
-      Enrich.enrichJoin(docs, idMap, "doc_id")
-        .select(col("doc_id"), col("pmcid"),
-          when(col("pmcid").isNull, lit("No PMCID")).otherwise(lit(null).cast("string")).as("reason"))
-        .orderBy(col("doc_id"))
-    }),
-    "resume_antijoin" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Enrich.resumeAntiJoin(docs, docs.filter(col("doc_id") % 5 === 0).select("doc_id"), "doc_id")
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-    "enrich_fallback" -> ((s, dir) => {
-      // the S7/S9/A4/B5 fallback chain under the driver's hash (r14 task
-      // 7): every key walks the tiered transport's deterministic taxonomy
-      // through the REAL enrich runner — grouped batches, batch-silent
-      // keys re-probed per-key (A4), a Retry-After lane exhausting into
-      // the B5 failure-taxonomy row — so batch splits and partitioning
-      // cannot change a single output row. Virtual sleeper (r15 verdict
-      // task 6): the fixture row measures the fallback ALGEBRA, not the
-      // 429 lane's literal Thread.sleep (~90% of the old sf1+ cells);
-      // the live-socket spec keeps the real clock.
-      val keys = Tables.documents(s, dir).select(col("doc_id").cast("string").as("doi"))
-      graft.enrich.HttpBatch.enrich(keys, "doi",
-        new graft.enrich.TieredFixtureTransport,
-        graft.enrich.BatchConfig(batchSize = 16, attempts = 2, backoffMs = 0,
-          throttleMs = 0, singleFallback = true,
-          sleeper = new graft.enrich.Sleeper.Virtual))
-        .select(col("doi").cast("long").as("doc_id"), col("value"), col("reason"))
-        .orderBy(col("doc_id"))
-    }),
-    "split_failures" -> ((s, dir) =>
-      assembled(s, dir).filter(!col("ok"))
-        .select(col("doc_id"), col("reason"))
-        .orderBy(col("doc_id"))),
-    "summary_counts" -> ((s, dir) => {
-      // fully lazy: both aggregate legs join in one plan (1-row crossJoin)
-      val a = assembled(s, dir).agg(
-        sum(when(col("ok"), 1L).otherwise(0L)).as("appended"),
-        sum(when(!col("ok"), 1L).otherwise(0L)).as("failures"))
-      val d = Tables.documents(s, dir).agg(
-        count(lit(1)).as("input_unique_doi"),
-        sum(when(col("doc_id") % 5 === 0, 1L).otherwise(0L)).as("skipped_existing"))
-      d.crossJoin(a).select("input_unique_doi", "appended", "skipped_existing", "failures")
-    }),
-    "skip_reasons" -> ((s, dir) =>
-      assembled(s, dir).filter(!col("ok"))
-        .groupBy(col("reason")).agg(count(lit(1)).as("n"))
-        .orderBy(col("reason"))),
-
-    // ---------------- chunking (C2-C8) ----------------
-    "chunk_fixed" -> ((s, dir) =>
-      Chunkers.fixedWindowsExpr(Tables.documents(s, dir), "doc_id", "text", 120, 12)
-        .orderBy(col("doc_id"), col("chunk_index"))),
-    "chunk_tokens" -> ((s, dir) =>
-      tokenChunks(s, dir)
-        .select(
-          concat(col("doc_id"), lit("::t"), col("chunk_index")).as("chunk_id"),
-          col("doc_id"), col("chunk_index"), col("n_tokens"),
-          expr("array_join(slice(_toks, _start + 1, 40), ' ')").as("chunk_text"))
-        .orderBy(col("doc_id"), col("chunk_index"))),
-
-    "chunk_generator" -> ((s, dir) => {
-      // the word-boundary-bump chunker as a native SQL Generator
-      org.apache.spark.sql.graft.GraftFunctions.register(s)
-      Tables.documents(s, dir).createOrReplaceTempView("graft_docs")
-      s.sql(
-        """SELECT concat(doc_id, '::g', w.chunk_index) AS chunk_id, doc_id,
-          |       w.chunk_index, w.chunk_text
-          |FROM graft_docs LATERAL VIEW chunk_windows(text, 120, 12) w
-          |ORDER BY doc_id, w.chunk_index""".stripMargin)
-    }),
-
-    // ---------------- dedup family (north star) ----------------
-    // the LSH oracle rows pin the UNCAPPED pair set (the DuckDB SQL models
-    // no hot-band cap), so they pass maxBucket = Int.MaxValue explicitly;
-    // library callers get the scale-safe Dedup.DefaultMaxBucket default
-    "dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashCandidates(Tables.documents(s, dir), "doc_id", "text", k = 3, numHashes = 16,
-        maxBucket = Int.MaxValue)
-        .orderBy(col("doc_a"), col("doc_b"))),
-    "dedup_neardup" -> ((s, dir) =>
-      // LSH recall + exact-Jaccard confirm; low threshold so the synthetic
-      // corpus (no true near-dups) still demonstrates verified scores, and
-      // a sentinel row keeps the rows-only path alive if pairs are empty
-      Dedup.nearDuplicates(Tables.documents(s, dir), "doc_id", "text", minJaccardBp = 100L,
-        maxBucket = Int.MaxValue)
-        .unionByName(s.range(1).select(lit(-1L).as("doc_a"), lit(-1L).as("doc_b"), lit(10000L).as("jaccard_bp")))
-        .orderBy(col("doc_a"), col("doc_b"))),
-    "dedup_containment" -> ((s, dir) =>
-      // containment-scored dedup (doc-inside-doc): same banded-minhash
-      // candidates as dedup_neardup, but the verify emits BOTH Broder
-      // containment (inter / min side) and Jaccard — asymmetric inclusion
-      // that Jaccard dilutes scores full-strength here. Uncapped = the
-      // oracle shape (the capped production default is pinned
-      // result-invisible by dedup_neardup_capped for the shared stages)
-      Dedup.ngramContainment(Tables.documents(s, dir), "doc_id", "text",
-        minContainmentBp = 5000L, maxBucket = Int.MaxValue)
-        .orderBy(col("doc_a"), col("doc_b"))),
-    "dedup_neardup_capped" -> ((s, dir) =>
-      // the DEFAULT (capped) LSH path under the correctness gate: at these
-      // SFs no band bucket approaches DefaultMaxBucket, so the capped
-      // pipeline must produce EXACTLY the uncapped oracle's pairs — pinning
-      // that the cap machinery (window count + filter) is result-invisible
-      // when no bucket is hot, the everyday production case
-      Dedup.nearDuplicates(Tables.documents(s, dir), "doc_id", "text", minJaccardBp = 100L)
-        .unionByName(s.range(1).select(lit(-1L).as("doc_a"), lit(-1L).as("doc_b"), lit(10000L).as("jaccard_bp")))
-        .orderBy(col("doc_a"), col("doc_b"))),
-    "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhash(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id"))),
-    "dedup_simhash_pairs" -> ((s, dir) =>
-      // union with a sentinel row so the rows-only check sees output even
-      // when the corpus has no 16-bit-band collisions at this SF
-      Dedup.simhashCandidates(Tables.documents(s, dir), "doc_id", "text", maxBucket = Int.MaxValue)
-        .unionByName(s.range(1).select(lit(-1L).as("doc_a"), lit(-1L).as("doc_b")))
-        .orderBy(col("doc_a"), col("doc_b"))),
-    "dedup_jaccard" -> ((s, dir) => {
-      // exact n-gram Jaccard VERIFICATION of simhash-LSH candidates — the
-      // recall/precision split shaped for corpus scale: band equi-join
-      // generates pairs, the candidate-pair overload scores exactly; no
-      // all-pairs anywhere (the sampled crossJoin form survives only as
-      // the spot-check tier in Dedup). Sentinel keeps rows>0 at tiny SFs
-      // with no 16-bit band collisions.
-      val docs = Tables.documents(s, dir)
-      val cands = Dedup.simhashCandidates(docs, "doc_id", "text", maxBucket = Int.MaxValue)
-      Dedup.ngramJaccard(cands, docs, "doc_id", "text", k = 3)
-        .unionByName(s.range(1).select(lit(-1L).as("doc_a"), lit(-1L).as("doc_b"),
-          lit(10000L).as("jaccard_bp")))
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-    "contamination" -> ((s, dir) => {
-      // decontamination sweep: corpus docs sharing 3-gram shingles with a
-      // synthetic "benchmark" slice (every 97th doc)
-      val docs = Tables.documents(s, dir)
-      // bench side here is a corpus SLICE (grows with the corpus), so the
-      // broadcast hint is off — shuffled hash join is the safe shape
-      Dedup.ngramContamination(
-        docs.filter(col("doc_id") % 97 =!= 0),
-        docs.filter(col("doc_id") % 97 === 0),
-        "doc_id", "text", k = 3, minShared = 1L, broadcastBench = false)
-        .orderBy(col("corpus_id"), col("bench_id"))
-    }),
-    "contamination_semantic" -> ((s, dir) => {
-      // paraphrase-level decontamination: the embedding-space analogue of
-      // `contamination` — an eval item rephrased past any 3-gram overlap
-      // still sits near its source in embedding space. Bench = every 23rd
-      // vector (a corpus slice, so the broadcast hint is off, exactly the
-      // `contamination` posture); 6-bit × 4-table sign-LSH blocks (a wider
-      // net than near-dup's 8 bits — a missed contaminated doc costs more
-      // than extra verify pairs), exact cosine >= 0.25 confirms. The
-      // production gate runs BOTH this and the verbatim `contamination`
-      // row; the union of flags governs.
-      val emb = Tables.embeddings(s, dir)
-      Dedup.semanticContamination(
-        emb.filter(col("vec_id") % 23 =!= 0), emb.filter(col("vec_id") % 23 === 0),
-        "vec_id", "embedding", dim = 64, thresholdBp = 2500L,
-        numTables = 4, numBits = 6, broadcastBench = false)
-        .orderBy(col("corpus_id"), col("bench_id"))
-    }),
-    "contamination_semantic_auto" -> ((s, dir) => {
-      // the production entry point after the scale sweep caught the fixed
-      // 6-bit row super-linear (1.6-1.7/decade): width derived from the
-      // corpus count (numBitsFor) keeps cross-side collision volume
-      // ~linear as both sides grow; the DuckDB side computes the same
-      // width from COUNT(*), so the auto-sizing is pinned by hash
-      // equality, not documentation (the embed_neardup_auto precedent)
-      val emb = Tables.embeddings(s, dir)
-      Dedup.semanticContaminationAuto(
-        emb.filter(col("vec_id") % 23 =!= 0), emb.filter(col("vec_id") % 23 === 0),
-        "vec_id", "embedding", dim = 64, thresholdBp = 2500L,
-        numTables = 4, targetBucketSize = 1000L, broadcastBench = false)
-        .orderBy(col("corpus_id"), col("bench_id"))
-    }),
-    "embed_neardup" -> ((s, dir) => {
-      // embedding near-dup at corpus shape: sign-projection LSH buckets
-      // (8 bits × 4 tables — a wide net for the moderate-sim band) block
-      // the corpus into candidate pairs, exact cosine verifies — replacing
-      // the id<200 sampled crossJoin with equi-joins end to end
-      val emb = Tables.embeddings(s, dir)
-      val cands = graft.ops.Similarity.bucketCandidatePairs(
-        emb, "vec_id", "embedding", dim = 64, numTables = 4, numBits = 8,
-        maxBucket = Int.MaxValue)
-      Dedup.embeddingNearDup(cands, emb, "vec_id", "embedding", thresholdBp = 2500L)
-        .unionByName(s.range(1).select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-          lit(10000L).as("sim_bp")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "embed_neardup_prod" -> ((s, dir) => {
-      // embed_neardup at the PRODUCTION threshold (>= 0.85 cosine): the
-      // blocking stage is threshold-blind (identical candidate volume),
-      // so this row pins the claim that the OUTPUT relation at a true
-      // near-dup threshold is ~linear in the corpus — the moderate 0.25
-      // band of embed_neardup is the recall spot-check posture. The -1
-      // sentinel keeps the row alive on corpora without planted 0.85+
-      // pairs (the synthetic tables have none).
-      val emb = Tables.embeddings(s, dir)
-      val cands = graft.ops.Similarity.bucketCandidatePairs(
-        emb, "vec_id", "embedding", dim = 64, numTables = 4, numBits = 8,
-        maxBucket = Int.MaxValue)
-      Dedup.embeddingNearDup(cands, emb, "vec_id", "embedding", thresholdBp = 8500L)
-        .unionByName(s.range(1).select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-          lit(10000L).as("sim_bp")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "embed_neardup_auto" -> ((s, dir) => {
-      // the default production ENTRY POINT end to end: signature width
-      // derived from the corpus count (Similarity.numBitsFor — ~+10 bits
-      // per 1000× growth, keeping candidate volume ~linear), production
-      // threshold, uncapped buckets so the oracle replays the exact shape
-      // (the DuckDB side computes the same width from COUNT(*)). This is
-      // the bucketCandidatePairsAuto green row: the auto-sizing is pinned
-      // by hash equality, not documentation.
-      val emb = Tables.embeddings(s, dir)
-      Dedup.embeddingNearDuplicates(emb, "vec_id", "embedding", dim = 64,
-        thresholdBp = 8500L, numTables = 4, targetBucketSize = 1000L,
-        maxBucket = Int.MaxValue)
-        .unionByName(s.range(1).select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-          lit(10000L).as("sim_bp")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "dedup_incremental" -> ((s, dir) => {
-      // continuous-ingestion dedup: the doc_id%5==0 slice plays the NEW
-      // crawl increment, checked against the kept corpus via band-index
-      // equi-join + exact-Jaccard confirm (never corpus×corpus); sentinel
-      // keeps the rows-only path alive when no cross-slice dup clears the
-      // threshold
-      val docs = Tables.documents(s, dir)
-      Dedup.incrementalNearDuplicates(
-        docs.filter(col("doc_id") % 5 === 0), docs.filter(col("doc_id") % 5 =!= 0),
-        "doc_id", "text", k = 3, numHashes = 16, minJaccardBp = 100L,
-        maxBucket = Int.MaxValue)
-        .unionByName(s.range(1).select(lit(-1L).as("new_id"), lit(-1L).as("corpus_id"),
-          lit(10000L).as("jaccard_bp")))
-        .orderBy(col("new_id"), col("corpus_id"))
-    }),
-    "dedup_incremental_indexed" -> ((s, dir) => {
-      // the same incremental dedup routed through the PERSISTED bucketed
-      // index: the corpus side is two bucketed catalog scans — zero
-      // exchange, zero re-shingling — and the result is hash-pinned equal
-      // to dedup_incremental's direct two-DataFrame path (same oracle).
-      // The index is built ONCE per (application, corpus dir) and reused
-      // by later invocations — the production amortization (a corpus index
-      // outlives many crawl increments); rebuild by dropping the tables.
-      // Bench pre-builds it via benchPrepare so the timed number is the
-      // PROBE, with the build cost reported separately.
-      val docs = Tables.documents(s, dir)
-      val (bandsT, setsT) = ensureMinhashIndex(s, dir)
-      Dedup.incrementalNearDuplicatesIndexed(
-        docs.filter(col("doc_id") % MinhashIndexCorpusMod === 0),
-        "doc_id", "text", bandsT, setsT, k = MinhashIndexK,
-        numHashes = MinhashIndexHashes, minJaccardBp = 100L,
-        maxBucket = Int.MaxValue)
-        .unionByName(s.range(1).select(lit(-1L).as("new_id"), lit(-1L).as("corpus_id"),
-          lit(10000L).as("jaccard_bp")))
-        .orderBy(col("new_id"), col("corpus_id"))
-    }),
-    "dedup_recall" -> ((s, dir) => {
-      // the DefaultMaxBucket recall claim as a RELATION: per cap tier
-      // (aggressive 2 and 5, plus the production default), how many of the
-      // uncapped-confirmed near-dup pairs the capped pipelines retain —
-      // on both the full-corpus LSH path and the persisted-index
-      // incremental path. DedupSpec ties each found_pairs count to the
-      // real capped operator, so cap-induced recall loss is a hash
-      // failure here, not a spec footnote.
-      val docs = Tables.documents(s, dir)
-      val (bandsT, setsT) = ensureMinhashIndex(s, dir)
-      val caps = Seq(2, 5, graft.ops.Dedup.DefaultMaxBucket)
-      graft.ops.Dedup.capRecallStudy(docs, "doc_id", "text", caps,
-        k = MinhashIndexK, numHashes = MinhashIndexHashes, minJaccardBp = 100L)
-        .unionByName(graft.ops.Dedup.indexedCapRecallStudy(
-          docs.filter(col("doc_id") % MinhashIndexCorpusMod === 0),
-          "doc_id", "text", bandsT, setsT, caps,
-          k = MinhashIndexK, numHashes = MinhashIndexHashes, minJaccardBp = 100L))
-        .orderBy(col("tier"), col("cap"))
-    }),
-    "dedup_semantic" -> ((s, dir) => {
-      // SemDeDup-style semantic tier composed end to end: IVF-cluster the
-      // embedding space (data-following cells, vs the data-blind
-      // hyperplane buckets of embed_neardup), verify cosine near-dups
-      // WITHIN clusters only, connected-components the confirmed pairs,
-      // and keep the best-QUALITY copy per component (vec_id indexes the
-      // documents table, so the representative is the cleanest document,
-      // not the lowest id). 0.25 is the recall spot-check threshold; the
-      // production posture is dedup_semantic_prod.
-      semanticKeepBest(s, dir, thresholdBp = 2500L)
-    }),
-    "dedup_semantic_prod" -> ((s, dir) => {
-      // dedup_semantic at the PRODUCTION threshold (>= 0.85 cosine, the
-      // SemDeDup operating band): same IVF cells, same verify — but only
-      // true near-identical pairs confirm, so on a corpus without planted
-      // 0.85+ pairs every document is its own cluster and the output
-      // relation is exactly corpus-linear. This row turns the "output is
-      // linear at true near-dup thresholds" claim from documentation into
-      // a green oracle row with sf1→sf3 slope cells (BASELINE.md).
-      semanticKeepBest(s, dir, thresholdBp = 8500L)
-    }),
-    "dedup_semantic_auto" -> ((s, dir) => {
-      // the PRODUCTION semantic-dedup posture the r12 sf3 audit forced:
-      // fixed k=8 cells grow linearly with the corpus, so the within-cell
-      // verify measured 3.9/decade at the sf3 asymptote. autoK bounds the
-      // expected cell at ~100 vectors (the numBitsFor idiom), making the
-      // verify pair volume n·50 — linear with a chosen constant — at the
-      // price of an n·k assignment term (n²/100, two-level-quantizer
-      // territory far beyond sf3) and finer (more, smaller) clusters.
-      val emb = Tables.embeddings(s, dir)
-      semanticKeepBest(s, dir, thresholdBp = 8500L,
-        numClusters = graft.ops.Ivf.autoK(emb.count()))
-    }),
-    "dedup_semantic_scale" -> ((s, dir) => {
-      // the 100 TB posture: two-level codebook (k2 ≈ √(n/100) super-cells,
-      // per-super children sized to ~100-vector cells) holds BOTH scale
-      // terms to linear-with-constant — child cells bound the verify, the
-      // hierarchical assign bounds the codebook pass at n·√k (flat autoK
-      // measured 1.39/decade at sf3 on exactly that term)
-      val emb = Tables.embeddings(s, dir)
-      val k2 = math.max(4, math.ceil(math.sqrt(emb.count() / 100.0)).toInt)
-      val pairs = Dedup.semanticNearDuplicatesHierarchical(
-        emb, "vec_id", "embedding", k2 = k2, targetCell = 100, thresholdBp = 8500L)
-      semanticKeepBestFromPairs(s, dir, pairs)
-    }),
-    "url_dedup_curation" -> ((s, dir) => {
-      // urlParts as a CURATION KEY, not just an extraction: canonicalize
-      // synthesized URLs (host case, trailing slash), exact-dedup BY
-      // canonical_url keeping the best-QUALITY copy, then cap kept pages
-      // per registered domain — the crawl-frontier budget. The URL moduli
-      // make ~|docs|/60 documents share each canonical form, so the dedup
-      // actually collapses, and 12 canonical pages per domain meet a cap
-      // of 10, so the quota actually cuts.
-      val docs = Tables.documents(s, dir)
-      val withUrl = docs.withColumn("url",
-        expr("'HTTPS://Sub' || CAST(doc_id % 3 AS STRING) || '.Example' || CAST(doc_id % 5 AS STRING) || " +
-          "'.com/p/' || CAST(doc_id % 20 AS STRING) || (CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END)"))
-      val parts = TextAnalysis.urlParts(withUrl, "doc_id", "url")
-        .select(col("doc_id"), col("domain"), col("canonical_url"))
-      val scored = parts.join(
-        TextAnalysis.quality(docs, "doc_id", "text")
-          .select(col("doc_id"), col("quality_score")), "doc_id")
-      val reps = Dedup.keepBest(scored, "canonical_url", "doc_id", "quality_score")
-      graft.ops.Sampling.capPerKey(reps, "domain", "doc_id", 10)
-        .select(col("domain"), col("canonical_url"), col("doc_id"), col("quality_score"))
-        .orderBy(col("domain"), col("canonical_url"))
-    }),
-    "bloom_contamination" -> ((s, dir) => {
-      // Bloom pre-filter decontamination: a 32K-bit filter over the bench
-      // slice's shingles, broadcast against the corpus — each corpus doc
-      // reports how many of its shingles the filter claims (deterministic
-      // false positives included; the exact confirm is `contamination`)
-      val docs = Tables.documents(s, dir)
-      val bench = Dedup.shingles(docs.filter(col("doc_id") % 97 === 0), "doc_id", "text", k = 3)
-      val bloom = graft.ops.Bloom.build(bench, col("shingle"), numBits = 1 << 15, numHashes = 4)
-      // r18 (guide §2.4): the probe side is document-local — distinct
-      // shingles, 4 hash probes and the per-doc counts all live inside
-      // one row — so the old shingle explode + DISTINCT exchange +
-      // per-doc aggregate collapses into the fused BloomShingleHits
-      // kernel: a map-only pass over the corpus (BloomKernelSpec pins
-      // old ≡ new; the oracle still replays the relational form)
-      docs.filter(col("doc_id") % 97 =!= 0).crossJoin(broadcast(bloom))
-        .select(col("doc_id"), org.apache.spark.sql.graft.BloomShingleHits(
-          col("text"), col("bloom_words"), 3, 1 << 15, 4).as("_bh"))
-        .select(col("doc_id"), col("_bh.n_shingles").as("n_shingles"),
-          col("_bh.n_hits").as("n_bloom_hits"))
-        .filter(col("n_bloom_hits") >= 1)
-        .orderBy(col("doc_id"))
-    }),
-    "cms_heavy_hitters" -> ((s, dir) => {
-      // Count-Min heavy hitters: 4×256 grid over the token stream; the
-      // exact top-10 terms re-probed through the sketch (est ≥ exact, off
-      // by the grid's collision mass — both engines replay it exactly)
-      // toks feeds the sketch AND the exact counts; top feeds the probe
-      // side AND the join — pinned so the explode pipeline runs once
-      val toks = Tables.documents(s, dir)
-        .select(explode(Dedup.tokensCol(col("text"))).as("term"))
-        .filter(col("term") =!= "")
-        .localCheckpoint(false)
-      val counters = graft.ops.Cms.sketch(toks, col("term"), depth = 4, width = 256)
-      val top = toks.groupBy(col("term")).agg(count(lit(1)).as("n_exact"))
-        .orderBy(col("n_exact").desc, col("term")).limit(10)
-        .localCheckpoint(false)
-      top.join(graft.ops.Cms.estimate(counters, top, "term", depth = 4, width = 256), "term")
-        .select(col("term"), col("n_exact"), col("cms_est"))
-        .orderBy(col("term"))
-    }),
-    "bm25_search" -> ((s, dir) =>
-      // BM25 slice query over the corpus: top-20 docs for a 3-term bag,
-      // integer-quantized per-term scores (log-free odds idf) summed
-      // merge-order-free
-      graft.ops.Bm25.search(Tables.documents(s, dir), "doc_id", "text",
-        Seq("spark", "join", "window"), k = 20)
-        .orderBy(col("rank"))),
-    "search_phrase" -> ((s, dir) =>
-      // exact token-adjacent phrase lookup via the anchor trick: slot-i
-      // occurrences vote for (doc, pos − i); an anchor holding all 3
-      // distinct slots is a match — one scan filtered map-side by the
-      // broadcast slot relation, votes-only shuffle, no positional index
-      graft.ops.Bm25.phraseSearch(Tables.documents(s, dir), "doc_id", "text",
-        Seq("small", "query", "line"))
-        .orderBy(col("doc_id"))),
-    "search_rocchio" -> ((s, dir) =>
-      // Rocchio pseudo-relevance feedback on the bm25_search query: top-5
-      // seeds, 5 expansion terms at weight 750 vs 1000, re-scored top-20 —
-      // the vocabulary-mismatch recall pass
-      graft.ops.Bm25.rocchioSearch(Tables.documents(s, dir), "doc_id", "text",
-        Seq("spark", "join", "window"), k0 = 5, expandTerms = 5, k = 20)),
-    "pii_gazetteer" -> ((s, dir) =>
-      // whole-blocklist entity matching in ONE corpus pass — the
-      // broadcast (entity, slot, term) relation filters the token scan
-      // map-side; nested entities ("small query" ⊂ "small query line")
-      // match independently, pinning the per-entity anchor independence
-      graft.ops.Bm25.gazetteerMatch(Tables.documents(s, dir), "doc_id", "text",
-        Seq("e_small_query" -> Seq("small", "query"),
-            "e_customer_line" -> Seq("customer", "line"),
-            "e_small_query_line" -> Seq("small", "query", "line"),
-            "e_big_hash_query" -> Seq("big", "hash", "query")))
-        .orderBy(col("doc_id"), col("entity_id"))),
-    "index_incremental" -> ((s, dir) => {
-      // retrieval's incremental leg: the %5≠0 corpus postings live in a
-      // persisted term-bucketed index; the %5 increment pays one
-      // tokenize pass over ITSELF; the merged relation is exactly the
-      // full corpus's tf (doc-disjoint postings are a mergeable monoid),
-      // so the search hash-matches a from-scratch full-corpus BM25 —
-      // which is what the oracle computes
-      val t = ensureTfIndex(s, dir)
-      graft.ops.Bm25.searchIncremental(s, t,
-        Tables.documents(s, dir).filter(col("doc_id") % MinhashIndexCorpusMod === 0),
-        "doc_id", "text", Seq("stream", "batch", "merge"), k = 20)
-    }),
-    "eval_qa_f1" -> ((s, dir) => {
-      // answer-scoring eval: token-level F1 (SQuAD-style, MULTISET
-      // overlap) of three planted prediction behaviors — %3=0 exact
-      // (10000 bp), %3=1 an 80% truncation (recall drops), %3=2 a
-      // dropped-head + appended-noise answer (both drop); one full-outer
-      // (id, tok) join, nothing pairwise across documents
-      val docs = Tables.documents(s, dir)
-      val pairs = docs
-        .withColumn("_tk", graft.ops.Dedup.tokensCol(col("text")))
-        .withColumn("pred", expr(
-          """CASE WHEN doc_id % 3 = 0 THEN text
-            |     WHEN doc_id % 3 = 1 THEN array_join(slice(_tk, 1, greatest(1, (size(_tk) * 8) div 10)), ' ')
-            |     ELSE concat(array_join(slice(_tk, 2, 2147483647), ' '), ' noise extra words appended here') END""".stripMargin))
-        .select(col("doc_id"), col("text").as("gold"), col("pred"))
-      graft.ops.Eval.tokenF1(pairs, "doc_id", "gold", "pred")
-        .orderBy(col("doc_id"))
-    }),
-    "eval_em" -> ((s, dir) => {
-      // the EM half of the SQuAD pair: per planted behavior class, the
-      // share of predictions that match the gold EXACTLY after
-      // normalization (lowercase, whitespace collapse) — class 0 must
-      // read 10000 bp, the truncation/noise classes ~0 (a 1-2 token doc
-      // can survive the 80% truncation intact, so the oracle, not an
-      // assumption, owns the exact number)
-      val docs = Tables.documents(s, dir)
-      val pairs = docs
-        .withColumn("_tk", graft.ops.Dedup.tokensCol(col("text")))
-        .withColumn("pred", expr(
-          """CASE WHEN doc_id % 3 = 0 THEN text
-            |     WHEN doc_id % 3 = 1 THEN array_join(slice(_tk, 1, greatest(1, (size(_tk) * 8) div 10)), ' ')
-            |     ELSE concat(array_join(slice(_tk, 2, 2147483647), ' '), ' noise extra words appended here') END""".stripMargin))
-      pairs
-        .withColumn("cls", col("doc_id") % 3)
-        .withColumn("_g", array_join(col("_tk"), " "))
-        .withColumn("_p", array_join(graft.ops.Dedup.tokensCol(col("pred")), " "))
-        .groupBy(col("cls"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("_g") === col("_p"), 1L).otherwise(0L)).as("n_exact"))
-        .withColumn("em_bp", expr("n_exact * 10000 div n_pairs"))
-        .orderBy(col("cls"))
-    }),
-    "eval_rouge2" -> ((s, dir) => {
-      // ROUGE-2 over the same planted predictions: bigram-encode both
-      // sides into collision-free pseudo-tokens, then the SAME multiset
-      // F1 machinery — word order now matters (the dropped-head answer's
-      // surviving unigrams stop crediting at the bigram tier)
-      val docs = Tables.documents(s, dir)
-      val pairs = docs
-        .withColumn("_tk", graft.ops.Dedup.tokensCol(col("text")))
-        .withColumn("pred", expr(
-          """CASE WHEN doc_id % 3 = 0 THEN text
-            |     WHEN doc_id % 3 = 1 THEN array_join(slice(_tk, 1, greatest(1, (size(_tk) * 8) div 10)), ' ')
-            |     ELSE concat(array_join(slice(_tk, 2, 2147483647), ' '), ' noise extra words appended here') END""".stripMargin))
-        .select(col("doc_id"),
-          graft.ops.Eval.bigramEncode(col("text")).as("gold"),
-          graft.ops.Eval.bigramEncode(col("pred")).as("pred"))
-      graft.ops.Eval.tokenF1(pairs, "doc_id", "gold", "pred")
-        .orderBy(col("doc_id"))
-    }),
-    "eval_retrieval" -> ((s, dir) =>
-      // retrieval-eval card: BM25 bag-of-words top-20 graded against
-      // exact-phrase ground truth per query — recall@k / precision@k /
-      // MRR as exact basis-point integers; the harness the search
-      // family's quality claims are measured with. Runs the BATCHED
-      // production tier (one gazetteer truth pass + one battery-broadcast
-      // ranking for the whole battery — constant corpus passes however
-      // large the battery); the per-query evalCard stays the declared
-      // exact spot-check tier, equality pinned in SketchRetrievalSpec
-      graft.ops.Bm25.evalCardBatched(Tables.documents(s, dir), "doc_id", "text",
-        RetrievalEvalQueries, k = 20)),
-    "hybrid_search" -> ((s, dir) => {
-      // hybrid retrieval, the standard RAG shape: BM25 top-20 (lexical)
-      // fused with cosine kNN top-20 (vector, query = vec 0's embedding)
-      // by reciprocal-rank fusion — ranks only, no score calibration
-      // across the incomparable score spaces; both lists bounded top-k
-      val docs = Tables.documents(s, dir)
-      val emb = Tables.embeddings(s, dir)
-      val lex = graft.ops.Bm25.search(docs, "doc_id", "text",
-        Seq("spark", "join", "window"), k = 20)
-        .select(col("doc_id"), col("rank"))
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val vec = VectorOps.knnCosine(emb, "vec_id", "embedding", q, "qid", "qvec", k = 20)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      graft.ops.Fusion.reciprocalRankFusion(lex, vec, "doc_id")
-        .orderBy(col("rank"))
-    }),
-
-    // ---------------- vector ops (V1-V3, K7) ----------------
-    "knn_cosine" -> ((s, dir) => {
-      // the declared EXACT tier: brute-force over the corpus with the
-      // (small) query side broadcast — deliberately O(corpus × queries),
-      // kept as the 100%-recall baseline the ANN paths (ann_lsh/ann_ivf/
-      // ann_pq/ann_ivfpq) are checked against; production top-k at scale
-      // goes through those bucketed paths
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      VectorOps.knnCosine(emb, "vec_id", "embedding", q, "qid", "qvec", k = 10)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "ann_sq8" -> ((s, dir) => {
-      // search over the COMPRESSED store: top-10 cosine runs entirely on
-      // SQ8-dequantized vectors (the 4× storage tier the int8 row pins),
-      // with an in_exact flag against the float brute-force truth — so
-      // compression-induced neighbor churn is a hash change, the same
-      // contract ann_recall gives the ANN tiers
-      val emb = Tables.embeddings(s, dir)
-      val deq = graft.ops.Quantize.int8Codes(emb, "vec_id", "embedding")
-        .select(col("vec_id"),
-          graft.ops.Quantize.dequantCol(col("codes"), col("amax_q")).as("dvec"))
-      val q = deq.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("dvec").as("qvec"))
-      val sq8 = VectorOps.knnCosine(deq, "vec_id", "dvec", q, "qid", "qvec", k = 10)
-      val exact = VectorOps.knnCosine(emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-        "qid", "qvec", k = 10)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("in_exact"))
-      sq8.join(exact, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("in_exact", coalesce(col("in_exact"), lit(0L)))
-        .select(col("query_id"), col("neighbor_id"), col("rank"), col("in_exact"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "search_mmr" -> ((s, dir) => {
-      // diversity-aware retrieval (Maximal Marginal Relevance): top-20
-      // brute-force candidates per query, then the greedy λ=0.5 tradeoff
-      // picks 5 that are relevant AND mutually non-redundant. The greedy
-      // fold is per-query-sequential (the packing pattern); the oracle
-      // unrolls the same five picks as SQL steps.
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      graft.ops.Mmr.rerank(emb, "vec_id", "embedding", q, "qid", "qvec",
-        candK = 20, selectK = 5, lambdaBp = 5000)
-        .orderBy(col("query_id"), col("mmr_rank"))
-    }),
-    "vector_upsert" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("label"))
-      val updates = emb.filter(col("vec_id") % 10 === 0)
-        .withColumn("label", col("label") + 100)
-      VectorOps.upsert(emb, updates, "vec_id").orderBy(col("vec_id"))
-    }),
-    "ann_lsh" -> ((s, dir) =>
-      Similarity.annCosineLsh(Tables.embeddings(s, dir), "vec_id", "embedding",
-        queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10, dim = 64)
-        .orderBy(col("query_id"), col("rank"))),
-    "ann_ivf" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val model = graft.ops.Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      graft.ops.Ivf.search(emb, "vec_id", "embedding", model,
-        queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10, nprobe = 3)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "ann_nprobe_curve" -> ((s, dir) => {
-      // the IVF tuning curve — recall@10 vs nprobe ∈ {1,2,4} against the
-      // pinned brute-force truth: the operating table an index's probe
-      // budget is chosen from (classify_nb_pr's analogue for the ANN
-      // family); one codebook, one truth pass, three probe tiers
-      val emb = Tables.embeddings(s, dir)
-      val truth = queries("knn_cosine")(s, dir)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(false)
-      val nTruth = truth.count()
-      val model = graft.ops.Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      Seq(1, 2, 4).map { np =>
-        graft.ops.Ivf.search(emb, "vec_id", "embedding", model,
-            queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10, nprobe = np)
-          .select(col("query_id"), col("neighbor_id"))
-          .join(truth, Seq("query_id", "neighbor_id"))
-          .groupBy().agg(count(lit(1)).as("hits"))
-          .select(lit(np.toLong).as("nprobe"), col("hits"),
-            expr(s"CAST((10000 * hits) DIV $nTruth AS BIGINT)").as("recall_bp"))
-      }.reduce(_ unionByName _).orderBy(col("nprobe"))
-    }),
-    "mix_topic" -> ((s, dir) => {
-      // topic-balanced mixing (the diversity-sampling step of the D4/DCLM
-      // recipe family): IVF cells are the topics, each capped at a
-      // deterministic-hash-order quota — the semantic analogue of
-      // quota_per_source, complementing prune_prototypes (which drops the
-      // most-prototypical WITHIN cells; this balances ACROSS cells). Same
-      // 8-cell 2-round codebook as ann_ivf, so the oracle replays train
-      // verbatim and applies the quota window rule to asn3.
-      val emb = Tables.embeddings(s, dir)
-      val model = graft.ops.Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val byPick = Window.partitionBy(col("cluster"))
-        .orderBy(graft.ops.Sampling.hashBucketBp(col("vec_id")), col("vec_id"))
-      graft.ops.Ivf.assign(emb, "vec_id", "embedding", model)
-        .withColumn("pick_rank", row_number().over(byPick).cast("long"))
-        .withColumn("n_cell",
-          count(lit(1)).over(Window.partitionBy(col("cluster"))).cast("long"))
-        .withColumn("kept", (col("pick_rank") <= MixTopicQuota).cast("long"))
-        .select(col("cluster").cast("int").as("cluster"), col("vec_id"),
-          col("n_cell"), col("pick_rank"), col("kept"))
-        .orderBy(col("cluster"), col("pick_rank"))
-    }),
-    "mine_bitext" -> ((s, dir) => {
-      // margin-based bitext mining (Artetxe & Schwenk 2019, the LASER /
-      // CCMatrix parallel-corpus recipe): vec_id parity splits the space
-      // into two "languages"; pairs are scored by the ratio margin
-      // (cosine over the mean of both endpoints' k-NN cosines — the
-      // hubness correction) and kept when mutually margin-best at >= 1.0.
-      // Exact tier: quantize-once integer arithmetic end to end;
-      // sentinel guards tiny-SF emptiness
-      val emb = Tables.embeddings(s, dir)
-      graft.ops.Mining.bitextMine(emb, "vec_id", "embedding",
-        col("vec_id") % 2 === 0, k = 4, minMarginBp = 10000L)
-        .unionByName(s.range(1).select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-          lit(0L).as("margin_bp")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "mine_bitext_cell" -> ((s, dir) => {
-      // the blocked 100 TB posture of mine_bitext: both sides assigned to
-      // the shared 8-cell IVF codebook (ann_ivf's train), pairs form
-      // within cells only — the A x B pass becomes a bounded-key
-      // equi-join; margins/mutual tail identical. The oracle pair
-      // measures the blocking recall trade against the exact tier
-      val emb = Tables.embeddings(s, dir)
-      val model = graft.ops.Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      graft.ops.Mining.bitextMineInCell(emb, "vec_id", "embedding",
-        col("vec_id") % 2 === 0, model, k = 4, minMarginBp = 10000L)
-        .unionByName(s.range(1).select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-          lit(0L).as("margin_bp")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "mine_bitext_auto" -> ((s, dir) => {
-      // the production posture the r13 sf3 audit forced: at FIXED 8
-      // cells the within-cell bitext pair volume is quadratic (measured
-      // 1.55/decade at the sf3 asymptote); Ivf.autoK bounds the expected
-      // cell at ~100 vectors, making pair volume ~n*25 — linear with a
-      // chosen constant, the dedup_semantic_auto lesson applied here
-      val emb = Tables.embeddings(s, dir)
-      val model = graft.ops.Ivf.train(emb, "vec_id", "embedding",
-        k = graft.ops.Ivf.autoK(emb.count()), iters = 2)
-      graft.ops.Mining.bitextMineInCell(emb, "vec_id", "embedding",
-        col("vec_id") % 2 === 0, model, k = 4, minMarginBp = 10000L)
-        .unionByName(s.range(1).select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-          lit(0L).as("margin_bp")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "mine_bitext_scale" -> ((s, dir) => {
-      // the full ladder's top tier AND the production default entry point
-      // (Mining.bitextMineAuto — this row oracle-pins the default path):
-      // flat autoK still pays the n*k assignment term (mine_bitext_auto
-      // measured 1.25/decade at sf3 on exactly that term); the two-level
-      // codebook bounds assignment at n*sqrt(k) and keeps child cells
-      // ~100 vectors - the dedup_semantic_scale posture applied to mining
-      val emb = Tables.embeddings(s, dir)
-      graft.ops.Mining.bitextMineAuto(emb, "vec_id", "embedding",
-        col("vec_id") % 2 === 0, k = 4, minMarginBp = 10000L)
-        .unionByName(s.range(1).select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-          lit(0L).as("margin_bp")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "mine_bitext_incremental" -> ((s, dir) => {
-      // the ladder's PRODUCTION posture (VERDICT r16 task 1 shape (b)):
-      // mine_bitext_scale re-pays the hierarchical codebook's Θ(n^1.5)
-      // train+assign every epoch; here the codebook, the corpus cell
-      // assignments and the per-cell mined pairs persist (benchPrepare
-      // amortizes the build), and the arriving batch (the capped
-      // frontier slice) pays a map-only assign, an in-cell re-mine of
-      // ONLY its touched cells, and the pair-table anti-join scan — the
-      // margin tail decomposes exactly per cell, so the result must
-      // hash-equal a from-scratch blocked run under the same codebook,
-      // which the oracle replays (split train/assign chain).
-      val (mT, asnR, pairsR) = ensureBitextState(s, dir)
-      val emb = Tables.embeddings(s, dir)
-      val m = bitextDeltaMod(emb.count())
-      graft.ops.Mining.bitextMineIncremental(emb, "vec_id", "embedding",
-        col("vec_id") % 2 === 0,
-        graft.ops.Ivf.readModel2(s, mT),
-        graft.io.GenTable.read(s, asnR).get,
-        graft.io.GenTable.read(s, pairsR).get,
-        emb.filter(col("vec_id") % m === 0), k = 4, minMarginBp = 10000L)
-        .unionByName(s.range(1).select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-          lit(0L).as("margin_bp")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "ann_matryoshka" -> ((s, dir) => {
-      // Matryoshka (MRL) funnel quality gate: recall@10 of the 16-of-64
-      // prefix-dimension space, raw and with the full-dimension rescore
-      // of a 30-candidate shortlist, against the exact baseline — the
-      // ann_recall pattern for the narrow-scan-then-rerank design
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val truth = graft.vector.VectorOps.knnCosine(emb, "vec_id", "embedding",
-        q, "qid", "qvec", 10)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(false)
-      val nTruth = truth.count()
-      def recallRow(label: String, df: org.apache.spark.sql.DataFrame) =
-        df.select(col("query_id"), col("neighbor_id"))
-          .join(truth, Seq("query_id", "neighbor_id"))
-          .agg(count(lit(1)).as("hits"))
-          .select(lit(label).as("tier"),
-            expr(s"CAST((10000 * hits) DIV $nTruth AS BIGINT)").as("recall_bp"))
-      recallRow("prefix16",
-        graft.vector.VectorOps.knnCosinePrefix(emb, "vec_id", "embedding",
-          q, "qid", "qvec", k = 10, dims = 16))
-        .unionByName(recallRow("prefix16_rerank30",
-          graft.vector.VectorOps.knnCosineRerank(emb, "vec_id", "embedding",
-            q, "qid", "qvec", k = 10, dims = 16, shortlist = 30)))
-        .orderBy(col("tier"))
-    }),
-    "mine_hard_negatives" -> ((s, dir) => {
-      // ANCE-style hard-negative mining for contrastive training pairs: a
-      // bounded query batch (20 fixed ids — mining is per training batch,
-      // so |Q| is a loop constant, not a corpus fraction) probes the same
-      // 8-cell IVF codebook as ann_ivf; hard negative = different-labeled
-      // probed neighbor with cosine in [0, 0.98) bp — confusable but
-      // below the near-duplicate/label-error band
-      val emb = Tables.embeddings(s, dir)
-      val model = graft.ops.Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      graft.ops.Mining.hardNegatives(emb, "vec_id", "embedding", "label", model,
-        queryIds = (0L until 500L by 25L), k = 5, dupBp = 9800L, nprobe = 3)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "mine_triplets" -> ((s, dir) => {
-      // hard negatives completed into (anchor, positive, negative)
-      // training rows from the SAME probed candidate set: positive =
-      // nearest same-labeled sub-dup neighbor, negatives = top-3
-      // different-labeled in [0, 9800) bp, margin audited per row
-      val emb = Tables.embeddings(s, dir)
-      val model = graft.ops.Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      graft.ops.Mining.triplets(emb, "vec_id", "embedding", "label", model,
-        queryIds = (0L until 500L by 25L), k = 3, dupBp = 9800L, nprobe = 3)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "embed_ood" -> ((s, dir) =>
-      // per-cell OOD audit — prune_prototypes' complement: count the far
-      // tail (winning-centroid cosine < 0.15 — the corpus's own p10 under
-      // the hash embedder) per cell; a climbing OOD
-      // share is ann_ivf_drift's retrain signal localized to the cell
-      graft.ops.Prune.oodCard(Tables.embeddings(s, dir), "vec_id", "embedding",
-        k = 8, iters = 2, oodBp = 1500L)
-        .orderBy(col("cluster"))),
-    "prune_prototypes" -> ((s, dir) => {
-      // SSL-prototypes / D4 semantic pruning: rank every vector by
-      // closeness to its IVF centroid and drop the most prototypical 25%
-      // per cell. Same 8-cell 2-round codebook as ann_ivf, so the oracle
-      // replays training verbatim and only integer columns cross engines.
-      val emb = Tables.embeddings(s, dir)
-      graft.ops.Prune.prototypes(emb, "vec_id", "embedding",
-        k = 8, iters = 2, dropBp = 2500)
-        .orderBy(col("cluster"), col("proto_rank"))
-    }),
-    "ann_pq" -> ((s, dir) => {
-      // product-quantization ANN: 4×16-dim subspace codebooks (integer
-      // k-means, 1 Lloyd round), one-pass encoding to 4 code ids, ADC
-      // top-10 from per-query lookup tables
-      val emb = Tables.embeddings(s, dir)
-      val model = graft.ops.Pq.train(emb, "vec_id", "embedding", m = 4, k = 8, iters = 1)
-      graft.ops.Pq.searchAdc(emb, "vec_id", "embedding", model,
-        queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "ann_ivfpq" -> ((s, dir) => {
-      // the composed billion-scale index: IVF coarse quantizer prunes to
-      // 3 probed clusters per query, PQ codes ADC-score only those
-      // members — one corpus pass computes cluster + codes together
-      val emb = Tables.embeddings(s, dir)
-      val coarse = graft.ops.Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val pq = graft.ops.Pq.train(emb, "vec_id", "embedding", m = 4, k = 8, iters = 1)
-      graft.ops.Pq.searchAdcIvf(emb, "vec_id", "embedding", pq, coarse,
-        queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10, nprobe = 3)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "ann_recall" -> ((s, dir) => {
-      // index-quality regression gate: recall@10 of each ANN tier against
-      // the exact brute-force baseline, as a relational (tier, recall_bp)
-      // row oracled in DuckDB — a bucketing/centroid/pruning regression
-      // now surfaces as an oracle hash failure instead of silent quality
-      // drift. Integer basis points ((10000*hits) div |truth|) keep the
-      // cross-engine compare exact. The truth relation is pinned with a
-      // lazy localCheckpoint so the three tier joins reuse one brute-force
-      // pass instead of re-scoring the corpus per tier.
-      val truth = queries("knn_cosine")(s, dir)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(false)
-      val nTruth = truth.count()
-      def recallRow(label: String, df: DataFrame) =
-        df.select(col("query_id"), col("neighbor_id"))
-          .join(truth, Seq("query_id", "neighbor_id"))
-          .agg(count(lit(1)).as("hits"))
-          .select(lit(label).as("tier"),
-            expr(s"CAST((10000 * hits) DIV $nTruth AS BIGINT)").as("recall_bp"))
-      def tierRecall(label: String, name: String) =
-        recallRow(label, queries(name)(s, dir))
-      // post-shift re-train recovery (the staleness guard's other half,
-      // cf. ann_ivf_drift): the corpus distribution takes the same +0.5
-      // mean offset that trips the drift guard, the codebook is
-      // RE-TRAINED on the shifted corpus, and this tier pins the
-      // recovered index's recall against brute-force truth over the
-      // SHIFTED corpus — proving the re-train restores a healthy index
-      val shiftEmb = Tables.embeddings(s, dir)
-        .withColumn("embedding", expr("transform(embedding, x -> x + CAST(0.5 AS FLOAT))"))
-      val truthShift = VectorOps.knnCosine(shiftEmb, "vec_id", "embedding",
-        shiftEmb.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-        "qid", "qvec", k = 10)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(false)
-      val nTruthShift = truthShift.count()
-      val shiftModel = graft.ops.Ivf.train(shiftEmb, "vec_id", "embedding", k = 8, iters = 2)
-      val shiftTier = graft.ops.Ivf.search(shiftEmb, "vec_id", "embedding", shiftModel,
-        queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10, nprobe = 3)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(truthShift, Seq("query_id", "neighbor_id"))
-        .agg(count(lit(1)).as("hits"))
-        .select(lit("ivf_shift_retrain").as("tier"),
-          expr(s"CAST((10000 * hits) DIV $nTruthShift AS BIGINT)").as("recall_bp"))
-      tierRecall("ivf", "ann_ivf")
-        .unionByName(shiftTier)
-        .unionByName(tierRecall("ivfpq", "ann_ivfpq"))
-        .unionByName(tierRecall("lsh", "ann_lsh"))
-        .orderBy(col("tier"))
-    }),
-    "ann_ivf_incremental" -> ((s, dir) => {
-      // the persisted-model increment path: the coarse quantizer is
-      // trained ONCE on the kept corpus (vec_id % 5 =!= 0) and persisted
-      // as exact integer state (benchPrepare amortizes the build); each
-      // increment (vec_id % 5 === 0) pays only assign's map-only pass
-      // against the k-row broadcast codebook — never a retrain. The
-      // round-trip through the catalog table is part of what the oracle
-      // pins: readModel∘writeModel must reproduce the model bit-exactly
-      // or assignments drift.
-      val model = graft.ops.Ivf.readModel(s, ensureIvfModel(s, dir))
-      graft.ops.Ivf.assign(
-        Tables.embeddings(s, dir).filter(col("vec_id") % 5 === 0),
-        "vec_id", "embedding", model)
-        .orderBy(col("vec_id"))
-    }),
-    "ann_ivf_drift" -> ((s, dir) => {
-      // codebook-staleness guard on the persisted-model increment path:
-      // every assign batch also measures its mean nearest-centroid
-      // distance (k-means inertia, integer 2^-20 units — a byproduct of
-      // the assignment pass) and compares against the training-time
-      // reference persisted WITH the model — a rise past the tolerance is
-      // the documented re-train trigger, turning silent recall decay into
-      // an explicit signal. Rows: the training reference itself, an
-      // in-distribution batch (must NOT trip), a mean-offset batch (the
-      // classic new-encoder-checkpoint shift — MUST trip: unit vectors
-      // land ~sqrt(17)≈4x further from every centroid), and the shifted
-      // batch against a codebook RE-TRAINED on the shifted corpus (the
-      // guard clears — recovery; its recall is pinned by ann_recall's
-      // ivf_shift_retrain tier).
-      import s.implicits._
-      val emb = Tables.embeddings(s, dir)
-      def shifted(df: DataFrame) =
-        df.withColumn("embedding", expr("transform(embedding, x -> x + CAST(0.5 AS FLOAT))"))
-      val inc = emb.filter(col("vec_id") % 5 === 0)
-      val t = ensureIvfModel(s, dir)
-      val model = graft.ops.Ivf.readModel(s, t)
-      val refQ = graft.ops.Ivf.readTrainRef(s, t)
-      val inlineQ = graft.ops.Ivf.driftStatQ(inc, "vec_id", "embedding", model)
-      val shiftQ = graft.ops.Ivf.driftStatQ(shifted(inc), "vec_id", "embedding", model)
-      val shiftCorpus = shifted(emb.filter(col("vec_id") % 5 =!= 0))
-      val model2 = graft.ops.Ivf.train(shiftCorpus, "vec_id", "embedding", k = 8, iters = 2)
-      val ref2Q = graft.ops.Ivf.driftStatQ(shiftCorpus, "vec_id", "embedding", model2)
-      val shift2Q = graft.ops.Ivf.driftStatQ(shifted(inc), "vec_id", "embedding", model2)
-      def staleL(q: Long, ref: Long): Long =
-        if (graft.ops.Ivf.isStale(q, ref)) 1L else 0L
-      Seq(
-        ("batch_inline", inlineQ, refQ, staleL(inlineQ, refQ)),
-        ("batch_shifted", shiftQ, refQ, staleL(shiftQ, refQ)),
-        ("retrained_shifted", shift2Q, ref2Q, staleL(shift2Q, ref2Q)),
-        ("train_ref", refQ, refQ, 0L))
-        .toDF("phase", "mean_dist_q", "ref_dist_q", "stale")
-        .orderBy(col("phase"))
-    }),
-    "embed_quant_int8" -> ((s, dir) =>
-      // SQ8 storage tier: per-vector scale + int8 codes, summarized as
-      // index-free integer stats per vector (engine-portable, hash-exact)
-      graft.ops.Quantize.int8Stats(Tables.embeddings(s, dir), "vec_id", "embedding")
-        .orderBy(col("vec_id"))),
-    "embed_jl" -> ((s, dir) =>
-      // 64→16 seeded ±1 JL projection (4× dim cut before indexing): the
-      // sign matrix is a plan literal from the hyperplanes convention,
-      // the projection one codegen'd zip_with/aggregate chain — map-only.
-      // Scalarized to (vec_id, j, coord) rows — every projected
-      // coordinate is hash-covered without a top-level array column
-      // (the oracle harness can't canonicalize arrays; see EntrySmokeSpec
-      // output-shape lint).
-      graft.ops.Quantize.jlProject(Tables.embeddings(s, dir), "vec_id", "embedding",
-        inDims = 64, outDims = 16)
-        .select(col("vec_id"), posexplode(col("jl")).as(Seq("j", "coord")))
-        .select(col("vec_id"), col("j").cast("long").as("j"), col("coord"))
-        .orderBy(col("vec_id"), col("j"))),
-    "embed_jl_search" -> ((s, dir) => {
-      // search at 1/4 the dims: integer JL-dot shortlist-40 over the
-      // 16-dim codes, exact-cosine rescore ranks top-10; jl_dot rides out
-      // so the projected coordinates are hash-covered
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      graft.ops.Quantize.jlShortlistRerank(emb, "vec_id", "embedding",
-        q, "qid", "qvec", k = 10, shortlist = 40)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "embed_quant_binary" -> ((s, dir) => {
-      // search over the 1-bit store (32× tier below SQ8): Hamming
-      // shortlist of 40 on packed sign codes — the corpus pass reads
-      // 1/32 the vector bytes — then exact-cosine rescore ranks top-10;
-      // ham rides out so every code bit is hash-covered
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      graft.ops.Quantize.binaryHammingRerank(emb, "vec_id", "embedding",
-        q, "qid", "qvec", k = 10, shortlist = 40)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-    "embed_card" -> ((s, dir) => {
-      // embedding-store QA card over a deterministically degraded batch
-      // (the plant discipline — the synthetic vectors are clean): %31
-      // becomes the zero vector (encoder-collapse symptom), %37 gets a
-      // NaN component (pipeline corruption); the card must count exactly
-      // those per label, with NaN rows excluded from norm/distinct terms
-      val emb = Tables.embeddings(s, dir).withColumn("embedding", expr(
-        """CASE WHEN vec_id % 31 = 0 THEN transform(embedding, x -> CAST(0.0 AS FLOAT))
-          |     WHEN vec_id % 37 = 0 THEN transform(sequence(0, size(embedding) - 1),
-          |       i -> CASE WHEN i = 0 THEN CAST('NaN' AS FLOAT) ELSE element_at(embedding, CAST(i + 1 AS INT)) END)
-          |     ELSE embedding END""".stripMargin))
-      graft.ops.Stats.embedCard(emb, "label", "embedding").orderBy(col("label"))
-    }),
-    "embed_chunks" -> ((s, dir) =>
-      Pipelines.chunkAndEmbedDocuments(s, dir, 120, 12)
-        .select(col("chunk_id"), col("doc_id"), col("chunk_index"), col("embedding_dim"),
-          size(col("embedding")).as("dim_check"))
-        .orderBy(col("doc_id"), col("chunk_index"))),
-
-    // ---------------- text analysis (north star) ----------------
-    "text_langid" -> ((s, dir) =>
-      TextAnalysis.langId(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id"))),
-    "text_quality" -> ((s, dir) =>
-      TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id"))),
-    "text_tokens" -> ((s, dir) =>
-      TextAnalysis.tokenCounts(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id"))),
-    "text_fingerprint" -> ((s, dir) =>
-      TextAnalysis.fingerprint(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id"))),
-    "text_winnowing" -> ((s, dir) =>
-      // winnowed fingerprint sets (Schleimer et al. 2003): every w-window
-      // of k-gram hashes contributes its rightmost min, so any shared
-      // >= k+w-1-token substring is guaranteed a shared fingerprint —
-      // the position-aware fingerprint tier next to the global
-      // text_fingerprint min-hash
-      graft.ops.Winnow.fingerprints(Tables.documents(s, dir), "doc_id", "text",
-        k = 5, w = 4).orderBy(col("doc_id"), col("pos"))),
-    "dedup_winnow" -> ((s, dir) => {
-      // partial-overlap candidate pairs from the winnow inverted index:
-      // posting-capped fingerprint join (boilerplate-hot grams dropped, the
-      // LSH-cap idiom), pairs confirmed by >= 2 shared fingerprints —
-      // catches quotation/template reuse that whole-doc signatures miss
-      val fps = graft.ops.Winnow.fingerprints(
-        Tables.documents(s, dir), "doc_id", "text", k = 5, w = 4)
-      graft.ops.Winnow.candidatePairs(fps, "doc_id", maxPosting = 50, minShared = 2)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "dedup_winnow_incremental" -> ((s, dir) => {
-      // the crawl-increment partial-overlap probe: the %5 batch
-      // fingerprints itself and joins the PERSISTED posting index (two
-      // bucketed scans, zero corpus re-fingerprinting) — dedup_incremental
-      // _indexed's amortization with winnow's local-match semantics; the
-      // index build reports under bench `prep`
-      val t = ensureWinnowIndex(s, dir)
-      graft.ops.Winnow.probeIndex(
-        Tables.documents(s, dir).filter(col("doc_id") % MinhashIndexCorpusMod === 0),
-        "doc_id", "text", t, maxPosting = 50, minShared = 1)
-        .orderBy(col("new_id"), col("corpus_id"))
-    }),
-    "dedup_winnow_tuned" -> ((s, dir) => {
-      // the winnow family's production TUNING posture (r15 verdict task
-      // 4, the dedup_lsh_curve_tuned move): the posting-cap operating
-      // point is chosen from a posting-df curve over the signature-
-      // COHERENT sample — near-dup docs co-sample at rate ~J/M, so the
-      // sampled pair yield stays constant at any corpus size, where a
-      // uniform sample's pairs vanish at p². Bill: one corpus
-      // sample-membership scan, then everything (fingerprints, df curve,
-      // confirmed pairs) is ~256-doc-sized — the full dedup_winnow row
-      // (posting-volume floor, 99.5 s at sf30) stays the exact audit
-      // shape and never has to be paid to TUNE.
-      val docs = Tables.documents(s, dir)
-      val sample = graft.ops.Dedup.coherentSample(docs, "doc_id", "text", k = 3,
-        budgetDocs = graft.ops.Dedup.DefaultSampleBudgetDocs)
-      graft.ops.Winnow.postingCurve(
-        graft.ops.Winnow.fingerprints(sample, "doc_id", "text", k = 5, w = 4),
-        "doc_id", maxPostings = Seq(10, 50, 200), minShared = 2)
-        .orderBy(col("max_posting"))
-    }),
-    "text_mojibake" -> ((s, dir) => {
-      // encoding-corruption gate: the synthetic corpus is clean ASCII, so
-      // a deterministic slice (%7) gets a planted double-encoding suffix
-      // (the multimodal synthesize-then-operate idiom) and the detector
-      // must flag exactly that slice with exactly the planted hit count
-      val docs = Tables.documents(s, dir)
-      val injected = docs.withColumn("text",
-        when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" cafÃ© â€” naÃ¯ve Â§ Â x"))).otherwise(col("text")))
-      TextAnalysis.mojibake(injected, "doc_id", "text").orderBy(col("doc_id"))
-    }),
-    "text_scripts" -> ((s, dir) => {
-      // script-mix gate over a deterministically multilingual-ized corpus
-      // (the mojibake plant discipline — the raw synthetic corpus is pure
-      // ASCII): %7 gains Han, %11 Cyrillic, %13 Greek, and %19 becomes a
-      // Han+Cyrillic doc with NO Latin majority (exercises dominance)
-      val docs = Tables.documents(s, dir).withColumn("text", expr(
-        """CASE WHEN doc_id % 7 = 0 THEN concat(text, ' 模型数据清洗管道')
-          |     WHEN doc_id % 11 = 0 THEN concat(text, ' очистка данных')
-          |     WHEN doc_id % 13 = 0 THEN concat(text, ' καθαρισμός δεδομένων')
-          |     WHEN doc_id % 19 = 0 THEN ' 语料库 данные 语料 ' ELSE text END""".stripMargin))
-      TextAnalysis.scriptMix(docs, "doc_id", "text").orderBy(col("doc_id"))
-    }),
-    "pii_luhn" -> ((s, dir) => {
-      // checksum-tier card detection over planted numbers: %53 gains the
-      // Luhn-valid 4111111111111111 plus a 10-digit decoy run, %59 a
-      // 16-digit run that FAILS the checksum — the detector must count
-      // candidates and valids apart
-      val docs = Tables.documents(s, dir).withColumn("text", expr(
-        """CASE WHEN doc_id % 53 = 0 THEN concat(text, ' 4111111111111111 and 0123456789')
-          |     WHEN doc_id % 59 = 0 THEN concat(text, ' 4111111111111112')
-          |     ELSE text END""".stripMargin))
-      TextAnalysis.luhnScan(docs, "doc_id", "text").orderBy(col("doc_id"))
-    }),
-    "text_readability" -> ((s, dir) =>
-      // integer Flesch over the raw corpus: vowel-group syllables,
-      // terminator-run sentences (floored at 1), milli-domain divisions
-      TextAnalysis.readability(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy(col("doc_id"))),
-    "chat_qa" -> ((s, dir) =>
-      // instruction-data admission gates over synthesized conversations
-      // (sentences become alternating user/assistant turns; %7 docs open
-      // with the assistant, %11 docs double the opening user turn —
-      // breaking strict alternation): structural flags + role token shares
-      Chat.chatQa(chatConvs(Tables.documents(s, dir)), "doc_id", "turns")
-        .orderBy(col("doc_id"))),
-    "chat_render" -> ((s, dir) =>
-      // the same conversations rendered to the ChatML-framed training
-      // string the tokenizer sees — hash-pinned bytes plus tag-free
-      // token counts for packing budgets
-      Chat.renderChat(chatConvs(Tables.documents(s, dir)), "doc_id", "turns")
-        .orderBy(col("doc_id"))),
-    "chat_pipeline" -> ((s, dir) => {
-      // the SFT path composed as ONE job (r15 verdict task 7, the
-      // instruction-tuning counterpart of curation_full's pretraining
-      // funnel): structural QA gate (strict alternation, user-opening,
-      // assistant-closing) → ChatML render → tag-free token counts →
-      // pack admitted examples into 1024-token training sequences per
-      // source. Turns here are 7-token windows (the sentence-split
-      // synthesis yields single-turn conversations on this corpus — a
-      // gate over those is vacuous); roles carry the same %7/%11 plants,
-      // so the gate provably rejects real structural defects. Pin-budget
-      // posture from the start: only the ADMITTED ids pin
-      // (localCheckpoint of a one-column relation); the conversation
-      // synthesis is a map-only projection that re-derives for the
-      // render pass instead of pinning turns arrays corpus-wide — no
-      // stage past the pin re-scans the unfiltered corpus.
-      val docs = Tables.documents(s, dir)
-      // token array let-bound as a lambda variable (the Winnow idiom):
-      // downstream QA/render expressions reference `turns` many times and
-      // projection collapse inlines this whole synthesis into each — the
-      // binding keeps every inline linear instead of re-splitting text
-      // once per turn element
-      val convs = docs.select(col("doc_id"), expr(
-        """element_at(transform(array(split(text, ' ')), ts ->
-          |  transform(sequence(0, CAST((size(ts) - 1) div 7 AS INT)),
-          |    i -> named_struct(
-          |      'role', CASE WHEN doc_id % 11 = 0 AND i < 2 THEN 'user'
-          |        WHEN (i + CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END) % 2 = 0 THEN 'user'
-          |        ELSE 'assistant' END,
-          |      'content', array_join(slice(ts, i * 7 + 1, 7), ' ')))), 1)""".stripMargin)
-        .as("turns"))
-      val keptIds = Chat.chatQa(convs, "doc_id", "turns")
-        .filter(col("alternates") === 1 && col("starts_user") === 1 &&
-          col("ends_assistant") === 1)
-        .select(col("doc_id"))
-        .localCheckpoint(false)
-      // broadcast the pinned id set into BOTH probe joins: the gate and
-      // the source lookup stay map-side, so the synthesized turns arrays
-      // never ride a shuffle
-      val ex = Chat.renderChat(convs.join(broadcast(keptIds), "doc_id"), "doc_id", "turns")
-        .join(docs.select(col("doc_id"), col("source")), "doc_id")
-        .select(col("doc_id"), col("source"), col("rendered_chars"), col("content_tokens"))
-      graft.ops.Packing.packOffsets(ex, "source", Seq("doc_id"),
-        "content_tokens", budget = 1024L)
-        .select(col("source"), col("doc_id"), col("rendered_chars"),
-          col("content_tokens"), col("seq_id"), col("seq_offset"))
-        .orderBy(col("source"), col("doc_id"))
-    }),
-    "pref_qa" -> ((s, dir) => {
-      // DPO-pair QA over synthesized preference pairs: chosen = first 60%
-      // of chars, rejected = last 60% (overlapping windows share words, so
-      // the Jaccard column carries signal); %13 pairs are identical
-      // (zero-signal plant), %17 have an empty rejected side
-      val pairs = Tables.documents(s, dir).select(col("doc_id"),
-        expr("substring(text, 1, CAST((3 * length(text)) div 5 AS INT))").as("chosen"),
-        expr("""CASE WHEN doc_id % 13 = 0 THEN substring(text, 1, CAST((3 * length(text)) div 5 AS INT))
-               |     WHEN doc_id % 17 = 0 THEN ''
-               |     ELSE substring(text, CAST((2 * length(text)) div 5 AS INT) + 1, CAST(length(text) AS INT)) END""".stripMargin).as("rejected"))
-      Chat.prefQa(pairs, "doc_id", "chosen", "rejected").orderBy(col("doc_id"))
-    }),
-    "pref_best_of_n" -> ((s, dir) => {
-      // rejection sampling (best-of-n) pair building: four deterministic
-      // candidate "completions" per prompt (10/40/70/100% prefix slices —
-      // the planted quality gradient), each scored by the SAME integer
-      // quality gate the curation family pins; chosen = best, rejected =
-      // worst (index tie-breaks), kept at margin >= 10. One explode +
-      // ONE struct-max aggregate — no window, no join
-      val cands = Tables.documents(s, dir).select(col("doc_id"), explode(expr(
-        "transform(sequence(0, 3), j -> struct(CAST(j AS BIGINT) AS cand, " +
-          "substring(text, 1, CAST(greatest(1L, (length(text) * (1 + 3 * j)) div 10) AS INT)) AS ctext))"))
-        .as("c"))
-        .select((col("doc_id") * 4 + col("c.cand")).as("_ck"), col("c.ctext").as("ctext"))
-      val scored = graft.ops.TextAnalysis.quality(cands, "_ck", "ctext")
-        .select(expr("_ck div 4").as("doc_id"), expr("_ck % 4").as("cand"),
-          col("quality_score"))
-      graft.ops.Chat.bestOfN(scored, "doc_id", "cand", "quality_score", minMargin = 10L)
-        .orderBy(col("doc_id"))
-    }),
-    "pref_bias_card" -> ((s, dir) => {
-      // the one-row DPO governance card over the same synthesized pairs:
-      // identical/chosen-longer/near-identical shares in bp plus the
-      // signed token-delta sum
-      val pairs = Tables.documents(s, dir).select(col("doc_id"),
-        expr("substring(text, 1, CAST((3 * length(text)) div 5 AS INT))").as("chosen"),
-        expr("""CASE WHEN doc_id % 13 = 0 THEN substring(text, 1, CAST((3 * length(text)) div 5 AS INT))
-               |     WHEN doc_id % 17 = 0 THEN ''
-               |     ELSE substring(text, CAST((2 * length(text)) div 5 AS INT) + 1, CAST(length(text) AS INT)) END""".stripMargin).as("rejected"))
-      Chat.prefBiasCard(pairs, "doc_id", "chosen", "rejected")
-    }),
-    "code_fim" -> ((s, dir) =>
-      // fill-in-middle at FIM-rate 1/2 over the corpus: PSM reframing at
-      // the third offsets, md5-pinned output text
-      TextAnalysis.fimTransform(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy(col("doc_id"))),
-    "text_novelty" -> ((s, dir) => {
-      // per-doc novelty of the %3 batch against the rest of the corpus as
-      // reference: distinct 8-gram fingerprints, one corpus-wide reference
-      // distinct, fingerprint-keyed left join — planted dups score low,
-      // fresh text scores 10000
-      val docs = Tables.documents(s, dir)
-      Dedup.ngramNovelty(
-        docs.filter(col("doc_id") % 3 === 0), docs.filter(col("doc_id") % 3 =!= 0),
-        "doc_id", "text", k = 8)
-        .orderBy(col("doc_id"))
-    }),
-    "text_code_filters" -> ((s, dir) => {
-      // StarCoder-family code gates over a deterministically code-ified
-      // corpus (the plant discipline): %23 gains a 1200-char line (max
-      // line gate), %29 an 80-char base64 blob run, %31 an auto-generated
-      // header (case-folded marker scan), %3 is newline-chunked into
-      // code-shaped short lines so the pass gate fires on real rows
-      val docs = Tables.documents(s, dir).withColumn("text", expr(
-        """CASE WHEN doc_id % 23 = 0 THEN concat(text, chr(10), repeat('x', 1200))
-          |     WHEN doc_id % 29 = 0 THEN concat(text, chr(10), repeat('QUJDRA==', 10))
-          |     WHEN doc_id % 31 = 0 THEN concat('// AUTO-GENERATED. DO NOT EDIT.', chr(10), text)
-          |     WHEN doc_id % 3 = 0 THEN replace(text, ' ', chr(10))
-          |     ELSE text END""".stripMargin))
-      TextAnalysis.codeFilters(docs, "doc_id", "text").orderBy(col("doc_id"))
-    }),
-    "text_collocations" -> ((s, dir) =>
-      // phrase-mining table: top-20 adjacent pairs by discounted integer
-      // PMI score — ranks replay exactly because the score is a single
-      // floor division in the shared (count · N · 10^4) domain
-      TextAnalysis.collocations(Tables.documents(s, dir), "text")),
-    "text_lm_score" -> ((s, dir) =>
-      // CCNet-tier fluency scoring: self-trained bigram LM, integer
-      // conditional-probability mean (log-free for cross-engine replay)
-      TextAnalysis.lmScore(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id"))),
-    "text_lm_kn" -> ((s, dir) =>
-      // the KenLM-family smoothing beside the Laplace tier: interpolated
-      // Kneser–Ney with the canonical d = 3/4 carried as an exact
-      // rational — continuation probability is the signal Laplace can't
-      // express; same pinned one-scan bigram stream, integer bp replay
-      TextAnalysis.lmScoreKneserNey(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy(col("doc_id"))),
-    "text_gopher_rules" -> ((s, dir) => {
-      // Gopher rule battery (rule booleans as 0/1 for hash-stable parity)
-      val rules = Seq("r_word_count", "r_word_len", "r_symbol", "r_bullet",
-        "r_ellipsis", "r_alpha", "r_stop", "gopher_pass")
-      rules.foldLeft(
-        TextAnalysis.gopherRules(Tables.documents(s, dir), "doc_id", "text")) {
-          (d, c) => d.withColumn(c, col(c).cast("long"))
-        }.orderBy(col("doc_id"))
-    }),
-    "mix_ccnet" -> ((s, dir) => {
-      // CCNet's head/middle/tail mixture (Wenzek et al. 2019 §4.3): per
-      // source, tertile buckets of the LM fluency score — head = the most
-      // fluent third of THAT source's distribution (per-source nearest-
-      // rank thresholds, not one global bar). Downstream mixing samples
-      // the buckets at different rates; this row pins the assignment.
-      val docs = Tables.documents(s, dir)
-      val scored = docs.select(col("doc_id"), col("source"))
-        .join(TextAnalysis.lmScore(docs, "doc_id", "text")
-          .select(col("doc_id"), col("lm_bp")), "doc_id")
-      val th = graft.ops.Stats.quantilesDisc(scored, Seq("source"),
-        col("lm_bp"), Seq(3333, 6667))
-        .groupBy(col("source")).agg(
-          max(when(col("q_bp") === 3333, col("value"))).as("t33"),
-          max(when(col("q_bp") === 6667, col("value"))).as("t66"))
-      scored.join(th, "source")
-        .withColumn("bucket",
-          when(col("lm_bp") > col("t66"), lit("head"))
-            .when(col("lm_bp") > col("t33"), lit("middle"))
-            .otherwise(lit("tail")))
-        .groupBy(col("source"), col("bucket"))
-        .agg(count(lit(1)).as("n"),
-          min(col("lm_bp")).as("min_bp"), max(col("lm_bp")).as("max_bp"))
-        .orderBy(col("source"), col("bucket"))
-    }),
-    "curation_dsir" -> ((s, dir) => {
-      // DSIR importance resampling (Xie et al. 2023): hashed-bigram
-      // target-vs-raw likelihood ratios in the exact fixed-point log2
-      // domain; top-100 raw documents most target-like. Two corpus
-      // passes, both aggregating into constant-size key spaces (8192
-      // buckets, then doc ids); the weight table broadcast-joins.
-      val docs = Tables.documents(s, dir)
-      val scored = graft.ops.Dsir.importanceScores(docs, "doc_id", "text",
-        col("source").isin(DsirTargetSources: _*))
-      graft.ops.Dsir.selectTop(scored, "doc_id", 100).orderBy(col("sel_rank"))
-    }),
-    "classify_nb" -> ((s, dir) => {
-      // the classifier tier of the curation stack: multinomial Naive
-      // Bayes (log-prior + likelihood, all exact-integer log2) over
-      // hashed bigrams — bounded state (classes × 8192 counts + one doc
-      // count per class). The held-out slice is the md5-bucket 20% — the
-      // %5 slice the other incremental rows use is CONFOUNDED with the
-      // class here (testdata's source ≡ doc_id mod 20), which would put
-      // every held-out class entirely outside training.
-      val docs = Tables.documents(s, dir)
-      val held = graft.ops.Sampling.hashBucketBp(col("doc_id")) < 2000
-      val trainSlice = docs.filter(!held)
-      val model = graft.ops.NaiveBayes.train(trainSlice, "source", "text")
-      val priors = graft.ops.NaiveBayes.trainPriors(trainSlice, "source")
-      graft.ops.NaiveBayes.confusion(model, priors,
-        docs.filter(held), "doc_id", "source", "text")
-        .orderBy(col("source"), col("predicted"))
-    }),
-    "classify_nb_pr" -> ((s, dir) => {
-      // classifier CALIBRATION: the one-vs-rest margin threshold sweep
-      // for class src7 over the same held-out slice — per score band the
-      // cumulative tp/fp and precision/recall in bp, i.e. the table a
-      // production filter's threshold is actually chosen from
-      val docs = Tables.documents(s, dir)
-      val held = graft.ops.Sampling.hashBucketBp(col("doc_id")) < 2000
-      val trainSlice = docs.filter(!held)
-      val model = graft.ops.NaiveBayes.train(trainSlice, "source", "text")
-      val priors = graft.ops.NaiveBayes.trainPriors(trainSlice, "source")
-      graft.ops.NaiveBayes.prCurve(model, priors, docs.filter(held),
-        "doc_id", "source", "text", targetClass = "src7", bandWidth = 4096L)
-        .orderBy(col("band"))
-    }),
-    "dsir_incremental" -> ((s, dir) => {
-      // the crawl-increment form of curation_dsir: weights built ONCE
-      // over the persisted corpus slice (bench prep amortizes it, same
-      // as the minhash/IVF artifacts), each new batch scored against the
-      // broadcast ≤8192-row model — zero corpus-side work per increment
-      val t = ensureDsirWeights(s, dir)
-      val batch = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-      val scored = graft.ops.Dsir.scoreWith(
-        graft.ops.Dsir.readWeights(s, t), batch, "doc_id", "text")
-      graft.ops.Dsir.selectTop(scored, "doc_id", 100).orderBy(col("sel_rank"))
-    }),
-    "text_c4_lines" -> ((s, dir) => {
-      // C4 page/line heuristics (map-only array-expression pass). The
-      // synthetic corpus is single-line prose with no sentence
-      // punctuation, so the rules would be degenerate on it; like the
-      // multimodal rows, the query derives a deterministic lined
-      // rendition in BOTH engines — 8-word sentences, a lorem-ipsum
-      // header on doc_id%17, a javascript/brace line on doc_id%13 — so
-      // every rule's effect lands in the oracle hash.
-      val lined0 = array_join(transform(
-        sequence(lit(0L), expr("(size(split(text, ' ')) + 7) div 8 - 1")),
-        g => concat(array_join(
-          slice(split(col("text"), " "), g * 8 + 1, lit(8)), " "), lit("."))), "\n")
-      val lined1 = when(col("doc_id") % 17 === 0,
-        concat(lit("lorem ipsum dolor sit amet.\n"), lined0)).otherwise(lined0)
-      val lined2 = when(col("doc_id") % 13 === 0,
-        concat(lined1, lit("\nif (x) { console.log(x); }"))).otherwise(lined1)
-      TextAnalysis.c4Lines(
-        Tables.documents(s, dir).select(col("doc_id"), lined2.as("text")),
-        "doc_id", "text")
-        .withColumn("c4_kept", col("c4_kept").cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-    "curation_rules" -> ((s, dir) => {
-      // rule-first curation as ONE job: Gopher battery (corpus-tuned
-      // subset — the 8-word stop-list rule is off for this synthetic
-      // corpus, minWords relaxed to 20) → self-trained LM fluency floor
-      // (>= the observed corpus median ≈335 bp; the LM trains on the
-      // GATED corpus, so the gate shifts the scores — the oracle replays
-      // the same ordering) → exact-dup removal keep-first → per-source
-      // cap of 25. The gated set is pinned once and feeds the LM's
-      // bigram pass, the dedup hash, and the final projection.
-      val docs = Tables.documents(s, dir)
-      val gate = TextAnalysis.gopherRules(docs, "doc_id", "text", minWords = 20L)
-        .filter(col("r_word_count") && col("r_word_len") && col("r_symbol") &&
-          col("r_bullet") && col("r_ellipsis") && col("r_alpha"))
-        .select(col("doc_id"))
-      val gated = docs.join(gate, "doc_id").localCheckpoint(false)
-      val scored = TextAnalysis.lmScore(gated, "doc_id", "text")
-        .filter(col("lm_bp") >= 335L).select(col("doc_id"), col("lm_bp"))
-      val kept = gated.join(scored, "doc_id")
-      val keepers = graft.ops.Dedup.exact(kept, "doc_id", "text")
-        .filter(col("is_dup") === 0).select(col("doc_id"))
-      graft.ops.Sampling.capPerKey(
-        kept.join(keepers, "doc_id").select(col("doc_id"), col("source"), col("lm_bp")),
-        "source", "doc_id", maxPerKey = 25)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---------------- multimodal plumbing (north star) ----------------
-    "multimodal_meta" -> ((s, dir) => {
-      // REAL header decode: fixture payloads carry genuine PNG/JPEG/WAV
-      // headers (round-robin by doc_id, dims/rate derived from doc_id),
-      // built by the public-spec builders and parsed back by
-      // Multimodal.decodeHeader at the spec offsets (PNG IHDR big-endian
-      // dims, JPEG SOFn walk, WAV fmt-chunk scan). The oracle replays
-      // the same doc_id arithmetic plus each format's fixed header size
-      // — a mismatch in either builder or parser breaks the hash.
-      Multimodal.decodeMeta(multimodalPayloads(s, dir)).orderBy(col("media_id"))
-    }),
-    "multimodal_phash" -> ((s, dir) => {
-      // content-derived image fingerprint: the 63-bit gradient hash
-      // (dHash) over each payload's BODY byte grid — same fixture
-      // payloads as multimodal_meta (real PNG/JPEG/WAV headers, text
-      // bytes as the stand-in pixel stream), hash computed by the shared
-      // integer fragment the oracle replays from hex(encode(text))
-      Multimodal.phash(multimodalPayloads(s, dir))
-        .orderBy(col("media_id"))
-    }),
-    "multimodal_neardup" -> ((s, dir) => {
-      // hamming-banded image near-dedup — the multimodal analogue of
-      // dedup_simhash: 3×21-bit bands block the corpus (pigeonhole: any
-      // pair within the Hamming budget shares an intact band), exact
-      // bit_count(xor) verifies. The %50 slice is re-ingested with a
-      // same-length one-char edit (media_id + 10^7) — the "re-encoded
-      // copy" a crawler sees — whose body grid differs at ≤1 sample, so
-      // true near-dup pairs exist at every SF; the sentinel still guards
-      // the empty case.
-      val docs = Tables.documents(s, dir)
-      val replica = docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-          concat(lit("X"), expr("substring(text, 2)")).as("text"))
-      val payloads = multimodalPayloadsOf(s,
-        docs.select(col("doc_id"), col("text")).unionByName(replica))
-      val hashes = Multimodal.phash(payloads)
-      Multimodal.phashNearDup(hashes, "media_id", "phash", maxHamming = 6)
-        .unionByName(s.range(1).select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-          lit(0L).as("hamming")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "multimodal_audio" -> ((s, dir) => {
-      // audio frame statistics over the WAV slice of the fixture payloads
-      // (media_id % 3 == 2 ⇒ buildWav, fixed 44-byte RIFF header): sampled
-      // PCM16 energy/zero-cross/reversal/peak per frame + silence flag —
-      // map-only integer SQL the oracle replays from hex(encode(text))
-      val wav = multimodalPayloads(s, dir).filter(col("media_id") % 3 === 2)
-      Multimodal.audioFrameStats(wav).orderBy(col("media_id"), col("frame_idx"))
-    }),
-    "multimodal_audio_neardup" -> ((s, dir) => {
-      // hamming-banded audio near-dedup — closes the multimodal dedup
-      // triangle (image multimodal_neardup, text dedup_simhash, audio
-      // here): 48-bit Haitsma-Kalker energy-delta fingerprints, 3×16-bit
-      // bands block, bit_count(xor) verifies. The WAV slice's %50 rows
-      // are re-ingested with a same-length one-char edit at +3·10^7 —
-      // the offset is ≡ 0 mod 3 so the replica stays WAV (44-byte
-      // header) and its body grid differs at one sample, flipping at
-      // most the bits that read it; sentinel guards the empty case
-      val docs = Tables.documents(s, dir).filter(col("doc_id") % 3 === 2)
-      val replica = docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + lit(30000000L)).as("doc_id"),
-          concat(lit("X"), expr("substring(text, 2)")).as("text"))
-      val payloads = multimodalPayloadsOf(s,
-        docs.select(col("doc_id"), col("text")).unionByName(replica))
-      val fps = Multimodal.audioFingerprint(payloads)
-      Multimodal.audioNearDup(fps, "media_id", "afp", maxHamming = 4)
-        .unionByName(s.range(1).select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-          lit(0L).as("hamming")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "tokenize_bpe" -> ((s, dir) => {
-      // distributed BPE merge training (Sennrich et al. 2016): ONE corpus
-      // pass builds the vocab-sized word-frequency table, then each round
-      // is a pair-count shuffle over that table + a map-only literal
-      // merge — the corpus is never re-scanned. The oracle replays all
-      // rounds as chained CTEs (top pair by (cnt DESC, x, y), two-pass
-      // space-delimited replace — the identical procedure in both engines).
-      val words = graft.ops.Bpe.wordFrequencies(Tables.documents(s, dir))
-      val (merges, _) = graft.ops.Bpe.learnMerges(words, rounds = BpeRounds)
-      graft.ops.Bpe.mergesDf(s, merges).orderBy(col("merge_round"))
-    }),
-    "tokenize_bpe_vocab" -> ((s, dir) => {
-      // the encode side of the learned merges: weighted symbol totals of
-      // the merged word table — top-20, ties broken by symbol
-      val words = graft.ops.Bpe.wordFrequencies(Tables.documents(s, dir))
-      val (_, encoded) = graft.ops.Bpe.learnMerges(words, rounds = BpeRounds)
-      graft.ops.Bpe.vocabCounts(encoded)
-        .orderBy(desc("total"), asc("symbol")).limit(20)
-    }),
-    "text_html_extract" -> ((s, dir) => {
-      // crawl-ingest HTML→text: script/style drop, block-tag line breaks,
-      // tag strip, single-pass entity unescape, line cleanup — map-only
-      // regexp expressions over the synthesized page (HtmlSynthExpr)
-      val html = Tables.documents(s, dir)
-        .select(col("doc_id"), expr(HtmlSynthExpr).as("html"))
-      TextAnalysis.htmlExtract(html, "doc_id", "html").orderBy(col("doc_id"))
-    }),
-    "dedup_soft" -> ((s, dir) => {
-      // soft deduplication (the reweight-don't-drop posture of SoftDeDup,
-      // He et al. 2024): every doc survives, but its sampling weight is
-      // 1/cluster_size in integer bp — duplicates share one doc's worth
-      // of probability mass instead of being removed. Same LSH pairs →
-      // components machinery as dedup_clusters; the weight is one more
-      // integer projection, so the scale shape is unchanged.
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.minhashCandidates(docs, "doc_id", "text", k = 3,
-        numHashes = 16, maxBucket = Int.MaxValue)
-      graft.ops.Components.clusterDocuments(docs, "doc_id", pairs, "doc_a", "doc_b")
-        .withColumn("weight_bp", expr("10000 div cluster_size"))
-        .select("doc_id", "cluster_size", "weight_bp")
-        .orderBy(col("doc_id"))
-    }),
-    "mix_doremi" -> ((s, dir) => {
-      // DoReMi-style one-step domain reweighting (Xie et al. 2023,
-      // "DoReMi: Optimizing Data Mixtures Speeds Up Language Model
-      // Pretraining") in an exact integer domain: per-domain excess loss
-      // — the fluency gap to the best-fit domain under the self-trained
-      // bigram LM (standing in for the proxy/reference pair) — feeds a
-      // quantized multiplicative-weights update: multiplier 2^q with
-      // q = min(7, gap div 200), applied to the document-count prior and
-      // renormalized to bp. Log-free/exp-free so both engines agree
-      // bit-for-bit; domains the LM fits worst are upweighted, the
-      // DoReMi direction.
-      val docs = Tables.documents(s, dir)
-      val scored = TextAnalysis.lmScore(docs, "doc_id", "text")
-        .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      // pin the ≤n_sources-row aggregate: best/tot/q all derive from it,
-      // and without the pin each crossJoin replicates the whole LM-scoring
-      // corpus subtree (~8 corpus scans in the unpinned plan)
-      val per = scored.groupBy("source").agg(
-        count(lit(1)).as("n_docs"),
-        expr("sum(lm_bp) div count(1)").as("avg_lm_bp"))
-        .localCheckpoint(false)
-      val best = per.agg(max("avg_lm_bp").as("_best"))
-      val q = per.crossJoin(broadcast(best))
-        .withColumn("excess_q", least(lit(7L), expr("(_best - avg_lm_bp) div 200")))
-        .withColumn("_raw", expr("n_docs * (CAST(1 AS BIGINT) << excess_q)"))
-      val tot = q.agg(sum("_raw").as("_tot"))
-      q.crossJoin(broadcast(tot))
-        .withColumn("weight_bp", expr("(10000 * _raw) div _tot"))
-        .select("source", "n_docs", "avg_lm_bp", "excess_q", "weight_bp")
-        .orderBy(col("source"))
-    }),
-    "tokenize_bpe_encode" -> ((s, dir) => {
-      // the train→tokenize step end to end: learn the merges, then encode
-      // the corpus by broadcasting the vocab-sized merged word table into
-      // one explode+join pass; only the per-doc agg shuffles
-      val words = graft.ops.Bpe.wordFrequencies(Tables.documents(s, dir))
-      val (_, encoded) = graft.ops.Bpe.learnMerges(words, rounds = BpeRounds)
-      graft.ops.Bpe.encodeTokenCounts(Tables.documents(s, dir), encoded)
-        .orderBy(col("doc_id"))
-    }),
-    "tokenize_fertility" -> ((s, dir) => {
-      // tokenizer FERTILITY per source (tokens per word, the standard
-      // tokenizer-quality metric a multilingual pipeline tracks per
-      // language/domain — a high-fertility source is under-served by the
-      // vocab and inflates its training cost): the BPE trainer + encode
-      // pass, collapsed to per-source integer totals and bp fertility
-      val docs = Tables.documents(s, dir)
-      val words = graft.ops.Bpe.wordFrequencies(docs)
-      val (_, encoded) = graft.ops.Bpe.learnMerges(words, rounds = BpeRounds)
-      graft.ops.Bpe.encodeTokenCounts(docs, encoded)
-        .join(docs.select(col("doc_id"), col("source")), "doc_id")
-        .groupBy(col("source"))
-        .agg(sum(col("n_words")).as("n_words"),
-          sum(col("bpe_tokens")).as("bpe_tokens"))
-        .select(col("source"), col("n_words"), col("bpe_tokens"),
-          expr("(bpe_tokens * 10000) div n_words").as("fertility_bp"))
-        .orderBy(col("source"))
-    }),
-    "multimodal_frames" -> ((s, dir) =>
-      // sampled_frames is serialized to CSV here (not in frameSamplePlan,
-      // whose API keeps the array): the driver's comparator sorts rows with
-      // pandas, which cannot hash/sort numpy array cells
-      Multimodal.frameSamplePlan(
-        Multimodal.withPayload(Tables.documents(s, dir), "doc_id", "text")
-          .withColumn("n_frames", (lit(1L) + col("media_id") % 240).cast("int")),
-        stride = 10, maxFrames = 8)
-        .withColumn("sampled_frames", array_join(col("sampled_frames"), ","))
-        .orderBy(col("media_id"))),
-    "multimodal_shots" -> ((s, dir) =>
-      // video temporal segmentation over the PNG-container slice: 16
-      // uniformly-sampled frames → mean byte luma each → cut where the
-      // frame-to-frame delta exceeds 16 — one map-only expression per
-      // clip, no explode, no shuffle
-      Multimodal.shotBoundaries(
-        multimodalPayloads(s, dir).filter(col("media_id") % 3 === 0))
-        .orderBy(col("media_id"))),
-    "multimodal_keyframes" -> ((s, dir) =>
-      // representative-frame extraction per shot (the thumbnail/embedding
-      // frame a downstream image stage consumes): map-only inline flag +
-      // cumulative shot-index sums over the luma grid; the only explode
-      // is the ≤16-struct array per clip
-      Multimodal.keyframes(
-        multimodalPayloads(s, dir).filter(col("media_id") % 3 === 0))
-        .orderBy(col("media_id"), col("shot_idx"))),
-    "multimodal_video_neardup" -> ((s, dir) => {
-      // hamming-banded video near-dedup — completes the per-modality
-      // dedup square (text dedup_simhash, image multimodal_neardup,
-      // audio multimodal_audio_neardup, video here): 45-bit
-      // spatio-temporal luma double-difference fingerprints over the
-      // same sampled grid as multimodal_shots, 3×15-bit bands block,
-      // bit_count(xor) verifies. The PNG slice's %50 rows re-ingest
-      // with a same-length one-char edit at +3·10^7 (≡ 0 mod 3 keeps
-      // the replica in-slice): the edit moves ONE grid sample, flipping
-      // at most the bits that read it; sentinel guards the empty case
-      val docs = Tables.documents(s, dir).filter(col("doc_id") % 3 === 0)
-      val replica = docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + lit(30000000L)).as("doc_id"),
-          concat(lit("X"), expr("substring(text, 2)")).as("text"))
-      val payloads = multimodalPayloadsOf(s,
-        docs.select(col("doc_id"), col("text")).unionByName(replica))
-      val fps = Multimodal.videoFingerprint(payloads)
-      Multimodal.videoNearDup(fps, "media_id", "vfp", maxHamming = 4)
-        .unionByName(s.range(1).select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-          lit(0L).as("hamming")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "curation_pipeline" -> ((s, dir) => {
-      // the operators composed as one curation DAG: quality gate →
-      // length gate → exact dedup (keep canonical) → deterministic split
-      val docs = Tables.documents(s, dir)
-      val gated = docs
-        .join(TextAnalysis.quality(docs, "doc_id", "text")
-          .select(col("doc_id"), col("quality_score")), "doc_id")
-        .filter(col("quality_score") >= 60 && Norm.minFulltextChars(col("text"), 200))
-      // canonical flag via one window over gated — not a second gated
-      // subtree joined back (quality scoring would run twice)
-      val kept = gated
-        .withColumn("_canon", min(col("doc_id")).over(
-          Window.partitionBy(md5(col("text")))))
-        .filter(col("doc_id") === col("_canon")).drop("_canon")
-      graft.ops.Sampling.hashSplit(kept, "doc_id")
-        .groupBy(col("source"), col("split")).agg(count(lit(1)).as("n"))
-        .orderBy(col("source"), col("split"))
-    }),
-    "pipeline_e2e" -> ((s, dir) => {
-      // the A5+dedup composition as ONE job — ingest (length gate) →
-      // fixed-window chunk → embed (mapPartitions, not prunable) → exact
-      // chunk dedup (canonical = min chunk_id per text digest) → keyed
-      // upsert (the doc_id%3==0 slice re-ingested as version 2, winning
-      // over the initial version-1 rows) → per-source summary. Catches
-      // stage-COMPOSITION regressions (schema drift between stages, dedup
-      // dropping the upsert key, upsert clobbering chunk lineage) that the
-      // per-stage rows can't see.
-      val docs = Tables.documents(s, dir).filter(length(col("text")) >= 200)
-      // `source` rides the chunk explode (carryCols) so the summary never
-      // re-joins documents — the whole composition stays one pass
-      val embedded = Embedders.embedColumn(
-        Chunkers.fixedWindowsExpr(docs, "doc_id", "text", 120, 12,
-          carryCols = Seq("source")), "chunk_text")
-      // canonical chunk per distinct text; pinned so the chunk+embed DAG
-      // runs once for both upsert sides (the nearDuplicates rationale)
-      val canon = embedded
-        .withColumn("_cid", min(col("chunk_id")).over(Window.partitionBy(md5(col("chunk_text")))))
-        .filter(col("chunk_id") === col("_cid")).drop("_cid")
-        .localCheckpoint(false)
-      val upserted = VectorOps.upsert(
-        canon.withColumn("version", lit(1)),
-        canon.filter(col("doc_id") % 3 === 0).withColumn("version", lit(2)),
-        "chunk_id")
-      upserted
-        .groupBy(col("source"), col("version"))
-        .agg(count(lit(1)).as("n_chunks"), countDistinct(col("doc_id")).as("n_docs"),
-          max(col("embedding_dim")).as("dim"))
-        .orderBy(col("source"), col("version"))
-    }),
-    "text_redact" -> ((s, dir) =>
-      // PII scrub over text with synthesized email/URL/phone (the fixture
-      // corpus carries none); redacted content compared via md5
-      TextAnalysis.redactPii(
-        Tables.documents(s, dir).withColumn("text",
-          expr("text || ' contact user' || doc_id || '@example.com or https://example.org/doc/' || doc_id || ' tel +1 (555) 010-' || doc_id")),
-        "doc_id", "text")
-        .select(col("doc_id"), col("n_emails"), col("n_urls"), col("n_phones"),
-          md5(col("redacted")).as("redacted_md5"))
-        .orderBy(col("doc_id"))),
-    "text_repetition" -> ((s, dir) =>
-      // Gopher-style repetition filters over sentence-split lines
-      TextAnalysis.repetition(
-        Tables.documents(s, dir).withColumn("text", expr("replace(text, '. ', '\n')")),
-        "doc_id", "text")
-        .orderBy(col("doc_id"))),
-    "optout_filter" -> ((s, dir) => {
-      // publisher opt-out / takedown gate over synthesized crawl URLs
-      // (the url_canonical corpus): SUFFIX semantics — example3.com
-      // blocks every subdomain; nested entries resolve to the DEEPEST
-      // match (sub2.example5.com beats example5.com where both apply);
-      // example999.com matches nothing. Output = the suppressed audit
-      // slice (doc, host, which entry fired).
-      import s.implicits._
-      val docs = Tables.documents(s, dir).withColumn("url",
-        expr("'HTTPS://Sub' || CAST(doc_id % 7 AS STRING) || '.Example' || CAST(doc_id % 13 AS STRING) || " +
-          "'.com/path/' || CAST(doc_id AS STRING)"))
-      val optout = Seq("example3.com", "example5.com", "sub2.example5.com", "example999.com").toDF("domain")
-      TextAnalysis.suppressByDomain(docs, "doc_id", "url", optout)
-        .filter(col("suppressed"))
-        .select(col("doc_id"), col("host"), col("matched_domain"))
-        .orderBy(col("doc_id"))
-    }),
-    "crawl_robots" -> ((s, dir) =>
-      // robots-exclusion path gate over synthesized crawl paths: the
-      // rule battery exercises longest-match override (/s0/public/
-      // allows inside disallowed /s0/), the same-length allow-wins tie
-      // (/s2/p/ twice), and the unmatched default-allow (/s3/, and
-      // /s2/public/ which misses the /s2/p/ prefix)
-      TextAnalysis.robotsGate(
-        Tables.documents(s, dir).withColumn("path",
-          expr("'/s' || CAST(doc_id % 4 AS STRING) || " +
-            "(CASE WHEN doc_id % 3 = 0 THEN '/public' ELSE '' END) || " +
-            "'/p/' || CAST(doc_id AS STRING)")),
-        "doc_id", "path",
-        Seq("/s0/" -> false, "/s0/public/" -> true, "/s1/" -> false,
-            "/s2/p/" -> true, "/s2/p/" -> false))
-        .orderBy(col("doc_id"))),
-    "url_canonical" -> ((s, dir) =>
-      // crawl-curation URL normalization over synthesized URLs (the
-      // fixture corpus carries none, like text_redact): mixed-case
-      // scheme/host, a %3-of-docs trailing slash, and utm/fbclid tracking
-      // params that must scrub out of the canonical form
-      TextAnalysis.urlParts(
-        Tables.documents(s, dir).withColumn("url",
-          expr("'HTTPS://Sub' || CAST(doc_id % 7 AS STRING) || '.Example' || CAST(doc_id % 13 AS STRING) || " +
-            "'.com/path/' || CAST(doc_id AS STRING) || (CASE WHEN doc_id % 3 = 0 THEN '/' ELSE '' END) || " +
-            "'?utm_source=feed&id=' || CAST(doc_id AS STRING) || '&fbclid=x' || CAST(doc_id AS STRING) || '&q=term'")),
-        "doc_id", "url")
-        .orderBy(col("doc_id"))),
-    "text_dup_spans" -> ((s, dir) =>
-      // exact-substring duplication diagnostic (Lee et al.): per doc, the
-      // fraction of 5-token span occurrences shared verbatim with any
-      // other document — catches quoted/copied passages that
-      // document-level Jaccard dilutes away
-      Dedup.duplicatedSpanStats(Tables.documents(s, dir), "doc_id", "text", k = 5)
-        .orderBy(col("doc_id"))),
-    "dedup_cdc_chunks" -> ((s, dir) =>
-      // storage-tier dedup: content-defined chunk boundaries (local
-      // bigram hash clears the 63-mask → ~64-token chunks) are
-      // insertion-resistant, so shared bulk between edited revisions
-      // stays alignable where fixed windows fragment it; per-doc stats
-      // of chunks whose exact digest recurs across documents
-      graft.ops.Dedup.cdcChunkStats(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy(col("doc_id"))),
-    "dedup_span_removal" -> ((s, dir) =>
-      // the action half of text_dup_spans: tokens covered by any
-      // cross-document verbatim 5-gram are REMOVED and the survivors
-      // reassembled in order — sub-document dedup where whole-doc dedup
-      // would keep the copied passage or discard the document
-      Dedup.removeDuplicatedSpans(Tables.documents(s, dir), "doc_id", "text", k = 5)
-        .select(col("doc_id"), col("n_tokens"), col("n_dup_tokens"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy(col("doc_id"))),
-    "orc_roundtrip" -> ((s, dir) => {
-      // the ORC source/sink pair oracle-gated: projected documents written
-      // ORC partitioned by lang, read back, aggregated — round-trip
-      // identity the oracle replays straight from the parquet table
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_orc_${s.sparkContext.applicationId}").getAbsolutePath
-      val proj = Tables.documents(s, dir).select(col("doc_id"), col("source"),
-        col("lang"), length(col("text")).cast("long").as("n_chars"))
-      graft.io.Writers.orcSink(proj, base, partitionBy = Seq("lang"))
-      Readers.loadOrc(s, base)
-        .groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy(col("lang"), col("source"))
-    }),
-    "compact_roundtrip" -> ((s, dir) => {
-      // small-file compaction oracle-gated: 40 tiny files committed as a
-      // generation-marker table, compacted as the NEXT generation
-      // (GenTable — the one crash-safe maintenance protocol), content
-      // must survive byte-for-byte (the oracle aggregates the original
-      // table; GenTableSpec owns the file-count and crash assertions)
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_compact_${s.sparkContext.applicationId}").getAbsolutePath
-      val frag = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"), length(col("text")).cast("long").as("n_chars"))
-        .repartition(40)
-      graft.io.GenTable.replace(s, base, frag)
-      graft.io.GenTable.compact(s, base, targetBytes = 4L << 20)
-      graft.io.GenTable.read(s, base).get
-        .agg(count(lit(1)).as("n_rows"), sum(col("doc_id")).as("sum_ids"),
-          sum(col("n_chars")).as("sum_chars"))
-    }),
-    "join_salted" -> ((s, dir) => {
-      // skew-salted join oracle-gated: salting must be RESULT-INVISIBLE
-      // (the oracle is the plain join) while the plan replicates the dim
-      // side by the salt factor — ScaleSpec owns the plan assertions
-      val docs = Tables.documents(s, dir)
-      val dims = docs.groupBy(col("source"))
-        .agg(countDistinct(col("lang")).as("n_langs"))
-      graft.ops.Skew.saltedJoin(docs.select(col("doc_id"), col("source")), dims, "source")
-        .groupBy(col("source"), col("n_langs"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("source"))
-    }),
-    "join_bucketed" -> ((s, dir) => {
-      // bucketed co-located join oracle-gated: both sides written
-      // bucketBy(16, doc_id) sorted, joined zero-exchange (K9 / the
-      // co-location claim — WritersSpec asserts the exchange-free plan);
-      // the oracle is the plain join over the source table
-      val tag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-      val docs = Tables.documents(s, dir)
-      val tA = s"graft_bkt_meta_$tag"; val tB = s"graft_bkt_lens_$tag"
-      graft.io.Writers.bucketedTableSink(docs.select(col("doc_id"), col("source")), tA, "doc_id", 16)
-      graft.io.Writers.bucketedTableSink(docs.select(col("doc_id"),
-        length(col("text")).cast("long").as("n_chars")), tB, "doc_id", 16)
-      s.table(tA).join(s.table(tB), "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy(col("source"))
-    }),
-    "join_runtime_filter" -> ((s, dir) => {
-      // the 100 TB fact-join posture: NEITHER side broadcastable, so opt
-      // in to Catalyst's runtime bloom-filter semi-join reduction
-      // (InjectRuntimeFilter): the selective order-priority filter builds
-      // a bloom over o_orderkey that prunes lineitem rows BEFORE the join
-      // shuffle. Conf lives in a child session (newSession shares the
-      // catalog/state, isolates conf); the result is conf-invariant — the
-      // oracle is the plain join — while PlanShapeSpec pins the
-      // bloom_filter_might_contain injection itself.
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val li = Tables.lineitem(s2, dir)
-        .withColumn("price_c", expr("cast(round(l_extendedprice * 100) as bigint)"))
-        .withColumn("disc_c", expr("cast(round(l_discount * 100) as bigint)"))
-      val o = Tables.orders(s2, dir).filter(col("o_orderpriority") === "1-URGENT")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n_items"),
-          sum(col("price_c") * (lit(100L) - col("disc_c"))).as("revenue_c4"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-    "dedup_paragraphs" -> ((s, dir) =>
-      // the middle granularity tier (MassiveText's exact-paragraph dedup):
-      // every paragraph keeps exactly its FIRST occurrence in global
-      // (doc, position) order — later verbatim copies drop, unique content
-      // never lost (unlike the boilerplate df-threshold tier, which drops
-      // ALL copies, and the 5-gram span tier, which drops every
-      // occurrence). Paragraphs = the sentence-split convention.
-      Dedup.dedupParagraphsKeepFirst(
-        Tables.documents(s, dir).withColumn("text", expr("replace(text, '. ', '\n')")),
-        "doc_id", "text")
-        .select(col("doc_id"), col("n_paras"), col("n_dropped"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy(col("doc_id"))),
-    "profile_columns" -> ((s, dir) =>
-      // dataset profiling (the data-card surface): per column — rows,
-      // nulls, EXACT distinct count, min/max rendered as strings; all
-      // columns in ONE scan (single agg, one Expand for the distincts)
-      graft.ops.Stats.profileColumns(Tables.documents(s, dir),
-        Seq("doc_id", "source", "lang"))
-        .orderBy(col("col_name"))),
-    "text_boilerplate" -> ((s, dir) => {
-      // CCNet-style cross-document line dedup: lines shared by more than
-      // 10 docs of the same source are boilerplate (banners, footers) and
-      // are removed with original line order preserved. The fixture text
-      // carries no newlines or shared chrome, so both are synthesized
-      // (the text_repetition convention): a per-source banner/footer
-      // every doc shares (df = docs-per-source, dropped), a promo line
-      // shared by the doc_id%7 cohort (df crosses the threshold only at
-      // larger SFs — the mid-band), and the sentence-split body.
-      val docs = Tables.documents(s, dir).withColumn("text", expr(BoilerSynthExpr))
-      TextAnalysis.removeBoilerplateLines(docs, "doc_id", "text", "source",
-        maxDocFreq = 10L)
-        .select(col("doc_id"), col("n_lines"), col("n_boiler_lines"),
-          length(col("clean_text")).cast("long").as("n_chars_clean"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy(col("doc_id"))
-    }),
-    "curation_adaptive" -> ((s, dir) => {
-      // adaptive per-source quality gate: each source keeps its own top
-      // 75% by ITS quality distribution (threshold = exact per-source
-      // 25th-percentile score, nearest-rank) — the per-domain adaptive
-      // filter a heterogeneous crawl needs, where one global bar
-      // over-prunes clean sources and under-prunes noisy ones
-      val docs = Tables.documents(s, dir)
-      val scored = docs.select(col("doc_id"), col("source"))
-        .join(TextAnalysis.quality(docs, "doc_id", "text")
-          .select(col("doc_id"), col("quality_score")), "doc_id")
-      val thresholds = graft.ops.Stats.quantilesDisc(scored, Seq("source"),
-        col("quality_score"), Seq(2500))
-        .select(col("source"), col("value").as("q25_score"))
-      scored.join(thresholds, "source")
-        .groupBy(col("source"), col("q25_score"))
-        .agg(count(lit(1)).as("n_total"),
-          sum(when(col("quality_score") >= col("q25_score"), 1L).otherwise(0L)).as("n_kept"))
-        .orderBy(col("source"))
-    }),
-    "quota_per_source" -> ((s, dir) =>
-      // data-mixing quota: at most 30 docs per source, chosen by hash
-      // order (reproducible, not input-order-dependent)
-      graft.ops.Sampling.capPerKey(Tables.documents(s, dir), "source", "doc_id", 30)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("source"), col("doc_id"))),
-    "curation_budget" -> ((s, dir) => {
-      // token-budget mix assembly: per source, admit docs best-quality-
-      // first until 1000 whitespace tokens — the "N tokens per source"
-      // step of a training-mix builder (quotas in tokens, not documents)
-      val docs = Tables.documents(s, dir)
-      val scored = docs.select(col("doc_id"), col("source"))
-        .join(TextAnalysis.quality(docs, "doc_id", "text")
-          .select(col("doc_id"), col("n_tokens"), col("quality_score")), "doc_id")
-      graft.ops.Sampling.tokenBudgetPerKey(scored, "source", "doc_id",
-        "n_tokens", "quality_score", budget = 1000L)
-        .select(col("source"), col("doc_id"), col("n_tokens"),
-          col("quality_score"), col("cum_tokens"))
-        .orderBy(col("source"), col("cum_tokens"))
-    }),
-    "curation_modern" -> ((s, dir) => {
-      // the 2023-25-era curation recipe as ONE funnel: quality gate →
-      // exact dedup keep-first → DSIR target-domain selection (top-200) →
-      // leakage-safe cluster-level split, reported as per-stage counts.
-      // Composes this round's new ops with the established gates; every
-      // stage's semantics is pinned elsewhere (text_quality, dedup_exact,
-      // curation_dsir, split_leakage_safe) — this row pins the
-      // COMPOSITION. (The Gopher battery is the wrong gate for this
-      // corpus: its 50-word floor rejects every synthetic doc.)
-      val docs = Tables.documents(s, dir)
-      val s1 = TextAnalysis.quality(docs, "doc_id", "text")
-        .filter(col("quality_score") >= 70).select(col("doc_id"))
-        .join(docs, "doc_id")
-      val wd = org.apache.spark.sql.expressions.Window
-        .partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-      // pin the deduped set (the curation_full localCheckpoint idiom):
-      // five downstream consumers (two DSIR passes, the s3 join, two
-      // counts) must not each re-run the quality pass + dedup window.
-      // Scale note (r16): this is a TEXT-sized memory-pool pin — the
-      // footprint class that went superlinear on curation_full at sf30.
-      // A DISK_ONLY variant was measured and REJECTED for this row
-      // (3.99 → 5.54 s at sf0.1: five consumers each pay the columnar
-      // decompress); if this row ever joins the sf30 frontier, re-run
-      // that A/B there, where the pool pressure flips the trade.
-      val s2 = s1.withColumn("_rn", row_number().over(wd))
-        .filter(col("_rn") === 1).drop("_rn")
-        .localCheckpoint(false)
-      val s3ids = graft.ops.Dsir.selectTop(
-        graft.ops.Dsir.importanceScores(s2, "doc_id", "text",
-          col("source").isin(DsirTargetSources: _*)), "doc_id", 200)
-        .select(col("doc_id"))
-      val s3 = s3ids.join(s2, "doc_id").localCheckpoint(false)
-      val pairs = Dedup.minhashCandidates(s3, "doc_id", "text", k = 3,
-        numHashes = 16, maxBucket = Int.MaxValue)
-      val split = graft.ops.Sampling.hashSplit(
-        graft.ops.Components.clusterDocuments(s3, "doc_id", pairs, "doc_a", "doc_b")
-          .select(col("doc_id"), col("cluster_id")), "cluster_id")
-      def cnt(stage: String, df: DataFrame) =
-        df.agg(count(lit(1)).as("n")).select(lit(stage).as("stage"), col("n"))
-      cnt("s0_input", docs)
-        .unionByName(cnt("s1_quality", s1))
-        .unionByName(cnt("s2_exact", s2))
-        .unionByName(cnt("s3_dsir", s3))
-        .unionByName(split.groupBy(concat(lit("s4_split_"), col("split")).as("stage"))
-          .agg(count(lit(1)).as("n")))
-        .orderBy(col("stage"))
-    }),
-    "curation_full" -> ((s, dir) => {
-      // the full production curation DAG as ONE job — cross-doc
-      // boilerplate-line removal → duplicated-span removal → quality gate
-      // → near-dedup (minhash-LSH → connected components) → keep-best
-      // representative → per-source token-budget mix. The r7 sub-document
-      // text transforms run UPSTREAM of scoring/dedup/mixing, the order a
-      // production curation run applies them; each text reassembly is one
-      // aggregate, and the gated METADATA is pinned (localCheckpoint) so
-      // the multi-consumer stages downstream never re-run the quality
-      // pass — see the pin-budget note below for why text is NOT pinned.
-      val docs = Tables.documents(s, dir).withColumn("text", expr(BoilerSynthExpr))
-      val noBoiler = TextAnalysis.removeBoilerplateLines(docs, "doc_id", "text",
-          "source", maxDocFreq = 10L)
-        .select(col("doc_id"), col("clean_text"))
-      // Pin-budget posture (r15 sf30 audit → r16 fix), two halves:
-      // (1) the HOT checkpoint pins ONLY (doc_id, source, n_tokens,
-      // quality_score) — what every downstream consumer except shingling
-      // reads — so the memory-pool pin no longer grows with document
-      // LENGTH, only COUNT (~30x fewer hot bytes than the old full-text
-      // DOUBLE pin that blew past local[32]'s 4.6 GB storage pool and
-      // went superlinear at sf30); (2) the cleaned TEXT materializes
-      // ONCE at DISK_ONLY — it must not recompute (the boilerplate pass
-      // carries its own corpus-wide line shuffle, and re-deriving it
-      // inside the minhash job measured a task heap OOM at sf30 when the
-      // two pipelines fused), but it also must not compete for the
-      // memory pool (the r15 eviction thrash). On a real cluster the
-      // disk tier is per-executor local space — the cheap resource.
-      val cleanedText = Dedup.removeDuplicatedSpans(noBoiler, "doc_id", "clean_text", k = 5)
-        .select(col("doc_id"), col("clean_text").as("text"))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val gatedMeta = TextAnalysis.quality(cleanedText, "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens"), col("quality_score"))
-        .filter(col("quality_score") >= 45)
-        .join(Tables.documents(s, dir).select(col("doc_id"), col("source")), "doc_id")
-        .localCheckpoint(false)
-      // broadcast the pinned id set into the text probe: the disk-tier
-      // text relation is read map-side, never shuffled (at sf30 an SMJ
-      // here would shuffle ~4.5 GB of cleaned text to join 12 MB of ids)
-      val gatedText = cleanedText.join(broadcast(gatedMeta.select(col("doc_id"))), "doc_id")
-      val pairs = Dedup.minhashCandidates(gatedText, "doc_id", "text", k = 3, numHashes = 16,
-        maxBucket = Int.MaxValue)
-      val reps = Dedup.keepBest(
-        graft.ops.Components.clusterDocuments(gatedMeta, "doc_id", pairs, "doc_a", "doc_b")
-          .join(gatedMeta.select(col("doc_id"), col("source"), col("n_tokens"),
-            col("quality_score")), "doc_id"),
-        "cluster_id", "doc_id", "quality_score")
-      graft.ops.Sampling.tokenBudgetPerKey(reps, "source", "doc_id",
-        "n_tokens", "quality_score", budget = 1000L)
-        .select(col("source"), col("doc_id"), col("cluster_size").cast("long").as("cluster_size"),
-          col("n_tokens"), col("quality_score"), col("cum_tokens"))
-        .orderBy(col("source"), col("cum_tokens"))
-    }),
-    "curation_cdc" -> ((s, dir) => {
-      // the OTHER composed tile of VERDICT r14 task 3 (chunk_tiling wires
-      // TextTiling into the chunker; this wires cdcChunkStats into a
-      // curation gate): per-doc content-defined-chunk duplicate coverage
-      // becomes a cut signal — storage-tier near-copies (dup_bp >= 2500)
-      // fall before the quality gate, survivors roll up per source. Plan
-      // shape: the CDC stats and the map-only quality pass each shuffle
-      // once on doc_id, then the rollup is one map-side-combined
-      // aggregate on the 4-value source key — nothing corpus-quadratic.
-      val docs = Tables.documents(s, dir)
-      val cdc = graft.ops.Dedup.cdcChunkStats(docs, "doc_id", "text")
-        .select(col("doc_id"), col("dup_bp"))
-      val q = TextAnalysis.quality(docs, "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens"), col("quality_score"))
-      docs.select(col("doc_id"), col("source"))
-        .join(cdc, "doc_id").join(q, "doc_id")
-        .withColumn("kept", col("dup_bp") < 2500 && col("quality_score") >= 45)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"),
-          sum(when(col("kept"), col("n_tokens")).otherwise(0L)).as("kept_tokens"),
-          sum(col("dup_bp")).as("_sdup"))
-        .withColumn("mean_dup_bp", expr("_sdup div n_docs"))
-        .select(col("source"), col("n_docs"), col("n_kept"),
-          col("kept_tokens"), col("mean_dup_bp"))
-        .orderBy(col("source"))
-    }),
-    "pack_sequences" -> ((s, dir) => {
-      // sequence packing over the shared token chunks: per source, chunks
-      // ordered by (doc_id, chunk_index) land in 2048-token sequences
-      val chunks = tokenChunks(s, dir)
-        .select(col("doc_id"), col("source"), col("chunk_index"), col("n_tokens"))
-      graft.ops.Packing.packOffsets(chunks, "source", Seq("doc_id", "chunk_index"),
-        "n_tokens", budget = 2048L)
-        .select(col("doc_id"), col("chunk_index"), col("source"),
-          col("n_tokens"), col("seq_id"), col("seq_offset"))
-        .orderBy(col("source"), col("doc_id"), col("chunk_index"))
-    }),
-    "pack_concat" -> ((s, dir) => {
-      // the GPT-style pretraining layout: concatenate each source's token
-      // stream (doc order) and slice into 512-token examples — every
-      // (example, doc) span materialized, boundary-straddling docs split
-      // across examples, zero padding. Same tokenizer as the DSIR rows.
-      val docs = Tables.documents(s, dir)
-      val withTok = docs.select(col("source"), col("doc_id"),
-        size(filter(Dedup.tokensCol(col("text")), t => t =!= lit("")))
-          .cast("long").as("n_tokens"))
-      graft.ops.Packing.concatSpans(withTok, "source", "doc_id", "n_tokens", ctx = 512L)
-        .orderBy(col("source"), col("example_idx"), col("doc_id"))
-    }),
-    "mix_epochs" -> ((s, dir) => {
-      // fractional epoch repetition: src0 repeats 2.3×, src1 1.5×, the
-      // mid sources exactly once, the tail 0.4× — each doc's copy count a
-      // pure function of (id, seed)
-      val docs = Tables.documents(s, dir).select(col("source"), col("doc_id"))
-        .withColumn("factor_bp",
-          when(col("source") === "src0", 23000L)
-            .when(col("source") === "src1", 15000L)
-            .when(col("source").isin("src2", "src3", "src4"), 10000L)
-            .otherwise(4000L))
-      graft.ops.Sampling.epochRepeat(docs, "doc_id", "factor_bp", seed = 23)
-        .select(col("source"), col("doc_id"), col("copy_idx"))
-        .orderBy(col("source"), col("doc_id"), col("copy_idx"))
-    }),
-    "mix_unimax" -> ((s, dir) => {
-      // UniMax language sampling: budget = one corpus-pass of documents,
-      // cap = 1.2 epochs — on this corpus's 42%-en skew the waterfill
-      // caps every minority language at 1.2 epochs and hands en the
-      // remainder (both branches of min() exercised); the materialized
-      // copy stream reuses epochRepeat under each language's derived
-      // factor
-      val docs = Tables.documents(s, dir)
-      graft.ops.Sampling.mixUnimax(docs, "doc_id", "lang",
-        budget = docs.count(), maxEpochsBp = 12000L, seed = 29)
-        .orderBy(col("lang"), col("doc_id"), col("copy_idx"))
-    }),
-    "pack_greedy" -> ((s, dir) =>
-      // NO-SPLIT greedy bin packing (items stay whole, a non-associative
-      // sequential fold): flatMapSortedGroups — sequential within a
-      // source, all sources in parallel, sort pushed into the shuffle;
-      // the oracle replays the fold as a recursive CTE
-      graft.ops.Packing.packGreedyNoSplit(
-        Tables.documents(s, dir).select(col("source"), col("doc_id"), col("n_chars")),
-        "source", "doc_id", "n_chars", budget = 4000L)
-        .orderBy(col("source"), col("doc_id"))),
-    "train_batches" -> ((s, dir) =>
-      // dynamic-batching audit: length-band buckets, longest-first fill
-      // of 8-doc batches, per-bucket pad-waste in bp — the table a
-      // fine-tuning loader's bucketing config is chosen from
-      graft.ops.Packing.batchPlan(
-        Tables.documents(s, dir)
-          .withColumn("n_toks", size(split(col("text"), "\\s+")).cast("long")),
-        "doc_id", "n_toks", batchSize = 8, bucketWidth = 16)
-        .orderBy(col("bucket"))),
-    "train_shards" -> ((s, dir) =>
-      // token-budgeted shard manifest: global concat-then-chunk
-      // assignment at file granularity via the scale-honest cumulative
-      // sum (range partitions + per-partition running sum + offset
-      // fold — never an unpartitioned window)
-      graft.ops.Packing.shardPlan(
-        Tables.documents(s, dir)
-          .withColumn("n_toks", size(split(col("text"), "\\s+")).cast("long")),
-        "doc_id", "n_toks", targetTokens = 2000L)
-        .orderBy(col("shard_id"))),
-    "split_hash" -> ((s, dir) =>
-      // deterministic 90/5/5 curation split: content-hash buckets, so
-      // assignments are stable under reruns, retries, and corpus growth
-      graft.ops.Sampling.hashSplit(Tables.documents(s, dir), "doc_id")
-        .groupBy(col("source"), col("split"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("source"), col("split"))),
-    "mv_incremental" -> ((s, dir) => {
-      // incremental materialized-aggregate maintenance: the per-source
-      // stats table built once over the corpus slice (bench prep), an
-      // increment (doc_id%5==0) merged in with ONE pass over the delta —
-      // the oracle is the full recompute, which the mergeable-monoid
-      // algebra must equal exactly
-      val t = ensureMvState(s, dir)
-      val delta = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-      graft.ops.Mv.merge(
-        graft.ops.Mv.readState(s, t),
-        graft.ops.Mv.aggState(delta, "source", "n_chars"), "source")
-        .orderBy(col("source"))
-    }),
-    "train_order" -> ((s, dir) =>
-      // reproducible epoch shuffle: seeded 60-bit permutation key →
-      // shard + in-shard position, so a trainer's data order is a pure
-      // function of (corpus, seed). The only shuffle is the per-shard
-      // window — position is never a global row_number.
-      graft.ops.Sampling.shardOrder(
-        Tables.documents(s, dir).select(col("doc_id")), "doc_id", seed = 17, nShards = 8)
-        .select(col("doc_id"), col("shard"), col("pos"))
-        .orderBy(col("shard"), col("pos"))),
-    "train_curriculum" -> ((s, dir) => {
-      // easy-first curriculum schedule: quality-score VALUE bands pick the
-      // phase (map-only — never an ntile's global sort), then the
-      // train_order per-(phase, shard) seeded window positions rows; the
-      // whole schedule is a pure function of (corpus, cuts, seed)
-      val docs = Tables.documents(s, dir)
-      val scored = TextAnalysis.quality(docs, "doc_id", "text")
-        .select(col("doc_id"), col("quality_score"))
-      graft.ops.Sampling.curriculum(scored, "doc_id", "quality_score",
-        cuts = Seq(70L, 40L), seed = 23, nShards = 8)
-        .select(col("doc_id"), col("quality_score"), col("phase"), col("shard"), col("pos"))
-        .orderBy(col("phase"), col("shard"), col("pos"))
-    }),
-    "sketch_hll" -> ((s, dir) => {
-      // distinct-token HLL sketch per source: integer register state is the
-      // (hash-exact) comparison surface; the float estimate derives locally
-      val toks = Tables.documents(s, dir)
-        .select(col("source"), explode(Dedup.tokensCol(col("text"))).as("tok"))
-        .filter(col("tok") =!= "")
-      graft.ops.Hll.sketch(toks, Seq("source"), col("tok"))
-        .orderBy(col("source"))
-    }),
-    "sketch_hll_merge" -> ((s, dir) => {
-      // incremental sketching: registers built separately over the even/odd
-      // doc slices, merged (per-register max), then collapsed — the result
-      // must hash-equal the single-pass sketch, which is exactly what the
-      // (shared) oracle asserts
-      val docs = Tables.documents(s, dir)
-      def toks(half: Int) = docs.filter(col("doc_id") % 2 === half)
-        .select(col("source"), explode(Dedup.tokensCol(col("text"))).as("tok"))
-        .filter(col("tok") =!= "")
-      val a = graft.ops.Hll.registers(toks(0), Seq("source"), col("tok"))
-      val b = graft.ops.Hll.registers(toks(1), Seq("source"), col("tok"))
-      graft.ops.Hll.collapse(graft.ops.Hll.merge(Seq("source"), a, b), Seq("source"))
-        .orderBy(col("source"))
-    }),
-    "dedup_clusters" -> ((s, dir) => {
-      // LSH pairs → connected components → canonical representative: the
-      // step that turns candidate PAIRS into dedup CLUSTERS (A~B, B~C ⇒
-      // {A,B,C}, keep min id). Iterative min-label propagation with
-      // per-round localCheckpoint; oracle replays it as a recursive CTE.
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.minhashCandidates(docs, "doc_id", "text", k = 3, numHashes = 16,
-        maxBucket = Int.MaxValue)
-      graft.ops.Components.clusterDocuments(docs, "doc_id", pairs, "doc_a", "doc_b")
-        .orderBy(col("doc_id"))
-    }),
-    "dedup_cluster_sizes" -> ((s, dir) => {
-      // the governance histogram over the same LSH→components clustering
-      // as dedup_clusters: clusters per size, docs per size, corpus share
-      // in bp — the mega-cluster / template-spam early-warning view
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.minhashCandidates(docs, "doc_id", "text", k = 3, numHashes = 16,
-        maxBucket = Int.MaxValue)
-      val clustered = graft.ops.Components.clusterDocuments(docs, "doc_id", pairs, "doc_a", "doc_b")
-      graft.ops.Components.clusterSizeHistogram(clustered).orderBy(col("cluster_size"))
-    }),
-    "dedup_snm" -> ((s, dir) => {
-      // sorted-neighborhood blocking: corpus ordered by a 12-char
-      // normalized-prefix key, every record paired with its 3 successors —
-      // the sort-based candidate generator beside the LSH families; rank
-      // built from range partitions + offset fold, never a global window
-      val docs = Tables.documents(s, dir).withColumn("snm_key",
-        expr("lower(substring(trim(regexp_replace(text, '\\\\s+', ' ')), 1, 12))"))
-      Dedup.sortedNeighborhoodPairs(docs, "doc_id", "snm_key", window = 3)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-    "attribute_spans" -> ((s, dir) => {
-      // quote attribution: the %101 "answers" are 300-char extracts of
-      // real corpus docs (offset 30) re-ingested at +10^7 — provenance
-      // must point back at the extracted-from doc with a high share;
-      // the Schleimer guarantee makes a long quote unmissable
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val answers = docs.filter(col("doc_id") % 101 === 0)
-        .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-          expr("substring(text, 30, 300)").as("text"))
-      graft.ops.Winnow.attributeSpans(answers, docs, "doc_id", "text")
-        .orderBy(col("answer_id"))
-    }),
-    "dedup_norm_ladder" -> ((s, dir) => {
-      // normalization ablation card over planted variant mirrors: %40
-      // trailing-space copies (whitespace tier catches), %30 uppercase
-      // mirrors (lowercase tier), %70 punctuation-suffixed copies
-      // (alnum tier) — each tier's dup jump is its measured unlock
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val pA = docs.filter(col("doc_id") % 40 === 0)
-        .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-          concat(col("text"), lit("  ")).as("text"))
-      val pB = docs.filter(col("doc_id") % 30 === 0)
-        .select((col("doc_id") + lit(20000000L)).as("doc_id"),
-          upper(col("text")).as("text"))
-      val pC = docs.filter(col("doc_id") % 70 === 0)
-        .select((col("doc_id") + lit(30000000L)).as("doc_id"),
-          concat(col("text"), lit("!!")).as("text"))
-      Dedup.normalizationLadder(
-        docs.unionByName(pA).unionByName(pB).unionByName(pC), "text")
-        .orderBy(col("tier"))
-    }),
-    "code_clones" -> ((s, dir) => {
-      // type-2 clone detection: the %50 slice re-ingests at +10^7 with a
-      // BIJECTIVE identifier rename (spark/join/table → tokens absent
-      // from the corpus) — invisible to byte hashing, exactly what
-      // first-occurrence alpha-renaming canonicalization catches
-      val docs = Tables.documents(s, dir)
-      val renamed = docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-          expr("regexp_replace(regexp_replace(regexp_replace(text, " +
-            "'\\\\bspark\\\\b', 'zephyr'), '\\\\bjoin\\\\b', 'quill'), " +
-            "'\\\\btable\\\\b', 'plinth')").as("text"))
-      Dedup.clonesType2(
-        docs.select(col("doc_id"), col("text")).unionByName(renamed),
-        "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-    "dedup_edit" -> ((s, dir) => {
-      // record-linkage fuzzy tier: SNM window-3 candidates verified by
-      // Levenshtein over the 64-char normalized prefix — the
-      // character-level matcher token-set measures can't express;
-      // sim >= 5000 bp keeps the near-identical-prefix pairs
-      val docs = Tables.documents(s, dir).withColumn("snm_key",
-        expr("lower(substring(trim(regexp_replace(text, '\\\\s+', ' ')), 1, 12))"))
-      val pairs = Dedup.sortedNeighborhoodPairs(docs, "doc_id", "snm_key", window = 3)
-      Dedup.editDistancePairs(pairs, docs, "doc_id", "text",
-        prefixChars = 64, minSimBp = 5000L)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-    "graph_pagerank" -> ((s, dir) => {
-      // link-graph centrality over the synthesized citation graph
-      // (i → i÷2 and i → i÷4 form a binary-ancestor lattice, i → i%97 the
-      // 97 hub sinks whose in-degree grows with the corpus): exact-integer
-      // 4-iteration PageRank in the nano domain. Node 0 is the graph's one
-      // dangling sink (all three links self-loop), exercising the
-      // uniform-redistribution path.
-      val docs = Tables.documents(s, dir)
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(expr("doc_id div 2"), expr("doc_id div 4"), expr("doc_id % 97"))).as("dst"))
-      graft.ops.Graph.pageRank(docs.select(col("doc_id").as("node")), edges, iters = 4)
-        .orderBy(col("node"))
-    }),
-    "graph_lpa" -> ((s, dir) => {
-      // dense-community detection over the same citation lattice:
-      // 4 synchronous deterministic LPA rounds (min-label ties) — the
-      // DENSITY companion to components' reachability
-      val docs = Tables.documents(s, dir)
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(expr("doc_id div 2"), expr("doc_id div 4"), expr("doc_id % 97"))).as("dst"))
-      graft.ops.Graph.labelPropagation(docs.select(col("doc_id").as("node")), edges, iters = 4)
-        .orderBy(col("node"))
-    }),
-    "graph_ppr" -> ((s, dir) => {
-      // personalized PageRank from the %10 seed slice over the same
-      // graph: teleport AND dangling mass land only on seeds, so nodes
-      // outside the seeds' neighborhood rank exactly 0
-      val docs = Tables.documents(s, dir)
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(expr("doc_id div 2"), expr("doc_id div 4"), expr("doc_id % 97"))).as("dst"))
-      graft.ops.Graph.personalizedPageRank(
-        docs.select(col("doc_id").as("node")), edges,
-        docs.filter(col("doc_id") % 10 === 0).select(col("doc_id").as("node")),
-        iters = 4).orderBy(col("node"))
-    }),
-    "graph_degrees" -> ((s, dir) => {
-      // the power-law audit card over the same graph: log2-bucketed
-      // degree histogram via bit arithmetic, shuffle state = buckets
-      val docs = Tables.documents(s, dir)
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(expr("doc_id div 2"), expr("doc_id div 4"), expr("doc_id % 97"))).as("dst"))
-      graft.ops.Graph.degreeHistogram(edges).orderBy(col("bucket"))
-    }),
-    "graph_degrees_incremental" -> ((s, dir) => {
-      // the incremental leg of the graph family (VERDICT r16 task 7, the
-      // mv_incremental pattern): the maintained (undirected edges, degree
-      // state) pair was built once over the base slice (bench prep); a
-      // frontier batch (links of the %5 doc slice) applies as
-      // canonicalize → anti-join the persisted edges → ADD the new edges'
-      // degree counts into the node-sized state. The histogram derives
-      // from the merged state; the oracle is the full recompute, which
-      // the additive-monoid algebra must equal exactly. Per-batch cost:
-      // delta-sized work + the persisted-edge probe — the corpus-sized
-      // distinct/degree shuffles never re-run.
-      val Seq(_, _, undR, degR, _) = ensureGraphState(s, dir)
-      val und = graft.io.GenTable.read(s, undR).get
-      val deg = graft.io.GenTable.read(s, degR).get
-      val delta = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("src"),
-          explode(array(expr("doc_id div 2"), expr("doc_id div 4"),
-            expr("doc_id % 97"))).as("dst"))
-      val fresh = graft.ops.Graph.newUndirectedEdges(und, delta)
-      graft.ops.Graph.histogramOfDegrees(
-        graft.ops.Graph.mergeDegrees(deg, graft.ops.Graph.degreesOf(fresh)))
-        .orderBy(col("bucket"))
-    }),
-    "graph_pagerank_incremental" -> ((s, dir) => {
-      // PageRank's incremental leg: the maintained (directed edges,
-      // out-degree state) absorbs the delta batch with delta-sized work
-      // (anti-join + additive out-degree merge), then the fixed-iteration
-      // exact-integer rank runs over the MAINTAINED tables — the
-      // corpus-sized edge distinct and degree shuffles a from-scratch run
-      // pays per batch never re-run. Rank contributions are additive over
-      // the node-sized state, so the result hash-equals the from-scratch
-      // replay (same oracle as graph_pagerank).
-      val Seq(eR, odegR, _, _, _) = ensureGraphState(s, dir)
-      val e = graft.io.GenTable.read(s, eR).get
-      val odeg = graft.io.GenTable.read(s, odegR).get
-      val docs = Tables.documents(s, dir)
-      val delta = docs.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("src"),
-          explode(array(expr("doc_id div 2"), expr("doc_id div 4"),
-            expr("doc_id % 97"))).as("dst"))
-      val fresh = graft.ops.Graph.newDirectedEdges(e, delta).localCheckpoint()
-      // pinned: the merged edge table is probed every rank iteration
-      val eAll = e.unionByName(fresh).localCheckpoint()
-      val odegAll = graft.ops.Graph.mergeOutDegrees(
-        odeg, graft.ops.Graph.outDegreesOf(fresh))
-      graft.ops.Graph.pageRankOnState(
-        docs.select(col("doc_id").as("node")), eAll, odegAll, iters = 4)
-        .orderBy(col("node"))
-    }),
-    "graph_triangles" -> ((s, dir) => {
-      // local cohesion over the same graph: (i, i÷2, i÷4) closes a
-      // triangle for every i ≥ 4 (since (i÷2)÷2 = i÷4), so counts are
-      // dense, while the %97 hubs carry corpus-sized degree but — degree
-      // oriented — generate zero wedges
-      val docs = Tables.documents(s, dir)
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(expr("doc_id div 2"), expr("doc_id div 4"), expr("doc_id % 97"))).as("dst"))
-      graft.ops.Graph.triangleCounts(edges).orderBy(col("node"))
-    }),
-    "graph_triangles_incremental" -> ((s, dir) => {
-      // the third incremental graph leg: per-node triangle counts
-      // maintained as node-sized state; a delta batch counts ONLY the
-      // triangles it creates (each fresh edge probes the merged
-      // adjacency from its lower-degree endpoint, the closing edge
-      // confirmed by one keyed probe; the lexicographically smallest
-      // fresh edge is each new triangle's designated counter, so
-      // multi-fresh-edge triangles count exactly once) and ADDS them
-      // into the state. Nothing re-enumerates the base graph's wedges.
-      // Same oracle as graph_triangles — the full recompute.
-      val Seq(_, _, undR, degR, triR) = ensureGraphState(s, dir)
-      val und = graft.io.GenTable.read(s, undR).get.localCheckpoint(false)
-      val deg = graft.io.GenTable.read(s, degR).get
-      val tri = graft.io.GenTable.read(s, triR).get
-      val delta = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("src"),
-          explode(array(expr("doc_id div 2"), expr("doc_id div 4"),
-            expr("doc_id % 97"))).as("dst"))
-      val fresh = graft.ops.Graph.newUndirectedEdges(und, delta).localCheckpoint(false)
-      val degAll = graft.ops.Graph.mergeDegrees(deg, graft.ops.Graph.degreesOf(fresh))
-        .localCheckpoint(false) // orientation AND the output card
-      graft.ops.Graph.triangleOutput(degAll,
-        graft.ops.Graph.mergeTriangles(tri,
-          graft.ops.Graph.newTriangleCounts(und, fresh, degAll)))
-        .orderBy(col("node"))
-    }),
-    "split_leakage_safe" -> ((s, dir) => {
-      // leakage-safe curation split: assign train/val/test at near-dup
-      // CLUSTER granularity — the whole component hash-splits on its
-      // cluster id, so a near-duplicate pair can never straddle the
-      // train/test boundary (the contamination leak row-level splits
-      // can't rule out). Composition of the tested pairs → components →
-      // hashSplit ops; singletons hash on themselves (cluster_id = own id).
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.minhashCandidates(docs, "doc_id", "text", k = 3, numHashes = 16,
-        maxBucket = Int.MaxValue)
-      val clustered = graft.ops.Components.clusterDocuments(docs, "doc_id", pairs, "doc_a", "doc_b")
-      graft.ops.Sampling.hashSplit(
-        clustered.select(col("doc_id"), col("cluster_id")), "cluster_id")
-        .select(col("doc_id"), col("cluster_id"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-    "dedup_keep_best" -> ((s, dir) => {
-      // cluster near-dups (LSH pairs → components) and keep the BEST copy
-      // per cluster by quality score — the production alternative to
-      // keep-min-id: near-dup copies differ (noise, truncation), so the
-      // representative should be the cleanest one, not the lowest id
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.minhashCandidates(docs, "doc_id", "text", k = 3, numHashes = 16,
-        maxBucket = Int.MaxValue)
-      val clustered = graft.ops.Components.clusterDocuments(docs, "doc_id", pairs, "doc_a", "doc_b")
-      val scored = clustered.join(
-        TextAnalysis.quality(docs, "doc_id", "text")
-          .select(col("doc_id"), col("quality_score")), "doc_id")
-      Dedup.keepBest(scored, "cluster_id", "doc_id", "quality_score")
-        .select(col("cluster_id"), col("doc_id").as("rep_id"),
-          col("cluster_size"), col("quality_score"))
-        .orderBy(col("cluster_id"))
-    }),
-    "scd2_history" -> ((s, dir) => {
-      // SCD2 fold of four synthetic metadata snapshots: v2 changes lang for
-      // doc_id%3, v3 repeats it (no-op — must compress away), v4 reverts
-      // for doc_id%5 (change-back reopens an interval)
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("lang"))
-      val snaps = docs.withColumn("version", lit(1))
-        .unionByName(docs.filter(col("doc_id") % 3 === 0)
-          .withColumn("lang", upper(col("lang"))).withColumn("version", lit(2)))
-        .unionByName(docs.filter(col("doc_id") % 6 === 0)
-          .withColumn("lang", upper(col("lang"))).withColumn("version", lit(3)))
-        .unionByName(docs.filter(col("doc_id") % 5 === 0).withColumn("version", lit(4)))
-      graft.ops.Scd.history(snaps, Seq("doc_id"), "version", Seq("lang"))
-        .orderBy(col("doc_id"), col("version_from"))
-    }),
-    "tfidf_terms" -> ((s, dir) =>
-      // per-doc top-3 keywords by integer (tf DESC, df ASC, term) rank —
-      // the tf·idf order without a float in the comparison surface
-      TextAnalysis.tfidfTopK(Tables.documents(s, dir), "doc_id", "text", k = 3)
-        .withColumnRenamed("rank", "term_rank")
-        .orderBy(col("doc_id"), col("term_rank"))),
-    "mix_temperature" -> ((s, dir) =>
-      // τ=0.5 temperature-flattened source mixing at a 50% corpus budget:
-      // small sources keep a larger fraction (∝ sqrt weight), integer-
-      // exact end to end
-      graft.ops.Sampling.temperatureMix(Tables.documents(s, dir),
-        "source", "doc_id", totalKeepBp = 5000)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_kept"))
-        .orderBy(col("source"))),
-    "mix_gini" -> ((s, dir) => {
-      // the mixture's Gini before and after τ=0.5 at a 50% budget, as
-      // two exact-bp rows; both statistics run on source-sized count
-      // relations. On this driver's UNIFORM synthetic mixture raw is
-      // exactly 0 and the sampled row shows keep-rule noise — the
-      // skewed-mixture drop the card exists for is pinned in
-      // ScdStatsSpec's hand-computed cases
-      val docs = Tables.documents(s, dir)
-      val raw = docs.groupBy(col("source")).agg(count(lit(1)).as("n"))
-      val flat = graft.ops.Sampling.temperatureMix(docs, "source", "doc_id",
-          totalKeepBp = 5000)
-        .groupBy(col("source")).agg(count(lit(1)).as("n"))
-      graft.ops.Stats.giniBp(raw, "n").withColumn("mixture", lit("raw"))
-        .unionByName(graft.ops.Stats.giniBp(flat, "n")
-          .withColumn("mixture", lit("temperature")))
-        .select(col("mixture"), col("n_groups"), col("total"), col("gini_bp"))
-        .orderBy(col("mixture"))
-    }),
-    "sample_stratified" -> ((s, dir) =>
-      // per-source training mix: 100%/50%/25% named strata, 10% default —
-      // row-hash keep decision, so strata stay uniform and nested
-      graft.ops.Sampling.hashSampleStratified(Tables.documents(s, dir),
-        "source", "doc_id", Map("src0" -> 10000, "src1" -> 5000, "src2" -> 2500),
-        defaultBp = 1000)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_kept"))
-        .orderBy(col("source"))),
-    "privacy_kanon" -> ((s, dir) =>
-      // k-anonymity suppression (Sweeney 2002) over the banded QI
-      // (nation, segment, 5000-wide balance band): rows whose tuple
-      // isolates fewer than k=3 customers are dropped. One QI aggregate
-      // (map-side combined to |distinct tuples|) + a LEFT SEMI join
-      // against the safe key set — AQE broadcasts the n/k-bounded list
-      graft.ops.Privacy.kAnonymize(
-        Tables.customer(s, dir).withColumn("bal_band",
-          graft.ops.Privacy.band(col("c_acctbal"), 5000.0)),
-        Seq("c_nationkey", "c_mktsegment", "bal_band"), k = 3)
-        .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"),
-          // multiples of 5000 — exactly representable, so the BIGINT cast
-          // is lossless; scalar-output contract (OutputShape) forbids
-          // riding the raw double out
-          col("bal_band").cast("long").as("bal_band"))
-        .orderBy(col("c_custkey"))),
-    "privacy_ldiv" -> ((s, dir) =>
-      // distinct l-diversity report (Machanavajjhala 2007) per
-      // (event_type, day): group size + sensitive-attribute (user_id)
-      // cardinality; a big group whose members share one user still fails
-      graft.ops.Privacy.lDiversityGroups(
-        Tables.events(s, dir).withColumn("day_s",
-          expr("(ts_us div 86400000000L) * 86400")),
-        Seq("event_type", "day_s"), "user_id", l = 53)
-        .orderBy(col("event_type"), col("day_s"))),
-    "privacy_risk" -> ((s, dir) =>
-      // prosecutor re-identification risk histogram over the banded QI:
-      // rows at risk_bp = floor(10000/group size) — "N rows re-identifiable
-      // at >= X%" as one two-collapse aggregate, corpus never joined
-      graft.ops.Privacy.riskHistogram(
-        Tables.customer(s, dir).withColumn("bal_band",
-          graft.ops.Privacy.band(col("c_acctbal"), 5000.0)),
-        Seq("c_nationkey", "c_mktsegment", "bal_band"))
-        .orderBy(col("risk_bp"))),
-    "privacy_tclose" -> ((s, dir) =>
-      // t-closeness (Li et al. 2007), the third release gate: per
-      // (nation, segment) group, exact integer EMD between the group's
-      // 1000-wide balance-band distribution and the corpus's, in basis
-      // points; close = emd_bp <= 1500. All state is lattice-sized —
-      // (QI), (QI, band) and (band) collapses plus a dense grid window
-      graft.ops.Privacy.tClosenessGroups(
-        Tables.customer(s, dir).withColumn("bal_band",
-          graft.ops.Privacy.band(col("c_acctbal"), 1000.0)),
-        Seq("c_nationkey", "c_mktsegment"), "bal_band", tBp = 1500)
-        .orderBy(col("c_nationkey"), col("c_mktsegment"))),
-    "privacy_generalize" -> ((s, dir) =>
-      // generalization-lattice suppression audit at k=10: balance bands
-      // 100 → 1000 → 5000 → dropped. generalizeToK walks these stats to
-      // the first level under a suppression budget (pinned in PrivacySpec);
-      // each level is one distinct-QI aggregate, never a corpus join
-      graft.ops.Privacy.ladderStats(Tables.customer(s, dir),
-        privacyLadder, k = 10)
-        .orderBy(col("level"))),
-    "data_card" -> ((s, dir) =>
-      // per-source dataset datasheet (Gebru et al. 2021): volume, per-doc
-      // means, exact-dup rows (distinct content hash), mojibake and
-      // under-length counts — ONE corpus scan + a |sources|-sized collapse
-      // (plus the (source, hash) collapse for the distinct term)
-      graft.ops.Stats.dataCard(Tables.documents(s, dir), "source", "text")
-        .orderBy(col("source"))),
-    "source_overlap" -> ((s, dir) =>
-      // pairwise cross-source 8-gram fingerprint overlap matrix: shared
-      // distinct grams + bp share of each side — the double-count audit
-      // run before mixing weights are set; per-gram source sets are
-      // |sources|-bounded and the corpus never self-joins
-      graft.ops.Stats.sourceOverlap(Tables.documents(s, dir), "source", "text", k = 8)
-        .orderBy(col("src_a"), col("src_b"))),
-    "label_vote" -> ((s, dir) => {
-      // Snorkel-style LF agreement card over the Gopher battery as 7
-      // noisy keep/reject labeling functions (same plants as
-      // filter_attribution so several LFs discriminate), quorum 4 of 7
-      val docs = Tables.documents(s, dir).withColumn("text", expr(
-        """CASE WHEN doc_id % 41 = 0 THEN concat(text, ' ### ### ### ### ### ### ###')
-          |     WHEN doc_id % 43 = 0 THEN concat(repeat(concat('* a', chr(10)), 10), text)
-          |     WHEN doc_id % 47 = 0 THEN concat(text, ' the be to of and that have with')
-          |     ELSE text END""".stripMargin))
-      TextAnalysis.labelVoteCard(
-        TextAnalysis.gopherRules(docs, "doc_id", "text"), GopherRuleNames, quorum = 4)
-        .orderBy(col("lf"))
-    }),
-    "filter_attribution" -> ((s, dir) => {
-      // the ablation table behind the Gopher gate, over a corpus planted
-      // so more than two rules discriminate: %41 gains seven '###' tokens
-      // (symbol gate: 10000·7/n just over the 1000 bp line), %43 ten
-      // bullet lines (bullet_bp 9090 > 9000), %47 the stopword inventory
-      // (flips r_stop to PASS for variety — the raw corpus fails it
-      // everywhere)
-      val docs = Tables.documents(s, dir).withColumn("text", expr(
-        """CASE WHEN doc_id % 41 = 0 THEN concat(text, ' ### ### ### ### ### ### ###')
-          |     WHEN doc_id % 43 = 0 THEN concat(repeat(concat('* a', chr(10)), 10), text)
-          |     WHEN doc_id % 47 = 0 THEN concat(text, ' the be to of and that have with')
-          |     ELSE text END""".stripMargin))
-      graft.ops.Stats.filterAttribution(
-        TextAnalysis.gopherRules(docs, "doc_id", "text"), GopherRuleNames)
-        .orderBy(col("rule"))
-    }),
-    "stats_drift" -> ((s, dir) => {
-      // batch-over-batch drift gate: the %5 slice is the NEW batch and
-      // its %35 docs (⊂ %5) gain the mojibake artifact, so the corruption
-      // delta registers against a clean old side
-      val docs = Tables.documents(s, dir)
-      val oldB = docs.filter(col("doc_id") % 5 =!= 0)
-      val newB = docs.filter(col("doc_id") % 5 === 0).withColumn("text",
-        when(col("doc_id") % 35 === 0, concat(col("text"), lit(" cafÃ© naÃ¯ve")))
-          .otherwise(col("text")))
-      graft.ops.Stats.driftCard(oldB, newB, "source", "text").orderBy(col("source"))
-    }),
-    "snapshot_diff" -> ((s, dir) => {
-      // content-addressed snapshot audit: old = %5≠0 slice of the
-      // original table, new = %11≠0 slice with the %7 docs edited — all
-      // four statuses populate (added %5=0∧%11≠0, removed %11=0∧%5≠0,
-      // changed %7=0 minus those, unchanged the rest)
-      val docs = Tables.documents(s, dir)
-      val oldB = docs.filter(col("doc_id") % 5 =!= 0)
-      val newB = docs.filter(col("doc_id") % 11 =!= 0).withColumn("text",
-        when(col("doc_id") % 7 === 0, concat(lit("edited "), col("text")))
-          .otherwise(col("text")))
-      graft.ops.Stats.snapshotDiff(oldB, newB, "doc_id", "text")
-        .orderBy(col("status"))
-    }),
-    "stats_mad" -> ((s, dir) => {
-      // robust spread per source: exact nearest-rank median, then the
-      // median of absolute deviations from it — the outlier-immune
-      // spread a length-anomaly gate thresholds on (stddev is dragged
-      // by exactly the outliers it should flag); two quantilesDisc
-      // passes composed, all integer
-      val docs = Tables.documents(s, dir)
-      val med = graft.ops.Stats.quantilesDisc(docs, Seq("source"),
-          col("n_chars"), Seq(5000))
-        .select(col("source"), col("value").as("median"))
-      val dev = docs.join(broadcast(med), "source")
-        .select(col("source"), abs(col("n_chars") - col("median")).as("adev"))
-      graft.ops.Stats.quantilesDisc(dev, Seq("source"), col("adev"), Seq(5000))
-        .select(col("source"), col("value").as("mad"))
-        .join(broadcast(med), "source")
-        .select(col("source"), col("median"), col("mad"))
-        .orderBy(col("source"))
-    }),
-    "stats_outliers" -> ((s, dir) => {
-      // the Hampel identifier the MAD exists FOR: per source, flag docs
-      // with |len − median| > 3·MAD (integer threshold — the 1.4826
-      // normal-consistency float is a calibration constant, not a
-      // comparison we need) and report the flagged share; a stddev gate
-      // would move its own threshold toward the outliers it should catch
-      val docs = Tables.documents(s, dir)
-      val med = graft.ops.Stats.quantilesDisc(docs, Seq("source"),
-          col("n_chars"), Seq(5000))
-        .select(col("source"), col("value").as("median"))
-      val dev = docs.join(broadcast(med), "source")
-        .select(col("source"), col("median"),
-          abs(col("n_chars") - col("median")).as("adev"))
-      val mad = graft.ops.Stats.quantilesDisc(dev, Seq("source"), col("adev"), Seq(5000))
-        .select(col("source"), col("value").as("mad"))
-      dev.join(broadcast(mad), "source")
-        .groupBy(col("source"), col("median"), col("mad"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("adev") > lit(3L) * col("mad"), 1L).otherwise(0L)).as("n_flagged"))
-        .withColumn("flagged_bp", expr("n_flagged * 10000 div n_docs"))
-        .orderBy(col("source"))
-    }),
-    "stats_quantiles" -> ((s, dir) =>
-      // exact discrete length quantiles per source (nearest-rank, pure
-      // integer rank arithmetic — no approx sketch, no interpolation)
-      graft.ops.Stats.quantilesDisc(Tables.documents(s, dir), Seq("source"),
-        col("n_chars"), Seq(2500, 5000, 9000, 9900))
-        .orderBy(col("source"), col("q_bp"))),
-    "quantile_sketch" -> ((s, dir) =>
-      // mergeable histogram-sketch quantiles (the t-digest-shaped scale
-      // path: bounded integer state, merge-order-free) — binWidth=100
-      // over doc lengths
-      graft.ops.Stats.quantilesHistogram(Tables.documents(s, dir), Seq("source"),
-        col("n_chars"), binWidth = 100L, Seq(5000, 9000, 9900))
-        .orderBy(col("source"), col("q_bp"))),
-    "zorder_key" -> ((s, dir) =>
-      // Morton-interleaved layout key over (length, id-bucket): the sort
-      // key that makes min/max file stats prune BOTH dimensions
-      Tables.documents(s, dir)
-        .select(col("doc_id"), graft.ops.ZOrder.zKey("n_chars", "doc_id % 1024", 16).as("zkey"))
-        .orderBy(col("doc_id"))),
-    "layout_skipping" -> ((s, dir) => {
-      // the zorder claim as a NUMBER: bucket the corpus two ways —
-      // z-prefix cells (a Morton prefix IS a quadtree cell, so bucketing
-      // is map-only, no sort) vs insertion-order id ranges — and count
-      // the buckets whose [min,max] n_chars stats prune a 50-wide length
-      // predicate. Insertion buckets each span the whole length range
-      // (prune ~nothing); z-cells cluster both dimensions
-      val docs = Tables.documents(s, dir)
-      val base = docs.select(col("doc_id"), col("n_chars"),
-        graft.ops.ZOrder.zKey("n_chars", "doc_id % 1024", 16).as("zkey"))
-      val maxId = docs.agg(max(col("doc_id")).as("max_id"))
-      val zb = base.groupBy(expr("zkey div 16384").as("bucket"))
-        .agg(min(col("n_chars")).as("mn"), max(col("n_chars")).as("mx"))
-      val ib = base.crossJoin(broadcast(maxId))
-        .groupBy(expr("doc_id div ((max_id div 64) + 1)").as("bucket"))
-        .agg(min(col("n_chars")).as("mn"), max(col("n_chars")).as("mx"))
-      def card(b: org.apache.spark.sql.DataFrame, label: String) =
-        b.agg(count(lit(1)).as("n_buckets"),
-            sum(when(col("mx") < 280L || col("mn") > 329L, 1L).otherwise(0L)).as("n_pruned"))
-          .select(lit(label).as("layout"), col("n_buckets"), col("n_pruned"),
-            expr("n_pruned * 10000 div n_buckets").as("pruned_bp"))
-      card(zb, "zorder").unionByName(card(ib, "insertion")).orderBy(col("layout"))
-    }),
-    "inverted_index" -> ((s, dir) => {
-      // posting-list construction: distinct (term, doc) → df + the first 8
-      // postings per frequent term (df ≥ 25), numerically ordered
-      val t = Tables.documents(s, dir)
-        .select(col("doc_id"), explode(Dedup.tokensCol(col("text"))).as("term"))
-        .filter(col("term") =!= "").distinct()
-      val ranked = t.withColumn("rn",
-        row_number().over(Window.partitionBy(col("term")).orderBy(col("doc_id"))))
-      ranked.groupBy(col("term"))
-        .agg(count(lit(1)).as("df"),
-          array_join(transform(sort_array(collect_list(when(col("rn") <= 8, col("doc_id")))),
-            x => x.cast("string")), ",").as("postings"))
-        .filter(col("df") >= 25)
-        .orderBy(col("term"))
-    }),
-    "multimodal_resize" -> ((s, dir) =>
-      // aspect-fit resize geometry into a 224×224 box over the shared
-      // synthetic media dims
-      Multimodal.resizePlan(
-        synthDims(s, dir).select("media_id", "width", "height"),
-        targetW = 224, targetH = 224)
-        .select(col("media_id"), col("width"), col("height"),
-          col("out_w"), col("out_h"), col("pad_x"), col("pad_y"))
-        .orderBy(col("media_id"))),
-    "curation_percentile" -> ((s, dir) => {
-      // cross-source score calibration: quality_score → per-source
-      // percentile in bp, so one global "bottom 20%" gate means the
-      // same thing under every source's score distribution
-      val docs = Tables.documents(s, dir)
-      val q = TextAnalysis.quality(docs, "doc_id", "text")
-        .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      graft.ops.Stats.percentileByGroup(q, "source", "quality_score")
-        .select(col("doc_id"), col("source"), col("quality_score"),
-          col("rnk"), col("pct_below_bp"))
-        .orderBy(col("doc_id"))
-    }),
-    "text_watermark" -> ((s, dir) =>
-      // green-list watermark screen: per doc, the green-bigram rate
-      // (parity of the canonical 60-bit md5 word over each bigram) in
-      // bp vs the ~5000 natural baseline; one map-only fold per doc
-      TextAnalysis.watermarkScore(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy(col("doc_id"))),
-    "text_ttr" -> ((s, dir) =>
-      // lexical-diversity card: per-source type-token ratio + hapax
-      // share in bp — the vocabulary-collapse detector for synthetic/
-      // templated corpora; the shuffle carries the vocab, never the
-      // token stream
-      TextAnalysis.lexicalDiversity(Tables.documents(s, dir), "source", "text")
-        .orderBy(col("source"))),
-    "text_stats_by_source" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .withColumn("_t", trim(regexp_replace(col("text"), "\\s+", " ")))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("_t")).cast("long")).as("sum_chars"),
-          sum(size(split(col("_t"), " ")).cast("long")).as("sum_tokens"),
-          expr("sum(cast(length(_t) as bigint)) div count(1)").as("avg_chars"))
-        .orderBy(col("source"))),
-
-    // ---------------- events: windows, sessions, JSON (north star) ----------------
-    "events_tumbling" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("win_start_s", expr("(ts_us div 3600000000L) * 3600"))
-        .withColumn("value_c", expr("cast(round(value * 100) as bigint)"))
-        .groupBy(col("win_start_s"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_value_c"))
-        .orderBy(col("win_start_s"), col("event_type"))),
-    "events_sliding" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("_i", explode(sequence(lit(0), lit(3))))
-        .withColumn("win_start_s", expr("((ts_us div 900000000L) - _i) * 900"))
-        .withColumn("value_c", expr("cast(round(value * 100) as bigint)"))
-        .groupBy(col("win_start_s"))
-        .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_value_c"))
-        .orderBy(col("win_start_s"))),
-    "events_session" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      Tables.events(s, dir)
-        .withColumn("_prev", lag(col("ts_us"), 1).over(w))
-        .withColumn("_new", when(col("_prev").isNull || col("ts_us") - col("_prev") > 1800000000L, 1L).otherwise(0L))
-        .withColumn("session_id", sum(col("_new")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(expr("min(ts_us) div 1000000L").as("session_start_s"),
-          count(lit(1)).as("n_events"))
-        .orderBy(col("user_id"), col("session_id"))
-    }),
-    "events_funnel" -> ((s, dir) => {
-      // ordered funnel view→click→purchase: each stage's entry time must
-      // STRICTLY follow the previous stage (not just co-occur). Stacked
-      // per-user window minimums over ONE scan and ONE exchange (the three
-      // Window nodes share the user_id partitioning; a join-chain of three
-      // keyed aggregates would scan the event table six times), then a
-      // per-user collapse that reuses the same partitioning.
-      val wu = Window.partitionBy(col("user_id"))
-      Tables.events(s, dir)
-        .select(col("user_id"), col("event_type"), col("ts_us"))
-        .withColumn("t1", min(when(col("event_type") === "view", col("ts_us"))).over(wu))
-        .withColumn("t2", min(when(col("event_type") === "click" && col("ts_us") > col("t1"),
-          col("ts_us"))).over(wu))
-        .withColumn("t3", min(when(col("event_type") === "purchase" && col("ts_us") > col("t2"),
-          col("ts_us"))).over(wu))
-        .groupBy(col("user_id"))
-        .agg(first(col("t1")).as("t1"), first(col("t2")).as("t2"), first(col("t3")).as("t3"))
-        .agg(count(col("t1")).as("n_viewed"),
-          count(col("t2")).as("n_clicked_after_view"),
-          count(col("t3")).as("n_purchased_after_click"))
-    }),
-    "events_retention" -> ((s, dir) => {
-      // cohort retention triangle: users grouped by first-activity day,
-      // distinct-active at each day offset. cohort_day is a window min
-      // over the distinct (user, day) relation — one scan; a separate
-      // cohort aggregate joined back would scan and distinct it twice
-      val days = Tables.events(s, dir)
-        .select(col("user_id"), expr("ts_us div 86400000000L").as("day"))
-        .distinct()
-      days
-        .withColumn("cohort_day", min(col("day")).over(Window.partitionBy(col("user_id"))))
-        .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("day_offset"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-        .orderBy(col("cohort_day"), col("day_offset"))
-    }),
-    "ngram_topk" -> ((s, dir) =>
-      // corpus-wide heavy hitters: exact top-20 bigrams via two-stage
-      // aggregation (map-side partial count, then a 20-row ordered take —
-      // never a global sort of the full n-gram relation)
-      Tables.documents(s, dir)
-        .withColumn("_toks", Dedup.tokensCol(col("text")))
-        .filter(size(col("_toks")) >= 2)
-        .select(explode(expr(
-          "transform(sequence(0, size(_toks) - 2), i -> concat(_toks[i], ' ', _toks[i+1]))")).as("bigram"))
-        .groupBy(col("bigram")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("bigram"))
-        .limit(20)),
-    "events_asof" -> ((s, dir) => {
-      // point-in-time attribution: each click labeled with the latest
-      // at-or-before purchase of the same user
-      val ev = Tables.events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id"), col("ts_us"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts_us"), col("event_id").as("purchase_id"))
-      graft.ops.AsOf.asOfJoin(clicks, purchases, "user_id", "ts_us",
-        valueCols = Seq("purchase_id"), rightTieBreak = "purchase_id")
-        .select(col("event_id"), col("user_id"), col("ts_us"), col("purchase_id"))
-        .orderBy(col("event_id"))
-    }),
-    "events_range" -> ((s, dir) => {
-      // windowed attribution: clicks landing inside any same-user
-      // 30-minute post-purchase window (bucketed-grid range join — the
-      // equi-join formulation of an interval predicate)
-      val ev = Tables.events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"), col("ts_us"))
-      val windows = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("ts_us").as("win_lo"), (col("ts_us") + 1800000000L).as("win_hi"))
-      graft.ops.RangeJoin.byBucket(clicks, windows, "user_id",
-        valueCol = "ts_us", loCol = "win_lo", hiCol = "win_hi",
-        bucketWidth = 1800000000L)
-        .select(col("click_id"), col("purchase_id"))
-        .orderBy(col("click_id"), col("purchase_id"))
-    }),
-    "events_overlap" -> ((s, dir) => {
-      // window-conflict detection: same-user 10-minute post-click windows
-      // that collide with 2-minute error-centered windows (interval ×
-      // interval overlap via the grid join — each pair emitted once, in
-      // the first shared cell, no distinct pass)
-      val ev = Tables.events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          col("ts_us").as("c_lo"), (col("ts_us") + 600000000L).as("c_hi"))
-      val errors = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("error_id"),
-          (col("ts_us") - 120000000L).as("e_lo"), (col("ts_us") + 120000000L).as("e_hi"))
-      graft.ops.RangeJoin.overlapByBucket(clicks, errors, "user_id",
-        aLo = "c_lo", aHi = "c_hi", bLo = "e_lo", bHi = "e_hi",
-        bucketWidth = 600000000L)
-        .select(col("click_id"), col("error_id"))
-        .orderBy(col("click_id"), col("error_id"))
-    }),
-    "events_json" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))
-        .orderBy(col("event_type"))),
-    "events_pruned" -> ((s, dir) => {
-      // the #1 scan lever at 100 TB: a day-partitioned event store plus a
-      // narrow literal day predicate → Spark prunes whole `_day=N/`
-      // directories at PLANNING time (PartitionFilters on the scan node —
-      // PrunedScanSpec asserts the pruned file set; this oracle row pins
-      // the RESULT). The day bounds are resolved to literals via one
-      // cheap min() action because only literal predicates prune
-      // statically; the three-day window is relative to the corpus's
-      // first day so the query is SF-independent.
-      val path = ensureEventsPartitioned(s, dir)
-      val ev = s.read.parquet(path)
-      // partition-column type comes from directory-name inference (int
-      // here); the LITERALS are cast to the column's type — casting the
-      // column instead could defeat partition pruning
-      val dayType = ev.schema("_day").dataType
-      val d0 = ev.agg(min(col("_day"))).head.get(0).asInstanceOf[Number].longValue
-      ev.filter(col("_day").between(lit(d0 + 2).cast(dayType), lit(d0 + 4).cast(dayType)))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(expr("CAST(ROUND(value * 100) AS BIGINT)")).as("value_c"))
-        .orderBy(col("event_type"))
-    }),
-    "stream_tumbling" -> ((s, dir) =>
-      StreamingIngest.runTumbling(s, dir)
-        .select(col("win_start_s"), col("event_type"), col("n"))
-        .orderBy(col("win_start_s"), col("event_type"))),
-    "stream_session" -> ((s, dir) =>
-      // stateful streaming sessionization (session_window, 30-min gap);
-      // count-only projection keeps the result float-free for the oracle
-      StreamingIngest.runSessionWindows(s, dir)
-        .select(col("user_id"), col("session_start_s"), col("n_events"))
-        .orderBy(col("user_id"), col("session_start_s"))),
-    "stream_dedup" -> ((s, dir) =>
-      // watermarked streaming dedup over a doubled (replayed) feed — the
-      // deduped counts must equal the single-copy counts
-      StreamingIngest.runDedupedCounts(s, dir)
-        .orderBy(col("event_type"))),
-    "stream_late_drops" -> ((s, dir) => {
-      // watermark late-data drop + append finalization, oracle-pinned:
-      // emitted rows are exactly the on-time slice's hour aggregate —
-      // the 10h-late phase-2 rows are discarded, the future pusher's
-      // open window never flushes. Dir scoping per application id, the
-      // stream_resume convention
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_stream_late_${s.sparkContext.applicationId}").getAbsolutePath
-      StreamingIngest.runLateDrops(s, dir, base)
-        .orderBy(col("win_start_s"), col("event_type"))
-    }),
-    "stream_late_audit" -> ((s, dir) => {
-      // the ACCOUNTING companion to stream_late_drops (r14 task 4):
-      // numRowsDroppedByWatermark surfaced through StreamingDropListener
-      // as a one-row audit card — drop count, finalized window count,
-      // total input rows — each deterministic for the staged phases and
-      // replayed by the oracle from the events table directly
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_stream_lateaudit_${s.sparkContext.applicationId}").getAbsolutePath
-      StreamingIngest.runLateDropsAudit(s, dir, base)
-    }),
-    "stream_resume" -> ((s, dir) => {
-      // S11/J3 resume in streaming form: an append-sink stream runs to
-      // completion, then RESTARTS with the same checkpoint — the restart
-      // must commit zero batches (AvailableNow, unchanged file set), so
-      // the append target holds every event EXACTLY once; a broken resume
-      // doubles rows and fails the hash. Dirs are scoped by the Spark
-      // application id so concurrent graft JVMs (bench alongside the
-      // correctness gate) cannot clobber each other's gate state, and
-      // deleted up front so the gate stays within-invocation.
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_stream_resume_${s.sparkContext.applicationId}").getAbsolutePath
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      StreamingIngest.runAppendOnce(s, dir, s"$base/out", s"$base/ckpt")
-      StreamingIngest.runAppendOnce(s, dir, s"$base/out", s"$base/ckpt")
-      s.read.schema("event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
-        .option("recursiveFileLookup", "true")
-        .parquet(s"$base/out")
-        // 2^-20 quantization scalarizes the double for the output contract
-        // (OutputShape): value stays hash-covered, no float column rides out
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("CAST(floor(value * 1048576.0) AS BIGINT)").as("value_q"))
-        .orderBy(col("event_id"))
-    }),
-    "stream_mv" -> ((s, dir) => {
-      // streaming maintenance of the per-source aggregate: each
-      // micro-batch of the %5==0 increment commits its DELTA state; the
-      // read-side fold merge(base, deltas) equals the full recompute
-      // whatever the batching (monoid columns), so this row shares
-      // mv_incremental's oracle verbatim; run-twice pins the restart
-      // contract. Same file/dir layout dispatch as stream_dsir.
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_stream_mv_${s.sparkContext.applicationId}").getAbsolutePath
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val t = ensureMvState(s, dir)
-      val tablePath = new java.io.File(s"$dir/documents.parquet")
-      def once(): Unit =
-        if (tablePath.isDirectory)
-          StreamingIngest.runMvMergeOnce(s, tablePath.getAbsolutePath,
-            s"$base/out", s"$base/ckpt", "source", "n_chars", glob = "*",
-            increment = col("doc_id") % 5 === 0)
-        else
-          StreamingIngest.runMvMergeOnce(s, dir,
-            s"$base/out", s"$base/ckpt", "source", "n_chars",
-            increment = col("doc_id") % 5 === 0)
-      once(); once()
-      StreamingIngest.readMvState(s, t, s"$base/out", "source").orderBy(col("source"))
-    }),
-    "stream_graph_degrees" -> ((s, dir) => {
-      // streaming maintenance of the link graph (the streaming face of
-      // graph_degrees_incremental): each micro-batch of the %5==0 crawl
-      // slice synthesizes its links, anti-joins the persisted base edge
-      // set and commits only the genuinely-new edges; the read-side
-      // distinct-union + additive degree merge equals the full recompute
-      // whatever the batching — this row shares graph_degrees' oracle
-      // verbatim. run-twice pins the restart contract.
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_stream_graph_${s.sparkContext.applicationId}").getAbsolutePath
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val Seq(_, _, undR, degR, _) = ensureGraphState(s, dir)
-      def synth(b: DataFrame): DataFrame =
-        b.select(col("doc_id").as("src"),
-          explode(array(expr("doc_id div 2"), expr("doc_id div 4"),
-            expr("doc_id % 97"))).as("dst"))
-      val tablePath = new java.io.File(s"$dir/documents.parquet")
-      def once(): Unit =
-        if (tablePath.isDirectory)
-          StreamingIngest.runGraphEdgesOnce(s, tablePath.getAbsolutePath,
-            s"$base/out", s"$base/ckpt", undR, synth, glob = "*",
-            increment = col("doc_id") % 5 === 0)
-        else
-          StreamingIngest.runGraphEdgesOnce(s, dir,
-            s"$base/out", s"$base/ckpt", undR, synth,
-            increment = col("doc_id") % 5 === 0)
-      once(); once()
-      StreamingIngest.readGraphDegrees(s, degR, s"$base/out").orderBy(col("bucket"))
-    }),
-    "stream_dsir" -> ((s, dir) => {
-      // continuous target-domain curation: each micro-batch of the %5==0
-      // crawl slice scores against the PERSISTED DSIR weight model
-      // (zero corpus-side work per batch); run-twice pins the restart
-      // contract (unchanged file set → second run commits nothing), and
-      // the output must equal dsir_incremental's batch replay — so this
-      // row shares its oracle verbatim.
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_stream_dsir_${s.sparkContext.applicationId}").getAbsolutePath
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val t = ensureDsirWeights(s, dir)
-      // layout dispatch: the driver's testdata ships documents.parquet as
-      // a single FILE (watch the parent dir with a leaf-name glob — a
-      // file path trips the source's basePath check), while derived sets
-      // (StressGen) write it as a DIRECTORY of part files (watch the
-      // table path itself — the leaf-name glob would match zero files)
-      val tablePath = new java.io.File(s"$dir/documents.parquet")
-      def once(): Unit =
-        if (tablePath.isDirectory)
-          StreamingIngest.runDsirScoreOnce(s, tablePath.getAbsolutePath,
-            s"$base/out", s"$base/ckpt", t, "doc_id", "text", glob = "*",
-            increment = col("doc_id") % 5 === 0)
-        else
-          StreamingIngest.runDsirScoreOnce(s, dir,
-            s"$base/out", s"$base/ckpt", t, "doc_id", "text",
-            increment = col("doc_id") % 5 === 0)
-      once(); once()
-      val scored = s.read.parquet(s"$base/out/b*")
-      graft.ops.Dsir.selectTop(scored, "doc_id", 100).orderBy(col("sel_rank"))
-    }),
-    "stream_dedup_incremental" -> ((s, dir) => {
-      // the composed continuous-curation loop (S11+V3+dedup as ONE
-      // streaming job): each micro-batch of the %5==0 crawl slice probes
-      // the PERSISTED bucketed minhash index and appends only NOVEL
-      // documents; a restart with the same checkpoint over the unchanged
-      // file set must commit nothing (stream_resume's gate), so the
-      // target holds each novel doc exactly once. Batch-replay oracle:
-      // the increment minus the confirmed-dup new_ids of
-      // dedup_incremental's replay (same threshold, same index slice).
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_stream_dedup_inc_${s.sparkContext.applicationId}").getAbsolutePath
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val (bandsT, setsT) = ensureMinhashIndex(s, dir)
-      def once(): Unit = StreamingIngest.runDedupIncrementalOnce(s, dir,
-        s"$base/out", s"$base/ckpt", bandsT, setsT, "doc_id", "text",
-        increment = col("doc_id") % MinhashIndexCorpusMod === 0,
-        k = MinhashIndexK, numHashes = MinhashIndexHashes, minJaccardBp = 100L,
-        maxBucket = Int.MaxValue)
-      once(); once()
-      // explicit schema: a micro-batch with zero novel docs leaves a
-      // _SUCCESS-only batch dir, and schema INFERENCE over part-less dirs
-      // fails — the read-back must return empty, not throw
-      s.read.schema(Tables.documents(s, dir).schema)
-        .option("recursiveFileLookup", "true").parquet(s"$base/out")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-    "stream_curation" -> ((s, dir) => {
-      // the streaming face of the curation DAG's streamable stages: each
-      // micro-batch of the %5==0 crawl slice is quality-GATED (per-doc,
-      // pure — the cross-doc transforms need corpus state and stay in the
-      // batch tier), probes the persisted minhash index, and appends only
-      // novel gated docs. Restart over the unchanged file set commits
-      // nothing; oracle = gated increment minus the confirmed-dup new_ids
-      // (gating before or after the probe is result-identical because
-      // signatures are per-doc — the code gates BEFORE so gated-out docs
-      // never pay the signature pass).
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_stream_curation_${s.sparkContext.applicationId}").getAbsolutePath
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val (bandsT, setsT) = ensureMinhashIndex(s, dir)
-      val gate: DataFrame => DataFrame = b =>
-        b.join(TextAnalysis.quality(b, "doc_id", "text")
-            .select(col("doc_id"), col("quality_score")), "doc_id")
-          .filter(col("quality_score") >= 60)
-      def once(): Unit = StreamingIngest.runDedupIncrementalOnce(s, dir,
-        s"$base/out", s"$base/ckpt", bandsT, setsT, "doc_id", "text",
-        increment = col("doc_id") % MinhashIndexCorpusMod === 0,
-        k = MinhashIndexK, numHashes = MinhashIndexHashes, minJaccardBp = 100L,
-        transform = gate, maxBucket = Int.MaxValue)
-      once(); once()
-      val readSchema = gate(Tables.documents(s, dir).limit(0)).schema
-      s.read.schema(readSchema)
-        .option("recursiveFileLookup", "true").parquet(s"$base/out")
-        .select(col("doc_id"), col("source"), col("quality_score"))
-        .orderBy(col("doc_id"))
-    }),
-    "stream_join" -> ((s, dir) =>
-      // stream-stream interval join (views ⋈ clicks ≤10min later, per
-      // user), state bounded by both watermarks; inner join ⇒ equals the
-      // batch interval join exactly
-      StreamingIngest.runStreamJoin(s, dir)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy(col("user_id"))),
-    "stream_stateful_sessions" -> ((s, dir) => statefulSessionsQuery(s, dir)),
-    "stream_stateful_sessions_prod" -> ((s, dir) => {
-      // VERDICT r16 task 4: the PRODUCTION posture (RocksDB state store +
-      // 32 state partitions — the configuration BASELINE.md measured 2.5×
-      // faster at sf30, slope 0.36 vs 0.77) pinned under the same hash
-      // oracle as the default posture. Conf-sensitive state backends are
-      // exactly where silent divergence hides: a RocksDB encoding bug or
-      // a partitioning-dependent timeout-ordering bug would leave the
-      // default row green while production answers drift. Confs are set
-      // on the caller session (withStateSession reads them into a child
-      // session) and restored afterward so no other row inherits them.
-      val keys = Seq("graft.streaming.stateStore" -> "rocksdb",
-        "graft.streaming.statePartitions" -> "32")
-      val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-      keys.foreach { case (k, v) => s.conf.set(k, v) }
-      // the sessionizer runs EAGERLY inside the helper (awaitTermination),
-      // so restoring in finally cannot race the stream
-      try statefulSessionsQuery(s, dir, variant = "_prod")
-      finally prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-    }),
-    "stream_session_progress" -> ((s, dir) =>
-      // MID-SESSION EMISSION, the capability the custom state machine
-      // exists for and built-in session_window cannot express (it only
-      // materializes a session when it CLOSES): each user's still-open
-      // session emits a progress snapshot with running aggregates after
-      // the data batch. Deterministic with the single-file source (one
-      // micro-batch → exactly one snapshot per user: their final session
-      // at full count), which is what the batch islands oracle replays.
-      graft.streaming.StatefulSessionizer.runWithProgress(s, dir)
-        .filter(col("is_open") === 1)
-        .select(col("user_id"), col("session_start_s"), col("n_events"))
-        .orderBy(col("user_id"), col("session_start_s"))),
-
-    // ---------------- fixture-backed reference operators (rows-only) ----------------
-    "springer_jats" -> ((s, _) => {
-      // S10+J7+X7 in one pass: each fixture response replays one Springer
-      // OA lookup through the BatchTransport seam — prefixed JATS (X7),
-      // the escaped-<xml>-wrapper and regex extraction fallbacks, the
-      // DOI-match record preference (J7: pick2 selects the SECOND record,
-      // nomatch falls back to the first), an abstract-only article, and
-      // the no-<record> error string. Requested DOI derives from the
-      // file stem; golden CSV oracle.
-      import s.implicits._
-      val files = s.sparkContext.wholeTextFiles(s"$fixturesDir/springer").collect()
-      val reqs = files.map { case (f, xml) =>
-        (s"10.5555/${new java.io.File(f).getName.stripSuffix(".xml")}", xml)
-      }
-      val transport = new FixtureTransport(reqs.toMap)
-      graft.enrich.Springer.enrich(reqs.map(_._1).toSeq.toDF("doi"), "doi", transport)
-        .withColumn("doi_matched", col("doi_matched").cast("long"))
-        .orderBy(col("doi"))
-    }),
-    "bib_scan" -> ((s, _) =>
-      Readers.loadBib(s, s"$fixturesDir/sample_refs.bib")
-        .select(col("cite_key"), col("entry_type"), col("doi"), col("title"), col("journal"))
-        .orderBy(col("cite_key"))),
-    "csv_scan" -> ((s, _) =>
-      Readers.loadCsv(s, s"$fixturesDir/input_dois.csv")
-        .withColumn("doi_norm", Norm.normalizeDoi(col("doi")))
-        .na.drop(Seq("doi_norm"))
-        .groupBy(col("doi_norm")).agg(count(lit(1)).as("n_occurrences"))
-        .orderBy(col("doi_norm"))),
-    "csv_scan_keepfirst" -> ((s, _) => {
-      val df = Readers.loadCsv(s, s"$fixturesDir/input_dois.csv")
-        .withColumn("_ord", monotonically_increasing_id())
-        .withColumn("doi_norm", Norm.normalizeDoi(col("doi")))
-        .na.drop(Seq("doi_norm"))
-      df.withColumn("_rn", row_number().over(Window.partitionBy(col("doi_norm")).orderBy(col("_ord"))))
-        .filter(col("_rn") === 1)
-        .select(col("doi_norm"), col("journal"))
-        .orderBy(col("doi_norm"))
-    }),
-    "jsonl_coalesce" -> ((s, _) =>
-      Norm.coalesceArticle(Readers.loadJsonl(s, s"$fixturesDir/articles.jsonl"))
-        .select(col("id"), col("title"), col("doi"),
-          length(col("full_text")).cast("long").as("body_len"))
-        .orderBy(col("doi"))),
-    "format_dispatch" -> ((s, _) => {
-      // S5: one mixed-extension funnel through the dispatch reader
-      // (normalize.py:8-34 semantics): each path routes to its format's
-      // scan — csv/jsonl/json/bib — and every record lands in the same
-      // canonical (src, doi_norm) relation. Null DOIs keep the '(none)'
-      // sentinel so the group row sorts identically in both engines.
-      val files = Seq("input_dois.csv", "articles.jsonl",
-        "fulltext_articles.json", "sample_refs.bib")
-      files.map { f =>
-        Readers.loadRecords(s, s"$fixturesDir/$f")
-          .select(lit(f).as("src"),
-            coalesce(Norm.normalizeDoi(col("doi")), lit("(none)")).as("doi_norm"))
-      }.reduce(_ unionByName _)
-        .groupBy(col("src"), col("doi_norm")).agg(count(lit(1)).as("n"))
-        .orderBy(col("src"), col("doi_norm"))
-    }),
-    "fulltext_sections" -> ((s, _) => {
-      import s.implicits._
-      val raw = s.sparkContext.wholeTextFiles(s"$fixturesDir/fulltext_articles.json")
-        .flatMap { case (_, text) => graft.io.JsonTree.parseList(text) }
-        .map { rec =>
-          val m = rec.asInstanceOf[Map[String, Any]]
-          val doi = m.getOrElse("doi", "").toString
-          val secs = Chunkers.iterSectionTexts(m.getOrElse("sections", Map.empty))
-          (doi, secs.map(st => (st.section_path, st.text)))
-        }
-      raw.toDF("doi", "sections")
-        .select(col("doi"), explode(col("sections")).as("sec"))
-        .select(col("doi"), col("sec._1").as("section_path"), length(col("sec._2")).as("sec_len"))
-        .orderBy(col("doi"), col("section_path"))
-    }),
-    "jats_parse" -> ((s, _) =>
-      Pipelines.parseJatsDir(s, s"$fixturesDir/jats")
-        .select(col("pmcid"), col("article_title"), col("body_len"),
-          size(col("sections")).as("n_sections"))
-        .orderBy(col("pmcid"))),
-    "jats_abstract" -> ((s, _) =>
-      // X4 surfaced directly (xml_cleaning.py:72-106): structured <abstract>
-      // <sec>s join title + paragraphs, flat abstracts fall back to <p>s or
-      // raw text, absent abstract (PMC8000006) pins as ''/0 — the output is
-      // kept null-free because the comparator sorts rows on the
-      // name-sorted column tuple and a null in the first sort column
-      // breaks it. Newlines fold to " | " so the golden CSV stays
-      // single-line; the pinned length is of the REAL newline-joined text.
-      Pipelines.parseJatsDir(s, s"$fixturesDir/jats")
-        .select(col("pmcid"),
-          coalesce(regexp_replace(col("abstract"), "\n", " | "), lit("")).as("abstract_text"),
-          coalesce(length(col("abstract")).cast("long"), lit(0L)).as("abstract_len"))
-        .orderBy(col("pmcid"))),
-    "chunk_by_section" -> ((s, _) => {
-      import s.implicits._
-      val chunks = s.sparkContext.wholeTextFiles(s"$fixturesDir/fulltext_articles.json")
-        .flatMap { case (_, text) => graft.io.JsonTree.parseList(text) }
-        .flatMap { rec =>
-          val m = rec.asInstanceOf[Map[String, Any]]
-          val docId = m.getOrElse("doi", "").toString
-          val secs = Chunkers.iterSectionTexts(m.getOrElse("sections", Map.empty))
-          Chunkers.chunkBySection(docId, secs, chunkSize = 300, overlap = 30)
-        }
-      chunks.toDF()
-        .select(Chunkers.chunkId(col("doc_id"), col("chunk_index")).as("chunk_id"),
-          col("doc_id"), col("chunk_index"), col("section_path"), length(col("text")).as("chunk_len"))
-        .orderBy(col("doc_id"), col("chunk_index"))
-    }),
-    "pipeline_fulltext" -> ((s, _) => {
-      val bib = Readers.loadBib(s, s"$fixturesDir/sample_refs.bib")
-        .select(col("doi"), col("journal"), col("title"))
-      val csv = Readers.loadCsv(s, s"$fixturesDir/input_dois.csv")
-        .select(col("doi"), col("journal"), lit(null).cast("string").as("title"))
-      val input = bib.unionByName(csv)
-      val idMap = s.read.option("header", "true").csv(s"$fixturesDir/idconv_map.csv")
-      val failMap = s.read.option("header", "true").csv(s"$fixturesDir/efetch_fail.csv")
-      val articles = Pipelines.parseJatsDir(s, s"$fixturesDir/jats")
-      val seen = s.createDataFrame(
-        java.util.List.of[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doi_norm", org.apache.spark.sql.types.StringType))))
-      val res = Pipelines.runFulltext(input, idMap, failMap, articles, seen)
-      res.records.select(col("doi"), col("title"), col("journal"), col("pmcid")).orderBy(col("doi"))
-    }),
-    "pipeline_failures" -> ((s, _) => {
-      val bib = Readers.loadBib(s, s"$fixturesDir/sample_refs.bib")
-        .select(col("doi"), col("journal"), col("title"))
-      val csv = Readers.loadCsv(s, s"$fixturesDir/input_dois.csv")
-        .select(col("doi"), col("journal"), lit(null).cast("string").as("title"))
-      val input = bib.unionByName(csv)
-      val idMap = s.read.option("header", "true").csv(s"$fixturesDir/idconv_map.csv")
-      val failMap = s.read.option("header", "true").csv(s"$fixturesDir/efetch_fail.csv")
-      val articles = Pipelines.parseJatsDir(s, s"$fixturesDir/jats")
-      val seen = s.createDataFrame(
-        java.util.List.of[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doi_norm", org.apache.spark.sql.types.StringType))))
-      val res = Pipelines.runFulltext(input, idMap, failMap, articles, seen)
-      res.failures.orderBy(col("doi"))
-    }),
-    "curation_frontier" -> ((s, dir) => {
-      // the quality-gate operating table: what cutoff reaches a 25/50/75%
-      // keep target and what it buys in docs and TOKENS — one corpus
-      // aggregate onto the ~101-value score domain, everything after is
-      // histogram-sized
-      val q = TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text")
-      graft.ops.Stats.scoreFrontier(
-        q.select(col("quality_score"), col("n_tokens")),
-        "quality_score", "n_tokens", Seq(2500, 5000, 7500))
-        .orderBy(col("keep_bp"))
-    }),
-    "dedup_lsh_curve" -> ((s, dir) =>
-      // the banding-geometry S-curve measured: rows-per-band 1/2/4 over
-      // ONE 16-hash signature pass, production cap, shared verify —
-      // the (r, cap) operating point is chosen FROM this table
-      graft.ops.Dedup.bandingCurve(Tables.documents(s, dir), "doc_id", "text",
-        rowsList = Seq(1, 2, 4), minJaccardBp = 5000L)
-        .orderBy(col("rows_per_band"))),
-    "dedup_lsh_curve_tuned" -> ((s, dir) => {
-      // the 100 TB tuning posture: banding geometry is a PER-PAIR
-      // property, and a pair-level estimate needs a pair-PRESERVING
-      // sample — a uniform doc sample keeps pairs at rate p² and is
-      // empty at scale (measured: zero candidates at sf10). The
-      // signature-coherent sample keys membership on h0 = min shingle
-      // hash at rate 1/M, M ∝ corpus size, so near-dup pairs co-sample
-      // at rate ≈ J/M and the expected sampled-pair yield is CONSTANT
-      // however large the crawl. Cost: one fingerprint-scan + a curve on
-      // the ~256-doc sample; the full-corpus dedup_lsh_curve stays the
-      // exact audit shape, verify-bound linear in its own answer.
-      val docs = Tables.documents(s, dir)
-      graft.ops.Dedup.bandingCurve(
-        graft.ops.Dedup.coherentSample(docs, "doc_id", "text", k = 3,
-          budgetDocs = graft.ops.Dedup.DefaultSampleBudgetDocs),
-        "doc_id", "text", rowsList = Seq(1, 2, 4), minJaccardBp = 5000L)
-        .orderBy(col("rows_per_band"))
-    }),
-    "stream_sketch" -> ((s, dir) => {
-      // streaming sketch maintenance: the %5==0 crawl increment commits
-      // per-batch MIN-sketch deltas (sketch-sized state per commit); the
-      // read-side merge with the batch-side base sketch must equal the
-      // single-pass sketch of the WHOLE corpus — shares
-      // sketch_minvals_merge's oracle verbatim. Run-twice pins the
-      // restart contract (unchanged file set → second run commits
-      // nothing new; MIN-merge is idempotent even if it did).
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_stream_sketch_${s.sparkContext.applicationId}").getAbsolutePath
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val tablePath = new java.io.File(s"$dir/documents.parquet")
-      def once(): Unit =
-        if (tablePath.isDirectory)
-          graft.streaming.StreamingIngest.runSketchOnce(s, tablePath.getAbsolutePath,
-            s"$base/out", s"$base/ckpt", "source", "text", b = 256, glob = "*",
-            increment = col("doc_id") % 5 === 0)
-        else
-          graft.streaming.StreamingIngest.runSketchOnce(s, dir,
-            s"$base/out", s"$base/ckpt", "source", "text", b = 256,
-            increment = col("doc_id") % 5 === 0)
-      once(); once()
-      val baseTerms = Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0)
-        .select(col("source"), explode(graft.ops.Dedup.tokensCol(col("text"))).as("term"))
-        .filter(col("term") =!= "")
-      val baseSketch = graft.ops.Kmv.minSketch(baseTerms, Seq("source"), col("term"), b = 256)
-      val deltas = s.read.parquet(s"$base/out/b*")
-      graft.ops.Kmv.cardinalityCard(
-        graft.ops.Kmv.merge(Seq("source"), baseSketch, deltas), Seq("source"), b = 256)
-        .orderBy(col("source"))
-    }),
-    "shard_rendezvous" -> ((s, dir) => {
-      // consistent-sharding movement card: assign every doc at 16 and at
-      // 17 shards; rendezvous moves ~1/17 of rows where pmod moves ~all —
-      // the re-sharding bill made a number, per OLD shard
-      val docs = Tables.documents(s, dir)
-        .withColumn("shard16", graft.ops.Sampling.rendezvousShard(col("doc_id"), 16))
-        .withColumn("shard17", graft.ops.Sampling.rendezvousShard(col("doc_id"), 17))
-      docs.groupBy(col("shard16"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("shard16") =!= col("shard17"), 1L).otherwise(0L)).as("n_moved"))
-        .withColumn("moved_bp", expr("n_moved * 10000 div n_docs"))
-        .orderBy(col("shard16"))
-    }),
-    "cdc_diff" -> ((s, dir) => {
-      // record-level change capture between two corpus versions: v2
-      // deletes %7, edits %11's text, inserts a shifted %13 slice — the
-      // diff must classify every changed key I/U/D and stay silent on
-      // unchanged rows (one co-partitioned full-outer join on pre-digested
-      // rows; the change batch is change-sized, never corpus-sized)
-      val v1 = Tables.documents(s, dir)
-      val v2 = v1.filter(col("doc_id") % 7 =!= 0)
-        .withColumn("text", when(col("doc_id") % 11 === 0,
-          concat(col("text"), lit(" [rev2]"))).otherwise(col("text")))
-        .unionByName(v1.filter(col("doc_id") % 13 === 0)
-          .withColumn("doc_id", col("doc_id") + 10000000L)
-          .withColumn("text", concat(lit("fresh: "), col("text"))))
-      graft.ops.Cdc.diff(v1, v2, Seq("doc_id"),
-        Seq("text", "lang", "source", "n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-    "cdc_merge" -> ((s, dir) => {
-      // the refresh loop closed: applyChanges(v1, diff(v1, v2)) must BE
-      // v2 row-for-row — the oracle constructs v2 directly, the Spark
-      // side has to reach it through the full derive-batch-then-merge
-      // path (one anti-join on the base + a broadcast-sized batch union)
-      val v1 = Tables.documents(s, dir)
-      val v2 = v1.filter(col("doc_id") % 7 =!= 0)
-        .withColumn("text", when(col("doc_id") % 11 === 0,
-          concat(col("text"), lit(" [rev2]"))).otherwise(col("text")))
-        .unionByName(v1.filter(col("doc_id") % 13 === 0)
-          .withColumn("doc_id", col("doc_id") + 10000000L)
-          .withColumn("text", concat(lit("fresh: "), col("text"))))
-      val d = graft.ops.Cdc.diff(v1, v2, Seq("doc_id"),
-        Seq("text", "lang", "source", "n_chars"))
-      val batch = d.join(v2, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars"), col("op"))
-      graft.ops.Cdc.applyChanges(v1, batch, Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-          md5(col("text")).as("text_md5"))
-        .orderBy(col("doc_id"))
-    }),
-    "sketch_minvals" -> ((s, dir) => {
-      // min-value sketch cardinality card (one-permutation bins, inverse
-      // estimator) per source, REPORTED against the exact distinct word
-      // count — the estimator's state is 256 rows/source no matter the
-      // corpus size, map-side combinable, mergeable across shards
-      val terms = Tables.documents(s, dir)
-        .select(col("source"), explode(graft.ops.Dedup.tokensCol(col("text"))).as("term"))
-        .filter(col("term") =!= "")
-      val sk = graft.ops.Kmv.minSketch(terms, Seq("source"), col("term"), b = 256)
-      graft.ops.Kmv.cardinalityCard(sk, Seq("source"), b = 256)
-        .join(terms.groupBy("source").agg(countDistinct(col("term")).as("exact_distinct")), "source")
-        .withColumn("err_bp",
-          expr("abs(est_distinct - exact_distinct) * 10000 div exact_distinct"))
-        .orderBy(col("source"))
-    }),
-    "sketch_minvals_merge" -> ((s, dir) => {
-      // the merge algebra pinned by oracle: three doc_id%3 slices sketched
-      // INDEPENDENTLY then MIN-merged must equal the single-pass sketch —
-      // the property that lets per-day/per-shard sketches combine without
-      // ever rescanning the corpus (the oracle replays the single pass)
-      val docs = Tables.documents(s, dir)
-      def slice(r: Int) = docs.filter(col("doc_id") % 3 === r)
-        .select(col("source"), explode(graft.ops.Dedup.tokensCol(col("text"))).as("term"))
-        .filter(col("term") =!= "")
-      val sketches = (0 until 3).map(r =>
-        graft.ops.Kmv.minSketch(slice(r), Seq("source"), col("term"), b = 256))
-      graft.ops.Kmv.cardinalityCard(
-        graft.ops.Kmv.merge(Seq("source"), sketches: _*), Seq("source"), b = 256)
-        .orderBy(col("source"))
-    }),
-    "sketch_growth" -> ((s, dir) => {
-      // the retention feature in a runtime story: commit yesterday's
-      // sketch (the %5≠0 corpus) and today's (MIN-merged with the %5
-      // increment) as two RETAINED generations of one GenTable, then
-      // answer "how much vocabulary did the crawl add" by time-traveling
-      // both generations — per source, est cardinality then/now and the
-      // growth; the oracle replays both cards from the data directly, so
-      // hash-equality proves readGeneration returns each generation
-      // EXACTLY as committed
-      val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_sketch_growth_${s.sparkContext.applicationId}").getAbsolutePath
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      def terms(f: org.apache.spark.sql.Column) = Tables.documents(s, dir).filter(f)
-        .select(col("source"), explode(graft.ops.Dedup.tokensCol(col("text"))).as("term"))
-        .filter(col("term") =!= "")
-      val oldSketch = graft.ops.Kmv.minSketch(
-        terms(col("doc_id") % 5 =!= 0), Seq("source"), col("term"), b = 256)
-      val g1 = graft.io.GenTable.replace(s, root, oldSketch, keep = 2)
-      val delta = graft.ops.Kmv.minSketch(
-        terms(col("doc_id") % 5 === 0), Seq("source"), col("term"), b = 256)
-      val g2 = graft.io.GenTable.replace(s, root,
-        graft.ops.Kmv.merge(Seq("source"),
-          graft.io.GenTable.readGeneration(s, root, g1), delta), keep = 2)
-      def card(g: Long, as: String) = graft.ops.Kmv.cardinalityCard(
-        graft.io.GenTable.readGeneration(s, root, g), Seq("source"), b = 256)
-        .select(col("source"), col("est_distinct").as(as))
-      card(g1, "est_then").join(card(g2, "est_now"), "source")
-        .withColumn("growth", greatest(col("est_now") - col("est_then"), lit(0L)))
-        .orderBy(col("source"))
-    }),
-    "sketch_acquisition" -> ((s, dir) => {
-      // leave-one-out marginal vocabulary per source, from sketches only
-      // (a mirror source's marginal reads ~0 however big it is) — every
-      // relation after the sketch is |sources|x256 rows
-      val terms = Tables.documents(s, dir)
-        .select(col("source"), explode(graft.ops.Dedup.tokensCol(col("text"))).as("term"))
-        .filter(col("term") =!= "")
-      val sk = graft.ops.Kmv.minSketch(terms, Seq("source"), col("term"), b = 256)
-      graft.ops.Kmv.marginalCard(sk, "source", b = 256).orderBy(col("source"))
-    }),
-    "source_overlap_sketch" -> ((s, dir) => {
-      // the sketch path of source_overlap: pairwise vocabulary Jaccard
-      // from 256-bin one-permutation signatures (matching mins over
-      // co-occupied bins), beside the exact Jaccard from the vocab-sized
-      // term-set relation — at 100 TB only the sketch path is run (the
-      // join is |sources|x256 rows a side), the exact side is this demo
-      // row's honesty column
-      val terms = Tables.documents(s, dir)
-        .select(col("source"), explode(graft.ops.Dedup.tokensCol(col("text"))).as("term"))
-        .filter(col("term") =!= "")
-      val sk = graft.ops.Kmv.minSketch(terms, Seq("source"), col("term"), b = 256)
-      val est = graft.ops.Kmv.jaccardMatrix(sk, "source")
-      val ts = terms.distinct()
-      val sizes = ts.groupBy("source").agg(count(lit(1)).as("n"))
-      val inter = ts.select(col("source").as("src_a"), col("term"))
-        .join(ts.select(col("source").as("src_b"), col("term")), Seq("term"))
-        .filter(col("src_a") < col("src_b"))
-        .groupBy(col("src_a"), col("src_b")).agg(count(lit(1)).as("n_inter"))
-      val exact = inter
-        .join(sizes.select(col("source").as("src_a"), col("n").as("n_a")), Seq("src_a"))
-        .join(sizes.select(col("source").as("src_b"), col("n").as("n_b")), Seq("src_b"))
-        .withColumn("jaccard_exact_bp",
-          expr("n_inter * 10000 div (n_a + n_b - n_inter)"))
-        .select(col("src_a"), col("src_b"), col("jaccard_exact_bp"))
-      est.join(exact, Seq("src_a", "src_b"))
-        .select(col("src_a"), col("src_b"), col("co_buckets"),
-          col("match_buckets"), col("jaccard_est_bp"), col("jaccard_exact_bp"))
-        .orderBy(col("src_a"), col("src_b"))
-    }),
-    "sample_priority" -> ((s, dir) => {
-      // token-weighted fixed-size corpus subsample with unbiased
-      // subset-sum weights (priority sampling): map-only integer
-      // priorities, a TakeOrdered top-65 (no corpus shuffle), est_w =
-      // max(w, tau) from the (k+1)-th priority
-      val w = TextAnalysis.tokenCounts(Tables.documents(s, dir), "doc_id", "text")
-        .select(col("doc_id"), col("n_ws_tokens"))
-      graft.ops.Sampling.prioritySample(w, "doc_id", col("n_ws_tokens"), k = 64, seed = 7)
-        .orderBy(col("rank"))
-    }),
-    "text_simpson" -> ((s, dir) =>
-      // the 20 most repetitive documents by exact-integer Simpson
-      // concentration — the whole-distribution repetition signal beside
-      // the windowed dup-gram scans
-      TextAnalysis.simpson(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy(desc("simpson_bp"), col("doc_id")).limit(20)),
-    "text_keyphrases" -> ((s, dir) =>
-      // RAKE top-3 keyphrases per doc: stopword-split candidate runs
-      // (<=4 tokens), milli-exact deg/freq word scores, identical texts
-      // collapsed — the per-doc topic tags beside the corpus-level
-      // collocations row
-      TextAnalysis.rakeKeyphrases(Tables.documents(s, dir), "doc_id", "text",
-        maxLen = 4, k = 3)
-        .orderBy(col("doc_id"), col("rank"))),
-    "text_segments" -> ((s, dir) =>
-      // exact-integer TextTiling: 40-token blocks, distinct-vocab Jaccard
-      // cohesion between neighbors, boundary under 1500 bp — the
-      // topic-shift chunk boundaries the fixed/section chunkers lack
-      TextAnalysis.textTiling(Tables.documents(s, dir), "doc_id", "text",
-        window = 40, boundaryBp = 1500)
-        .orderBy(col("doc_id"))),
-    "chunk_tiling" -> ((s, dir) =>
-      // the COMPOSED row (r14 task 3): text_segments' boundary machinery
-      // actually segmenting — every sub-1500bp cohesion drop starts a new
-      // chunk, chunk text rebuilt from the windows' ordered tokens; one
-      // shared code path with textTiling so card and chunker agree
-      TextAnalysis.tilingChunks(Tables.documents(s, dir), "doc_id", "text",
-        window = 40, boundaryBp = 1500)
-        .orderBy(col("doc_id"), col("seg_index"))),
-    "sample_uniform" -> ((s, dir) =>
-      // seeded bottom-k uniform sample ("distributed reservoir"):
-      // order-free MERGEABLE membership — retries, shard unions, and
-      // corpus growth agree on the sample with no coordination, the
-      // property single-pass reservoir state can't give an engine. The
-      // fixed eval/holdout slice of a growing corpus. Map-only hash +
-      // TakeOrdered(64); the rank window runs on 64 rows
-      graft.ops.Sampling.uniformSample(Tables.documents(s, dir), "doc_id", k = 64)
-        .orderBy(col("rank"))),
-    "stats_corr" -> ((s, dir) => {
-      // integer Pearson card per source: does token VOLUME predict VOCAB
-      // (Heaps' law)? Exact sufficient statistics + covariance/variance
-      // NUMERATORS (DECIMAL-exact products); the rooted r stays a
-      // reader-side ratio so engine sqrt rounding never enters the
-      // artifact. One map-side-combined aggregate, no join, no window
-      val tk = graft.ops.Dedup.tokensCol(col("text"))
-      graft.ops.Stats.corrCard(
-        Tables.documents(s, dir).select(col("source"),
-          size(tk).cast("long").as("nt"),
-          size(array_distinct(tk)).cast("long").as("vocab")),
-        "source", col("nt"), col("vocab"))
-        .orderBy(col("source"))
-    }),
-    "graph_domain_rank" -> ((s, dir) => {
-      // web-curation domain authority end to end: synthesized anchor
-      // hrefs per document (the fixture corpus carries no URLs —
-      // url_canonical precedent), then the REAL machinery — regexp href
-      // extraction, urlParts canonicalization, registrable-domain node
-      // ids, distinct domain→domain edges, the exact-integer PageRank
-      // graph_pagerank already pins. The 100 TB shape: corpus-sized
-      // links collapse to the DOMAIN-sized graph (distinct on bounded
-      // keys) before any iteration state exists, so the rank loop runs
-      // on ~|domains| rows no matter the crawl size
-      val docs = Tables.documents(s, dir)
-      val withHtml = docs.select(col("doc_id"), expr(
-        "concat('<p>see <a href=\"https://Sub', CAST(doc_id % 5 AS STRING)," +
-          " '.example', CAST((doc_id * 3 + 1) % 61 AS STRING), '.com/a/'," +
-          " CAST(doc_id AS STRING), '?utm_source=feed\">one</a> and" +
-          " <a href=\"http://example', CAST((doc_id * 7 + 2) % 61 AS STRING)," +
-          " '.com/b\">two</a>', CASE WHEN doc_id % 3 = 0 THEN" +
-          " concat(' plus <a href=\"https://example'," +
-          " CAST((doc_id * 11 + 5) % 61 AS STRING), '.com/c\">three</a>')" +
-          " ELSE '' END, '</p>')").as("html"))
-      val links = withHtml.select(col("doc_id"),
-        explode(expr("regexp_extract_all(html, 'href=\"([^\"]+)\"', 1)")).as("url"))
-      val edges = TextAnalysis.urlParts(links, "doc_id", "url")
-        .select((col("doc_id") % 61).as("src"),
-          expr("CAST(regexp_extract(domain, '([0-9]+)', 1) AS BIGINT)").as("dst"))
-      graft.ops.Graph.pageRank(
-        s.range(61).select(col("id").as("node")), edges, iters = 4)
-        .orderBy(col("node"))
-    })
-  )
-
-  // ====================================================================
-  // Oracle SQL (DuckDB dialect) — same tables, same column names/order keys.
-  // ====================================================================
-
-  private val DuckDoiRaw = DoiRawSql
-  /** DuckDB spelling of Norm.PythonWhitespace (chr() is codepoint-based there). */
-  private val DuckWs = Norm.duckWsSet
-  /** DuckDB twin of Norm.normalizeDoi over an arbitrary column/expression. */
-  private def duckDoiNorm(c: String): String =
-    s"nullif(lower(trim(replace(regexp_replace(trim($c, ' ' || $DuckWs), '(?i)^https?://(dx\\.)?doi\\.org/', ''), '​', ''), ' ' || $DuckWs)), '')"
-  private val DuckNormalizeDoi = duckDoiNorm("doi_raw")
-
-  /** SimHash fingerprint CTE chain replaying Dedup.simhash bit-for-bit:
-    * same md5-hex→(60-bit, 4-bit) token words, same ±1 per-bit fold, same
-    * sign-bit assembly. `sim` is the full per-document relation (token-less
-    * docs fingerprint 0, like the Spark side's left join). */
-  private val DuckSimhashSim: String = {
-    val sums = (0 until 64).map { b =>
-      val bit = if (b < 60) s"(m1 >> $b) & 1" else s"(m2 >> ${b - 60}) & 1"
-      s"SUM(CASE WHEN ($bit) = 1 THEN 1 ELSE -1 END) AS a$b"
-    }.mkString(", ")
-    val fpSql = (0 until 63).map(b => s"(CASE WHEN a$b > 0 THEN ${1L << b} ELSE 0 END)")
-      .mkString(" + ") + " + (CASE WHEN a63 > 0 THEN -9223372036854775807 - 1 ELSE 0 END)"
-    def bandSql(hi: Int): String =
-      (0 until 16).map(j => s"(CASE WHEN a${hi + j} > 0 THEN ${1 << j} ELSE 0 END)").mkString(" + ")
-    s"""WITH toks AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS tok FROM documents),
-       |nz AS (SELECT doc_id, tok FROM toks WHERE tok <> ''),
-       |h AS (SELECT doc_id, CAST('0x' || substring(md5(tok), 1, 15) AS BIGINT) AS m1,
-       |             CAST('0x' || substring(md5(tok), 17, 14) AS BIGINT) AS m2 FROM nz),
-       |acc AS (SELECT doc_id, $sums FROM h GROUP BY doc_id),
-       |fp AS (SELECT doc_id, $fpSql AS simhash,
-       |         ${bandSql(48)} AS band0, ${bandSql(32)} AS band1,
-       |         ${bandSql(16)} AS band2, ${bandSql(0)} AS band3 FROM acc),
-       |sim AS (SELECT d.doc_id, CAST(coalesce(f.simhash, 0) AS BIGINT) AS simhash,
-       |          CAST(coalesce(f.band0, 0) AS INT) AS band0, CAST(coalesce(f.band1, 0) AS INT) AS band1,
-       |          CAST(coalesce(f.band2, 0) AS INT) AS band2, CAST(coalesce(f.band3, 0) AS INT) AS band3
-       |        FROM documents d LEFT JOIN fp f ON d.doc_id = f.doc_id)""".stripMargin
-  }
-
-  /** Replay of the incremental dedup path: same signatures/bands as the
-    * full minhash fragment, but candidates come ONLY from new(%5==0) ⋈
-    * corpus(%5<>0) band equality; same exact-Jaccard confirm. Shared by
-    * dedup_incremental (direct) and dedup_incremental_indexed (persisted
-    * bucketed index) — the two plans must answer identically. */
-  private lazy val DuckIncrementalCtes: String =
-    s"""$DuckMinhashPairs,
-      |cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS corpus_id
-      |         FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-      |         WHERE a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0),
-      |sets AS (SELECT doc_id, list(DISTINCT m1) AS s, COUNT(DISTINCT m1) AS nsh FROM hashed GROUP BY 1),
-      |v AS (SELECT c.new_id, c.corpus_id,
-      |        CAST(len(list_intersect(sa.s, sb.s)) AS BIGINT) AS inter,
-      |        CAST(sa.nsh + sb.nsh - len(list_intersect(sa.s, sb.s)) AS BIGINT) AS uni
-      |      FROM cand c JOIN sets sa ON sa.doc_id = c.new_id JOIN sets sb ON sb.doc_id = c.corpus_id)""".stripMargin
-
-  private lazy val DuckIncrementalSql: String =
-    s"""WITH $DuckIncrementalCtes
-      |SELECT new_id, corpus_id, (10000 * inter) // uni AS jaccard_bp FROM v WHERE (10000 * inter) // uni >= 100
-      |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(10000 AS BIGINT)
-      |ORDER BY new_id, corpus_id""".stripMargin
-
-  def oracleSql: Map[String, String] =
-    baseOracleSql +
-      ("ann_recall" -> annRecallSql) +
-      ("ann_nprobe_curve" -> {
-        // one training replay, one probe ranking, three rn<=np tiers
-        // against the knn-truth subquery
-        val tiers = Seq(1, 2, 4).map { np =>
-          s"""mem_$np AS (SELECT p.query_id, a.vec_id AS neighbor_id
-            |  FROM asn3 a JOIN allprobes p ON a.cid = p.cid
-            |  WHERE p.rn <= $np AND a.vec_id <> p.query_id),
-            |resc_$np AS (SELECT m.query_id, m.neighbor_id, ${duckCosine("emb.embedding", "qv.qvec")} AS sim
-            |  FROM mem_$np m JOIN embeddings emb ON emb.vec_id = m.neighbor_id
-            |  JOIN qv ON qv.query_id = m.query_id),
-            |top_$np AS (SELECT query_id, neighbor_id FROM (
-            |    SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-            |    FROM resc_$np) WHERE rank <= 10),
-            |row_$np AS (SELECT CAST($np AS BIGINT) AS nprobe, CAST(COUNT(*) AS BIGINT) AS hits
-            |  FROM top_$np JOIN truth USING (query_id, neighbor_id))""".stripMargin
-        }
-        val unions = Seq(1, 2, 4).map(np =>
-          s"SELECT nprobe, hits, CAST((10000 * hits) // (SELECT COUNT(*) FROM truth) AS BIGINT) AS recall_bp FROM row_$np")
-        s"""WITH ${duckIvfTrainCtes()},
-          |qv AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-          |allprobes AS (SELECT vec_id AS query_id, cid, rn FROM (
-          |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY
-          |      (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) DESC, cid) AS rn
-          |    FROM sim3 WHERE vec_id < 5)),
-          |truth AS (SELECT query_id, neighbor_id FROM (\n${duckKnnSql()}\n) tq),
-          |${tiers.mkString(",\n")}
-          |${unions.mkString("\nUNION ALL\n")}
-          |ORDER BY nprobe""".stripMargin
-      }) +
-      ("ann_ivf_drift" -> annIvfDriftSql) +
-      // the capped-DEFAULT pipeline must hash-match the uncapped oracle
-      // verbatim when no bucket is hot — same SQL on purpose
-      ("dedup_neardup_capped" -> baseOracleSql("dedup_neardup")) +
-      // streaming sketch maintenance must converge to the single-pass
-      // sketch — the merge row's oracle verbatim
-      ("stream_sketch" -> baseOracleSql("sketch_minvals_merge")) +
-      ("curation_frontier" -> {
-        val tiers = Seq(2500, 5000, 7500).map { bp =>
-          s"""SELECT CAST($bp AS BIGINT) AS keep_bp, CAST(cc.score AS BIGINT) AS cutoff,
-            |  CAST(cc.cum_n AS BIGINT) AS n_kept,
-            |  CAST(cc.cum_n * 10000 // t.n_total AS BIGINT) AS docs_bp,
-            |  CAST(cc.cum_w AS BIGINT) AS weight_kept,
-            |  CAST(cc.cum_w * 10000 // t.w_total AS BIGINT) AS weight_bp
-            |FROM c cc, t
-            |WHERE cc.score = (SELECT MAX(score) FROM c, t WHERE cum_n >= (n_total * $bp) // 10000)""".stripMargin
-        }.mkString("\nUNION ALL\n")
-        s"""WITH $DuckQualityScore,
-          |h AS (SELECT score, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(nt) AS BIGINT) AS w FROM qsc GROUP BY 1),
-          |c AS (SELECT score, CAST(SUM(n) OVER (ORDER BY score DESC) AS BIGINT) AS cum_n,
-          |        CAST(SUM(w) OVER (ORDER BY score DESC) AS BIGINT) AS cum_w FROM h),
-          |t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total, CAST(SUM(nt) AS BIGINT) AS w_total FROM qsc)
-          |$tiers
-          |ORDER BY keep_bp""".stripMargin
-      }) +
-      ("graph_lpa" -> {
-        // 4 unrolled synchronous rounds; per-node argmax replayed as a
-        // (cnt DESC, lbl ASC) rank window — same total order as the
-        // engine's max-of-struct(cnt, -lbl)
-        val rounds = (1 to 4).map { i =>
-          s"""c$i AS (SELECT e.dst AS node, l.lbl, COUNT(*) AS cnt
-            |  FROM ue e JOIN l${i - 1} l ON l.node = e.src GROUP BY 1, 2),
-            |p$i AS (SELECT node, lbl FROM (
-            |    SELECT node, lbl, row_number() OVER (PARTITION BY node ORDER BY cnt DESC, lbl ASC) AS rn
-            |    FROM c$i) WHERE rn = 1),
-            |l$i AS (SELECT l.node, coalesce(p.lbl, l.lbl) AS lbl
-            |  FROM l${i - 1} l LEFT JOIN p$i p ON p.node = l.node)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH nd AS (SELECT doc_id AS node FROM documents),
-          |de AS (SELECT doc_id AS src, unnest([doc_id // 2, doc_id // 4, doc_id % 97]) AS dst FROM documents),
-          |ue AS (SELECT DISTINCT src, dst FROM (
-          |  SELECT src, dst FROM de WHERE src <> dst
-          |  UNION ALL SELECT dst, src FROM de WHERE src <> dst)),
-          |l0 AS (SELECT node, node AS lbl FROM nd),
-          |$rounds
-          |SELECT l4.node, l4.lbl AS label, s.community_size
-          |FROM l4 JOIN (SELECT lbl, CAST(COUNT(*) AS BIGINT) AS community_size FROM l4 GROUP BY 1) s
-          |  ON s.lbl = l4.lbl
-          |ORDER BY node""".stripMargin
-      }) +
-      ("dedup_lsh_curve" -> duckLshCurve("documents")) +
-      ("dedup_lsh_curve_tuned" ->
-        // the identical generated curve replay targeted at the
-        // signature-coherent sample (the shared duckCoherentSample
-        // fragment — membership arithmetic and budget constant live once)
-        duckLshCurve(duckCoherentSample("documents"))) +
-      ("shard_rendezvous" ->
-        // per-doc argmax over shard hashes, replayed as a rank window;
-        // ties break to the higher shard index in both engines
-        """WITH sh AS (SELECT doc_id, s,
-          |    CAST('0x' || substring(md5(CAST(s AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
-          |  FROM documents CROSS JOIN (SELECT unnest(range(17)) AS s)),
-          |r16 AS (SELECT doc_id, s AS shard16 FROM (
-          |    SELECT doc_id, s, row_number() OVER (PARTITION BY doc_id ORDER BY h DESC, s DESC) AS rn
-          |    FROM sh WHERE s < 16) WHERE rn = 1),
-          |r17 AS (SELECT doc_id, s AS shard17 FROM (
-          |    SELECT doc_id, s, row_number() OVER (PARTITION BY doc_id ORDER BY h DESC, s DESC) AS rn
-          |    FROM sh) WHERE rn = 1)
-          |SELECT shard16, CAST(COUNT(*) AS BIGINT) AS n_docs,
-          |  CAST(SUM(CASE WHEN shard16 <> shard17 THEN 1 ELSE 0 END) AS BIGINT) AS n_moved,
-          |  CAST(SUM(CASE WHEN shard16 <> shard17 THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS moved_bp
-          |FROM r16 JOIN r17 USING (doc_id)
-          |GROUP BY shard16 ORDER BY shard16""".stripMargin) +
-      ("ann_ivf_incremental" ->
-        // train replay over the CORPUS slice only, then one assign pass
-        // of the increment against the round-2 centroids (c2) — exactly
-        // what readModel(writeModel(train(corpus))) + assign(increment)
-        // computes
-        s"""WITH ${duckIvfTrainCtes("(SELECT * FROM embeddings WHERE vec_id % 5 <> 0)")},
-          |ninc AS (SELECT vec_id,
-          |  list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS vq
-          |  FROM embeddings WHERE vec_id % 5 = 0),
-          |simi AS (SELECT n.vec_id, c.cid,
-          |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n) * (n.vq[i])::DOUBLE)) AS dt,
-          |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n) * (c.s[i] / c.n))) AS na,
-          |    list_sum(list_transform(range(1, 65), i -> (n.vq[i])::DOUBLE * (n.vq[i])::DOUBLE)) AS nb
-          |  FROM ninc n CROSS JOIN c2 c)
-          |SELECT vec_id, cid AS cluster FROM (
-          |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY
-          |      (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) DESC, cid) AS rn
-          |    FROM simi) WHERE rn = 1
-          |ORDER BY vec_id""".stripMargin) +
-      ("embed_quant_int8" ->
-        s"""WITH $DuckSq8CodesCtes
-          |SELECT vec_id, amax_q,
-          |  CAST(list_sum(codes) AS BIGINT) AS code_sum,
-          |  CAST(list_sum(list_transform(codes, v -> v * v)) AS BIGINT) AS code_sumsq,
-          |  CAST(list_aggregate(codes, 'min') AS BIGINT) AS code_min,
-          |  CAST(list_aggregate(codes, 'max') AS BIGINT) AS code_max,
-          |  CAST(list_sum(list_transform(codes, v -> CASE WHEN v = 0 THEN 0 ELSE 1 END)) AS BIGINT) AS nnz
-          |FROM c ORDER BY vec_id""".stripMargin) +
-      ("embed_jl" ->
-        // same '42|0|j|i' high-hex-bit sign convention as the LSH plane
-        // replays, same 2^-20 quantization, exact integer sums
-        """WITH s AS (SELECT j, list_transform(range(0, 64), i ->
-          |    CASE WHEN CAST('0x' || substring(md5('42|0|' || j || '|' || i), 1, 1) AS INT) >= 8
-          |         THEN 1 ELSE -1 END) AS w
-          |  FROM (SELECT unnest(range(0, 16)) AS j)),
-          |e AS (SELECT vec_id, list_transform(embedding,
-          |        x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS vq
-          |      FROM embeddings),
-          |p AS (SELECT e.vec_id, s.j,
-          |        CAST(list_sum(list_transform(range(0, 64), i -> e.vq[i + 1] * s.w[i + 1])) AS BIGINT) AS o
-          |      FROM e CROSS JOIN s)
-          |SELECT vec_id, CAST(j AS BIGINT) AS j, o AS coord FROM p ORDER BY vec_id, j""".stripMargin) +
-      ("embed_jl_search" ->
-        // projection CTEs verbatim from embed_jl, integer-dot shortlist,
-        // same fixed-order cosine rescore as the binary-store search
-        s"""WITH s AS (SELECT j, list_transform(range(0, 64), i ->
-          |    CASE WHEN CAST('0x' || substring(md5('42|0|' || j || '|' || i), 1, 1) AS INT) >= 8
-          |         THEN 1 ELSE -1 END) AS w
-          |  FROM (SELECT unnest(range(0, 16)) AS j)),
-          |e AS (SELECT vec_id, embedding, list_transform(embedding,
-          |        x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS vq
-          |      FROM embeddings),
-          |p AS (SELECT e.vec_id, s.j,
-          |        CAST(list_sum(list_transform(range(0, 64), i -> e.vq[i + 1] * s.w[i + 1])) AS BIGINT) AS o
-          |      FROM e CROSS JOIN s),
-          |jlv AS (SELECT p.vec_id, e.embedding, list(o ORDER BY j) AS jl
-          |        FROM p JOIN e USING (vec_id) GROUP BY 1, 2),
-          |q AS (SELECT vec_id AS qid, embedding AS qvec, jl AS qjl FROM jlv WHERE vec_id < 5),
-          |d AS (SELECT q.qid, c.vec_id, c.embedding,
-          |    CAST(list_sum(list_transform(range(0, 16), t -> c.jl[t + 1] * q.qjl[t + 1])) AS BIGINT) AS jl_dot
-          |  FROM jlv c CROSS JOIN q WHERE c.vec_id <> q.qid),
-          |short AS (SELECT qid, vec_id, embedding, jl_dot FROM (
-          |    SELECT qid, vec_id, embedding, jl_dot, row_number() OVER (PARTITION BY qid ORDER BY jl_dot DESC, vec_id) AS hr FROM d) WHERE hr <= 40),
-          |resc AS (SELECT sh.qid, sh.vec_id, sh.jl_dot, ${duckCosine("sh.embedding", "q.qvec")} AS sim
-          |  FROM short sh JOIN q USING (qid)),
-          |ranked AS (SELECT qid, vec_id, jl_dot, CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS INT) AS rank FROM resc)
-          |SELECT qid AS query_id, vec_id AS neighbor_id, rank, jl_dot FROM ranked WHERE rank <= 10
-          |ORDER BY query_id, rank""".stripMargin) +
-      ("embed_quant_binary" ->
-        // 1-bit replay: identical little-endian sign packing (>= 0 sets
-        // the bit; distinct powers of two sum without wrap ambiguity —
-        // the bit-63 word stays in BIGINT range in both engines), Hamming
-        // via per-word xor+popcount, same fixed-order cosine rescore
-        s"""WITH bc AS (SELECT vec_id, embedding,
-          |    list_transform(range(0, (len(embedding) - 1) // 64 + 1), w ->
-          |      CAST(list_sum(list_transform(range(0, least(64, len(embedding) - w * 64)), b ->
-          |        CASE WHEN embedding[w * 64 + b + 1] < 0 THEN CAST(0 AS BIGINT)
-          |          WHEN b = 63 THEN CAST(-9223372036854775807 - 1 AS BIGINT)
-          |          ELSE (CAST(1 AS BIGINT) << b) END)) AS BIGINT)) AS code
-          |  FROM embeddings),
-          |q AS (SELECT vec_id AS qid, embedding AS qvec, code AS qc FROM bc WHERE vec_id < 5),
-          |ham AS (SELECT q.qid, c.vec_id, c.embedding,
-          |    CAST(list_sum(list_transform(range(1, len(c.code) + 1), i -> bit_count(xor(c.code[i], q.qc[i])))) AS BIGINT) AS ham
-          |  FROM bc c CROSS JOIN q WHERE c.vec_id <> q.qid),
-          |short AS (SELECT qid, vec_id, embedding, ham FROM (
-          |    SELECT qid, vec_id, embedding, ham, row_number() OVER (PARTITION BY qid ORDER BY ham, vec_id) AS hr FROM ham) WHERE hr <= 40),
-          |resc AS (SELECT s.qid, s.vec_id, s.ham, ${duckCosine("s.embedding", "q.qvec")} AS sim
-          |  FROM short s JOIN q USING (qid)),
-          |ranked AS (SELECT qid, vec_id, ham, CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS INT) AS rank FROM resc)
-          |SELECT qid AS query_id, vec_id AS neighbor_id, rank, ham FROM ranked WHERE rank <= 10
-          |ORDER BY query_id, rank""".stripMargin) +
-      ("embed_card" ->
-        // same plants, same 2^-20 quantized norm arithmetic, same
-        // NULL-out of NaN rows before the norm/distinct aggregates
-        s"""WITH e AS (SELECT vec_id, label,
-          |    CASE WHEN vec_id % 31 = 0 THEN list_transform(embedding, x -> CAST(0.0 AS FLOAT))
-          |         WHEN vec_id % 37 = 0 THEN list_transform(range(0, len(embedding)),
-          |           i -> CASE WHEN i = 0 THEN CAST('NaN' AS FLOAT) ELSE embedding[i + 1] END)
-          |         ELSE embedding END AS embedding
-          |  FROM embeddings),
-          |b0 AS (SELECT label,
-          |    len(list_filter(embedding, x -> isnan(CAST(x AS DOUBLE)))) > 0 AS nan,
-          |    embedding FROM e),
-          |b AS (SELECT label, nan,
-          |    CASE WHEN nan THEN NULL
-          |      ELSE list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) END AS vq
-          |  FROM b0),
-          |c AS (SELECT label, nan,
-          |    CAST(list_sum(list_transform(vq, x -> x * x)) AS BIGINT) AS nsq,
-          |    md5(array_to_string(list_transform(vq, x -> CAST(x AS VARCHAR)), ',')) AS h
-          |  FROM b),
-          |a AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-          |    CAST(SUM(CASE WHEN nan THEN 1 ELSE 0 END) AS BIGINT) AS n_nan,
-          |    CAST(SUM(CASE WHEN nsq = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-          |    CAST(SUM(CASE WHEN nsq < 17179869184 THEN 1 ELSE 0 END) AS BIGINT) AS n_low_norm,
-          |    CAST(MIN(nsq) AS BIGINT) AS nsq_min, CAST(MAX(nsq) AS BIGINT) AS nsq_max,
-          |    CAST(CASE WHEN COUNT(nsq) = 0 THEN NULL ELSE SUM(nsq) // COUNT(nsq) END AS BIGINT) AS nsq_mean
-          |  FROM c GROUP BY 1),
-          |d AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS n_distinct
-          |      FROM (SELECT DISTINCT label, h FROM c WHERE h IS NOT NULL) GROUP BY 1)
-          |SELECT a.label, n_vecs, n_nan, n_zero, n_low_norm, nsq_min, nsq_max, nsq_mean,
-          |  coalesce(d.n_distinct, 0) AS n_distinct
-          |FROM a LEFT JOIN d USING (label) ORDER BY label""".stripMargin)
-
-  /** ann_recall's DuckDB formulation, composed from the tier oracles
-    * verbatim: each tier SQL (its private WITH chain included) runs as a
-    * parenthesized subquery, so the index-replay logic lives ONCE — in the
-    * tier's own oracle entry — and the recall row can never drift from
-    * what the tiers actually compute. */
-  private def annRecallSql: String = {
-    def sub(name: String) = s"(\n${baseOracleSql(name)}\n)"
-    def tierSql(label: String, rel: String, truthRel: String) =
-      s"SELECT '$label' AS tier, CAST((10000 * COUNT(*)) // (SELECT COUNT(*) FROM $truthRel) AS BIGINT) AS recall_bp\n" +
-        s"FROM $rel r JOIN $truthRel t ON r.query_id = t.query_id AND r.neighbor_id = t.neighbor_id"
-    def tier(label: String, name: String) = tierSql(label, sub(name), "truth")
-    // the post-shift tier searches the +0.5-mean-offset corpus (the same
-    // shift ann_ivf_drift's guard fires on) with a codebook re-trained on
-    // it, against brute-force truth over the SHIFTED corpus
-    val shiftSrc =
-      "(SELECT vec_id, list_transform(embedding, x -> x + CAST(0.5 AS FLOAT)) AS embedding FROM embeddings)"
-    s"""WITH truth AS (SELECT query_id, neighbor_id FROM ${sub("knn_cosine")} tq),
-       |truth_shift AS (SELECT query_id, neighbor_id FROM (\n${duckKnnSql(shiftSrc)}\n) tsq)
-       |SELECT tier, recall_bp FROM (
-       |${tier("ivf", "ann_ivf")}
-       |UNION ALL
-       |${tierSql("ivf_shift_retrain", s"(\n${duckIvfSearchSql(shiftSrc)}\n)", "truth_shift")}
-       |UNION ALL
-       |${tier("ivfpq", "ann_ivfpq")}
-       |UNION ALL
-       |${tier("lsh", "ann_lsh")}
-       |) u ORDER BY tier""".stripMargin
-  }
-
-  /** Mean nearest-centroid distance (k-means inertia) of quantized source
-    * `src` (vec_id, vq) against centroid relation `cents` (cid, s, n),
-    * per-vector floor(sqrt(min dsq)) in integer 2^-20 units, then an
-    * integer mean (non-negative, so Spark's truncating `div` and DuckDB's
-    * flooring `//` agree). Defines `<name>` with one column `q`. */
-  private def duckDriftCtes(name: String, src: String, cents: String): String =
-    s"""${name}_s AS (SELECT v.vec_id,
-       |    list_sum(list_transform(range(1, 65), i -> (c.s[i] / c.n - (v.vq[i])::DOUBLE) * (c.s[i] / c.n - (v.vq[i])::DOUBLE))) AS dsq
-       |  FROM $src v CROSS JOIN $cents c),
-       |${name}_m AS (SELECT vec_id, MIN(dsq) AS best FROM ${name}_s GROUP BY vec_id),
-       |$name AS (SELECT CAST(SUM(CAST(floor(sqrt(best)) AS BIGINT)) // COUNT(*) AS BIGINT) AS q FROM ${name}_m)""".stripMargin
-
-  /** ann_ivf_drift's replay: the original codebook trains on the corpus
-    * slice (unprefixed CTEs — `e`, `c2`), the recovery codebook on the
-    * mean-offset slice (`r`-prefixed — `re`, `rc2`); each drift scalar is
-    * a mean nearest-centroid-distance aggregate. The 1250/1000 factor
-    * mirrors [[graft.ops.Ivf.DefaultDriftTolerancePermille]] (25%). */
-  private def annIvfDriftSql: String = {
-    val corpusSrc = "(SELECT * FROM embeddings WHERE vec_id % 5 <> 0)"
-    val shiftCorpusSrc =
-      "(SELECT vec_id, list_transform(embedding, x -> x + CAST(0.5 AS FLOAT)) AS embedding FROM embeddings WHERE vec_id % 5 <> 0)"
-    s"""WITH ${duckIvfTrainCtes(corpusSrc)},
-       |${duckIvfTrainCtes(shiftCorpusSrc, "r")},
-       |iq AS (SELECT vec_id, list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS vq
-       |  FROM embeddings WHERE vec_id % 5 = 0),
-       |siq AS (SELECT vec_id, list_transform(embedding, x -> CAST(floor(CAST(x + CAST(0.5 AS FLOAT) AS DOUBLE) * 1048576.0) AS BIGINT)) AS vq
-       |  FROM embeddings WHERE vec_id % 5 = 0),
-       |${duckDriftCtes("tref", "e", "c2")},
-       |${duckDriftCtes("binl", "iq", "c2")},
-       |${duckDriftCtes("bsh", "siq", "c2")},
-       |${duckDriftCtes("rref", "re", "rc2")},
-       |${duckDriftCtes("rsh", "siq", "rc2")}
-       |SELECT phase, mean_dist_q, ref_dist_q,
-       |  CAST(CASE WHEN mean_dist_q * 1000 > ref_dist_q * 1250 THEN 1 ELSE 0 END AS BIGINT) AS stale
-       |FROM (
-       |  SELECT 'batch_inline' AS phase, (SELECT q FROM binl) AS mean_dist_q, (SELECT q FROM tref) AS ref_dist_q
-       |  UNION ALL SELECT 'batch_shifted', (SELECT q FROM bsh), (SELECT q FROM tref)
-       |  UNION ALL SELECT 'retrained_shifted', (SELECT q FROM rsh), (SELECT q FROM rref)
-       |  UNION ALL SELECT 'train_ref', (SELECT q FROM tref), (SELECT q FROM tref)
-       |) ORDER BY phase""".stripMargin
-  }
-
-  private def baseOracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """WITH c AS (SELECT l_returnflag, l_linestatus,
-        |  CAST(ROUND(l_quantity*100) AS BIGINT) AS qty_c,
-        |  CAST(ROUND(l_extendedprice*100) AS BIGINT) AS price_c,
-        |  CAST(ROUND(l_discount*100) AS BIGINT) AS disc_c,
-        |  CAST(ROUND(l_tax*100) AS BIGINT) AS tax_c
-        |  FROM lineitem WHERE l_shipdate < TIMESTAMP '1998-09-03 00:00:00')
-        |SELECT l_returnflag, l_linestatus,
-        |  COUNT(*) AS count_order,
-        |  CAST(SUM(qty_c) AS BIGINT) AS sum_qty_c,
-        |  CAST(SUM(price_c) AS BIGINT) AS sum_base_c,
-        |  CAST(SUM(price_c*(100-disc_c)) AS BIGINT) AS sum_disc_c4,
-        |  CAST(SUM(price_c*(100-disc_c)*(100+tax_c)) AS BIGINT) AS sum_charge_c6,
-        |  CAST(SUM(qty_c) // COUNT(*) AS BIGINT) AS avg_qty_c
-        |FROM c GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "mine_bitext_scale" ->
-      // two-level replay: the shared hierarchical chain supplies the
-      // composite cells; the bitext margin tail is unchanged
-      s"""WITH ${duckHierCellCtes(
-             "(SELECT CAST(greatest(4, CAST(ceil(sqrt(COUNT(*) / 100.0)) AS BIGINT)) AS BIGINT) FROM embeddings)")},
-        |a AS (SELECT e2.vec_id AS id_a, e2.embedding AS va, h.cluster
-        |      FROM embeddings e2 JOIN hcell h ON h.vec_id = e2.vec_id
-        |      WHERE e2.vec_id % 2 = 0),
-        |b AS (SELECT e2.vec_id AS id_b, e2.embedding AS vb, h.cluster
-        |      FROM embeddings e2 JOIN hcell h ON h.vec_id = e2.vec_id
-        |      WHERE e2.vec_id % 2 = 1),
-        |p AS (SELECT id_a, id_b,
-        |        CAST(floor(${duckCosine("va", "vb")} * 1048576.0) AS BIGINT) AS q
-        |      FROM a JOIN b ON a.cluster = b.cluster),
-        |pp AS (SELECT * FROM p WHERE q > 0),
-        |${duckBitextTail()}""".stripMargin,
-    "mine_bitext_incremental" ->
-      // the incremental posture's oracle is a FROM-SCRATCH blocked run
-      // under the persisted codebook: train the two-level chain on the
-      // BASE slice only (the epoch corpus), assign ALL vectors against
-      // the final centroids (the split chain — what readModel2 +
-      // assignHierarchical compute), mine within the composite cells.
-      // Equality pins the whole maintenance algebra: the per-cell
-      // decomposition of the margin tail, the untouched-pairs reuse, the
-      // touched-cell re-mine, and the model round-trip.
-      s"""WITH ${duckHierCellCtes(
-             k2Sql = "(SELECT CAST(greatest(4, CAST(ceil(sqrt(COUNT(*) / 100.0)) AS BIGINT)) AS BIGINT) FROM embeddings WHERE vec_id % (SELECT greatest(50, COUNT(*) // 1000) FROM embeddings) <> 0)",
-             trainSrc = "(SELECT * FROM embeddings WHERE vec_id % (SELECT greatest(50, COUNT(*) // 1000) FROM embeddings) <> 0)",
-             assignSrc = "embeddings")},
-        |a AS (SELECT e2.vec_id AS id_a, e2.embedding AS va, h.cluster
-        |      FROM embeddings e2 JOIN hcell h ON h.vec_id = e2.vec_id
-        |      WHERE e2.vec_id % 2 = 0),
-        |b AS (SELECT e2.vec_id AS id_b, e2.embedding AS vb, h.cluster
-        |      FROM embeddings e2 JOIN hcell h ON h.vec_id = e2.vec_id
-        |      WHERE e2.vec_id % 2 = 1),
-        |p AS (SELECT id_a, id_b,
-        |        CAST(floor(${duckCosine("va", "vb")} * 1048576.0) AS BIGINT) AS q
-        |      FROM a JOIN b ON a.cluster = b.cluster),
-        |pp AS (SELECT * FROM p WHERE q > 0),
-        |${duckBitextTail()}""".stripMargin,
-    "q3_top_orders" ->
-      """SELECT o_orderkey,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)*(100-CAST(ROUND(l_discount*100) AS BIGINT))) AS BIGINT) AS revenue_c4,
-        |  COUNT(*) AS n_items
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderstatus = 'O'
-        |GROUP BY o_orderkey ORDER BY revenue_c4 DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q5_revenue_nation" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)*(100-CAST(ROUND(l_discount*100) AS BIGINT))) AS BIGINT) AS revenue_c4,
-        |  COUNT(*) AS n_items
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_regionkey < 3
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, COUNT(*) AS n FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q10_above_avg" ->
-      """SELECT o.o_custkey, COUNT(*) AS n_above FROM orders o
-        |WHERE CAST(ROUND(o.o_totalprice*100) AS BIGINT) >
-        |  (SELECT CAST(SUM(CAST(ROUND(o2.o_totalprice*100) AS BIGINT)) // COUNT(*) AS BIGINT)
-        |   FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q9_setops" ->
-      """WITH ld AS (SELECT doc_id FROM documents WHERE length(text) >= 200),
-        |sn AS (SELECT doc_id FROM documents WHERE doc_id % 5 = 0)
-        |SELECT doc_id, 'except' AS op FROM (SELECT doc_id FROM ld EXCEPT SELECT doc_id FROM sn)
-        |UNION ALL
-        |SELECT doc_id, 'intersect' AS op FROM (SELECT doc_id FROM ld INTERSECT SELECT doc_id FROM sn)
-        |ORDER BY op, doc_id""".stripMargin,
-    "q6_running_window" ->
-      """WITH w AS (SELECT l_suppkey, CAST(ROUND(l_quantity*100) AS BIGINT) AS qty_c,
-        |    CAST(row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber) AS INT) AS rn,
-        |    CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) OVER (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_qty_c
-        |  FROM lineitem)
-        |SELECT l_suppkey, rn, qty_c, running_qty_c FROM w WHERE rn <= 20
-        |ORDER BY l_suppkey, rn""".stripMargin,
-    "q7_distinct_agg" ->
-      """SELECT l_returnflag, COUNT(DISTINCT l_suppkey) AS n_supps,
-        |  COUNT(DISTINCT l_partkey) AS n_parts, COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q8_rollup" ->
-      """SELECT coalesce(l_returnflag, '(all)') AS l_returnflag,
-        |  coalesce(l_linestatus, '(all)') AS l_linestatus,
-        |  CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) AS BIGINT) AS sum_qty_c,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY 1, 2""".stripMargin,
-    "q11_pivot" ->
-      """SELECT o_orderpriority,
-        |  COUNT(*) FILTER (o_orderstatus = 'F') AS f_n,
-        |  coalesce(CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) FILTER (o_orderstatus = 'F') AS BIGINT), 0) AS f_rev_c,
-        |  COUNT(*) FILTER (o_orderstatus = 'O') AS o_n,
-        |  coalesce(CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) FILTER (o_orderstatus = 'O') AS BIGINT), 0) AS o_rev_c,
-        |  COUNT(*) FILTER (o_orderstatus = 'P') AS p_n,
-        |  coalesce(CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) FILTER (o_orderstatus = 'P') AS BIGINT), 0) AS p_rev_c
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "topk_per_key" ->
-      """WITH r AS (SELECT CAST(o_custkey AS BIGINT) AS o_custkey,
-        |    CAST(o_orderkey AS BIGINT) AS o_orderkey,
-        |    CAST(ROUND(o_totalprice*100) AS BIGINT) AS price_c,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY CAST(ROUND(o_totalprice*100) AS BIGINT) DESC, o_orderkey) AS rk
-        |  FROM orders)
-        |SELECT o_custkey, o_orderkey, price_c, CAST(rk AS INT) AS rank
-        |FROM r WHERE rk <= 3 ORDER BY o_custkey, rank""".stripMargin,
-    "q13_full_outer" ->
-      """WITH s AS (SELECT s_nationkey AS nationkey, COUNT(*) AS n_sup
-        |           FROM supplier WHERE s_acctbal > 5000 GROUP BY 1),
-        |c AS (SELECT c_nationkey AS nationkey, COUNT(*) AS n_cust
-        |      FROM customer WHERE c_acctbal > 5000 GROUP BY 1)
-        |SELECT nationkey, coalesce(n_sup, 0) AS n_sup, coalesce(n_cust, 0) AS n_cust
-        |FROM s FULL JOIN c USING (nationkey)
-        |ORDER BY nationkey""".stripMargin,
-    "q14_window_suite" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(rank() OVER w AS INT) AS rnk,
-        |  CAST(dense_rank() OVER w AS INT) AS drnk,
-        |  CAST(ntile(4) OVER w AS INT) AS quartile,
-        |  coalesce(lag(o_orderkey, 1) OVER w, -1) AS prev_order,
-        |  coalesce(lead(o_orderkey, 1) OVER w, -1) AS next_order,
-        |  CAST(first_value(CAST(ROUND(o_totalprice*100) AS BIGINT)) OVER w AS BIGINT) AS first_price_c,
-        |  CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT))
-        |    OVER (PARTITION BY o_custkey ORDER BY o_orderkey ROWS UNBOUNDED PRECEDING) AS BIGINT) AS run_price_c
-        |FROM orders WHERE o_custkey % 50 = 0
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q15_grouping_sets" ->
-      """SELECT coalesce(l_returnflag, '(all)') AS l_returnflag,
-        |  coalesce(l_linestatus, '(all)') AS l_linestatus,
-        |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS INT) AS gid,
-        |  CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) AS BIGINT) AS sum_qty_c,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY gid, 1, 2""".stripMargin,
-    "q12_cube" ->
-      """SELECT coalesce(l_returnflag, '(all)') AS l_returnflag,
-        |  coalesce(l_linestatus, '(all)') AS l_linestatus,
-        |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS INT) AS gid,
-        |  CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) AS BIGINT) AS sum_qty_c,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY 1, 2, gid""".stripMargin,
-    "doi_normalize" ->
-      s"""WITH d AS (SELECT doc_id, $DuckDoiRaw AS doi_raw FROM documents)
-         |SELECT doc_id, $DuckNormalizeDoi AS doi_norm FROM d ORDER BY doc_id""".stripMargin,
-    "json_roundtrip" ->
-      """SELECT doc_id, source, lang, text FROM documents
-        |WHERE doc_id % 13 = 0 ORDER BY doc_id""".stripMargin,
-    "pmcid_canonical" ->
-      """WITH r AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 4 = 0 THEN 'PMC' || doc_id
-        |       WHEN doc_id % 4 = 1 THEN 'pmc' || doc_id
-        |       WHEN doc_id % 4 = 2 THEN CAST(doc_id AS VARCHAR)
-        |       ELSE ' PMC' || doc_id || ' ' END AS pmcid_raw
-        |  FROM documents)
-        |SELECT doc_id, pmcid_raw,
-        |       'PMC' || regexp_replace(pmcid_raw, '[^0-9]', '', 'g') AS pmcid
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "html_unescape" ->
-      // three unescape rounds, each a replace chain ordered so no replace
-      // output feeds a later replace in the SAME round (the &-producing
-      // entities amp/#38/#x26 come last) — sequential replaces then equal
-      // the Scala single-pass regex round, and three rounds reach the
-      // fixpoint for <=triple-escaped payloads exactly like the operator
-      """WITH r AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 5 = 0 THEN 'Fish &amp; Chips'
-        |       WHEN doc_id % 5 = 1 THEN '&amp;amp; nested'
-        |       WHEN doc_id % 5 = 2 THEN '&lt;p&gt;text&lt;/p&gt;'
-        |       WHEN doc_id % 5 = 3 THEN 'q&quot;&apos;&#38;&#x3C;'
-        |       ELSE 'no entities here' END AS raw
-        |  FROM documents),
-        |u1 AS (SELECT doc_id, raw, replace(replace(replace(replace(replace(replace(raw,
-        |         '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', ''''), '&#x3C;', '<'), '&#38;', '&') AS s1 FROM r),
-        |u1b AS (SELECT doc_id, raw, replace(s1, '&amp;', '&') AS s1 FROM u1),
-        |u2 AS (SELECT doc_id, raw, replace(replace(replace(replace(replace(replace(replace(s1,
-        |         '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', ''''), '&#x3C;', '<'), '&#38;', '&'), '&amp;', '&') AS s2 FROM u1b),
-        |u3 AS (SELECT doc_id, raw, replace(replace(replace(replace(replace(replace(replace(s2,
-        |         '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', ''''), '&#x3C;', '<'), '&#38;', '&'), '&amp;', '&') AS s3 FROM u2)
-        |SELECT doc_id, raw, s3 AS unescaped FROM u3 ORDER BY doc_id""".stripMargin,
-    "normalize_funnel" ->
-      s"""WITH d AS (SELECT doc_id, text, $DuckDoiRaw AS doi_raw, $JournalRawSql AS journal_raw FROM documents)
-         |SELECT doc_id,
-         |  nullif(regexp_extract(doi_raw, '(?i)10[.][0-9]{4,9}/[^ ]+', 0), '') AS doi_extracted,
-         |  nullif(trim(regexp_replace(regexp_replace(journal_raw, '[{}]', '', 'g'), ' +', ' ', 'g')), '') AS journal_clean,
-         |  nullif(trim(regexp_replace(regexp_replace(substring(text, 1, 40), '[{}]', '', 'g'), ' +', ' ', 'g')), '') AS title_clean
-         |FROM d ORDER BY doc_id""".stripMargin,
-    "doc_id_derive" ->
-      s"""WITH d AS (SELECT doc_id, text, source, $DuckDoiRaw AS doi_raw FROM documents),
-         |n AS (SELECT doc_id, text, source,
-         |  CASE WHEN doc_id % 3 <> 0 THEN $DuckNormalizeDoi END AS doi_norm FROM d)
-         |SELECT doc_id,
-         |  CASE WHEN doi_norm IS NOT NULL THEN doi_norm
-         |       ELSE 'hash:' || substring(sha256(substring(text, 1, 30) || '|' || upper(source)), 1, 16) END AS doc_key
-         |FROM n ORDER BY doc_id""".stripMargin,
-    "dedup_exact" ->
-      """SELECT doc_id, md5(text) AS text_hash,
-        |  MIN(doc_id) OVER (PARTITION BY md5(text)) AS canonical_id,
-        |  CASE WHEN doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text)) THEN 1 ELSE 0 END AS is_dup
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "filter_min_fulltext" ->
-      """SELECT doc_id, CAST(length(text) AS BIGINT) AS body_len FROM documents
-        |WHERE length(text) >= 200 ORDER BY doc_id""".stripMargin,
-    "enrich_pmcid" ->
-      """WITH idmap AS (SELECT doc_id, 'PMC' || doc_id AS pmcid FROM documents WHERE doc_id % 7 <> 0)
-        |SELECT d.doc_id, i.pmcid, CASE WHEN i.pmcid IS NULL THEN 'No PMCID' END AS reason
-        |FROM documents d LEFT JOIN idmap i ON d.doc_id = i.doc_id ORDER BY d.doc_id""".stripMargin,
-    "resume_antijoin" ->
-      """SELECT doc_id, lang, source FROM documents d
-        |WHERE NOT EXISTS (SELECT 1 FROM documents s WHERE s.doc_id % 5 = 0 AND s.doc_id = d.doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "enrich_fallback" ->
-      // the tiered transport's taxonomy replayed as arithmetic: batch hit,
-      // batch-recorded failure, second-tier single hit, single failure,
-      // and the Retry-After exhaustion lane's exact runner message
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 3 = 1 THEN 'B' || doc_id
-        |       WHEN doc_id % 6 = 0 THEN 'S' || doc_id END AS value,
-        |  CASE WHEN doc_id % 3 = 2 THEN 'batch miss: http 404'
-        |       WHEN doc_id % 12 = 3 THEN 'single miss: not found'
-        |       WHEN doc_id % 12 = 9 THEN 'fetch failed: HTTP 429, retry after 1ms' END AS reason
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "split_failures" ->
-      s"""$AssembledSql
-         |SELECT doc_id, reason FROM assembled WHERE NOT ok ORDER BY doc_id""".stripMargin,
-    "summary_counts" ->
-      s"""$AssembledSql
-         |SELECT (SELECT COUNT(*) FROM documents) AS input_unique_doi,
-         |  CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT) AS appended,
-         |  (SELECT COUNT(*) FROM documents WHERE doc_id % 5 = 0) AS skipped_existing,
-         |  CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT) AS failures
-         |FROM assembled""".stripMargin,
-    "skip_reasons" ->
-      s"""$AssembledSql
-         |SELECT reason, COUNT(*) AS n FROM assembled WHERE NOT ok GROUP BY reason ORDER BY reason""".stripMargin,
-    "chunk_fixed" ->
-      """WITH t AS (SELECT doc_id, trim(regexp_replace(text, '\s+', ' ', 'g')) AS t FROM documents),
-        |w AS (SELECT doc_id, t,
-        |        unnest(generate_series(0, CAST(1 + greatest(0, ceil((length(t) - 120) / 108.0)) AS INT) - 1)) AS chunk_index
-        |      FROM t WHERE length(t) > 0)
-        |SELECT doc_id || '::c' || chunk_index AS chunk_id, doc_id, chunk_index,
-        |       trim(substring(t, chunk_index * 108 + 1, 120)) AS chunk_text
-        |FROM w WHERE trim(substring(t, chunk_index * 108 + 1, 120)) <> ''
-        |ORDER BY doc_id, chunk_index""".stripMargin,
-    "chunk_tokens" ->
-      s"""WITH $DuckTokenChunks
-         |SELECT doc_id || '::t' || chunk_index AS chunk_id, doc_id, chunk_index, n_tokens,
-         |       array_to_string(list_slice(toks, chunk_index * 32 + 1, chunk_index * 32 + 40), ' ') AS chunk_text
-         |FROM tc ORDER BY doc_id, chunk_index""".stripMargin,
-    "dedup_minhash" ->
-      s"""WITH $DuckMinhashPairs
-        |SELECT doc_a, doc_b FROM mh_pairs ORDER BY 1, 2""".stripMargin,
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE $DuckMinhashPairs,
-        |$DuckComponentsLab
-        |SELECT l.doc_id, l.cluster_id, s.cluster_size,
-        |  CAST(CASE WHEN l.doc_id = l.cluster_id THEN 1 ELSE 0 END AS INT) AS is_canonical
-        |FROM lab l JOIN sz s ON l.cluster_id = s.cluster_id
-        |ORDER BY l.doc_id""".stripMargin,
-    "dedup_cluster_sizes" ->
-      // shared pairs + components labeling; histogram over the sz
-      // relation, corpus total from documents
-      s"""WITH RECURSIVE $DuckMinhashPairs,
-        |$DuckComponentsLab,
-        |cs_hist AS (SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters FROM sz GROUP BY 1),
-        |cs_tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM documents)
-        |SELECT CAST(cluster_size AS BIGINT) AS cluster_size, n_clusters,
-        |  CAST(cluster_size * n_clusters AS BIGINT) AS n_docs,
-        |  CAST((10000 * cluster_size * n_clusters) // n_total AS BIGINT) AS docs_bp
-        |FROM cs_hist, cs_tot ORDER BY cluster_size""".stripMargin,
-    "dedup_snm" ->
-      // same prefix key; the window pairing replays as a rank self-join
-      // on gap ∈ [1, 3] — ties in the key break by doc_id in both engines
-      """WITH k AS (SELECT doc_id,
-        |    lower(substring(trim(regexp_replace(text, '\s+', ' ', 'g')), 1, 12)) AS key
-        |  FROM documents),
-        |r AS (SELECT doc_id, row_number() OVER (ORDER BY key, doc_id) AS rn FROM k)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(b.rn - a.rn AS BIGINT) AS gap
-        |FROM r a JOIN r b ON b.rn - a.rn BETWEEN 1 AND 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "attribute_spans" ->
-      // both sides' winnow replay (answers prefixed "aw"), corpus
-      // postings capped at 50, fp-keyed join, top-1 by (shared, source)
-      s"""WITH ${duckWinnowCtes("documents")},
-        |${duckWinnowCtes("(SELECT doc_id + 10000000 AS doc_id, substring(text, 30, 300) AS text FROM documents WHERE doc_id % 101 = 0)", "aw")},
-        |cpost AS (SELECT DISTINCT doc_id AS source_id, fp FROM wfp),
-        |ckeep AS (SELECT fp FROM cpost GROUP BY fp HAVING COUNT(*) <= 50),
-        |apost AS (SELECT DISTINCT doc_id AS answer_id, fp FROM awwfp),
-        |tot AS (SELECT answer_id, CAST(COUNT(*) AS BIGINT) AS n_fp FROM apost GROUP BY 1),
-        |sh AS (SELECT answer_id, source_id, CAST(COUNT(*) AS BIGINT) AS shared
-        |       FROM apost JOIN cpost USING (fp) JOIN ckeep USING (fp) GROUP BY 1, 2),
-        |topa AS (SELECT answer_id, source_id, shared FROM (
-        |    SELECT answer_id, source_id, shared,
-        |      row_number() OVER (PARTITION BY answer_id ORDER BY shared DESC, source_id) AS rn
-        |    FROM sh) WHERE rn = 1)
-        |SELECT t.answer_id, t.source_id, t.shared, tot.n_fp,
-        |  CAST((10000 * t.shared) // tot.n_fp AS BIGINT) AS share_bp
-        |FROM topa t JOIN tot USING (answer_id) ORDER BY t.answer_id""".stripMargin,
-    "dedup_norm_ladder" ->
-      // same plants, same four canonical forms, one aggregate unpivoted
-      """WITH src AS (SELECT text FROM documents
-        |  UNION ALL SELECT text || '  ' FROM documents WHERE doc_id % 40 = 0
-        |  UNION ALL SELECT upper(text) FROM documents WHERE doc_id % 30 = 0
-        |  UNION ALL SELECT text || '!!' FROM documents WHERE doc_id % 70 = 0),
-        |b AS (SELECT CAST('0x' || substring(md5(text), 1, 15) AS BIGINT) AS h1,
-        |    CAST('0x' || substring(md5(trim(regexp_replace(text, '\s+', ' ', 'g'))), 1, 15) AS BIGINT) AS h2,
-        |    CAST('0x' || substring(md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))), 1, 15) AS BIGINT) AS h3,
-        |    CAST('0x' || substring(md5(regexp_replace(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), '[^a-z0-9 ]', '', 'g')), 1, 15) AS BIGINT) AS h4
-        |  FROM src),
-        |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(COUNT(DISTINCT h1) AS BIGINT) AS d1, CAST(COUNT(DISTINCT h2) AS BIGINT) AS d2,
-        |    CAST(COUNT(DISTINCT h3) AS BIGINT) AS d3, CAST(COUNT(DISTINCT h4) AS BIGINT) AS d4
-        |  FROM b)
-        |SELECT 'a_raw' AS tier, n AS n_docs, d1 AS n_distinct, n - d1 AS dup_rows FROM a
-        |UNION ALL SELECT 'b_whitespace', n, d2, n - d2 FROM a
-        |UNION ALL SELECT 'c_lowercase', n, d3, n - d3 FROM a
-        |UNION ALL SELECT 'd_alnum', n, d4, n - d4 FROM a
-        |ORDER BY tier""".stripMargin,
-    "code_clones" ->
-      // same bijective-rename plant, same relational alpha-renaming:
-      // first-occurrence rank per (doc, term), canonical sequence
-      // rebuilt in pos order, md5-grouped
-      """WITH src AS (SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 10000000,
-        |    regexp_replace(regexp_replace(regexp_replace(text,
-        |      '\bspark\b', 'zephyr', 'g'), '\bjoin\b', 'quill', 'g'),
-        |      '\btable\b', 'plinth', 'g')
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM src),
-        |tp0 AS (SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS i FROM t),
-        |tp AS (SELECT doc_id, i - 1 AS pos, toks[i] AS term FROM tp0 WHERE toks[i] <> ''),
-        |fs AS (SELECT doc_id, term, MIN(pos) AS fp FROM tp GROUP BY 1, 2),
-        |fsr AS (SELECT doc_id, term,
-        |    CAST(dense_rank() OVER (PARTITION BY doc_id ORDER BY fp) AS BIGINT) AS cid FROM fs),
-        |cn AS (SELECT tp.doc_id,
-        |    md5(string_agg(CAST(cid AS VARCHAR), ' ' ORDER BY tp.pos)) AS ch
-        |  FROM tp JOIN fsr ON tp.doc_id = fsr.doc_id AND tp.term = fsr.term
-        |  GROUP BY tp.doc_id),
-        |g AS (SELECT ch, CAST(COUNT(*) AS BIGINT) AS group_size, MIN(doc_id) AS clone_rep
-        |      FROM cn GROUP BY 1 HAVING COUNT(*) > 1)
-        |SELECT cn.doc_id, clone_rep, group_size
-        |FROM cn JOIN g USING (ch) ORDER BY cn.doc_id""".stripMargin,
-    "dedup_edit" ->
-      // the dedup_snm rank self-join, then levenshtein over the shared
-      // 64-char normalized prefix; sim in bp with the empty-field guard
-      """WITH k AS (SELECT doc_id,
-        |    lower(substring(trim(regexp_replace(text, '\s+', ' ', 'g')), 1, 12)) AS key,
-        |    substring(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), 1, 64) AS n64
-        |  FROM documents),
-        |r AS (SELECT doc_id, key, n64, row_number() OVER (ORDER BY key, doc_id) AS rn FROM k),
-        |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(levenshtein(a.n64, b.n64) AS BIGINT) AS dist,
-        |    CAST(greatest(len(a.n64), len(b.n64)) AS BIGINT) AS ml
-        |  FROM r a JOIN r b ON b.rn - a.rn BETWEEN 1 AND 3),
-        |s AS (SELECT doc_a, doc_b, dist,
-        |    CASE WHEN ml = 0 THEN CAST(10000 AS BIGINT)
-        |         ELSE CAST((10000 * (ml - dist)) // ml AS BIGINT) END AS sim_bp FROM p)
-        |SELECT doc_a, doc_b, dist, sim_bp FROM s WHERE sim_bp >= 5000
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "graph_pagerank" ->
-      // shared edge synthesis, then four unrolled exact-integer
-      // iterations — the Spark loop and this chain share the floor-div
-      // arithmetic digit for digit
-      s"""WITH $DuckGraphEdges,
-        |g_nodes AS (SELECT doc_id AS node FROM documents),
-        |g_nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM g_nodes),
-        |g_r0 AS (SELECT node, CAST(CAST(1000000000 AS BIGINT) // n AS BIGINT) AS pr FROM g_nodes CROSS JOIN g_nn),
-        |${duckPrIter(1)},
-        |${duckPrIter(2)},
-        |${duckPrIter(3)},
-        |${duckPrIter(4)}
-        |SELECT r.node, CAST(coalesce(o.odeg, 0) AS BIGINT) AS out_degree, r.pr AS pr_nano
-        |FROM g_r4 r LEFT JOIN g_odeg o ON o.src = r.node ORDER BY r.node""".stripMargin,
-    "graph_pagerank_incremental" ->
-      // the incremental leg's oracle IS the full recompute — identical
-      // SQL to graph_pagerank: maintained-state + delta-edge application
-      // must be indistinguishable from scratch, digit for digit
-      s"""WITH $DuckGraphEdges,
-        |g_nodes AS (SELECT doc_id AS node FROM documents),
-        |g_nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM g_nodes),
-        |g_r0 AS (SELECT node, CAST(CAST(1000000000 AS BIGINT) // n AS BIGINT) AS pr FROM g_nodes CROSS JOIN g_nn),
-        |${duckPrIter(1)},
-        |${duckPrIter(2)},
-        |${duckPrIter(3)},
-        |${duckPrIter(4)}
-        |SELECT r.node, CAST(coalesce(o.odeg, 0) AS BIGINT) AS out_degree, r.pr AS pr_nano
-        |FROM g_r4 r LEFT JOIN g_odeg o ON o.src = r.node ORDER BY r.node""".stripMargin,
-    "graph_domain_rank" ->
-      // INDEPENDENT derivation on purpose: the oracle computes the
-      // planted domain edges ARITHMETICALLY (doc_id%61 → (3i+1)%61,
-      // (7i+2)%61, and (11i+5)%61 on the %3 slice), while the engine must
-      // recover exactly those edges through href regexp extraction +
-      // urlParts canonicalization + domain-digit node ids — so the
-      // hash-match pins the whole extraction chain, not just the rank
-      // loop (which reuses graph_pagerank's exact-integer iterations)
-      s"""WITH l_e0 AS (
-        |    SELECT doc_id % 61 AS src, (doc_id * 3 + 1) % 61 AS dst FROM documents
-        |    UNION ALL SELECT doc_id % 61, (doc_id * 7 + 2) % 61 FROM documents
-        |    UNION ALL SELECT doc_id % 61, (doc_id * 11 + 5) % 61 FROM documents WHERE doc_id % 3 = 0),
-        |g_e AS (SELECT DISTINCT src, dst FROM l_e0 WHERE src <> dst),
-        |g_odeg AS (SELECT src, count(*) AS odeg FROM g_e GROUP BY src),
-        |g_nodes AS (SELECT unnest(range(0, 61)) AS node),
-        |g_nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM g_nodes),
-        |g_r0 AS (SELECT node, CAST(CAST(1000000000 AS BIGINT) // n AS BIGINT) AS pr FROM g_nodes CROSS JOIN g_nn),
-        |${duckPrIter(1)},
-        |${duckPrIter(2)},
-        |${duckPrIter(3)},
-        |${duckPrIter(4)}
-        |SELECT r.node, CAST(coalesce(o.odeg, 0) AS BIGINT) AS out_degree, r.pr AS pr_nano
-        |FROM g_r4 r LEFT JOIN g_odeg o ON o.src = r.node ORDER BY r.node""".stripMargin,
-    "graph_ppr" ->
-      // seed flags in the node relation, seed count as the broadcast
-      // 1-row aggregate, four unrolled seed-teleport iterations
-      s"""WITH $DuckGraphEdges,
-        |g_snodes AS (SELECT doc_id AS node,
-        |    CASE WHEN doc_id % 10 = 0 THEN 1 ELSE 0 END AS is_seed FROM documents),
-        |g_ns AS (SELECT CAST(sum(is_seed) AS BIGINT) AS ns FROM g_snodes),
-        |g_pr0 AS (SELECT node, is_seed,
-        |    CAST(CASE WHEN is_seed = 1 THEN CAST(1000000000 AS BIGINT) // ns ELSE 0 END AS BIGINT) AS pr
-        |  FROM g_snodes CROSS JOIN g_ns),
-        |${duckPprIter(1)},
-        |${duckPprIter(2)},
-        |${duckPprIter(3)},
-        |${duckPprIter(4)}
-        |SELECT node, CAST(is_seed AS BIGINT) AS is_seed, pr AS pr_nano
-        |FROM g_pr4 ORDER BY node""".stripMargin,
-    "graph_degrees" ->
-      // same edges; undirected degree, log2 bucket via bin-length bit
-      // arithmetic, share against the node total
-      s"""WITH $DuckGraphEdges,
-        |g_und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM g_e),
-        |d AS (SELECT node, CAST(count(*) AS BIGINT) AS deg
-        |  FROM (SELECT unnest([a, b]) AS node FROM g_und) GROUP BY node),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM d),
-        |h AS (SELECT CAST(length(bin(deg)) - 1 AS BIGINT) AS bucket,
-        |    CAST(count(*) AS BIGINT) AS n_nodes, min(deg) AS min_deg, max(deg) AS max_deg
-        |  FROM d GROUP BY 1)
-        |SELECT bucket, n_nodes, min_deg, max_deg,
-        |  CAST((10000 * n_nodes) // n_total AS BIGINT) AS share_bp
-        |FROM h CROSS JOIN t ORDER BY bucket""".stripMargin,
-    "stream_graph_degrees" ->
-      // the streaming face shares the batch legs' full-recompute oracle:
-      // per-batch committed edge deltas + the read-side distinct-union
-      // merge must equal recomputing the whole graph's degrees
-      s"""WITH $DuckGraphEdges,
-        |g_und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM g_e),
-        |d AS (SELECT node, CAST(count(*) AS BIGINT) AS deg
-        |  FROM (SELECT unnest([a, b]) AS node FROM g_und) GROUP BY node),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM d),
-        |h AS (SELECT CAST(length(bin(deg)) - 1 AS BIGINT) AS bucket,
-        |    CAST(count(*) AS BIGINT) AS n_nodes, min(deg) AS min_deg, max(deg) AS max_deg
-        |  FROM d GROUP BY 1)
-        |SELECT bucket, n_nodes, min_deg, max_deg,
-        |  CAST((10000 * n_nodes) // n_total AS BIGINT) AS share_bp
-        |FROM h CROSS JOIN t ORDER BY bucket""".stripMargin,
-    "graph_degrees_incremental" ->
-      // full-recompute oracle, identical to graph_degrees: the maintained
-      // degree state after the delta merge must equal recomputing degrees
-      // over the whole graph
-      s"""WITH $DuckGraphEdges,
-        |g_und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM g_e),
-        |d AS (SELECT node, CAST(count(*) AS BIGINT) AS deg
-        |  FROM (SELECT unnest([a, b]) AS node FROM g_und) GROUP BY node),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM d),
-        |h AS (SELECT CAST(length(bin(deg)) - 1 AS BIGINT) AS bucket,
-        |    CAST(count(*) AS BIGINT) AS n_nodes, min(deg) AS min_deg, max(deg) AS max_deg
-        |  FROM d GROUP BY 1)
-        |SELECT bucket, n_nodes, min_deg, max_deg,
-        |  CAST((10000 * n_nodes) // n_total AS BIGINT) AS share_bp
-        |FROM h CROSS JOIN t ORDER BY bucket""".stripMargin,
-    "graph_triangles" ->
-      // same edges; canonical undirected dedup, degree orientation, the
-      // ≺-ordered wedge self-join and the closing-edge probe
-      s"""WITH $DuckGraphEdges,
-        |g_und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM g_e),
-        |g_deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg
-        |  FROM (SELECT unnest([a, b]) AS node FROM g_und) GROUP BY node),
-        |g_o AS (SELECT CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b) THEN u.a ELSE u.b END AS u,
-        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b) THEN u.b ELSE u.a END AS v
-        |  FROM g_und u JOIN g_deg da ON da.node = u.a JOIN g_deg db ON db.node = u.b),
-        |g_ov AS (SELECT o.u, o.v, d.deg AS dv FROM g_o o JOIN g_deg d ON d.node = o.v),
-        |g_tri AS (SELECT w.x, w.y, w.z FROM (
-        |    SELECT o1.u AS x, o1.v AS y, o2.v AS z FROM g_ov o1 JOIN g_ov o2
-        |      ON o1.u = o2.u AND (o1.dv < o2.dv OR (o1.dv = o2.dv AND o1.v < o2.v))) w
-        |  JOIN g_o c ON c.u = w.y AND c.v = w.z),
-        |g_pt AS (SELECT node, CAST(count(*) AS BIGINT) AS tri
-        |  FROM (SELECT unnest([x, y, z]) AS node FROM g_tri) GROUP BY node)
-        |SELECT d.node, d.deg AS degree, CAST(coalesce(p.tri, 0) AS BIGINT) AS n_triangles,
-        |  CAST(CASE WHEN d.deg >= 2 THEN (2 * coalesce(p.tri, 0) * 10000) // (d.deg * (d.deg - 1)) ELSE 0 END AS BIGINT) AS clustering_bp
-        |FROM g_deg d LEFT JOIN g_pt p USING (node) ORDER BY d.node""".stripMargin,
-    "graph_triangles_incremental" ->
-      // full-recompute oracle, identical to graph_triangles: the
-      // maintained per-node counts after the delta's wedge-closure
-      // increment must equal re-counting every triangle from scratch
-      s"""WITH $DuckGraphEdges,
-        |g_und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM g_e),
-        |g_deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg
-        |  FROM (SELECT unnest([a, b]) AS node FROM g_und) GROUP BY node),
-        |g_o AS (SELECT CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b) THEN u.a ELSE u.b END AS u,
-        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b) THEN u.b ELSE u.a END AS v
-        |  FROM g_und u JOIN g_deg da ON da.node = u.a JOIN g_deg db ON db.node = u.b),
-        |g_ov AS (SELECT o.u, o.v, d.deg AS dv FROM g_o o JOIN g_deg d ON d.node = o.v),
-        |g_tri AS (SELECT w.x, w.y, w.z FROM (
-        |    SELECT o1.u AS x, o1.v AS y, o2.v AS z FROM g_ov o1 JOIN g_ov o2
-        |      ON o1.u = o2.u AND (o1.dv < o2.dv OR (o1.dv = o2.dv AND o1.v < o2.v))) w
-        |  JOIN g_o c ON c.u = w.y AND c.v = w.z),
-        |g_pt AS (SELECT node, CAST(count(*) AS BIGINT) AS tri
-        |  FROM (SELECT unnest([x, y, z]) AS node FROM g_tri) GROUP BY node)
-        |SELECT d.node, d.deg AS degree, CAST(coalesce(p.tri, 0) AS BIGINT) AS n_triangles,
-        |  CAST(CASE WHEN d.deg >= 2 THEN (2 * coalesce(p.tri, 0) * 10000) // (d.deg * (d.deg - 1)) ELSE 0 END AS BIGINT) AS clustering_bp
-        |FROM g_deg d LEFT JOIN g_pt p USING (node) ORDER BY d.node""".stripMargin,
-    "split_leakage_safe" ->
-      // shared components labeling, then the split_hash bucket rule keyed
-      // on the CLUSTER id instead of the row id
-      s"""WITH RECURSIVE $DuckMinhashPairs,
-        |$DuckComponentsLab,
-        |bkt AS (SELECT doc_id, cluster_id,
-        |    CAST('0x' || substring(md5(coalesce(CAST(cluster_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000 AS bp
-        |  FROM lab)
-        |SELECT doc_id, cluster_id,
-        |  CASE WHEN bp < 9000 THEN 'train' WHEN bp < 9500 THEN 'val' ELSE 'test' END AS split
-        |FROM bkt ORDER BY doc_id""".stripMargin,
-    "dedup_keep_best" ->
-      // shared components labeling + shared quality replay, fused:
-      // argmax(score, tie min id) per cluster
-      s"""WITH RECURSIVE $DuckMinhashPairs,
-        |$DuckComponentsLab,
-        |$DuckQualityScore,
-        |rep AS (SELECT l.cluster_id, l.doc_id, s.cluster_size, qsc.score,
-        |          row_number() OVER (PARTITION BY l.cluster_id ORDER BY qsc.score DESC, l.doc_id) AS rn
-        |        FROM lab l JOIN sz s ON l.cluster_id = s.cluster_id
-        |                   JOIN qsc ON qsc.doc_id = l.doc_id)
-        |SELECT cluster_id, doc_id AS rep_id, cluster_size, score AS quality_score
-        |FROM rep WHERE rn = 1 ORDER BY cluster_id""".stripMargin,
-    "dedup_neardup" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, unnest(CASE WHEN len(toks) >= 3
-        |         THEN list_transform(generate_series(0, len(toks) - 3), i -> array_to_string(list_slice(toks, i + 1, i + 3), ' '))
-        |         ELSE [array_to_string(toks, ' ')] END) AS shingle FROM t),
-        |hashed AS (SELECT doc_id,
-        |             CAST('0x' || substring(md5(shingle), 1, 15) AS BIGINT) AS m1,
-        |             CAST('0x' || substring(md5(shingle), 17, 14) AS BIGINT) AS m2 FROM sh),
-        |seeds AS (SELECT doc_id, m1, m2, unnest(generate_series(0, 15)) AS seed FROM hashed),
-        |sig AS (SELECT doc_id, seed, MIN(m1 + seed * m2) AS mh FROM seeds GROUP BY 1, 2),
-        |bands AS (SELECT doc_id, seed // 2 AS band_idx,
-        |            MAX(CASE WHEN seed % 2 = 0 THEN mh END) || '|' || MAX(CASE WHEN seed % 2 = 1 THEN mh END) AS band_val
-        |          FROM sig GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |         FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id),
-        |sets AS (SELECT doc_id, list(DISTINCT m1) AS s, COUNT(DISTINCT m1) AS nsh FROM hashed GROUP BY 1),
-        |v AS (SELECT c.doc_a, c.doc_b,
-        |        CAST(len(list_intersect(sa.s, sb.s)) AS BIGINT) AS inter,
-        |        CAST(sa.nsh + sb.nsh - len(list_intersect(sa.s, sb.s)) AS BIGINT) AS uni
-        |      FROM cand c JOIN sets sa ON sa.doc_id = c.doc_a JOIN sets sb ON sb.doc_id = c.doc_b)
-        |SELECT doc_a, doc_b, (10000 * inter) // uni AS jaccard_bp FROM v WHERE (10000 * inter) // uni >= 100
-        |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(10000 AS BIGINT)
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "dedup_jaccard" ->
-      // simhash band candidates (same fragment as dedup_simhash_pairs)
-      // verified by exact shingle-hash-set Jaccard — the candidate-pair
-      // overload's replay; CTE names t2/sh2/hv2/sets2 avoid the fragment's
-      // own toks/h
-      s"""$DuckSimhashSim,
-        |bands AS (SELECT doc_id, 0 AS band_idx, band0 AS band_val FROM sim
-        |          UNION ALL SELECT doc_id, 1, band1 FROM sim
-        |          UNION ALL SELECT doc_id, 2, band2 FROM sim
-        |          UNION ALL SELECT doc_id, 3, band3 FROM sim),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |         FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id),
-        |t2 AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks2 FROM documents),
-        |sh2 AS (SELECT DISTINCT doc_id, unnest(CASE WHEN len(toks2) >= 3
-        |         THEN list_transform(generate_series(0, len(toks2) - 3), i -> array_to_string(list_slice(toks2, i + 1, i + 3), ' '))
-        |         ELSE [array_to_string(toks2, ' ')] END) AS shingle FROM t2),
-        |hv2 AS (SELECT doc_id, CAST('0x' || substring(md5(shingle), 1, 15) AS BIGINT) AS h FROM sh2),
-        |sets2 AS (SELECT doc_id, list(DISTINCT h) AS s, COUNT(DISTINCT h) AS nsh FROM hv2 GROUP BY doc_id)
-        |SELECT c.doc_a, c.doc_b,
-        |       (10000 * len(list_intersect(sa.s, sb.s))) // (sa.nsh + sb.nsh - len(list_intersect(sa.s, sb.s))) AS jaccard_bp
-        |FROM cand c JOIN sets2 sa ON sa.doc_id = c.doc_a JOIN sets2 sb ON sb.doc_id = c.doc_b
-        |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(10000 AS BIGINT)
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "contamination" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, unnest(CASE WHEN len(toks) >= 3
-        |         THEN list_transform(generate_series(0, len(toks) - 3), i -> array_to_string(list_slice(toks, i + 1, i + 3), ' '))
-        |         ELSE [array_to_string(toks, ' ')] END) AS shingle FROM t),
-        |h AS (SELECT doc_id, CAST('0x' || substring(md5(shingle), 1, 15) AS BIGINT) AS hv FROM sh),
-        |c AS (SELECT DISTINCT doc_id AS corpus_id, hv FROM h WHERE doc_id % 97 <> 0),
-        |b AS (SELECT DISTINCT doc_id AS bench_id, hv FROM h WHERE doc_id % 97 = 0)
-        |SELECT c.corpus_id, b.bench_id, COUNT(*) AS n_shared
-        |FROM c JOIN b ON c.hv = b.hv
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 1
-        |ORDER BY 1, 2""".stripMargin,
-    "dedup_containment" ->
-      s"""WITH $DuckMinhashPairs,
-        |csets AS (SELECT doc_id, list_sort(list(DISTINCT m1)) AS s, COUNT(DISTINCT m1) AS n FROM hashed GROUP BY 1),
-        |cv AS (SELECT p.doc_a, p.doc_b, len(list_intersect(sa.s, sb.s)) AS inter, sa.n AS na, sb.n AS nb
-        |       FROM mh_pairs p JOIN csets sa ON sa.doc_id = p.doc_a JOIN csets sb ON sb.doc_id = p.doc_b)
-        |SELECT doc_a, doc_b, CAST((10000 * inter) // least(na, nb) AS BIGINT) AS containment_bp,
-        |       CAST((10000 * inter) // (na + nb - inter) AS BIGINT) AS jaccard_bp
-        |FROM cv WHERE (10000 * inter) // least(na, nb) >= 5000
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "contamination_semantic" ->
-      // full replay of the cross-side LSH blocking: same ±1 planes as the
-      // embed_neardup family but 6 bits wide, candidate = bucket collision
-      // between the %23 bench slice and the rest, exact-cosine verify
-      s"""WITH planes AS (
-        |  SELECT t, b, list_transform(range(0, 64), i ->
-        |    CASE WHEN CAST('0x' || substring(md5('42|' || t || '|' || b || '|' || i), 1, 1) AS INT) >= 8
-        |         THEN 1.0 ELSE -1.0 END) AS w
-        |  FROM (SELECT unnest(range(0, 4)) AS t), (SELECT unnest(range(0, 6)) AS b)),
-        |proj AS (
-        |  SELECT e.vec_id, p.t, p.b,
-        |    list_sum(list_transform(range(0, 64), i -> p.w[i + 1] * (e.embedding[i + 1])::DOUBLE)) AS pr
-        |  FROM embeddings e CROSS JOIN planes p),
-        |sig AS (SELECT vec_id, t, CAST(SUM(CASE WHEN pr >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS bucket
-        |        FROM proj GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT c.vec_id AS corpus_id, bn.vec_id AS bench_id
-        |         FROM sig c JOIN sig bn ON c.t = bn.t AND c.bucket = bn.bucket
-        |         WHERE c.vec_id % 23 <> 0 AND bn.vec_id % 23 = 0),
-        |v AS (SELECT corpus_id, bench_id,
-        |        CAST(floor(${duckCosine("ea.embedding", "eb.embedding")} * 10000) AS BIGINT) AS sim_bp
-        |      FROM cand c JOIN embeddings ea ON ea.vec_id = c.corpus_id JOIN embeddings eb ON eb.vec_id = c.bench_id)
-        |SELECT corpus_id, bench_id, sim_bp FROM v WHERE sim_bp >= 2500
-        |ORDER BY corpus_id, bench_id""".stripMargin,
-    "contamination_semantic_auto" ->
-      // same replay with the width DERIVED in-oracle from the corpus-side
-      // count (numBitsFor: least(48, greatest(4, ceil(log2(n/1000)))))
-      s"""WITH planes AS (
-        |  SELECT t, b, list_transform(range(0, 64), i ->
-        |    CASE WHEN CAST('0x' || substring(md5('42|' || t || '|' || b || '|' || i), 1, 1) AS INT) >= 8
-        |         THEN 1.0 ELSE -1.0 END) AS w
-        |  FROM (SELECT unnest(range(0, 4)) AS t),
-        |       (SELECT unnest(range(0, (SELECT CAST(least(48, greatest(4,
-        |          CAST(ceil(log2(greatest(CAST(COUNT(*) AS DOUBLE) / 1000.0, 1.0))) AS INT))) AS INT)
-        |        FROM embeddings WHERE vec_id % 23 <> 0))) AS b)),
-        |proj AS (
-        |  SELECT e.vec_id, p.t, p.b,
-        |    list_sum(list_transform(range(0, 64), i -> p.w[i + 1] * (e.embedding[i + 1])::DOUBLE)) AS pr
-        |  FROM embeddings e CROSS JOIN planes p),
-        |sig AS (SELECT vec_id, t, CAST(SUM(CASE WHEN pr >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS bucket
-        |        FROM proj GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT c.vec_id AS corpus_id, bn.vec_id AS bench_id
-        |         FROM sig c JOIN sig bn ON c.t = bn.t AND c.bucket = bn.bucket
-        |         WHERE c.vec_id % 23 <> 0 AND bn.vec_id % 23 = 0),
-        |v AS (SELECT corpus_id, bench_id,
-        |        CAST(floor(${duckCosine("ea.embedding", "eb.embedding")} * 10000) AS BIGINT) AS sim_bp
-        |      FROM cand c JOIN embeddings ea ON ea.vec_id = c.corpus_id JOIN embeddings eb ON eb.vec_id = c.bench_id)
-        |SELECT corpus_id, bench_id, sim_bp FROM v WHERE sim_bp >= 2500
-        |ORDER BY corpus_id, bench_id""".stripMargin,
-    "dedup_incremental" -> DuckIncrementalSql,
-    "dedup_recall" ->
-      // cap-recall replay: a pair survives cap c iff its MINIMUM
-      // generating-bucket size (LSH tier) / min-over-bands of
-      // max(per-side counts) (indexed incremental tier) is ≤ c — the same
-      // per-pair statistic the Spark study aggregates. Bands/sets come
-      // from the shared minhash fragment; the caps relation mirrors the
-      // query's (2, 5, DefaultMaxBucket).
-      s"""WITH $DuckMinhashPairs,
-        |bkt AS (SELECT band_idx, band_val, COUNT(*) AS n FROM bands GROUP BY 1, 2),
-        |pexp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, MIN(k.n) AS min_n
-        |         FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-        |         JOIN bkt k ON k.band_idx = a.band_idx AND k.band_val = a.band_val
-        |         GROUP BY 1, 2),
-        |sets AS (SELECT doc_id, list(DISTINCT m1) AS s, COUNT(DISTINCT m1) AS nsh FROM hashed GROUP BY 1),
-        |ver AS (SELECT p.doc_a, p.doc_b, p.min_n
-        |        FROM pexp p JOIN sets sa ON sa.doc_id = p.doc_a JOIN sets sb ON sb.doc_id = p.doc_b
-        |        WHERE (10000 * len(list_intersect(sa.s, sb.s))) // (sa.nsh + sb.nsh - len(list_intersect(sa.s, sb.s))) >= 100),
-        |nb AS (SELECT doc_id AS new_id, band_idx, band_val FROM bands WHERE doc_id % 5 = 0),
-        |cb AS (SELECT doc_id AS corpus_id, band_idx, band_val FROM bands WHERE doc_id % 5 <> 0),
-        |ncnt AS (SELECT band_idx, band_val, COUNT(*) AS n_new FROM nb GROUP BY 1, 2),
-        |ccnt AS (SELECT band_idx, band_val, COUNT(*) AS n_corp FROM cb GROUP BY 1, 2),
-        |ipexp AS (SELECT n.new_id, c.corpus_id, MIN(greatest(nc.n_new, cc.n_corp)) AS min_n
-        |          FROM nb n JOIN cb c ON n.band_idx = c.band_idx AND n.band_val = c.band_val
-        |          JOIN ncnt nc ON nc.band_idx = n.band_idx AND nc.band_val = n.band_val
-        |          JOIN ccnt cc ON cc.band_idx = n.band_idx AND cc.band_val = n.band_val
-        |          WHERE n.new_id <> c.corpus_id
-        |          GROUP BY 1, 2),
-        |iver AS (SELECT p.new_id, p.min_n
-        |         FROM ipexp p JOIN sets sa ON sa.doc_id = p.new_id JOIN sets sb ON sb.doc_id = p.corpus_id
-        |         WHERE (10000 * len(list_intersect(sa.s, sb.s))) // (sa.nsh + sb.nsh - len(list_intersect(sa.s, sb.s))) >= 100),
-        |caps AS (SELECT CAST(unnest([2, 5, ${graft.ops.Dedup.DefaultMaxBucket}]) AS BIGINT) AS cap),
-        |tiers AS (
-        |  SELECT 'lsh' AS tier, c.cap, COUNT(v.min_n) AS truth_pairs,
-        |         coalesce(SUM(CASE WHEN v.min_n <= c.cap THEN 1 ELSE 0 END), 0) AS found_pairs
-        |  FROM caps c LEFT JOIN ver v ON TRUE GROUP BY 1, 2
-        |  UNION ALL
-        |  SELECT 'inc_indexed', c.cap, COUNT(v.min_n),
-        |         coalesce(SUM(CASE WHEN v.min_n <= c.cap THEN 1 ELSE 0 END), 0)
-        |  FROM caps c LEFT JOIN iver v ON TRUE GROUP BY 1, 2)
-        |SELECT tier, cap, CAST(truth_pairs AS BIGINT) AS truth_pairs,
-        |       CAST(found_pairs AS BIGINT) AS found_pairs,
-        |       CAST(CASE WHEN truth_pairs = 0 THEN 10000
-        |            ELSE (10000 * found_pairs) // truth_pairs END AS BIGINT) AS recall_bp
-        |FROM tiers ORDER BY tier, cap""".stripMargin,
-    "stream_dedup_incremental" ->
-      // batch replay of the streaming novelty gate: the %5==0 increment
-      // minus every new_id the incremental-dedup replay confirms at the
-      // same 100 bp threshold — checkpointed resume means each novel doc
-      // appears EXACTLY once, which the hash compare enforces
-      s"""WITH $DuckIncrementalCtes,
-        |dup AS (SELECT DISTINCT new_id FROM v WHERE (10000 * inter) // uni >= 100)
-        |SELECT d.doc_id, d.source, d.n_chars
-        |FROM documents d LEFT JOIN dup ON d.doc_id = dup.new_id
-        |WHERE d.doc_id % 5 = 0 AND dup.new_id IS NULL
-        |ORDER BY d.doc_id""".stripMargin,
-    "stream_curation" ->
-      // the gated variant: same incremental-dedup replay, plus the shared
-      // quality gate on the increment side. Subtracting the FULL dup set
-      // equals probing the gated batch — signatures are per-doc, so the
-      // gate only removes rows, never changes a surviving pair.
-      s"""WITH $DuckIncrementalCtes,
-        |dup AS (SELECT DISTINCT new_id FROM v WHERE (10000 * inter) // uni >= 100),
-        |$DuckQualityScore
-        |SELECT d.doc_id, d.source, q.score AS quality_score
-        |FROM documents d JOIN qsc q ON q.doc_id = d.doc_id
-        |LEFT JOIN dup ON d.doc_id = dup.new_id
-        |WHERE d.doc_id % 5 = 0 AND q.score >= 60 AND dup.new_id IS NULL
-        |ORDER BY d.doc_id""".stripMargin,
-    "dedup_semantic" -> duckSemanticSql(2500L),
-    "dedup_semantic_auto" ->
-      // same replay with the codebook size computed FROM THE CORPUS the
-      // way Ivf.autoK does (max(8, ceil(n/100)) — 8 at sf0.01, 20 at
-      // sf0.1), so the dynamic-k arithmetic itself is under the hash gate
-      duckSemanticSql(8500L,
-        limitSql = "(SELECT CAST(greatest(8, CAST(ceil(COUNT(*) / 100.0) AS BIGINT)) AS BIGINT) FROM embeddings)"),
-    "dedup_semantic_scale" ->
-      // two-level replay: dynamic k2 = max(4, ceil(sqrt(n/100))) super
-      // train, child seeds/round/final assign, composite cells, shared tail
-      duckSemanticScaleSql(8500L,
-        k2Sql = "(SELECT CAST(greatest(4, CAST(ceil(sqrt(COUNT(*) / 100.0)) AS BIGINT)) AS BIGINT) FROM embeddings)"),
-    "dedup_semantic_prod" -> duckSemanticSql(8500L),
-    "url_dedup_curation" ->
-      // same synthesized URLs; urlParts regex replay (the url_canonical
-      // fragment) feeds keep-best-per-canonical-url then the hash-ordered
-      // per-domain cap (the quota_per_source replay)
-      s"""WITH $DuckQualityScore,
-        |d AS (SELECT doc_id,
-        |  'HTTPS://Sub' || CAST(doc_id % 3 AS VARCHAR) || '.Example' || CAST(doc_id % 5 AS VARCHAR) ||
-        |  '.com/p/' || CAST(doc_id % 20 AS VARCHAR) || (CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END) AS url
-        |  FROM documents),
-        |p AS (SELECT doc_id,
-        |  lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme,
-        |  lower(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@?#]*@)?([^/?#:]+)', 1)) AS host,
-        |  regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(/[^?#]*)', 1) AS path FROM d),
-        |c AS (SELECT doc_id,
-        |  regexp_extract(host, '([^.]+\\.[^.]+)$$', 1) AS domain,
-        |  scheme || '://' || host || regexp_replace(path, '/+$$', '') AS canonical_url FROM p),
-        |j AS (SELECT c.doc_id, c.domain, c.canonical_url, qsc.score AS quality_score
-        |      FROM c JOIN qsc ON c.doc_id = qsc.doc_id),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY canonical_url
-        |        ORDER BY quality_score DESC, doc_id) AS rn FROM j),
-        |reps AS (SELECT doc_id, domain, canonical_url, quality_score FROM r WHERE rn = 1),
-        |capped AS (SELECT *, row_number() OVER (PARTITION BY domain
-        |    ORDER BY CAST('0x' || substring(md5(coalesce(CAST(doc_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000, doc_id) AS qrn
-        |  FROM reps)
-        |SELECT domain, canonical_url, doc_id, quality_score FROM capped WHERE qrn <= 10
-        |ORDER BY domain, canonical_url""".stripMargin,
-    // the indexed path is SEMANTICALLY IDENTICAL to the direct one (same
-    // bands, same verify; only the physical layout differs), so it pins
-    // against the same replay — the equality of the two plans' answers is
-    // exactly what this row certifies
-    "dedup_incremental_indexed" -> DuckIncrementalSql,
-    "bloom_contamination" ->
-      // bit-exact Bloom replay: same one-digest md5 32-bit-word bit
-      // positions, same 512-word bit_or grid, same all-bits-set membership
-      // test — false positives and all
-      """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, unnest(CASE WHEN len(toks) >= 3
-        |         THEN list_transform(generate_series(0, len(toks) - 3), i -> array_to_string(list_slice(toks, i + 1, i + 3), ' '))
-        |         ELSE [array_to_string(toks, ' ')] END) AS shingle FROM t),
-        |sd AS (SELECT unnest([0, 1, 2, 3]) AS s),
-        |bb AS (SELECT DISTINCT CAST('0x' || substring(md5(sh.shingle), 1 + 8 * sd.s, 8) AS BIGINT) % 32768 AS bit
-        |       FROM sh CROSS JOIN sd WHERE sh.doc_id % 97 = 0),
-        |words AS (SELECT bit // 64 AS w,
-        |            bit_or(CASE WHEN bit % 64 = 63 THEN (-9223372036854775807 - 1)
-        |                   ELSE 1::BIGINT << CAST(bit % 64 AS INT) END) AS word
-        |          FROM bb GROUP BY 1),
-        |pb AS (SELECT sh.doc_id, sh.shingle,
-        |         CAST('0x' || substring(md5(sh.shingle), 1 + 8 * sd.s, 8) AS BIGINT) % 32768 AS bit
-        |       FROM sh CROSS JOIN sd WHERE sh.doc_id % 97 <> 0),
-        |ph AS (SELECT doc_id, shingle,
-        |         BOOL_AND((coalesce(w.word, 0) & (CASE WHEN pb.bit % 64 = 63 THEN (-9223372036854775807 - 1)
-        |           ELSE 1::BIGINT << CAST(pb.bit % 64 AS INT) END)) <> 0) AS hit
-        |       FROM pb LEFT JOIN words w ON pb.bit // 64 = w.w GROUP BY 1, 2)
-        |SELECT doc_id, COUNT(*) AS n_shingles,
-        |  CAST(SUM(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT) AS n_bloom_hits
-        |FROM ph GROUP BY doc_id
-        |HAVING CAST(SUM(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT) >= 1
-        |ORDER BY doc_id""".stripMargin,
-    "cms_heavy_hitters" ->
-      """WITH t AS (SELECT unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term FROM documents),
-        |tok AS (SELECT term FROM t WHERE term <> ''),
-        |sd AS (SELECT unnest([0, 1, 2, 3]) AS s),
-        |cms AS (SELECT sd.s,
-        |          CAST('0x' || substring(md5(CAST(sd.s AS VARCHAR) || ':' || tok.term), 1, 15) AS BIGINT) % 256 AS bucket,
-        |          COUNT(*) AS cnt
-        |        FROM tok CROSS JOIN sd GROUP BY 1, 2),
-        |top AS (SELECT term, COUNT(*) AS n_exact FROM tok GROUP BY 1 ORDER BY n_exact DESC, term LIMIT 10),
-        |est AS (SELECT top.term, MIN(c.cnt) AS cms_est
-        |        FROM top CROSS JOIN sd
-        |        JOIN cms c ON c.s = sd.s
-        |          AND c.bucket = CAST('0x' || substring(md5(CAST(sd.s AS VARCHAR) || ':' || top.term), 1, 15) AS BIGINT) % 256
-        |        GROUP BY 1)
-        |SELECT top.term, top.n_exact, est.cms_est
-        |FROM top JOIN est ON top.term = est.term ORDER BY top.term""".stripMargin,
-    "bm25_search" ->
-      // BM25 replay: identical fixed-order arithmetic (no ln anywhere —
-      // odds-form idf keeps every op IEEE-exact), identical 2^-20
-      // quantization, BIGINT score sums
-      """WITH t AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t WHERE term <> '' GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-        |consts AS (SELECT COUNT(DISTINCT doc_id) AS n_docs, CAST(SUM(tf) AS BIGINT) AS sum_dl FROM tf),
-        |dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-        |q AS (SELECT unnest(['spark', 'join', 'window']) AS term),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(floor(1048576.0 * ((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * (CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) * CAST(n_docs AS DOUBLE) / CAST(sum_dl AS DOUBLE)))) AS BIGINT) AS sq
-        |       FROM tf JOIN q USING (term) JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN consts),
-        |byd AS (SELECT doc_id, CAST(SUM(sq) AS BIGINT) AS score_q FROM sc GROUP BY 1)
-        |SELECT doc_id, score_q, CAST(row_number() OVER (ORDER BY score_q DESC, doc_id) AS INT) AS rank
-        |FROM byd ORDER BY score_q DESC, doc_id LIMIT 20""".stripMargin,
-    "search_rocchio" ->
-      // the bm25_search chain, then: top-5 seeds, candidate vocab minus
-      // the query, expansion weight Σ floor(2^20·odds·tf/dl) (ties by
-      // term), re-score with 1000/750 milli weights, top-20
-      """WITH t AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t WHERE term <> '' GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-        |consts AS (SELECT COUNT(DISTINCT doc_id) AS n_docs, CAST(SUM(tf) AS BIGINT) AS sum_dl FROM tf),
-        |q AS (SELECT unnest(['spark', 'join', 'window']) AS term),
-        |df0 AS (SELECT term, COUNT(*) AS df FROM tf WHERE term IN (SELECT term FROM q) GROUP BY 1),
-        |sc0 AS (SELECT tf.doc_id,
-        |         CAST(floor(1048576.0 * ((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * (CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) * CAST(n_docs AS DOUBLE) / CAST(sum_dl AS DOUBLE)))) AS BIGINT) AS sq
-        |       FROM tf JOIN q USING (term) JOIN df0 USING (term) JOIN dl USING (doc_id) CROSS JOIN consts),
-        |byd0 AS (SELECT doc_id, CAST(SUM(sq) AS BIGINT) AS s FROM sc0 GROUP BY 1),
-        |seed AS (SELECT doc_id FROM byd0 ORDER BY s DESC, doc_id LIMIT 5),
-        |stf AS (SELECT tf.doc_id, tf.term, tf.tf, dl.dl FROM tf JOIN seed USING (doc_id) JOIN dl USING (doc_id)),
-        |cand AS (SELECT DISTINCT term FROM stf WHERE term NOT IN (SELECT term FROM q)),
-        |cdf AS (SELECT term, COUNT(*) AS df FROM tf WHERE term IN (SELECT term FROM cand) GROUP BY 1),
-        |wexp AS (SELECT stf.term,
-        |         CAST(SUM(CAST(floor(1048576.0 * ((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * CAST(tf AS DOUBLE) / CAST(dl AS DOUBLE)) AS BIGINT)) AS BIGINT) AS w_exp
-        |       FROM stf JOIN cdf USING (term) CROSS JOIN consts GROUP BY stf.term
-        |       ORDER BY w_exp DESC, term LIMIT 5),
-        |allt AS (SELECT term, CAST(1000 AS BIGINT) AS w FROM q
-        |         UNION ALL SELECT term, CAST(750 AS BIGINT) AS w FROM wexp),
-        |adf AS (SELECT term, COUNT(*) AS df FROM tf WHERE term IN (SELECT term FROM allt) GROUP BY 1),
-        |sc2 AS (SELECT tf.doc_id, allt.w,
-        |         CAST(floor(1048576.0 * ((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * (CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) * CAST(n_docs AS DOUBLE) / CAST(sum_dl AS DOUBLE)))) AS BIGINT) AS sq
-        |       FROM tf JOIN allt USING (term) JOIN adf USING (term) JOIN dl USING (doc_id) CROSS JOIN consts),
-        |byd2 AS (SELECT doc_id, CAST(SUM(w * sq) AS BIGINT) AS score_w FROM sc2 GROUP BY 1)
-        |SELECT doc_id, score_w, CAST(row_number() OVER (ORDER BY score_w DESC, doc_id) AS INT) AS rank
-        |FROM byd2 ORDER BY score_w DESC, doc_id LIMIT 20""".stripMargin,
-    "search_phrase" ->
-      // anchor replay: slot-i term occurrences vote for pos − i; anchors
-      // with all 3 distinct slots are matches
-      """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents),
-        |tp0 AS (SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS i FROM t),
-        |tp AS (SELECT doc_id, i - 1 AS pos, toks[i] AS term FROM tp0 WHERE toks[i] <> ''),
-        |slots(slot, term) AS (VALUES (0, 'small'), (1, 'query'), (2, 'line')),
-        |v AS (SELECT doc_id, pos - slot AS anchor, slot FROM tp JOIN slots USING (term)),
-        |m AS (SELECT doc_id, anchor FROM v GROUP BY doc_id, anchor HAVING COUNT(DISTINCT slot) = 3)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_matches, CAST(MIN(anchor) AS BIGINT) AS first_pos
-        |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "index_incremental" ->
-      // from-scratch BM25 over the WHOLE corpus — the mergeable-monoid
-      // pin: persisted-index ∪ delta must equal this exactly
-      """WITH t AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t WHERE term <> '' GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-        |consts AS (SELECT COUNT(DISTINCT doc_id) AS n_docs, CAST(SUM(tf) AS BIGINT) AS sum_dl FROM tf),
-        |dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-        |qterms AS (SELECT unnest(['stream', 'batch', 'merge']) AS term),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(floor(1048576.0 * ((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * (CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) * CAST(n_docs AS DOUBLE) / CAST(sum_dl AS DOUBLE)))) AS BIGINT) AS sq
-        |       FROM tf JOIN qterms USING (term) JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN consts),
-        |byd AS (SELECT doc_id, CAST(SUM(sq) AS BIGINT) AS score_q FROM sc GROUP BY 1)
-        |SELECT doc_id, score_q, CAST(row_number() OVER (ORDER BY score_q DESC, doc_id) AS INT) AS rank
-        |FROM byd ORDER BY score_q DESC, doc_id LIMIT 20""".stripMargin,
-    "pii_gazetteer" ->
-      // the search_phrase anchor chain with entity-tagged slots: votes
-      // group by (doc, entity, anchor) and compare against the entity's
-      // own slot count
-      """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents),
-        |tp0 AS (SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS i FROM t),
-        |tp AS (SELECT doc_id, i - 1 AS pos, toks[i] AS term FROM tp0 WHERE toks[i] <> ''),
-        |slots(entity_id, slot, term, n_slots) AS (VALUES
-        |  ('e_small_query', 0, 'small', 2), ('e_small_query', 1, 'query', 2),
-        |  ('e_customer_line', 0, 'customer', 2), ('e_customer_line', 1, 'line', 2),
-        |  ('e_small_query_line', 0, 'small', 3), ('e_small_query_line', 1, 'query', 3),
-        |  ('e_small_query_line', 2, 'line', 3),
-        |  ('e_big_hash_query', 0, 'big', 3), ('e_big_hash_query', 1, 'hash', 3),
-        |  ('e_big_hash_query', 2, 'query', 3)),
-        |v AS (SELECT doc_id, entity_id, pos - slot AS anchor, slot, n_slots
-        |      FROM tp JOIN slots USING (term)),
-        |m AS (SELECT doc_id, entity_id, anchor FROM v
-        |      GROUP BY doc_id, entity_id, anchor, n_slots
-        |      HAVING COUNT(DISTINCT slot) = n_slots)
-        |SELECT doc_id, entity_id, CAST(COUNT(*) AS BIGINT) AS n_matches,
-        |  CAST(MIN(anchor) AS BIGINT) AS first_pos
-        |FROM m GROUP BY doc_id, entity_id ORDER BY doc_id, entity_id""".stripMargin,
-    "eval_retrieval" -> {
-      // per query: the bm25_search CTE chain (top-20 ranks) + the
-      // search_phrase anchor chain (ground truth), graded to bp metrics;
-      // the shared tokenization/positional CTEs live once
-      val per = RetrievalEvalQueries.map { case (qid, ph) =>
-        val qlist = ph.map(t => s"'$t'").mkString(", ")
-        val slots = ph.zipWithIndex.map { case (t, i) => s"($i, '$t')" }.mkString(", ")
-        s"""q_$qid(term) AS (SELECT unnest([$qlist])),
-          |sc_$qid AS (SELECT tf.doc_id,
-          |    CAST(floor(1048576.0 * ((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * (CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) * CAST(n_docs AS DOUBLE) / CAST(sum_dl AS DOUBLE)))) AS BIGINT) AS sq
-          |  FROM tf JOIN q_$qid USING (term) JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN consts),
-          |byd_$qid AS (SELECT doc_id, CAST(SUM(sq) AS BIGINT) AS s FROM sc_$qid GROUP BY 1),
-          |top_$qid AS (SELECT doc_id, row_number() OVER (ORDER BY s DESC, doc_id) AS rank
-          |  FROM byd_$qid ORDER BY s DESC, doc_id LIMIT 20),
-          |slots_$qid(slot, term) AS (VALUES $slots),
-          |v_$qid AS (SELECT doc_id, pos - slot AS anchor, slot FROM tp JOIN slots_$qid USING (term)),
-          |rel_$qid AS (SELECT DISTINCT doc_id FROM (
-          |    SELECT doc_id, anchor FROM v_$qid GROUP BY doc_id, anchor HAVING COUNT(DISTINCT slot) = ${ph.length})),
-          |met_$qid AS (SELECT '$qid' AS query_id,
-          |    (SELECT COUNT(*) FROM rel_$qid) AS n_rel,
-          |    (SELECT COUNT(*) FROM rel_$qid r JOIN top_$qid t USING (doc_id)) AS hits,
-          |    (SELECT MIN(rank) FROM rel_$qid r JOIN top_$qid t USING (doc_id)) AS first_rank)""".stripMargin
-      }
-      val unions = RetrievalEvalQueries.map { case (qid, _) =>
-        s"""SELECT query_id, CAST(n_rel AS BIGINT) AS n_rel, CAST(hits AS BIGINT) AS hits,
-          |  CAST(CASE WHEN n_rel > 0 THEN hits * 10000 // n_rel ELSE 0 END AS BIGINT) AS recall_bp,
-          |  CAST(hits * 10000 // 20 AS BIGINT) AS precision_bp,
-          |  CAST(CASE WHEN first_rank IS NOT NULL THEN 10000 // first_rank ELSE 0 END AS BIGINT) AS mrr_bp
-          |FROM met_$qid""".stripMargin
-      }
-      s"""WITH t AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t WHERE term <> '' GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-        |consts AS (SELECT COUNT(DISTINCT doc_id) AS n_docs, CAST(SUM(tf) AS BIGINT) AS sum_dl FROM tf),
-        |dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-        |tl AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks FROM documents),
-        |tp0 AS (SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS i FROM tl),
-        |tp AS (SELECT doc_id, i - 1 AS pos, toks[i] AS term FROM tp0 WHERE toks[i] <> ''),
-        |${per.mkString(",\n")}
-        |${unions.mkString("\nUNION ALL\n")}
-        |ORDER BY query_id""".stripMargin
-    },
-    "hybrid_search" ->
-      // bm25_search's CTE chain (ranks only) + knn_cosine's replay for the
-      // vec-0 query, fused by integer RRF: floor(1e6/(60+rank)) per list,
-      // absent list contributes 0 via the full outer join
-      s"""WITH t AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t WHERE term <> '' GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-        |consts AS (SELECT COUNT(DISTINCT doc_id) AS n_docs, CAST(SUM(tf) AS BIGINT) AS sum_dl FROM tf),
-        |dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-        |qterms AS (SELECT unnest(['spark', 'join', 'window']) AS term),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(floor(1048576.0 * ((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * (CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) * CAST(n_docs AS DOUBLE) / CAST(sum_dl AS DOUBLE)))) AS BIGINT) AS sq
-        |       FROM tf JOIN qterms USING (term) JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN consts),
-        |byd AS (SELECT doc_id, CAST(SUM(sq) AS BIGINT) AS score_q FROM sc GROUP BY 1),
-        |lex AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score_q DESC, doc_id) AS INT) AS rank
-        |        FROM byd ORDER BY score_q DESC, doc_id LIMIT 20),
-        |qv AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id = 0),
-        |sims AS (SELECT e.vec_id, ${duckCosine("e.embedding", "qv.qvec")} AS sim
-        |         FROM embeddings e CROSS JOIN qv WHERE e.vec_id <> qv.qid),
-        |vec AS (SELECT vec_id AS doc_id, CAST(row_number() OVER (ORDER BY sim DESC, vec_id) AS INT) AS rank
-        |        FROM sims ORDER BY sim DESC, vec_id LIMIT 20),
-        |f AS (SELECT coalesce(l.doc_id, v.doc_id) AS doc_id,
-        |        CAST(coalesce(1000000 // (60 + l.rank), 0) + coalesce(1000000 // (60 + v.rank), 0) AS BIGINT) AS rrf_score
-        |      FROM lex l FULL OUTER JOIN vec v ON l.doc_id = v.doc_id)
-        |SELECT doc_id, rrf_score, CAST(row_number() OVER (ORDER BY rrf_score DESC, doc_id) AS INT) AS rank
-        |FROM f ORDER BY rank""".stripMargin,
-    "embed_neardup" -> duckEmbedNeardupSql(2500L, autoBits = false),
-    "embed_neardup_prod" -> duckEmbedNeardupSql(8500L, autoBits = false),
-    "embed_neardup_auto" -> duckEmbedNeardupSql(8500L, autoBits = true),
-    "knn_cosine" -> duckKnnSql(),
-    "vector_upsert" ->
-      """SELECT vec_id, CASE WHEN vec_id % 10 = 0 THEN label + 100 ELSE label END AS label
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "text_langid" ->
-      """SELECT doc_id, lang AS labeled_lang,
-        |  CAST(len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in','is','that'], t))) AS BIGINT) AS s_en,
-        |  CAST(len(list_filter(toks, t -> list_contains(['el','la','de','que','y','los','en','un'], t))) AS BIGINT) AS s_es,
-        |  CAST(len(list_filter(toks, t -> list_contains(['der','die','das','und','ist','von','den','ein'], t))) AS BIGINT) AS s_de,
-        |  CAST(len(list_filter(toks, t -> list_contains(['le','la','les','de','et','est','un','une'], t))) AS BIGINT) AS s_fr,
-        |  CAST(len(list_filter(toks, t -> list_contains(['的','是','了','在','和','有','我','不'], t))) AS BIGINT) AS s_zh,
-        |  CASE WHEN greatest(
-        |         len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in','is','that'], t))),
-        |         len(list_filter(toks, t -> list_contains(['el','la','de','que','y','los','en','un'], t))),
-        |         len(list_filter(toks, t -> list_contains(['der','die','das','und','ist','von','den','ein'], t))),
-        |         len(list_filter(toks, t -> list_contains(['le','la','les','de','et','est','un','une'], t))),
-        |         len(list_filter(toks, t -> list_contains(['的','是','了','在','和','有','我','不'], t)))) = 0 THEN 'und'
-        |       WHEN len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in','is','that'], t))) = greatest(
-        |         len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in','is','that'], t))),
-        |         len(list_filter(toks, t -> list_contains(['el','la','de','que','y','los','en','un'], t))),
-        |         len(list_filter(toks, t -> list_contains(['der','die','das','und','ist','von','den','ein'], t))),
-        |         len(list_filter(toks, t -> list_contains(['le','la','les','de','et','est','un','une'], t))),
-        |         len(list_filter(toks, t -> list_contains(['的','是','了','在','和','有','我','不'], t)))) THEN 'en'
-        |       WHEN len(list_filter(toks, t -> list_contains(['el','la','de','que','y','los','en','un'], t))) = greatest(
-        |         len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in','is','that'], t))),
-        |         len(list_filter(toks, t -> list_contains(['el','la','de','que','y','los','en','un'], t))),
-        |         len(list_filter(toks, t -> list_contains(['der','die','das','und','ist','von','den','ein'], t))),
-        |         len(list_filter(toks, t -> list_contains(['le','la','les','de','et','est','un','une'], t))),
-        |         len(list_filter(toks, t -> list_contains(['的','是','了','在','和','有','我','不'], t)))) THEN 'es'
-        |       WHEN len(list_filter(toks, t -> list_contains(['der','die','das','und','ist','von','den','ein'], t))) = greatest(
-        |         len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in','is','that'], t))),
-        |         len(list_filter(toks, t -> list_contains(['el','la','de','que','y','los','en','un'], t))),
-        |         len(list_filter(toks, t -> list_contains(['der','die','das','und','ist','von','den','ein'], t))),
-        |         len(list_filter(toks, t -> list_contains(['le','la','les','de','et','est','un','une'], t))),
-        |         len(list_filter(toks, t -> list_contains(['的','是','了','在','和','有','我','不'], t)))) THEN 'de'
-        |       WHEN len(list_filter(toks, t -> list_contains(['le','la','les','de','et','est','un','une'], t))) = greatest(
-        |         len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in','is','that'], t))),
-        |         len(list_filter(toks, t -> list_contains(['el','la','de','que','y','los','en','un'], t))),
-        |         len(list_filter(toks, t -> list_contains(['der','die','das','und','ist','von','den','ein'], t))),
-        |         len(list_filter(toks, t -> list_contains(['le','la','les','de','et','est','un','une'], t))),
-        |         len(list_filter(toks, t -> list_contains(['的','是','了','在','和','有','我','不'], t)))) THEN 'fr'
-        |       ELSE 'zh' END AS predicted_lang
-        |FROM (SELECT doc_id, lang, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    "text_quality" ->
-      """WITH q AS (SELECT doc_id,
-        |  trim(regexp_replace(text, '\s+', ' ', 'g')) AS t,
-        |  string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents),
-        |m AS (SELECT doc_id,
-        |  CAST(length(t) AS BIGINT) AS n_chars_c,
-        |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(length(regexp_replace(t, '[^.,;:!?]', '', 'g')) AS BIGINT) AS punct_count,
-        |  CAST(length(regexp_replace(t, '[^A-Z]', '', 'g')) AS BIGINT) AS upper_count,
-        |  CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','that'], x))) AS BIGINT) AS stop_count
-        |  FROM q)
-        |SELECT doc_id, n_chars_c, n_tokens,
-        |  (1000 * (n_chars_c - (n_tokens - 1))) // n_tokens AS tok_len_milli,
-        |  punct_count, upper_count,
-        |  (10000 * stop_count) // n_tokens AS stop_bp,
-        |  least(40, n_tokens // 4)
-        |    + (CASE WHEN (10000 * stop_count) // n_tokens BETWEEN 200 AND 6000 THEN 30 ELSE 0 END)
-        |    + (CASE WHEN (1000 * (n_chars_c - (n_tokens - 1))) // n_tokens BETWEEN 2500 AND 9000 THEN 30 ELSE 0 END) AS quality_score
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "text_tokens" ->
-      """WITH q AS (SELECT doc_id, trim(regexp_replace(text, '\s+', ' ', 'g')) AS t FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(string_split(t, ' ')) AS BIGINT) AS n_ws_tokens,
-        |  CAST(len(regexp_extract_all(t, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]')) AS BIGINT) AS n_bpe_tokens
-        |FROM q ORDER BY doc_id""".stripMargin,
-    "text_fingerprint" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN len(toks) >= 5
-        |    THEN list_min(list_transform(generate_series(0, len(toks) - 5), i -> md5(array_to_string(list_slice(toks, i + 1, i + 5), ' '))))
-        |    ELSE md5(array_to_string(toks, ' ')) END AS fingerprint
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "text_winnowing" ->
-      // full replay of the rightmost-min window pick over 60-bit gram
-      // hashes; the selected-position set is order-insensitive
-      // (list_distinct), compared exploded and sorted
-      s"""WITH ${duckWinnowCtes("documents")}
-        |SELECT doc_id, pos, fp FROM wfp ORDER BY doc_id, pos""".stripMargin,
-    "dedup_winnow" ->
-      // inverted-index pair replay: distinct (doc, fp) postings, the
-      // 2..50 posting band (singletons can't pair; >50 = boilerplate
-      // drop), pair count = shared distinct fingerprints
-      s"""WITH ${duckWinnowCtes("documents")},
-        |wpost AS (SELECT DISTINCT doc_id, fp FROM wfp),
-        |wkeep AS (SELECT fp FROM wpost GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND 50),
-        |wpair AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |          FROM wpost a JOIN wpost b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |          JOIN wkeep k ON k.fp = a.fp)
-        |SELECT id_a, id_b, CAST(COUNT(*) AS BIGINT) AS n_shared
-        |FROM wpair GROUP BY 1, 2 HAVING COUNT(*) >= 2 ORDER BY id_a, id_b""".stripMargin,
-    "dedup_winnow_incremental" ->
-      // both sides' winnow replay (prefixed fragments), per-side 50-cap,
-      // cross join on fp, no lower posting bound (1 corpus + 1 new doc IS
-      // a pair)
-      s"""WITH ${duckWinnowCtes(s"(SELECT * FROM documents WHERE doc_id % $MinhashIndexCorpusMod = 0)", "nw")},
-        |${duckWinnowCtes(s"(SELECT * FROM documents WHERE doc_id % $MinhashIndexCorpusMod <> 0)", "cw")},
-        |np AS (SELECT DISTINCT doc_id AS new_id, fp FROM nwwfp),
-        |cp AS (SELECT DISTINCT doc_id AS corpus_id, fp FROM cwwfp),
-        |nk AS (SELECT fp FROM np GROUP BY fp HAVING COUNT(*) <= 50),
-        |ck AS (SELECT fp FROM cp GROUP BY fp HAVING COUNT(*) <= 50)
-        |SELECT new_id, corpus_id, CAST(COUNT(*) AS BIGINT) AS n_shared
-        |FROM np JOIN cp USING (fp) JOIN nk USING (fp) JOIN ck USING (fp)
-        |WHERE new_id <> corpus_id
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 1 ORDER BY new_id, corpus_id""".stripMargin,
-    "dedup_winnow_tuned" ->
-      // winnow replay over the shared coherent-sample fragment; per-tier
-      // df band, counts-formulation volume, pair confirmation over the
-      // widest cap re-filtered per tier; tier domain anchored so empty
-      // caps report zero rows honestly
-      s"""WITH ${duckWinnowCtes(duckCoherentSample("documents"))},
-        |wpost AS (SELECT DISTINCT doc_id, fp FROM wfp),
-        |wdf AS (SELECT fp, CAST(COUNT(*) AS BIGINT) AS df FROM wpost GROUP BY fp HAVING COUNT(*) >= 2),
-        |tiers AS (SELECT CAST(unnest([10, 50, 200]) AS BIGINT) AS max_posting),
-        |vol AS (SELECT t.max_posting, CAST(COUNT(*) AS BIGINT) AS n_fp_kept,
-        |    CAST(SUM(df * (df - 1) // 2) AS BIGINT) AS candidate_volume
-        |  FROM tiers t JOIN wdf ON df <= t.max_posting GROUP BY 1),
-        |kept AS (SELECT p.doc_id, p.fp, d.df FROM wpost p JOIN wdf d USING (fp) WHERE d.df <= 200),
-        |shared AS (SELECT t.max_posting, a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(COUNT(*) AS BIGINT) AS n_shared
-        |  FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |  JOIN tiers t ON a.df <= t.max_posting
-        |  GROUP BY 1, 2, 3 HAVING COUNT(*) >= 2),
-        |pr AS (SELECT max_posting, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        |    CAST(SUM(n_shared) AS BIGINT) AS shared_total FROM shared GROUP BY 1)
-        |SELECT t.max_posting, coalesce(v.n_fp_kept, 0) AS n_fp_kept,
-        |  coalesce(v.candidate_volume, 0) AS candidate_volume,
-        |  coalesce(pr.n_pairs, 0) AS n_pairs, coalesce(pr.shared_total, 0) AS shared_total
-        |FROM tiers t LEFT JOIN vol v USING (max_posting) LEFT JOIN pr USING (max_posting)
-        |ORDER BY t.max_posting""".stripMargin,
-    "text_mojibake" ->
-      // same planted suffix, same literal-alternation artifact count; the
-      // pattern is literal-only so Java regex and RE2 count identically
-      s"""WITH m AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 7 = 0 THEN text || ' cafÃ© â€” naÃ¯ve Â§ Â x' ELSE text END AS t
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(t, '${TextAnalysis.MojibakePattern}')) AS BIGINT) AS mojibake_hits,
-        |  CAST(CASE WHEN len(regexp_extract_all(t, '${TextAnalysis.MojibakePattern}')) > 0 THEN 1 ELSE 0 END AS BIGINT) AS corrupt
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "text_scripts" -> {
-      // same plants, same shared \x{...} ranges (Java regex and RE2 both
-      // accept them in a char class), same fixed-order dominance CASE
-      val pat = TextAnalysis.ScriptPatterns.toMap
-      s"""WITH synth AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0 THEN text || ' 模型数据清洗管道'
-        |         WHEN doc_id % 11 = 0 THEN text || ' очистка данных'
-        |         WHEN doc_id % 13 = 0 THEN text || ' καθαρισμός δεδομένων'
-        |         WHEN doc_id % 19 = 0 THEN ' 语料库 данные 语料 ' ELSE text END AS text
-        |  FROM documents),
-        |c AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '${pat("latin")}')) AS BIGINT) AS c_latin,
-        |    CAST(len(regexp_extract_all(text, '${pat("han")}')) AS BIGINT) AS c_han,
-        |    CAST(len(regexp_extract_all(text, '${pat("cyrillic")}')) AS BIGINT) AS c_cyrillic,
-        |    CAST(len(regexp_extract_all(text, '${pat("greek")}')) AS BIGINT) AS c_greek
-        |  FROM synth)
-        |SELECT doc_id, n_chars,
-        |  CASE WHEN n_chars = 0 THEN 0 ELSE (10000 * c_latin) // n_chars END AS latin_bp,
-        |  CASE WHEN n_chars = 0 THEN 0 ELSE (10000 * c_han) // n_chars END AS han_bp,
-        |  CASE WHEN n_chars = 0 THEN 0 ELSE (10000 * c_cyrillic) // n_chars END AS cyrillic_bp,
-        |  CASE WHEN n_chars = 0 THEN 0 ELSE (10000 * c_greek) // n_chars END AS greek_bp,
-        |  CASE WHEN c_latin >= c_han AND c_latin >= c_cyrillic AND c_latin >= c_greek THEN 'latin'
-        |       WHEN c_han >= c_cyrillic AND c_han >= c_greek THEN 'han'
-        |       WHEN c_cyrillic >= c_greek THEN 'cyrillic' ELSE 'greek' END AS dominant,
-        |  CAST(CASE WHEN (CASE WHEN c_latin > 0 THEN 1 ELSE 0 END + CASE WHEN c_han > 0 THEN 1 ELSE 0 END
-        |    + CASE WHEN c_cyrillic > 0 THEN 1 ELSE 0 END + CASE WHEN c_greek > 0 THEN 1 ELSE 0 END) >= 2
-        |    THEN 1 ELSE 0 END AS BIGINT) AS is_mixed
-        |FROM c ORDER BY doc_id""".stripMargin
-    },
-    "pii_luhn" ->
-      // same plants, same digit-run pattern, same 1-based odd-position
-      // doubling fold — the checksum replays digit for digit
-      """WITH synth AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 53 = 0 THEN text || ' 4111111111111111 and 0123456789'
-        |         WHEN doc_id % 59 = 0 THEN text || ' 4111111111111112'
-        |         ELSE text END AS t
-        |  FROM documents),
-        |m AS (SELECT doc_id, regexp_extract_all(t, '[0-9]+') AS runs FROM synth),
-        |c AS (SELECT doc_id, runs, list_filter(runs, s -> length(s) = 16) AS cands FROM m)
-        |SELECT doc_id,
-        |  CAST(len(runs) AS BIGINT) AS n_digit_runs,
-        |  CAST(len(cands) AS BIGINT) AS n_card_candidates,
-        |  CAST(coalesce(list_sum(list_transform(cands, s ->
-        |    CASE WHEN list_sum(list_transform(range(1, 17), i ->
-        |      CASE WHEN i % 2 = 1
-        |        THEN 2 * CAST(substring(s, CAST(i AS INT), 1) AS BIGINT)
-        |          - CASE WHEN 2 * CAST(substring(s, CAST(i AS INT), 1) AS BIGINT) > 9 THEN 9 ELSE 0 END
-        |        ELSE CAST(substring(s, CAST(i AS INT), 1) AS BIGINT) END)) % 10 = 0
-        |    THEN 1 ELSE 0 END)), 0) AS BIGINT) AS n_luhn_valid,
-        |  CAST(CASE WHEN coalesce(list_sum(list_transform(cands, s ->
-        |    CASE WHEN list_sum(list_transform(range(1, 17), i ->
-        |      CASE WHEN i % 2 = 1
-        |        THEN 2 * CAST(substring(s, CAST(i AS INT), 1) AS BIGINT)
-        |          - CASE WHEN 2 * CAST(substring(s, CAST(i AS INT), 1) AS BIGINT) > 9 THEN 9 ELSE 0 END
-        |        ELSE CAST(substring(s, CAST(i AS INT), 1) AS BIGINT) END)) % 10 = 0
-        |    THEN 1 ELSE 0 END)), 0) > 0 THEN 1 ELSE 0 END AS BIGINT) AS has_card
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "text_readability" ->
-      // same collapsed-whitespace token count as the quality family,
-      // vowel-group and terminator-run counts via regexp_extract_all,
-      // identical floor divisions in the milli domain
-      """WITH c AS (SELECT doc_id, trim(regexp_replace(text, '\s+', ' ', 'g')) AS t FROM documents),
-        |m AS (SELECT doc_id,
-        |    CAST(len(list_filter(string_split(lower(t), ' '), x -> x <> '')) AS BIGINT) AS n_words,
-        |    greatest(CAST(len(regexp_extract_all(t, '[.!?]+')) AS BIGINT), 1) AS n_sentences,
-        |    CAST(len(regexp_extract_all(lower(t), '[aeiouy]+')) AS BIGINT) AS n_syllables
-        |  FROM c)
-        |SELECT doc_id, n_words, n_sentences, n_syllables,
-        |  CAST((1000 * n_words) // n_sentences AS BIGINT) AS words_per_sentence_milli,
-        |  CAST(CASE WHEN n_words = 0 THEN 0 ELSE (1000 * n_syllables) // n_words END AS BIGINT) AS syllables_per_word_milli,
-        |  CAST(CASE WHEN n_words = 0 THEN 0
-        |    ELSE 206835 - (1015 * n_words) // n_sentences - (84600 * n_syllables) // n_words END AS BIGINT) AS flesch_milli
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "chat_qa" ->
-      // shared conversation synthesis; structural flags by list index,
-      // role token sums via the same \s+ tokenizer, share in bp
-      s"""WITH $DuckChatConvs,
-        |m AS (SELECT doc_id, roles,
-        |    CAST(len(sents) AS BIGINT) AS n_turns,
-        |    CAST(len(list_filter(roles, r -> r = 'user')) AS BIGINT) AS n_user,
-        |    CAST(len(list_filter(roles, r -> r = 'assistant')) AS BIGINT) AS n_assistant,
-        |    CAST(coalesce(list_sum(list_transform(generate_series(1, len(sents)), i ->
-        |      CASE WHEN roles[i] = 'user' THEN len(list_filter(string_split_regex(sents[i], '\\s+'), x -> x <> '')) ELSE 0 END)), 0) AS BIGINT) AS user_tokens,
-        |    CAST(coalesce(list_sum(list_transform(generate_series(1, len(sents)), i ->
-        |      CASE WHEN roles[i] = 'assistant' THEN len(list_filter(string_split_regex(sents[i], '\\s+'), x -> x <> '')) ELSE 0 END)), 0) AS BIGINT) AS assistant_tokens
-        |  FROM ch)
-        |SELECT doc_id, n_turns, n_user, n_assistant,
-        |  CAST(CASE WHEN n_turns > 0 AND roles[1] = 'user' THEN 1 ELSE 0 END AS BIGINT) AS starts_user,
-        |  CAST(CASE WHEN n_turns > 0 AND roles[CAST(n_turns AS INT)] = 'assistant' THEN 1 ELSE 0 END AS BIGINT) AS ends_assistant,
-        |  CAST(CASE WHEN n_turns <= 1 THEN 1
-        |    WHEN len(list_filter(generate_series(2, CAST(n_turns AS INT)), i -> roles[i] = roles[i - 1])) = 0 THEN 1
-        |    ELSE 0 END AS BIGINT) AS alternates,
-        |  user_tokens, assistant_tokens,
-        |  CAST(CASE WHEN user_tokens + assistant_tokens = 0 THEN 0
-        |    ELSE (10000 * assistant_tokens) // (user_tokens + assistant_tokens) END AS BIGINT) AS assistant_share_bp
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "chat_render" ->
-      // same synthesis; the ChatML frame folded in list order, char count,
-      // tag-free token count
-      s"""WITH $DuckChatConvs,
-        |r AS (SELECT doc_id,
-        |    coalesce(list_aggregate(list_transform(generate_series(1, len(sents)), i ->
-        |      '<|' || roles[i] || '|>' || chr(10) || sents[i] || '<|end|>' || chr(10)), 'string_agg', ''), '') AS rendered,
-        |    CAST(coalesce(list_sum(list_transform(sents, x ->
-        |      len(list_filter(string_split_regex(x, '\\s+'), t -> t <> '')))), 0) AS BIGINT) AS content_tokens
-        |  FROM ch)
-        |SELECT doc_id, rendered, CAST(length(rendered) AS BIGINT) AS rendered_chars, content_tokens
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "chat_pipeline" ->
-      // 7-token-window turn synthesis (same %7/%11 role plants as
-      // DuckChatConvs) → the chat_qa structural gate as a WHERE → the
-      // chat_render fold over survivors → the pack_sequences
-      // cumsum-window offsets at budget 1024
-      """WITH cp_t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |cp_c AS (SELECT doc_id, CAST(((len(toks) - 1) // 7) + 1 AS INT) AS nt,
-        |    list_transform(generate_series(1, CAST(((len(toks) - 1) // 7) + 1 AS INT)), i ->
-        |      CASE WHEN doc_id % 11 = 0 AND i <= 2 THEN 'user'
-        |           WHEN ((i - 1) + CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END) % 2 = 0 THEN 'user'
-        |           ELSE 'assistant' END) AS roles,
-        |    list_transform(generate_series(1, CAST(((len(toks) - 1) // 7) + 1 AS INT)), i ->
-        |      array_to_string(toks[(i - 1) * 7 + 1 : (i - 1) * 7 + 7], ' ')) AS contents
-        |  FROM cp_t),
-        |kept AS (SELECT doc_id, nt, roles, contents FROM cp_c
-        |  WHERE nt > 0 AND roles[1] = 'user' AND roles[nt] = 'assistant'
-        |    AND (nt <= 1 OR len(list_filter(generate_series(2, nt),
-        |      i -> roles[i] = roles[i - 1])) = 0)),
-        |r AS (SELECT k.doc_id, d.source,
-        |    coalesce(list_aggregate(list_transform(generate_series(1, k.nt), i ->
-        |      '<|' || k.roles[i] || '|>' || chr(10) || k.contents[i] || '<|end|>' || chr(10)), 'string_agg', ''), '') AS rendered,
-        |    CAST(coalesce(list_sum(list_transform(k.contents, x ->
-        |      len(list_filter(string_split_regex(x, '\s+'), t -> t <> '')))), 0) AS BIGINT) AS content_tokens
-        |  FROM kept k JOIN documents d USING (doc_id)),
-        |o AS (SELECT doc_id, source, CAST(length(rendered) AS BIGINT) AS rendered_chars, content_tokens,
-        |    CAST(coalesce(SUM(content_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
-        |  FROM r)
-        |SELECT source, doc_id, rendered_chars, content_tokens,
-        |  cum // 1024 AS seq_id, cum % 1024 AS seq_offset
-        |FROM o ORDER BY source, doc_id""".stripMargin,
-    "pref_best_of_n" ->
-      // same prefix-slice candidates, the curation quality score verbatim
-      // (the DuckQualityScore arithmetic over candidates), best/worst by
-      // the two deterministic orderings, margin gate at 10
-      """WITH c0 AS (SELECT doc_id, unnest(range(0, 4)) AS cand, text FROM documents),
-        |c AS (SELECT doc_id, cand,
-        |    substring(text, 1, CAST(greatest(1, (length(text) * (1 + 3 * cand)) // 10) AS INT)) AS ct
-        |  FROM c0),
-        |n AS (SELECT doc_id, cand, trim(regexp_replace(ct, '\s+', ' ', 'g')) AS t FROM c),
-        |m AS (SELECT doc_id, cand, CAST(length(t) AS BIGINT) AS nc,
-        |    string_split(lower(t), ' ') AS toks FROM n),
-        |q AS (SELECT doc_id, cand, nc, CAST(len(toks) AS BIGINT) AS nt,
-        |    CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','that'], x))) AS BIGINT) AS stop
-        |  FROM m),
-        |sc AS (SELECT doc_id, cand,
-        |    least(40, nt // 4)
-        |      + (CASE WHEN (10000 * stop) // nt BETWEEN 200 AND 6000 THEN 30 ELSE 0 END)
-        |      + (CASE WHEN (1000 * (nc - (nt - 1))) // nt BETWEEN 2500 AND 9000 THEN 30 ELSE 0 END) AS score
-        |  FROM q),
-        |r AS (SELECT doc_id, cand, score,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, cand ASC) AS rb,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY score ASC, cand DESC) AS rw,
-        |    COUNT(*) OVER (PARTITION BY doc_id) AS ncand
-        |  FROM sc),
-        |b AS (SELECT doc_id, CAST(ncand AS BIGINT) AS n_cands,
-        |    CAST(cand AS BIGINT) AS chosen_cand, CAST(score AS BIGINT) AS chosen_score
-        |  FROM r WHERE rb = 1),
-        |w AS (SELECT doc_id, CAST(cand AS BIGINT) AS rejected_cand,
-        |    CAST(score AS BIGINT) AS rejected_score FROM r WHERE rw = 1)
-        |SELECT b.doc_id, n_cands, chosen_cand, chosen_score, rejected_cand, rejected_score,
-        |  chosen_score - rejected_score AS margin,
-        |  CAST(CASE WHEN chosen_score - rejected_score >= 10 THEN 1 ELSE 0 END AS BIGINT) AS kept
-        |FROM b JOIN w USING (doc_id) ORDER BY b.doc_id""".stripMargin,
-    "pref_qa" ->
-      // same pair synthesis; distinct-word Jaccard via list_distinct +
-      // membership filter, the same \s+ tokenizer
-      s"""WITH $DuckPrefPairs
-        |SELECT doc_id, chosen_tokens, rejected_tokens,
-        |  chosen_tokens - rejected_tokens AS len_delta,
-        |  CAST(CASE WHEN chosen_tokens - rejected_tokens > 0 THEN 1 ELSE 0 END AS BIGINT) AS chosen_longer,
-        |  identical,
-        |  CAST(CASE WHEN uni = 0 THEN 0 ELSE (10000 * inter) // uni END AS BIGINT) AS overlap_bp
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "pref_bias_card" ->
-      // shared pair CTEs; the same per-pair columns folded to one row
-      s"""WITH $DuckPrefPairs,
-        |q AS (SELECT doc_id, chosen_tokens, rejected_tokens, identical,
-        |    chosen_tokens - rejected_tokens AS len_delta,
-        |    CASE WHEN chosen_tokens - rejected_tokens > 0 THEN 1 ELSE 0 END AS chosen_longer,
-        |    CASE WHEN uni = 0 THEN 0 ELSE (10000 * inter) // uni END AS overlap_bp
-        |  FROM m)
-        |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST((10000 * sum(identical)) // count(*) AS BIGINT) AS identical_bp,
-        |  CAST((10000 * sum(chosen_longer)) // count(*) AS BIGINT) AS chosen_longer_bp,
-        |  CAST(sum(len_delta) AS BIGINT) AS len_delta_sum,
-        |  CAST((10000 * sum(CASE WHEN overlap_bp >= 8000 THEN 1 ELSE 0 END)) // count(*) AS BIGINT) AS high_overlap_bp
-        |FROM q""".stripMargin,
-    "code_fim" ->
-      // same third-offset integer arithmetic and PSM frame; md5 over the
-      // reframed text
-      """WITH m AS (SELECT doc_id, text,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(length(text) AS BIGINT) // 3 AS p1,
-        |    (2 * CAST(length(text) AS BIGINT)) // 3 AS p2,
-        |    CASE WHEN doc_id % 2 = 0 AND length(text) >= 3 THEN 1 ELSE 0 END AS transformed
-        |  FROM documents),
-        |f AS (SELECT doc_id, transformed, n_chars,
-        |    CASE WHEN transformed = 1
-        |      THEN '<|fim_pre|>' || substring(text, 1, CAST(p1 AS INT))
-        |        || '<|fim_suf|>' || substring(text, CAST(p2 AS INT) + 1, CAST(n_chars - p2 AS INT))
-        |        || '<|fim_mid|>' || substring(text, CAST(p1 AS INT) + 1, CAST(p2 - p1 AS INT))
-        |      ELSE text END AS fim_text
-        |  FROM m)
-        |SELECT doc_id, CAST(transformed AS BIGINT) AS transformed, n_chars,
-        |  CAST(length(fim_text) AS BIGINT) AS fim_chars, md5(fim_text) AS fim_md5
-        |FROM f ORDER BY doc_id""".stripMargin,
-    "text_novelty" ->
-      // same shingle + md5-prefix fingerprint replay as source_overlap,
-      // split %3 batch vs rest, LEFT JOIN for the seen flag
-      """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents),
-        |sh AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 8
-        |         THEN list_transform(range(0, len(toks) - 7), i -> array_to_string(toks[i+1:i+8], ' '))
-        |         ELSE [array_to_string(toks, ' ')] END) AS shingle FROM t),
-        |gh AS (SELECT DISTINCT doc_id, CAST('0x' || substring(md5(shingle), 1, 15) AS BIGINT) AS hv FROM sh),
-        |bg AS (SELECT doc_id, hv FROM gh WHERE doc_id % 3 = 0),
-        |rg AS (SELECT DISTINCT hv FROM gh WHERE doc_id % 3 <> 0),
-        |j AS (SELECT bg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-        |        CAST(SUM(CASE WHEN rg.hv IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_seen
-        |      FROM bg LEFT JOIN rg ON bg.hv = rg.hv GROUP BY 1)
-        |SELECT doc_id, n_grams, n_seen,
-        |  CAST((10000 * (n_grams - n_seen)) // n_grams AS BIGINT) AS novel_bp
-        |FROM j ORDER BY doc_id""".stripMargin,
-    "text_code_filters" ->
-      // same plants, same alphabet classes, same floor divisions; counts
-      // via len(regexp_extract_all(...)) — the engines' shared idiom
-      """WITH synth AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 23 = 0 THEN text || chr(10) || repeat('x', 1200)
-        |         WHEN doc_id % 29 = 0 THEN text || chr(10) || repeat('QUJDRA==', 10)
-        |         WHEN doc_id % 31 = 0 THEN '// AUTO-GENERATED. DO NOT EDIT.' || chr(10) || text
-        |         WHEN doc_id % 3 = 0 THEN replace(text, ' ', chr(10))
-        |         ELSE text END AS t
-        |  FROM documents),
-        |c AS (SELECT doc_id, t, string_split(t, chr(10)) AS lines,
-        |             CAST(length(t) AS BIGINT) AS n_chars FROM synth),
-        |m AS (SELECT doc_id, n_chars,
-        |    CAST(len(lines) AS BIGINT) AS n_lines,
-        |    CAST(coalesce(list_max(list_transform(lines, l -> length(l))), 0) AS BIGINT) AS max_line_len,
-        |    CAST(list_sum(list_transform(lines, l -> length(l))) // len(lines) AS BIGINT) AS avg_line_len,
-        |    CAST(CASE WHEN length(t) = 0 THEN 0
-        |      ELSE (10000 * len(regexp_extract_all(t, '[A-Za-z0-9]'))) // length(t) END AS BIGINT) AS alnum_bp,
-        |    CAST(len(regexp_extract_all(t, '[A-Za-z0-9+/=]{64,}')) AS BIGINT) AS n_blobs,
-        |    CAST(CASE WHEN contains(lower(t), 'auto-generated')
-        |      OR contains(lower(t), 'do not edit') THEN 1 ELSE 0 END AS BIGINT) AS autogen
-        |  FROM c)
-        |SELECT doc_id, n_lines, n_chars, max_line_len, avg_line_len, alnum_bp, n_blobs, autogen,
-        |  CAST(CASE WHEN max_line_len <= 1000 AND avg_line_len <= 100 AND alnum_bp >= 2500
-        |    AND n_blobs = 0 AND autogen = 0 THEN 1 ELSE 0 END AS BIGINT) AS code_pass
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "text_collocations" ->
-      // same tokenizer fragment as ngram_topk, same δ=1 discount and
-      // minCount=5 gate, same floor-division score domain
-      """WITH t AS (SELECT string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents),
-        |u AS (SELECT unnest(toks) AS w FROM t),
-        |uc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n FROM u GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(n) AS BIGINT) AS n_tokens FROM uc),
-        |bi AS (SELECT unnest(generate_series(1, len(toks) - 1)) AS i, toks FROM t WHERE len(toks) >= 2),
-        |b AS (SELECT toks[i] AS w1, toks[i + 1] AS w2 FROM bi),
-        |bc AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS n_pair FROM b GROUP BY 1, 2),
-        |s AS (SELECT w1, w2, n_pair, u1.n AS n_w1, u2.n AS n_w2,
-        |        CAST(((n_pair - 1) * n_tokens * 10000) // (u1.n * u2.n) AS BIGINT) AS score_q
-        |      FROM bc JOIN uc u1 ON bc.w1 = u1.w JOIN uc u2 ON bc.w2 = u2.w, tot
-        |      WHERE n_pair >= 5)
-        |SELECT w1, w2, n_pair, n_w1, n_w2, score_q FROM s
-        |ORDER BY score_q DESC, w1, w2 LIMIT 20""".stripMargin,
-    "text_lm_score" ->
-      // self-trained bigram LM replay: same tokenizer, same integer
-      // Laplace-smoothed arithmetic (10000·(c2+1) // (c1+V), integer mean)
-      s"""WITH ${duckLmCtes("documents")}
-        |SELECT doc_id, n_bigrams, lm_bp FROM lms ORDER BY 1""".stripMargin,
-    "text_lm_kn" ->
-      // interpolated Kneser–Ney replay: ×4 clears the 3/4 discount, the
-      // backoff composes two bp-bounded integer factors (overflow-safe at
-      // any corpus size), lc2 doubles as the bigram-count relation
-      s"""WITH ${duckLmCtes("documents")},
-        |knc1 AS (SELECT w1, COUNT(*) AS n1, COUNT(DISTINCT w2) AS nl FROM lbg2 GROUP BY 1),
-        |knnr AS (SELECT w2, COUNT(DISTINCT w1) AS nr FROM lbg2 GROUP BY 1),
-        |knb AS (SELECT COUNT(*) AS nb FROM (SELECT DISTINCT w1, w2 FROM lbg2)),
-        |knp AS (SELECT w1, w2,
-        |    (10000 * greatest(4 * n2 - 3, 0)) // (4 * n1)
-        |    + ((10000 * 3 * nl) // (4 * n1)) * ((10000 * nr) // nb) // 10000 AS kn_bp
-        |  FROM lc2 JOIN knc1 USING (w1) JOIN knnr USING (w2), knb),
-        |kms AS (SELECT doc_id, COUNT(*) AS n_bigrams,
-        |    CAST(SUM(kn_bp) // COUNT(*) AS BIGINT) AS kn_bp
-        |  FROM lbg2 JOIN knp USING (w1, w2) GROUP BY 1)
-        |SELECT doc_id, n_bigrams, kn_bp FROM kms ORDER BY 1""".stripMargin,
-    "text_gopher_rules" ->
-      // rule-by-rule integer replay of the Gopher battery; line rules
-      // split the RAW text on newlines, word rules the collapsed form
-      s"""WITH ${duckGopherMetrics("documents")}
-        |SELECT doc_id, n_words, word_len_milli, symbol_bp, bullet_bp, ellipsis_bp, alpha_bp, stop_hits,
-        |  CAST(n_words BETWEEN 50 AND 100000 AS BIGINT) AS r_word_count,
-        |  CAST(word_len_milli BETWEEN 3000 AND 10000 AS BIGINT) AS r_word_len,
-        |  CAST(symbol_bp <= 1000 AS BIGINT) AS r_symbol,
-        |  CAST(bullet_bp <= 9000 AS BIGINT) AS r_bullet,
-        |  CAST(ellipsis_bp <= 3000 AS BIGINT) AS r_ellipsis,
-        |  CAST(alpha_bp >= 8000 AS BIGINT) AS r_alpha,
-        |  CAST(stop_hits >= 2 AS BIGINT) AS r_stop,
-        |  CAST(n_words BETWEEN 50 AND 100000 AND word_len_milli BETWEEN 3000 AND 10000
-        |    AND symbol_bp <= 1000 AND bullet_bp <= 9000 AND ellipsis_bp <= 3000
-        |    AND alpha_bp >= 8000 AND stop_hits >= 2 AS BIGINT) AS gopher_pass
-        |FROM gm ORDER BY doc_id""".stripMargin,
-    "mix_ccnet" ->
-      // LM fragment + the stats_quantiles nearest-rank pattern at 3333/
-      // 6667 bp, tertile assignment replayed with the same > tie rule
-      s"""WITH ${duckLmCtes("documents")},
-        |j AS (SELECT d.source, d.doc_id, lms.lm_bp FROM documents d JOIN lms USING (doc_id)),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY source ORDER BY lm_bp) AS rn, COUNT(*) OVER (PARTITION BY source) AS n FROM j),
-        |th AS (SELECT source,
-        |        MAX(CASE WHEN rn = (n * 3333 + 9999) // 10000 THEN lm_bp END) AS t33,
-        |        MAX(CASE WHEN rn = (n * 6667 + 9999) // 10000 THEN lm_bp END) AS t66
-        |       FROM r GROUP BY source),
-        |b AS (SELECT j.source, CASE WHEN j.lm_bp > th.t66 THEN 'head' WHEN j.lm_bp > th.t33 THEN 'middle' ELSE 'tail' END AS bucket, j.lm_bp
-        |      FROM j JOIN th USING (source))
-        |SELECT source, bucket, CAST(COUNT(*) AS BIGINT) AS n, MIN(lm_bp) AS min_bp, MAX(lm_bp) AS max_bp
-        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "curation_dsir" ->
-      // full DSIR replay (one generator serves this and the incremental
-      // row): same tokenizer, same seeded md5 buckets, and the SAME
-      // generated fixed-point-log2 fragment (ilog2qSql) for the Laplace
-      // ratio weights — only the shift spelling differs by dialect, so
-      // every score is an integer both engines agree on
-      duckDsirSql(corpusPred = "TRUE", scorePred = "TRUE", k = 100),
-    "dsir_incremental" ->
-      // weights from the corpus slice only, scores over the batch slice —
-      // batch buckets unseen at weight time contribute the 0 prior (LEFT
-      // JOIN + coalesce, matching scoreWith)
-      duckDsirSql(corpusPred = "doc_id % 5 <> 0", scorePred = "doc_id % 5 = 0", k = 100),
-    "stream_dsir" ->
-      // the streaming face must equal the batch replay EXACTLY — same
-      // oracle as dsir_incremental by construction
-      duckDsirSql(corpusPred = "doc_id % 5 <> 0", scorePred = "doc_id % 5 = 0", k = 100),
-    "classify_nb" ->
-      // full NB replay: same tokenizer/buckets as the DSIR family, same
-      // ilog2q prior/weights (hit-only sum + per-bigram normalizer), same
-      // (score desc, class) argmax tie rule, same md5 20%% held-out rule
-      s"""WITH $DuckNbScoreCtes,
-        |pred AS (SELECT doc_id, source, cls AS predicted FROM (
-        |    SELECT sc.*, row_number() OVER (PARTITION BY doc_id ORDER BY score_q DESC, cls) AS rn FROM sc) WHERE rn = 1)
-        |SELECT source, predicted, COUNT(*) AS n FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "classify_nb_pr" ->
-      // same scoring chain, then the one-vs-rest margin sweep: explicit
-      // floor banding (non-negative div operands only — Spark div
-      // truncates, DuckDB // floors), cumulative tp/fp from the top band
-      s"""WITH $DuckNbScoreCtes,
-        |marg AS (SELECT doc_id,
-        |    MAX(CASE WHEN cls = 'src7' THEN score_q END) AS sc_t,
-        |    MAX(CASE WHEN cls <> 'src7' THEN score_q END) AS sc_o,
-        |    MAX(CASE WHEN source = 'src7' THEN 1 ELSE 0 END) AS pos
-        |  FROM sc GROUP BY 1),
-        |mb AS (SELECT doc_id, pos, sc_t - sc_o AS m FROM marg WHERE sc_t IS NOT NULL AND sc_o IS NOT NULL),
-        |bnd AS (SELECT CASE WHEN m >= 0 THEN m // 4096 ELSE -(((-m) + 4095) // 4096) END AS band,
-        |          CAST(SUM(pos) AS BIGINT) AS n_pos, CAST(SUM(1 - pos) AS BIGINT) AS n_neg
-        |        FROM mb GROUP BY 1),
-        |prt AS (SELECT CAST(SUM(pos) AS BIGINT) AS np FROM mb),
-        |cum AS (SELECT band, CAST(SUM(n_pos) OVER (ORDER BY band DESC) AS BIGINT) AS tp,
-        |          CAST(SUM(n_neg) OVER (ORDER BY band DESC) AS BIGINT) AS fp FROM bnd)
-        |SELECT band, band * 4096 AS threshold_q, tp, fp,
-        |  CAST(10000 * tp // (tp + fp) AS BIGINT) AS precision_bp,
-        |  CAST(10000 * tp // greatest(np, 1) AS BIGINT) AS recall_bp
-        |FROM cum, prt ORDER BY band""".stripMargin,
-    "text_c4_lines" ->
-      // same deterministic lined synthesis (8-word sentences + keyed
-      // injections), then the C4 line/page rules as list expressions
-      """WITH base AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |lined AS (SELECT doc_id,
-        |   array_to_string(list_transform(generate_series(0, (len(toks)+7)//8 - 1),
-        |     g -> array_to_string(list_slice(toks, g*8+1, g*8+8), ' ') || '.'), chr(10)) AS l0
-        |  FROM base),
-        |synth AS (SELECT doc_id,
-        |   CASE WHEN doc_id % 13 = 0 THEN l1 || chr(10) || 'if (x) { console.log(x); }' ELSE l1 END AS text
-        |  FROM (SELECT doc_id, CASE WHEN doc_id % 17 = 0 THEN 'lorem ipsum dolor sit amet.' || chr(10) || l0 ELSE l0 END AS l1 FROM lined)),
-        |c4 AS (SELECT doc_id,
-        |        list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), l -> l <> '') AS lines,
-        |        contains(text, '{') AS has_brace,
-        |        contains(lower(text), 'lorem ipsum') AS has_lorem
-        |      FROM synth),
-        |k AS (SELECT doc_id, CAST(len(lines) AS BIGINT) AS n_lines,
-        |        list_filter(lines, l -> regexp_matches(l, '[.!?"]$') AND len(regexp_extract_all(l, '\S+')) >= 5
-        |          AND NOT contains(lower(l), 'javascript')) AS kept_lines,
-        |        has_brace, has_lorem FROM c4)
-        |SELECT doc_id, n_lines, CAST(len(kept_lines) AS BIGINT) AS n_kept_lines,
-        |  array_to_string(kept_lines, chr(10)) AS clean_text,
-        |  CAST(len(kept_lines) >= 3 AND NOT has_brace AND NOT has_lorem AS BIGINT) AS c4_kept
-        |FROM k ORDER BY doc_id""".stripMargin,
-    "curation_rules" ->
-      // the composed rule-first replay: Gopher metrics gate (stop rule
-      // off, minWords 20) → LM fragment RE-TARGETED at the gated CTE
-      // (self-trained scores shift with the gate, both engines) → exact-
-      // dup keep-first → the quota_per_source basis-point cap replay
-      s"""WITH ${duckGopherMetrics("documents")},
-        |gok AS (SELECT doc_id FROM gm WHERE n_words BETWEEN 20 AND 100000 AND word_len_milli BETWEEN 3000 AND 10000
-        |        AND symbol_bp <= 1000 AND bullet_bp <= 9000 AND ellipsis_bp <= 3000 AND alpha_bp >= 8000),
-        |gated AS (SELECT d.* FROM documents d JOIN gok USING (doc_id)),
-        |${duckLmCtes("gated")},
-        |scored AS (SELECT doc_id, lm_bp FROM lms WHERE lm_bp >= 335),
-        |kept AS (SELECT g.doc_id, g.source, g.text, s.lm_bp FROM gated g JOIN scored s USING (doc_id)),
-        |dd AS (SELECT doc_id FROM (SELECT doc_id, CASE WHEN doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text)) THEN 1 ELSE 0 END AS is_dup FROM kept) WHERE is_dup = 0),
-        |r AS (SELECT k.doc_id, k.source, k.lm_bp,
-        |        row_number() OVER (PARTITION BY k.source ORDER BY CAST('0x' || substring(md5(coalesce(CAST(k.doc_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000, k.doc_id) AS rn
-        |      FROM kept k JOIN dd USING (doc_id))
-        |SELECT doc_id, source, lm_bp FROM r WHERE rn <= 25 ORDER BY doc_id""".stripMargin,
-    "multimodal_meta" ->
-      // replays the payload construction arithmetic: header sizes are the
-      // fixed builder sizes (PNG 33 = 8 sig + 25 IHDR chunk; JPEG 39 =
-      // SOI + APP0 + DQT stub + SOF0; WAV 44 = RIFF + fmt + data header)
-      """SELECT doc_id AS media_id,
-        |  CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'wav' END AS format,
-        |  CAST(octet_length(encode(text)) + CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 33 WHEN 1 THEN 39 ELSE 44 END AS BIGINT) AS n_bytes,
-        |  CASE WHEN doc_id % 3 < 2 THEN CAST(32 + (doc_id * 7) % 2048 AS INT) END AS width,
-        |  CASE WHEN doc_id % 3 < 2 THEN CAST(32 + (doc_id * 13) % 2048 AS INT) END AS height,
-        |  CASE WHEN doc_id % 3 = 2 THEN CAST(8000 + (doc_id % 6) * 8000 AS INT) END AS sample_rate,
-        |  CASE WHEN doc_id % 3 = 2 THEN CAST(1 + doc_id % 2 AS INT) END AS n_channels
-        |FROM documents ORDER BY media_id""".stripMargin,
-    "text_html_extract" -> {
-      val t = graft.ops.TextAnalysis
-      val ent = t.HtmlEntities.foldLeft("c") { case (acc, (e, r)) =>
-        val rl = r.replace("'", "''")
-        s"replace($acc, '$e', '$rl')"
-      }
-      s"""WITH hsyn AS (SELECT doc_id, $HtmlSynthExpr AS html FROM documents),
-        |hclean AS (SELECT doc_id,
-        |    regexp_replace(regexp_replace(regexp_replace(html,
-        |      '${t.HtmlScriptPat}', ' ', 'g'),
-        |      '${t.HtmlBlockPat}', chr(10), 'g'),
-        |      '${t.HtmlTagPat}', ' ', 'g') AS c FROM hsyn),
-        |hent AS (SELECT doc_id, $ent AS c2 FROM hclean),
-        |hl AS (SELECT doc_id,
-        |    list_filter(list_transform(string_split(c2, chr(10)),
-        |      l -> trim(regexp_replace(l, '\\s+', ' ', 'g'))), l -> l <> '') AS ls
-        |  FROM hent)
-        |SELECT doc_id, array_to_string(ls, chr(10)) AS text_clean,
-        |  CAST(len(ls) AS BIGINT) AS n_blocks
-        |FROM hl ORDER BY doc_id""".stripMargin
-    },
-    "dedup_soft" ->
-      // shared LSH-pair + components fragments, then the 1/size weight
-      s"""WITH RECURSIVE $DuckMinhashPairs,
-        |$DuckComponentsLab
-        |SELECT l.doc_id, s.cluster_size, 10000 // s.cluster_size AS weight_bp
-        |FROM lab l JOIN sz s ON l.cluster_id = s.cluster_id
-        |ORDER BY l.doc_id""".stripMargin,
-    "mix_doremi" ->
-      // shared bigram-LM replay; the integer excess-loss reweighting on top
-      s"""WITH ${duckLmCtes("documents")},
-        |dsrc AS (SELECT doc_id, source FROM documents),
-        |dper AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |           CAST(SUM(lm_bp) // COUNT(*) AS BIGINT) AS avg_lm_bp
-        |         FROM lms JOIN dsrc USING (doc_id) GROUP BY source),
-        |dbest AS (SELECT MAX(avg_lm_bp) AS b FROM dper),
-        |dq AS (SELECT source, n_docs, avg_lm_bp,
-        |         CAST(least(7, (b - avg_lm_bp) // 200) AS BIGINT) AS excess_q,
-        |         n_docs * (CAST(1 AS BIGINT) << least(7, (b - avg_lm_bp) // 200)) AS raw
-        |       FROM dper, dbest),
-        |dtot AS (SELECT CAST(SUM(raw) AS BIGINT) AS t FROM dq)
-        |SELECT source, n_docs, avg_lm_bp, excess_q,
-        |  CAST((10000 * raw) // t AS BIGINT) AS weight_bp
-        |FROM dq, dtot ORDER BY source""".stripMargin,
-    "multimodal_audio" -> {
-      val m = graft.ops.Multimodal
-      val samples = m.audioSampleCols("hx", "blen", duck = true).mkString(",\n    ")
-      val stats = (0 until m.AudioFrames).flatMap(f => Seq(
-        s"${m.audioFrameStatSql(f, "energy")} AS _e$f",
-        s"${m.audioFrameStatSql(f, "zcross")} AS _z$f",
-        s"${m.audioFrameStatSql(f, "reversals")} AS _r$f",
-        s"${m.audioFrameStatSql(f, "peak")} AS _p$f")).mkString(",\n    ")
-      def pick(p: String) = (0 until m.AudioFrames)
-        .map(f => s"WHEN $f THEN $p$f").mkString("CASE frame_idx ", " ", " END")
-      s"""WITH p AS (SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-        |    CAST(octet_length(encode(text)) AS BIGINT) AS blen
-        |  FROM documents WHERE doc_id % 3 = 2),
-        |v AS (SELECT media_id,
-        |    $samples
-        |  FROM p),
-        |fr AS (SELECT media_id,
-        |    $stats
-        |  FROM v),
-        |x AS (SELECT *, CAST(unnest(generate_series(0, ${m.AudioFrames - 1})) AS INT) AS frame_idx FROM fr),
-        |y AS (SELECT media_id, frame_idx,
-        |    ${pick("_e")} AS energy, ${pick("_z")} AS zcross,
-        |    ${pick("_r")} AS reversals, ${pick("_p")} AS peak FROM x)
-        |SELECT media_id, frame_idx, energy, zcross, reversals, peak,
-        |  CASE WHEN energy < ${m.AudioSilenceFloor} THEN 1 ELSE 0 END AS is_silence
-        |FROM y ORDER BY media_id, frame_idx""".stripMargin
-    },
-    "multimodal_keyframes" -> {
-      // same luma fragments; one SELECT per frame position gated on its
-      // start flag, unioned — the explode-free dialect of the struct array
-      val m = graft.ops.Multimodal
-      val lumas = m.videoLumaCols("hx", "blen", duck = true).mkString(",\n    ")
-      val rows = (0 until m.VideoFrames).map { f =>
-        s"""SELECT media_id, CAST(${m.keyframeShotIdxSql(f, 16L)} AS BIGINT) AS shot_idx,
-          |  CAST($f AS BIGINT) AS start_frame, CAST(_l$f AS BIGINT) AS luma
-          |FROM v WHERE ${m.keyframeFlagSql(f, 16L)} = 1""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH p AS (SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-        |    CAST(octet_length(encode(text)) AS BIGINT) AS blen
-        |  FROM documents WHERE doc_id % 3 = 0),
-        |v AS (SELECT media_id,
-        |    $lumas
-        |  FROM p)
-        |$rows
-        |ORDER BY media_id, shot_idx""".stripMargin
-    },
-    "multimodal_shots" -> {
-      // same generated luma/delta fragments with duck = true; the PNG
-      // header never reaches the oracle (body = the raw text bytes)
-      val m = graft.ops.Multimodal
-      val lumas = m.videoLumaCols("hx", "blen", duck = true).mkString(",\n    ")
-      s"""WITH p AS (SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-        |    CAST(octet_length(encode(text)) AS BIGINT) AS blen
-        |  FROM documents WHERE doc_id % 3 = 0),
-        |v AS (SELECT media_id,
-        |    $lumas
-        |  FROM p)
-        |SELECT media_id,
-        |  ${m.shotStatSql("n_boundaries", 16L)} + 1 AS n_shots,
-        |  ${m.shotStatSql("n_boundaries", 16L)} AS n_boundaries,
-        |  ${m.shotStatSql("first_boundary", 16L)} AS first_boundary,
-        |  ${m.shotStatSql("max_delta", 16L)} AS max_delta
-        |FROM v ORDER BY media_id""".stripMargin
-    },
-    "multimodal_audio_neardup" -> {
-      // same sampled grid, same 48-bit energy-delta fingerprint fold,
-      // same 3x16-bit banding + xor verify, replayed entirely in SQL
-      val m = graft.ops.Multimodal
-      val samples = m.audioSampleCols("hx", "blen", duck = true).mkString(",\n    ")
-      s"""WITH p AS (SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-        |    CAST(octet_length(encode(text)) AS BIGINT) AS blen
-        |  FROM (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 2
-        |        UNION ALL SELECT doc_id + 30000000, 'X' || substring(text, 2)
-        |        FROM documents WHERE doc_id % 3 = 2 AND doc_id % 50 = 0)),
-        |v AS (SELECT media_id,
-        |    $samples
-        |  FROM p),
-        |fp AS (SELECT media_id, ${m.audioFingerprintFromSamplesSql} AS afp FROM v),
-        |bands AS (SELECT media_id, afp, b,
-        |    (afp >> (b * ${m.AudioFpBandBits})) & ${(1L << m.AudioFpBandBits) - 1L} AS band_val
-        |  FROM fp, (SELECT unnest(range(0, ${m.AudioFpBands})) AS b)),
-        |cand AS (SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b,
-        |    CAST(bit_count(xor(a.afp, b.afp)) AS BIGINT) AS hamming
-        |  FROM bands a JOIN bands b ON a.b = b.b AND a.band_val = b.band_val
-        |    AND a.media_id < b.media_id)
-        |SELECT id_a, id_b, hamming FROM cand WHERE hamming <= 4
-        |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(0 AS BIGINT)
-        |ORDER BY id_a, id_b""".stripMargin
-    },
-    "multimodal_video_neardup" -> {
-      // same raw sampled grid, same 45-bit luma double-difference fold,
-      // same 3x15-bit banding + xor verify, replayed entirely in SQL;
-      // the PNG header never reaches the oracle (body = raw text bytes)
-      val m = graft.ops.Multimodal
-      val samples = m.videoSampleCols("hx", "blen", duck = true).mkString(",\n    ")
-      s"""WITH p AS (SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-        |    CAST(octet_length(encode(text)) AS BIGINT) AS blen
-        |  FROM (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-        |        UNION ALL SELECT doc_id + 30000000, 'X' || substring(text, 2)
-        |        FROM documents WHERE doc_id % 3 = 0 AND doc_id % 50 = 0)),
-        |v AS (SELECT media_id,
-        |    $samples
-        |  FROM p),
-        |fp AS (SELECT media_id, ${m.videoFingerprintFromSamplesSql} AS vfp FROM v),
-        |bands AS (SELECT media_id, vfp, b,
-        |    (vfp >> (b * ${m.VideoFpBandBits})) & ${(1L << m.VideoFpBandBits) - 1L} AS band_val
-        |  FROM fp, (SELECT unnest(range(0, ${m.VideoFpBands})) AS b)),
-        |cand AS (SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b,
-        |    CAST(bit_count(xor(a.vfp, b.vfp)) AS BIGINT) AS hamming
-        |  FROM bands a JOIN bands b ON a.b = b.b AND a.band_val = b.band_val
-        |    AND a.media_id < b.media_id)
-        |SELECT id_a, id_b, hamming FROM cand WHERE hamming <= 4
-        |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(0 AS BIGINT)
-        |ORDER BY id_a, id_b""".stripMargin
-    },
-    "tokenize_bpe" -> (duckBpeCtes(BpeRounds) + "\n" +
-      (1 to BpeRounds).map(r =>
-        s"SELECT $r AS merge_round, x, y, x || y AS merged, cnt FROM t$r")
-        .mkString("", "\nUNION ALL ", "\nORDER BY merge_round")),
-    "tokenize_bpe_vocab" -> (duckBpeCtes(BpeRounds) + s""",
-      |enc AS (SELECT n, unnest(string_split(seq, ' ')) AS symbol FROM s$BpeRounds)
-      |SELECT symbol, CAST(SUM(n) AS BIGINT) AS total FROM enc GROUP BY symbol
-      |ORDER BY total DESC, symbol LIMIT 20""".stripMargin),
-    "tokenize_bpe_encode" -> (duckBpeCtes(BpeRounds) + s""",
-      |dw AS (SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
-      |       FROM documents),
-      |dwf AS (SELECT doc_id, word FROM dw WHERE word <> ''),
-      |wl AS (SELECT word, CAST(len(string_split(seq, ' ')) AS BIGINT) AS n_sym FROM s$BpeRounds)
-      |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-      |  CAST(SUM(n_sym) AS BIGINT) AS bpe_tokens
-      |FROM dwf JOIN wl USING (word) GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    "tokenize_fertility" -> (duckBpeCtes(BpeRounds) + s""",
-      |dw AS (SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
-      |       FROM documents),
-      |dwf AS (SELECT doc_id, word FROM dw WHERE word <> ''),
-      |wl AS (SELECT word, CAST(len(string_split(seq, ' ')) AS BIGINT) AS n_sym FROM s$BpeRounds),
-      |j AS (SELECT d2.source, wl.n_sym
-      |      FROM dwf JOIN wl USING (word) JOIN documents d2 ON d2.doc_id = dwf.doc_id)
-      |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_words,
-      |  CAST(SUM(n_sym) AS BIGINT) AS bpe_tokens,
-      |  CAST((SUM(n_sym) * 10000) // COUNT(*) AS BIGINT) AS fertility_bp
-      |FROM j GROUP BY source ORDER BY source""".stripMargin),
-    "multimodal_phash" -> (duckPhashSql() +
-      "\nSELECT media_id, phash FROM ph ORDER BY media_id"),
-    "multimodal_neardup" -> (duckPhashSql(
-      """SELECT doc_id AS media_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 10000000, 'X' || substring(text, 2)
-        |  FROM documents WHERE doc_id % 50 = 0""".stripMargin) +
-      s"""
-        |, bands AS (SELECT media_id, phash, b,
-        |    (phash >> (b * ${graft.ops.Multimodal.PhashBandBits})) & ${(1L << graft.ops.Multimodal.PhashBandBits) - 1L} AS band_val
-        |  FROM ph, (SELECT unnest(range(0, ${graft.ops.Multimodal.PhashBands})) AS b)),
-        |cand AS (SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b,
-        |    CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
-        |  FROM bands a JOIN bands b ON a.b = b.b AND a.band_val = b.band_val
-        |    AND a.media_id < b.media_id)
-        |SELECT id_a, id_b, hamming FROM cand WHERE hamming <= 6
-        |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(0 AS BIGINT)
-        |ORDER BY id_a, id_b""".stripMargin),
-    "multimodal_frames" ->
-      """SELECT doc_id AS media_id, CAST(1 + doc_id % 240 AS INT) AS n_frames,
-        |  array_to_string(generate_series(0, least(CAST(1 + doc_id % 240 AS INT) - 1, 70), 10), ',') AS sampled_frames,
-        |  CAST(len(generate_series(0, least(CAST(1 + doc_id % 240 AS INT) - 1, 70), 10)) AS INT) AS n_sampled
-        |FROM documents ORDER BY media_id""".stripMargin,
-    "curation_pipeline" ->
-      s"""WITH $DuckQualityScore,
-        |gated AS (SELECT d.doc_id, d.source, d.text FROM documents d JOIN qsc ON d.doc_id = qsc.doc_id
-        |          WHERE qsc.score >= 60 AND length(d.text) >= 200),
-        |canon AS (SELECT doc_id FROM (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY md5(text)) AS cid FROM gated) WHERE doc_id = cid),
-        |sp AS (SELECT source, CASE WHEN bp < 9000 THEN 'train' WHEN bp < 9500 THEN 'val' ELSE 'test' END AS split
-        |       FROM (SELECT g.source, CAST('0x' || substring(md5(CAST(g.doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000 AS bp
-        |             FROM gated g JOIN canon c ON g.doc_id = c.doc_id))
-        |SELECT source, split, COUNT(*) AS n FROM sp GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "pipeline_e2e" ->
-      // chunk CTE = the chunk_fixed replay over length-gated docs; dedup =
-      // min chunk_id per md5(chunk_text); upsert = version-2 slice wins
-      """WITH t AS (SELECT doc_id, source, trim(regexp_replace(text, '\s+', ' ', 'g')) AS t
-        |           FROM documents WHERE length(text) >= 200),
-        |w AS (SELECT doc_id, source, t,
-        |        unnest(generate_series(0, CAST(1 + greatest(0, ceil((length(t) - 120) / 108.0)) AS INT) - 1)) AS chunk_index
-        |      FROM t WHERE length(t) > 0),
-        |ch AS (SELECT doc_id || '::c' || chunk_index AS chunk_id, doc_id, source,
-        |         trim(substring(t, chunk_index * 108 + 1, 120)) AS chunk_text
-        |       FROM w WHERE trim(substring(t, chunk_index * 108 + 1, 120)) <> ''),
-        |canon AS (SELECT chunk_id, doc_id, source FROM (
-        |            SELECT *, MIN(chunk_id) OVER (PARTITION BY md5(chunk_text)) AS cid FROM ch)
-        |          WHERE chunk_id = cid),
-        |up AS (SELECT chunk_id, doc_id, source, 1 AS version FROM canon WHERE doc_id % 3 <> 0
-        |       UNION ALL
-        |       SELECT chunk_id, doc_id, source, 2 AS version FROM canon WHERE doc_id % 3 = 0)
-        |SELECT source, version, COUNT(*) AS n_chunks, COUNT(DISTINCT doc_id) AS n_docs,
-        |       CAST(64 AS INT) AS dim
-        |FROM up GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "text_redact" ->
-      """WITH d AS (SELECT doc_id,
-        |  text || ' contact user' || doc_id || '@example.com or https://example.org/doc/' || doc_id || ' tel +1 (555) 010-' || doc_id AS t
-        |  FROM documents),
-        |r AS (SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(t,
-        |    'https?://[^\s]+', '<URL>', 'g'),
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '(\+[0-9][0-9()\-. ]{7,}[0-9]|\([0-9]{2,4}\)[-. ]?[0-9][0-9\-. ]{5,}[0-9])', '<PHONE>', 'g') AS red
-        |  FROM d)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(red, '<EMAIL>')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(red, '<URL>')) AS BIGINT) AS n_urls,
-        |  CAST(len(regexp_extract_all(red, '<PHONE>')) AS BIGINT) AS n_phones,
-        |  md5(red) AS redacted_md5
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "text_repetition" ->
-      """WITH d AS (SELECT doc_id, replace(text, '. ', chr(10)) AS t FROM documents),
-        |l AS (SELECT doc_id, list_filter(list_transform(string_split(t, chr(10)), x -> trim(x)), x -> x <> '') AS lines FROM d),
-        |lm AS (SELECT doc_id, CAST(len(lines) AS BIGINT) AS n_lines,
-        |         CAST(CASE WHEN len(lines) > 0 THEN 10000 * (len(lines) - len(list_distinct(lines))) // len(lines) ELSE 0 END AS BIGINT) AS dup_line_bp
-        |       FROM l),
-        |tk AS (SELECT doc_id, string_split(trim(regexp_replace(lower(t), '\s+', ' ', 'g')), ' ') AS toks FROM d),
-        |bg AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 1), i -> toks[i] || ' ' || toks[i+1])) AS b
-        |       FROM tk WHERE len(toks) >= 2),
-        |bc AS (SELECT doc_id, b, COUNT(*) AS c FROM bg GROUP BY 1, 2),
-        |bm AS (SELECT doc_id, CAST(10000 * MAX(c) // SUM(c) AS BIGINT) AS top_bigram_bp FROM bc GROUP BY 1)
-        |SELECT lm.doc_id, lm.n_lines, lm.dup_line_bp, coalesce(bm.top_bigram_bp, 0) AS top_bigram_bp
-        |FROM lm LEFT JOIN bm ON lm.doc_id = bm.doc_id ORDER BY lm.doc_id""".stripMargin,
-    "optout_filter" ->
-      // suffix explode replayed literally: label chain i..n per host, join
-      // the VALUES list, deepest (most-labels) entry wins per doc
-      """WITH d AS (SELECT doc_id,
-        |        lower('sub' || CAST(doc_id % 7 AS VARCHAR) || '.example' || CAST(doc_id % 13 AS VARCHAR) || '.com') AS host
-        |      FROM documents),
-        |opt AS (SELECT * FROM (VALUES ('example3.com'), ('example5.com'), ('sub2.example5.com'), ('example999.com')) t(domain)),
-        |lab AS (SELECT doc_id, host, string_split(host, '.') AS ls FROM d),
-        |sfx AS (SELECT doc_id, host, len(ls) - i + 1 AS n_labels,
-        |          array_to_string(list_slice(ls, i, len(ls)), '.') AS sfx
-        |        FROM (SELECT doc_id, host, ls, unnest(generate_series(1, len(ls))) AS i FROM lab) b),
-        |m AS (SELECT s.doc_id, s.host, s.sfx, s.n_labels,
-        |        row_number() OVER (PARTITION BY s.doc_id ORDER BY s.n_labels DESC) AS rn
-        |      FROM sfx s JOIN opt o ON s.sfx = o.domain)
-        |SELECT doc_id, host, sfx AS matched_domain FROM m WHERE rn = 1
-        |ORDER BY doc_id""".stripMargin,
-    "crawl_robots" ->
-      // longest matching prefix governs; allow wins the same-length tie
-      // (the ORDER BY of the per-doc pick encodes both), unmatched path
-      // defaults to allowed with the -1 sentinel length
-      """WITH u AS (SELECT doc_id,
-        |    '/s' || CAST(doc_id % 4 AS VARCHAR) ||
-        |    (CASE WHEN doc_id % 3 = 0 THEN '/public' ELSE '' END) ||
-        |    '/p/' || CAST(doc_id AS VARCHAR) AS path
-        |  FROM documents),
-        |rules(rule_path, rule_allow) AS (VALUES
-        |  ('/s0/', 0), ('/s0/public/', 1), ('/s1/', 0), ('/s2/p/', 1), ('/s2/p/', 0)),
-        |m AS (SELECT doc_id, rule_path, CAST(rule_allow AS BIGINT) AS rule_allow,
-        |    CAST(len(rule_path) AS BIGINT) AS rule_len,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY len(rule_path) DESC, rule_allow DESC, rule_path) AS rn
-        |  FROM u JOIN rules ON starts_with(path, rule_path)),
-        |w AS (SELECT doc_id, rule_allow, rule_path, rule_len FROM m WHERE rn = 1)
-        |SELECT u.doc_id, u.path,
-        |  CAST(coalesce(w.rule_allow, 1) AS BIGINT) AS allowed,
-        |  coalesce(w.rule_path, '') AS rule_path,
-        |  CAST(coalesce(w.rule_len, -1) AS BIGINT) AS rule_len
-        |FROM u LEFT JOIN w USING (doc_id) ORDER BY u.doc_id""".stripMargin,
-    "url_canonical" ->
-      // same synthesized URLs; RE2's \1 group ref in the scrub replacement
-      // where Spark's Java regex uses $1 — same semantics, own dialects.
-      // Host regex mirrors urlParts: non-captured userinfo skip, port strip.
-      """WITH d AS (SELECT doc_id,
-        |  'HTTPS://Sub' || CAST(doc_id % 7 AS VARCHAR) || '.Example' || CAST(doc_id % 13 AS VARCHAR) ||
-        |  '.com/path/' || CAST(doc_id AS VARCHAR) || (CASE WHEN doc_id % 3 = 0 THEN '/' ELSE '' END) ||
-        |  '?utm_source=feed&id=' || CAST(doc_id AS VARCHAR) || '&fbclid=x' || CAST(doc_id AS VARCHAR) || '&q=term' AS url
-        |  FROM documents),
-        |p AS (SELECT doc_id,
-        |  lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme,
-        |  lower(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@?#]*@)?([^/?#:]+)', 1)) AS host,
-        |  regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(/[^?#]*)', 1) AS path,
-        |  regexp_extract(url, '\?([^#]*)', 1) AS query FROM d),
-        |s AS (SELECT doc_id, scheme, host,
-        |  regexp_extract(host, '([^.]+\.[^.]+)$', 1) AS domain,
-        |  regexp_replace(path, '/+$', '') AS clean_path,
-        |  trim(regexp_replace(regexp_replace(query, '(^|&)(utm_[^=&]*|gclid|fbclid)=[^&]*', '\1', 'g'), '&+', '&', 'g'), '&') AS clean_query
-        |  FROM p)
-        |SELECT doc_id, scheme, host, domain, clean_path,
-        |  scheme || '://' || host || clean_path ||
-        |  (CASE WHEN clean_query <> '' THEN '?' || clean_query ELSE '' END) AS canonical_url
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "dedup_cdc_chunks" ->
-      // same tokenization, boundary = 60-bit bigram hash % 64 == 0,
-      // running-sum segment ids, chunk digests via ORDER BY string_agg
-      // (== Spark's array_sort reassembly), digest spread by distinct
-      // doc count
-      """WITH t AS (SELECT doc_id, string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS tk FROM documents),
-        |x AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS i, tk FROM t),
-        |y AS (SELECT doc_id, i, tk[i] AS tok,
-        |    CASE WHEN i > 1 THEN tk[i - 1] ELSE NULL END AS prev FROM x),
-        |b AS (SELECT doc_id, i, tok,
-        |    CASE WHEN prev IS NOT NULL AND
-        |      (CAST('0x' || substring(md5(prev || ' ' || tok), 1, 15) AS BIGINT) % 64) = 0
-        |    THEN 1 ELSE 0 END AS nb FROM y),
-        |s AS (SELECT doc_id, i, tok,
-        |    SUM(nb) OVER (PARTITION BY doc_id ORDER BY i ROWS UNBOUNDED PRECEDING) AS seg FROM b),
-        |c AS (SELECT doc_id, seg, CAST(COUNT(*) AS BIGINT) AS ctok,
-        |    md5(string_agg(tok, ' ' ORDER BY i)) AS digest FROM s GROUP BY 1, 2),
-        |sp AS (SELECT digest, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS ndocs FROM c GROUP BY 1),
-        |o AS (SELECT c.doc_id, CAST(SUM(ctok) AS BIGINT) AS n_tokens,
-        |    CAST(COUNT(*) AS BIGINT) AS n_chunks,
-        |    CAST(SUM(CASE WHEN ndocs >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS dup_chunks,
-        |    CAST(SUM(CASE WHEN ndocs >= 2 THEN ctok ELSE 0 END) AS BIGINT) AS dup_tokens
-        |  FROM c JOIN sp USING (digest) GROUP BY 1)
-        |SELECT doc_id, n_tokens, n_chunks, dup_chunks, dup_tokens,
-        |  CAST(dup_tokens * 10000 // n_tokens AS BIGINT) AS dup_bp
-        |FROM o ORDER BY doc_id""".stripMargin,
-    "curation_cdc" ->
-      // the dedup_cdc_chunks chain (t..o) composed with the quality replay
-      // (qq..qsc): per-doc CDC dup coverage gates beside the quality
-      // score, survivors roll up per source
-      s"""WITH t AS (SELECT doc_id, string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS tk FROM documents),
-        |x AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS i, tk FROM t),
-        |y AS (SELECT doc_id, i, tk[i] AS tok,
-        |    CASE WHEN i > 1 THEN tk[i - 1] ELSE NULL END AS prev FROM x),
-        |b AS (SELECT doc_id, i, tok,
-        |    CASE WHEN prev IS NOT NULL AND
-        |      (CAST('0x' || substring(md5(prev || ' ' || tok), 1, 15) AS BIGINT) % 64) = 0
-        |    THEN 1 ELSE 0 END AS nb FROM y),
-        |s AS (SELECT doc_id, i, tok,
-        |    SUM(nb) OVER (PARTITION BY doc_id ORDER BY i ROWS UNBOUNDED PRECEDING) AS seg FROM b),
-        |c AS (SELECT doc_id, seg, CAST(COUNT(*) AS BIGINT) AS ctok,
-        |    md5(string_agg(tok, ' ' ORDER BY i)) AS digest FROM s GROUP BY 1, 2),
-        |sp AS (SELECT digest, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS ndocs FROM c GROUP BY 1),
-        |o AS (SELECT c.doc_id, CAST(SUM(ctok) AS BIGINT) AS n_tokens,
-        |    CAST(SUM(CASE WHEN ndocs >= 2 THEN ctok ELSE 0 END) AS BIGINT) AS dup_tokens
-        |  FROM c JOIN sp USING (digest) GROUP BY 1),
-        |cd AS (SELECT doc_id, CAST(dup_tokens * 10000 // n_tokens AS BIGINT) AS dup_bp FROM o),
-        |$DuckQualityScore,
-        |k AS (SELECT d.source, cd.dup_bp, qsc.nt, qsc.score,
-        |    (cd.dup_bp < 2500 AND qsc.score >= 45) AS kept
-        |  FROM documents d JOIN cd USING (doc_id) JOIN qsc ON qsc.doc_id = d.doc_id)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  CAST(SUM(CASE WHEN kept THEN nt ELSE 0 END) AS BIGINT) AS kept_tokens,
-        |  CAST(SUM(dup_bp) // COUNT(*) AS BIGINT) AS mean_dup_bp
-        |FROM k GROUP BY source ORDER BY source""".stripMargin,
-    "dedup_span_removal" ->
-      // positioned spans ({'p', 's'} structs), df over DISTINCT (doc,
-      // hash), duplicated-token positions via bounded per-span unnest
-      // (short-doc clamp least(p+4, n-1)), reassembly = string_agg ORDER
-      // BY position == Spark's array_sort on (t, tok) structs
-      """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents),
-        |tt AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
-        |sp AS (SELECT doc_id, n, unnest(CASE WHEN n >= 5
-        |        THEN list_transform(generate_series(0, n - 5), i -> {'p': i, 's': array_to_string(list_slice(toks, i + 1, i + 5), ' ')})
-        |        ELSE [{'p': 0, 's': array_to_string(toks, ' ')}] END) AS u FROM tt),
-        |sph AS (SELECT doc_id, n, u.p AS p, CAST('0x' || substring(md5(u.s), 1, 15) AS BIGINT) AS hv FROM sp),
-        |dfx AS (SELECT hv, CAST(COUNT(*) AS BIGINT) AS span_df
-        |        FROM (SELECT DISTINCT doc_id, hv FROM sph) GROUP BY hv),
-        |dup AS (SELECT DISTINCT doc_id, tpos FROM (
-        |          SELECT doc_id, unnest(generate_series(p, least(p + 4, n - 1))) AS tpos
-        |          FROM sph JOIN dfx USING (hv) WHERE span_df >= 2)),
-        |tok AS (SELECT doc_id, unnest(generate_series(1, len(toks))) AS i, toks FROM tt),
-        |tk AS (SELECT doc_id, i - 1 AS tpos, toks[i] AS tok FROM tok),
-        |m AS (SELECT tk.doc_id, tk.tpos, tk.tok, (dup.tpos IS NOT NULL) AS isdup
-        |      FROM tk LEFT JOIN dup ON tk.doc_id = dup.doc_id AND tk.tpos = dup.tpos)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-        |  CAST(SUM(CASE WHEN isdup THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_tokens,
-        |  md5(coalesce(string_agg(CASE WHEN NOT isdup THEN tok END, ' ' ORDER BY tpos), '')) AS clean_md5
-        |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "orc_roundtrip" ->
-      """SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(length(text)) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY 1, 2 ORDER BY lang, source""".stripMargin,
-    "compact_roundtrip" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-        |  CAST(SUM(length(text)) AS BIGINT) AS sum_chars
-        |FROM documents""".stripMargin,
-    "join_salted" ->
-      """WITH dims AS (SELECT source, CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
-        |              FROM documents GROUP BY 1)
-        |SELECT d.source, m.n_langs, CAST(COUNT(*) AS BIGINT) AS n_docs
-        |FROM documents d JOIN dims m USING (source)
-        |GROUP BY 1, 2 ORDER BY d.source""".stripMargin,
-    "join_bucketed" ->
-      """SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(length(text)) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY 1 ORDER BY source""".stripMargin,
-    "dedup_paragraphs" ->
-      // keep-first = rn 1 over (doc, position) order within each 60-bit
-      // paragraph hash; reassembly is the usual string_agg ORDER BY
-      // position == Spark's array_sort on (idx, para) structs
-      """WITH d AS (SELECT doc_id, string_split(replace(text, '. ', chr(10)), chr(10)) AS ls FROM documents),
-        |p0 AS (SELECT doc_id, ls, unnest(generate_series(1, len(ls))) AS i FROM d),
-        |p AS (SELECT doc_id, i - 1 AS para_idx, trim(ls[i]) AS para FROM p0 WHERE trim(ls[i]) <> ''),
-        |h AS (SELECT *, CAST('0x' || substring(md5(para), 1, 15) AS BIGINT) AS ph FROM p),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY ph ORDER BY doc_id, para_idx) AS rn FROM h)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_paras,
-        |  CAST(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-        |  md5(coalesce(string_agg(CASE WHEN rn = 1 THEN para END, chr(10) ORDER BY para_idx), '')) AS clean_md5
-        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "profile_columns" ->
-      """SELECT 'doc_id' AS col_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |  CAST(COUNT(*) - COUNT(doc_id) AS BIGINT) AS n_nulls,
-        |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_distinct,
-        |  CAST(MIN(doc_id) AS VARCHAR) AS min_str, CAST(MAX(doc_id) AS VARCHAR) AS max_str
-        |FROM documents
-        |UNION ALL
-        |SELECT 'lang', CAST(COUNT(*) AS BIGINT), CAST(COUNT(*) - COUNT(lang) AS BIGINT),
-        |  CAST(COUNT(DISTINCT lang) AS BIGINT), CAST(MIN(lang) AS VARCHAR), CAST(MAX(lang) AS VARCHAR)
-        |FROM documents
-        |UNION ALL
-        |SELECT 'source', CAST(COUNT(*) AS BIGINT), CAST(COUNT(*) - COUNT(source) AS BIGINT),
-        |  CAST(COUNT(DISTINCT source) AS BIGINT), CAST(MIN(source) AS VARCHAR), CAST(MAX(source) AS VARCHAR)
-        |FROM documents
-        |ORDER BY col_name""".stripMargin,
-    "text_dup_spans" ->
-      // same shingle arithmetic as the minhash fragment (k=5, occurrences
-      // NOT distinct); span df over DISTINCT (doc, hash); HUGEINT-guarded
-      // casts on every aggregate
-      """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents),
-        |sh AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 5
-        |         THEN list_transform(generate_series(0, len(toks) - 5), i -> array_to_string(list_slice(toks, i + 1, i + 5), ' '))
-        |         ELSE [array_to_string(toks, ' ')] END) AS shingle FROM t),
-        |h AS (SELECT doc_id, CAST('0x' || substring(md5(shingle), 1, 15) AS BIGINT) AS hv FROM sh),
-        |dfx AS (SELECT hv, CAST(COUNT(*) AS BIGINT) AS span_df
-        |        FROM (SELECT DISTINCT doc_id, hv FROM h) GROUP BY hv)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
-        |  CAST(SUM(CASE WHEN span_df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans,
-        |  (10000 * CAST(SUM(CASE WHEN span_df >= 2 THEN 1 ELSE 0 END) AS BIGINT)) // CAST(COUNT(*) AS BIGINT) AS dup_span_bp
-        |FROM h JOIN dfx USING (hv)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "text_boilerplate" ->
-      // same synthesized banner/promo/body/footer; df counted over
-      // DISTINCT docs per (source, 60-bit line hash); reassembly order is
-      // string_agg ORDER BY line_idx == Spark's array_sort on
-      // (line_idx, line) structs; all-boiler docs rebuild to '' via the
-      // same coalesce
-      s"""WITH $DuckBoilerSynth,
-        |t AS (SELECT doc_id, source, string_split(t, chr(10)) AS ls FROM d0),
-        |l0 AS (SELECT doc_id, source, ls, unnest(generate_series(1, len(ls))) AS i FROM t),
-        |l AS (SELECT doc_id, source, i AS line_idx, trim(ls[i]) AS line FROM l0 WHERE trim(ls[i]) <> ''),
-        |h AS (SELECT doc_id, source, line_idx, line, CAST('0x' || substring(md5(line), 1, 15) AS BIGINT) AS lh FROM l),
-        |dfx AS (SELECT source, lh, COUNT(DISTINCT doc_id) AS line_df FROM h GROUP BY 1, 2),
-        |k AS (SELECT h.doc_id, h.line_idx, h.line, (x.line_df > 10) AS boiler
-        |      FROM h JOIN dfx x ON h.source = x.source AND h.lh = x.lh),
-        |r AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_lines,
-        |        CAST(SUM(CASE WHEN boiler THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler_lines,
-        |        coalesce(string_agg(CASE WHEN NOT boiler THEN line END, chr(10) ORDER BY line_idx), '') AS clean
-        |      FROM k GROUP BY doc_id)
-        |SELECT doc_id, n_lines, n_boiler_lines,
-        |  CAST(length(clean) AS BIGINT) AS n_chars_clean, md5(clean) AS clean_md5
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "curation_adaptive" ->
-      // shared quality replay + the stats_quantiles nearest-rank pattern
-      // (⌈q·n⌉ pure-integer rank), gate replayed as a conditional sum
-      s"""WITH $DuckQualityScore,
-        |j AS (SELECT d.source, d.doc_id, qsc.score FROM documents d JOIN qsc USING (doc_id)),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY source ORDER BY score) AS rn,
-        |        COUNT(*) OVER (PARTITION BY source) AS n FROM j),
-        |th AS (SELECT source, score AS q25_score FROM r WHERE rn = (n * 2500 + 9999) // 10000)
-        |SELECT j.source, th.q25_score, CAST(COUNT(*) AS BIGINT) AS n_total,
-        |  CAST(SUM(CASE WHEN j.score >= th.q25_score THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        |FROM j JOIN th USING (source)
-        |GROUP BY 1, 2 ORDER BY j.source""".stripMargin,
-    "quota_per_source" ->
-      """WITH r AS (SELECT doc_id, source,
-        |  row_number() OVER (PARTITION BY source
-        |    ORDER BY CAST('0x' || substring(md5(coalesce(CAST(doc_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000, doc_id) AS rn
-        |  FROM documents)
-        |SELECT doc_id, source FROM r WHERE rn <= 30 ORDER BY source, doc_id""".stripMargin,
-    "curation_budget" ->
-      // quality replay (shared fragment) + per-source window cumsum in
-      // score order; keep rows whose inclusive total <= 1000
-      s"""WITH $DuckQualityScore,
-        |j AS (SELECT d.source, d.doc_id, qsc.nt AS n_tokens, qsc.score AS quality_score
-        |      FROM documents d JOIN qsc ON d.doc_id = qsc.doc_id),
-        |w AS (SELECT *, CAST(SUM(n_tokens) OVER (PARTITION BY source
-        |        ORDER BY quality_score DESC, doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens FROM j)
-        |SELECT source, doc_id, n_tokens, quality_score, cum_tokens
-        |FROM w WHERE cum_tokens <= 1000 ORDER BY source, cum_tokens""".stripMargin,
-    "curation_modern" ->
-      // composed from the shared fragments: quality score, keep-first
-      // exact dedup, the DSIR generator retargeted at the gated set, and
-      // the components + cluster-split chain
-      s"""WITH RECURSIVE ${duckQualityScore("documents")},
-        |g1 AS (SELECT d.* FROM documents d JOIN qsc ON d.doc_id = qsc.doc_id
-        |       WHERE qsc.score >= 70),
-        |g2 AS (SELECT doc_id, text, lang, source, n_chars FROM (
-        |    SELECT g1.*, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn FROM g1) WHERE rn = 1),
-        |s3ids AS (SELECT doc_id FROM (
-        |${duckDsirSql("TRUE", "TRUE", 200, src = "g2")}
-        |)),
-        |s3 AS (SELECT g2.* FROM g2 JOIN s3ids USING (doc_id)),
-        |${duckMinhashPairs("s3")},
-        |${duckComponentsLab("s3")},
-        |bkt AS (SELECT doc_id, CAST('0x' || substring(md5(coalesce(CAST(cluster_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000 AS bp FROM lab),
-        |spl AS (SELECT CASE WHEN bp < 9000 THEN 'train' WHEN bp < 9500 THEN 'val' ELSE 'test' END AS split FROM bkt)
-        |SELECT 's0_input' AS stage, COUNT(*) AS n FROM documents
-        |UNION ALL SELECT 's1_quality', COUNT(*) FROM g1
-        |UNION ALL SELECT 's2_exact', COUNT(*) FROM g2
-        |UNION ALL SELECT 's3_dsir', COUNT(*) FROM s3
-        |UNION ALL SELECT 's4_split_' || split, COUNT(*) FROM spl GROUP BY split
-        |ORDER BY stage""".stripMargin,
-    "curation_full" ->
-      // the six curation stages replayed end-to-end: shared boiler-synth
-      // d0 → the text_boilerplate chain (b-prefixed CTEs) → the
-      // dedup_span_removal chain (s-prefixed, over the boiler-cleaned
-      // text) → shared quality replay over `cleaned` → gate → shared
-      // minhash-pair + components fragments re-targeted at `gated` →
-      // keep-best argmax → the curation_budget window
-      s"""WITH RECURSIVE $DuckBoilerSynth,
-        |bt AS (SELECT doc_id, source, string_split(t, chr(10)) AS ls FROM d0),
-        |bl0 AS (SELECT doc_id, source, ls, unnest(generate_series(1, len(ls))) AS i FROM bt),
-        |bl AS (SELECT doc_id, source, i AS line_idx, trim(ls[i]) AS line FROM bl0 WHERE trim(ls[i]) <> ''),
-        |bh AS (SELECT doc_id, source, line_idx, line, CAST('0x' || substring(md5(line), 1, 15) AS BIGINT) AS lh FROM bl),
-        |bdf AS (SELECT source, lh, COUNT(DISTINCT doc_id) AS line_df FROM bh GROUP BY 1, 2),
-        |bk AS (SELECT h.doc_id, h.line_idx, h.line, (x.line_df > 10) AS boiler
-        |       FROM bh h JOIN bdf x ON h.source = x.source AND h.lh = x.lh),
-        |br AS (SELECT doc_id, coalesce(string_agg(CASE WHEN NOT boiler THEN line END, chr(10) ORDER BY line_idx), '') AS clean
-        |       FROM bk GROUP BY doc_id),
-        |st0 AS (SELECT doc_id, string_split(trim(regexp_replace(lower(clean), '\\s+', ' ', 'g')), ' ') AS toks FROM br),
-        |stt AS (SELECT doc_id, toks, len(toks) AS n FROM st0 WHERE len(toks) > 0),
-        |ssp AS (SELECT doc_id, n, unnest(CASE WHEN n >= 5
-        |        THEN list_transform(generate_series(0, n - 5), i -> {'p': i, 's': array_to_string(list_slice(toks, i + 1, i + 5), ' ')})
-        |        ELSE [{'p': 0, 's': array_to_string(toks, ' ')}] END) AS u FROM stt),
-        |ssph AS (SELECT doc_id, n, u.p AS p, CAST('0x' || substring(md5(u.s), 1, 15) AS BIGINT) AS hv FROM ssp),
-        |sdfx AS (SELECT hv, CAST(COUNT(*) AS BIGINT) AS span_df
-        |        FROM (SELECT DISTINCT doc_id, hv FROM ssph) GROUP BY hv),
-        |sdup AS (SELECT DISTINCT doc_id, tpos FROM (
-        |          SELECT doc_id, unnest(generate_series(p, least(p + 4, n - 1))) AS tpos
-        |          FROM ssph JOIN sdfx USING (hv) WHERE span_df >= 2)),
-        |stok AS (SELECT doc_id, unnest(generate_series(1, len(toks))) AS i, toks FROM stt),
-        |stk AS (SELECT doc_id, i - 1 AS tpos, toks[i] AS tok FROM stok),
-        |sm AS (SELECT stk.doc_id, stk.tpos, stk.tok, (sdup.tpos IS NOT NULL) AS isdup
-        |      FROM stk LEFT JOIN sdup ON stk.doc_id = sdup.doc_id AND stk.tpos = sdup.tpos),
-        |scl AS (SELECT doc_id, coalesce(string_agg(CASE WHEN NOT isdup THEN tok END, ' ' ORDER BY tpos), '') AS ctext
-        |        FROM sm GROUP BY doc_id),
-        |cleaned AS (SELECT c.doc_id, d.source, c.ctext AS text FROM scl c JOIN documents d USING (doc_id)),
-        |${duckQualityScore("cleaned")},
-        |gated AS (SELECT c.doc_id, c.source, c.text, qsc.nt AS n_tokens, qsc.score AS quality_score
-        |          FROM cleaned c JOIN qsc USING (doc_id) WHERE qsc.score >= 45),
-        |${duckMinhashPairs("gated")},
-        |${duckComponentsLab("gated")},
-        |rep AS (SELECT l.cluster_id, l.doc_id, z.cluster_size, g.source, g.n_tokens, g.quality_score,
-        |          row_number() OVER (PARTITION BY l.cluster_id ORDER BY g.quality_score DESC, l.doc_id) AS rn
-        |        FROM lab l JOIN sz z ON l.cluster_id = z.cluster_id JOIN gated g ON g.doc_id = l.doc_id),
-        |w AS (SELECT source, doc_id, cluster_size, n_tokens, quality_score,
-        |        CAST(SUM(n_tokens) OVER (PARTITION BY source ORDER BY quality_score DESC, doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-        |      FROM rep WHERE rn = 1)
-        |SELECT source, doc_id, CAST(cluster_size AS BIGINT) AS cluster_size, n_tokens, quality_score, cum_tokens
-        |FROM w WHERE cum_tokens <= 1000 ORDER BY source, cum_tokens""".stripMargin,
-    "pack_sequences" ->
-      s"""WITH $DuckTokenChunks,
-         |p AS (SELECT *, coalesce(SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id, chunk_index
-         |                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before FROM tc)
-         |SELECT doc_id, chunk_index, source, n_tokens,
-         |  CAST(cum_before // 2048 AS BIGINT) AS seq_id,
-         |  CAST(cum_before % 2048 AS BIGINT) AS seq_offset
-         |FROM p ORDER BY source, doc_id, chunk_index""".stripMargin,
-    "pack_greedy" ->
-      // the sequential fill state replayed as a recursive CTE: row rn+1's
-      // bin/fill derive from row rn's within each source partition
-      """WITH RECURSIVE d AS (
-        |  SELECT source, doc_id, n_chars AS cost,
-        |         CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) AS rn
-        |  FROM documents),
-        |p AS (
-        |  SELECT source, doc_id, cost, rn, CAST(0 AS BIGINT) AS bin_idx, cost AS bin_fill
-        |  FROM d WHERE rn = 1
-        |  UNION ALL
-        |  SELECT d.source, d.doc_id, d.cost, d.rn,
-        |         CASE WHEN p.bin_fill + d.cost > 4000 THEN p.bin_idx + 1 ELSE p.bin_idx END,
-        |         CASE WHEN p.bin_fill + d.cost > 4000 THEN d.cost ELSE p.bin_fill + d.cost END
-        |  FROM d JOIN p ON d.source = p.source AND d.rn = p.rn + 1)
-        |SELECT source, doc_id, bin_idx, bin_fill FROM p
-        |ORDER BY source, doc_id""".stripMargin,
-    "train_batches" ->
-      // same bucket/sort/fill windows; padded = Σ n·max per batch
-      """WITH d AS (SELECT doc_id,
-        |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS w
-        |  FROM documents),
-        |b AS (SELECT doc_id, w, w // 16 AS bucket FROM d),
-        |r AS (SELECT bucket, w,
-        |    (row_number() OVER (PARTITION BY bucket ORDER BY w DESC, doc_id) - 1) // 8 AS batch
-        |  FROM b),
-        |pb AS (SELECT bucket, batch, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(MAX(w) AS BIGINT) AS mx, CAST(SUM(w) AS BIGINT) AS s
-        |  FROM r GROUP BY 1, 2),
-        |a AS (SELECT bucket, CAST(SUM(n) AS BIGINT) AS n_docs,
-        |    CAST(COUNT(*) AS BIGINT) AS n_batches,
-        |    CAST(SUM(s) AS BIGINT) AS real_tokens,
-        |    CAST(SUM(n * mx) AS BIGINT) AS padded_tokens
-        |  FROM pb GROUP BY 1)
-        |SELECT bucket, n_docs, n_batches, real_tokens, padded_tokens,
-        |  CAST(CASE WHEN padded_tokens = 0 THEN 0
-        |       ELSE (10000 * (padded_tokens - real_tokens)) // padded_tokens END AS BIGINT) AS waste_bp
-        |FROM a ORDER BY bucket""".stripMargin,
-    "train_shards" ->
-      // the global window cumsum IS the oracle's one-liner; shard = the
-      // budget bucket the doc's starting offset falls in
-      """WITH d AS (SELECT doc_id,
-        |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS w
-        |  FROM documents),
-        |c AS (SELECT doc_id, w,
-        |    SUM(w) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM d),
-        |a AS (SELECT doc_id, w, CAST((cum - w) // 2000 AS BIGINT) AS shard_id FROM c)
-        |SELECT shard_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(w) AS BIGINT) AS total_tokens,
-        |  CAST((10000 * SUM(w)) // 2000 AS BIGINT) AS fill_bp,
-        |  MIN(doc_id) AS first_id, MAX(doc_id) AS last_id
-        |FROM a GROUP BY 1 ORDER BY 1""".stripMargin,
-    "scd2_history" ->
-      """WITH snaps AS (
-        |  SELECT doc_id, lang, 1 AS version FROM documents
-        |  UNION ALL SELECT doc_id, upper(lang), 2 FROM documents WHERE doc_id % 3 = 0
-        |  UNION ALL SELECT doc_id, upper(lang), 3 FROM documents WHERE doc_id % 6 = 0
-        |  UNION ALL SELECT doc_id, lang, 4 FROM documents WHERE doc_id % 5 = 0),
-        |chg AS (SELECT *, lag(lang) OVER (PARTITION BY doc_id ORDER BY version) AS prev,
-        |               row_number() OVER (PARTITION BY doc_id ORDER BY version) AS rn
-        |        FROM snaps),
-        |kept AS (SELECT doc_id, lang, version FROM chg
-        |         WHERE rn = 1 OR prev IS DISTINCT FROM lang)
-        |SELECT doc_id, lang, CAST(version AS INT) AS version_from,
-        |  CAST(lead(version) OVER (PARTITION BY doc_id ORDER BY version) AS INT) AS version_to,
-        |  CASE WHEN lead(version) OVER (PARTITION BY doc_id ORDER BY version) IS NULL
-        |       THEN 1 ELSE 0 END AS is_current
-        |FROM kept ORDER BY doc_id, version_from""".stripMargin,
-    "tfidf_terms" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t WHERE term <> '' GROUP BY 1, 2),
-        |dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-        |r AS (SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-        |        row_number() OVER (PARTITION BY tf.doc_id
-        |          ORDER BY tf.tf DESC, dfq.df ASC, tf.term ASC) AS term_rank
-        |      FROM tf JOIN dfq USING (term))
-        |SELECT doc_id, term, tf, df, CAST(term_rank AS INT) AS term_rank
-        |FROM r WHERE term_rank <= 3 ORDER BY doc_id, term_rank""".stripMargin,
-    "mix_temperature" ->
-      // exact replay: quantized sqrt weights (floor(sqrt(n)·2^20) BIGINT),
-      // integer bp formula, same md5 row-hash keep rule
-      """WITH c AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY 1),
-        |w AS (SELECT source, n, CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1048576.0) AS BIGINT) AS wq FROM c),
-        |t AS (SELECT CAST(SUM(n) AS BIGINT) AS nn, CAST(SUM(wq) AS BIGINT) AS sumw FROM w),
-        |bp AS (SELECT source, least(10000, (CAST(5000 AS HUGEINT) * t.nn * w.wq) // (CAST(t.sumw AS HUGEINT) * w.n)) AS keep_bp
-        |       FROM w CROSS JOIN t),
-        |kept AS (SELECT d.source FROM documents d JOIN bp ON d.source = bp.source
-        |         WHERE CAST('0x' || substring(md5(coalesce(CAST(d.doc_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000 < bp.keep_bp)
-        |SELECT source, COUNT(*) AS n_kept FROM kept GROUP BY source ORDER BY source""".stripMargin,
-    "eval_qa_f1" ->
-      // same tokenizer, same planted predictions (list_slice is
-      // INCLUSIVE-stop in DuckDB — bounds mapped accordingly), multiset
-      // overlap via least() on the (id, tok) full join
-      """WITH base AS (SELECT doc_id,
-        |    list_filter(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '), x -> x <> '') AS tk
-        |  FROM documents),
-        |wp AS (SELECT doc_id, tk,
-        |    CASE WHEN doc_id % 3 = 0 THEN array_to_string(tk, ' ')
-        |         WHEN doc_id % 3 = 1 THEN array_to_string(list_slice(tk, 1, greatest(1, (len(tk) * 8) // 10)), ' ')
-        |         ELSE array_to_string(list_slice(tk, 2, len(tk)), ' ') || ' noise extra words appended here' END AS pred
-        |  FROM base),
-        |g AS (SELECT doc_id, unnest(tk) AS tok FROM wp),
-        |gc AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS cg FROM g GROUP BY 1, 2),
-        |p AS (SELECT doc_id, unnest(list_filter(string_split(trim(regexp_replace(lower(pred), '\s+', ' ', 'g')), ' '), x -> x <> '')) AS tok FROM wp),
-        |pc AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS cp FROM p GROUP BY 1, 2),
-        |j AS (SELECT coalesce(gc.doc_id, pc.doc_id) AS doc_id,
-        |        coalesce(cg, 0) AS cg, coalesce(cp, 0) AS cp
-        |      FROM gc FULL JOIN pc ON gc.doc_id = pc.doc_id AND gc.tok = pc.tok),
-        |sc AS (SELECT doc_id, CAST(SUM(cg) AS BIGINT) AS n_gold, CAST(SUM(cp) AS BIGINT) AS n_pred,
-        |        CAST(SUM(least(cg, cp)) AS BIGINT) AS n_overlap
-        |      FROM j GROUP BY 1)
-        |SELECT d.doc_id,
-        |  coalesce(n_gold, 0) AS n_gold, coalesce(n_pred, 0) AS n_pred,
-        |  coalesce(n_overlap, 0) AS n_overlap,
-        |  CAST(CASE WHEN coalesce(n_pred, 0) = 0 THEN CASE WHEN coalesce(n_gold, 0) = 0 THEN 10000 ELSE 0 END
-        |       ELSE n_overlap * 10000 // n_pred END AS BIGINT) AS precision_bp,
-        |  CAST(CASE WHEN coalesce(n_gold, 0) = 0 THEN CASE WHEN coalesce(n_pred, 0) = 0 THEN 10000 ELSE 0 END
-        |       ELSE n_overlap * 10000 // n_gold END AS BIGINT) AS recall_bp,
-        |  CAST(CASE WHEN coalesce(n_gold, 0) + coalesce(n_pred, 0) = 0 THEN 10000
-        |       ELSE 2 * n_overlap * 10000 // (n_gold + n_pred) END AS BIGINT) AS f1_bp
-        |FROM (SELECT DISTINCT doc_id FROM documents) d LEFT JOIN sc USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    "eval_em" ->
-      """WITH base AS (SELECT doc_id, doc_id % 3 AS cls,
-        |    list_filter(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '), x -> x <> '') AS tk
-        |  FROM documents),
-        |wp AS (SELECT cls, array_to_string(tk, ' ') AS g,
-        |    CASE WHEN cls = 0 THEN array_to_string(tk, ' ')
-        |         WHEN cls = 1 THEN array_to_string(list_slice(tk, 1, greatest(1, (len(tk) * 8) // 10)), ' ')
-        |         ELSE trim(array_to_string(list_slice(tk, 2, len(tk)), ' ') || ' noise extra words appended here') END AS p
-        |  FROM base)
-        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        |  CAST(SUM(CASE WHEN g = p THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
-        |  CAST(SUM(CASE WHEN g = p THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS em_bp
-        |FROM wp GROUP BY cls ORDER BY cls""".stripMargin,
-    "eval_rouge2" ->
-      // bigram pseudo-tokens straight from the token lists; same F1 chain
-      """WITH base AS (SELECT doc_id,
-        |    list_filter(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '), x -> x <> '') AS tk
-        |  FROM documents),
-        |wp AS (SELECT doc_id, tk,
-        |    CASE WHEN doc_id % 3 = 0 THEN tk
-        |         WHEN doc_id % 3 = 1 THEN list_slice(tk, 1, greatest(1, (len(tk) * 8) // 10))
-        |         ELSE list_concat(list_slice(tk, 2, len(tk)), ['noise', 'extra', 'words', 'appended', 'here']) END AS pt
-        |  FROM base),
-        |bg AS (SELECT doc_id,
-        |    CASE WHEN len(tk) < 2 THEN [] ELSE list_transform(generate_series(1, len(tk) - 1), i -> CAST(len(tk[i]) AS VARCHAR) || '§' || tk[i] || '§' || tk[i + 1]) END AS gb,
-        |    CASE WHEN len(pt) < 2 THEN [] ELSE list_transform(generate_series(1, len(pt) - 1), i -> CAST(len(pt[i]) AS VARCHAR) || '§' || pt[i] || '§' || pt[i + 1]) END AS pb
-        |  FROM wp),
-        |g AS (SELECT doc_id, unnest(gb) AS tok FROM bg),
-        |gc AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS cg FROM g GROUP BY 1, 2),
-        |p AS (SELECT doc_id, unnest(pb) AS tok FROM bg),
-        |pc AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS cp FROM p GROUP BY 1, 2),
-        |j AS (SELECT coalesce(gc.doc_id, pc.doc_id) AS doc_id,
-        |        coalesce(cg, 0) AS cg, coalesce(cp, 0) AS cp
-        |      FROM gc FULL JOIN pc ON gc.doc_id = pc.doc_id AND gc.tok = pc.tok),
-        |sc AS (SELECT doc_id, CAST(SUM(cg) AS BIGINT) AS n_gold, CAST(SUM(cp) AS BIGINT) AS n_pred,
-        |        CAST(SUM(least(cg, cp)) AS BIGINT) AS n_overlap
-        |      FROM j GROUP BY 1)
-        |SELECT d.doc_id,
-        |  coalesce(n_gold, 0) AS n_gold, coalesce(n_pred, 0) AS n_pred,
-        |  coalesce(n_overlap, 0) AS n_overlap,
-        |  CAST(CASE WHEN coalesce(n_pred, 0) = 0 THEN CASE WHEN coalesce(n_gold, 0) = 0 THEN 10000 ELSE 0 END
-        |       ELSE n_overlap * 10000 // n_pred END AS BIGINT) AS precision_bp,
-        |  CAST(CASE WHEN coalesce(n_gold, 0) = 0 THEN CASE WHEN coalesce(n_pred, 0) = 0 THEN 10000 ELSE 0 END
-        |       ELSE n_overlap * 10000 // n_gold END AS BIGINT) AS recall_bp,
-        |  CAST(CASE WHEN coalesce(n_gold, 0) + coalesce(n_pred, 0) = 0 THEN 10000
-        |       ELSE 2 * n_overlap * 10000 // (n_gold + n_pred) END AS BIGINT) AS f1_bp
-        |FROM (SELECT DISTINCT doc_id FROM documents) d LEFT JOIN sc USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    "mix_gini" ->
-      // the temperature chain replayed, then one Gini window per mixture
-      // over the source-sized count relations
-      """WITH c AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY 1),
-        |w AS (SELECT source, n, CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1048576.0) AS BIGINT) AS wq FROM c),
-        |t AS (SELECT CAST(SUM(n) AS BIGINT) AS nn, CAST(SUM(wq) AS BIGINT) AS sumw FROM w),
-        |bp AS (SELECT source, least(10000, (CAST(5000 AS HUGEINT) * t.nn * w.wq) // (CAST(t.sumw AS HUGEINT) * w.n)) AS keep_bp
-        |       FROM w CROSS JOIN t),
-        |kept AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n FROM documents d JOIN bp ON d.source = bp.source
-        |         WHERE CAST('0x' || substring(md5(coalesce(CAST(d.doc_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000 < bp.keep_bp
-        |         GROUP BY d.source),
-        |gr AS (SELECT n AS x, row_number() OVER (ORDER BY n) AS i FROM c),
-        |grc AS (SELECT CAST(COUNT(*) AS BIGINT) AS ng, CAST(SUM(x) AS BIGINT) AS tot, CAST(SUM((2 * i - 1) * x) AS BIGINT) AS s FROM gr),
-        |gk AS (SELECT n AS x, row_number() OVER (ORDER BY n) AS i FROM kept),
-        |gkc AS (SELECT CAST(COUNT(*) AS BIGINT) AS ng, CAST(SUM(x) AS BIGINT) AS tot, CAST(SUM((2 * i - 1) * x) AS BIGINT) AS s FROM gk)
-        |SELECT 'raw' AS mixture, ng AS n_groups, tot AS total,
-        |  CAST(((s - ng * tot) * 10000) // (ng * tot) AS BIGINT) AS gini_bp FROM grc
-        |UNION ALL
-        |SELECT 'temperature' AS mixture, ng AS n_groups, tot AS total,
-        |  CAST(((s - ng * tot) * 10000) // (ng * tot) AS BIGINT) AS gini_bp FROM gkc
-        |ORDER BY mixture""".stripMargin,
-    "sample_stratified" ->
-      """WITH b AS (SELECT source,
-        |  CAST('0x' || substring(md5(coalesce(CAST(doc_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000 AS bp
-        |  FROM documents)
-        |SELECT source, COUNT(*) AS n_kept FROM b
-        |WHERE bp < (CASE source WHEN 'src0' THEN 10000 WHEN 'src1' THEN 5000
-        |            WHEN 'src2' THEN 2500 ELSE 1000 END)
-        |GROUP BY source ORDER BY source""".stripMargin,
-    "data_card" ->
-      // same scan shape: per-source integer aggregates + distinct-hash
-      s"""WITH b AS (SELECT source, CAST(len(text) AS BIGINT) AS chars,
-        |    CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS toks,
-        |    md5(text) AS h,
-        |    CASE WHEN len(regexp_extract_all(text, '${graft.ops.TextAnalysis.MojibakePattern}')) > 0
-        |      THEN 1 ELSE 0 END AS corrupt
-        |  FROM documents),
-        |a AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |        CAST(SUM(chars) AS BIGINT) AS total_chars,
-        |        CAST(SUM(toks) AS BIGINT) AS total_tokens,
-        |        CAST(SUM(corrupt) AS BIGINT) AS corrupt_docs,
-        |        CAST(SUM(CASE WHEN chars < 1000 THEN 1 ELSE 0 END) AS BIGINT) AS short_docs
-        |      FROM b GROUP BY 1),
-        |d AS (SELECT source, CAST(COUNT(DISTINCT h) AS BIGINT) AS nh FROM b GROUP BY 1)
-        |SELECT a.source, n_docs, total_chars, total_tokens,
-        |  CAST(total_chars // n_docs AS BIGINT) AS chars_per_doc,
-        |  CAST(total_tokens // n_docs AS BIGINT) AS tokens_per_doc,
-        |  CAST(n_docs - nh AS BIGINT) AS exact_dup_rows,
-        |  corrupt_docs, short_docs
-        |FROM a JOIN d USING (source) ORDER BY source""".stripMargin,
-    "source_overlap" ->
-      // same shingle + md5-prefix fingerprint replay as the minhash
-      // family; the pair matrix via self-join on the fingerprint equals
-      // Spark's per-gram source-set expansion exactly
-      """WITH t AS (SELECT source, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents),
-        |sh AS (SELECT source, unnest(CASE WHEN len(toks) >= 8
-        |         THEN list_transform(range(0, len(toks) - 7), i -> array_to_string(toks[i+1:i+8], ' '))
-        |         ELSE [array_to_string(toks, ' ')] END) AS shingle FROM t),
-        |gh AS (SELECT DISTINCT source, CAST('0x' || substring(md5(shingle), 1, 15) AS BIGINT) AS g FROM sh),
-        |tot AS (SELECT source, COUNT(*) AS n FROM gh GROUP BY 1),
-        |p AS (SELECT a.source AS src_a, b.source AS src_b FROM gh a JOIN gh b ON a.g = b.g AND a.source < b.source),
-        |sg AS (SELECT src_a, src_b, CAST(COUNT(*) AS BIGINT) AS shared_grams FROM p GROUP BY 1, 2)
-        |SELECT sg.src_a, sg.src_b, sg.shared_grams,
-        |  CAST(sg.shared_grams * 10000 // ta.n AS BIGINT) AS overlap_a_bp,
-        |  CAST(sg.shared_grams * 10000 // tb.n AS BIGINT) AS overlap_b_bp
-        |FROM sg JOIN tot ta ON ta.source = sg.src_a JOIN tot tb ON tb.source = sg.src_b
-        |ORDER BY src_a, src_b""".stripMargin,
-    "privacy_kanon" ->
-      """WITH b AS (SELECT c_custkey, c_nationkey, c_mktsegment,
-        |             floor(c_acctbal/5000.0)*5000.0 AS bal_band FROM customer)
-        |SELECT b.c_custkey, b.c_nationkey, b.c_mktsegment,
-        |  CAST(b.bal_band AS BIGINT) AS bal_band
-        |FROM b
-        |JOIN (SELECT c_nationkey, c_mktsegment, bal_band FROM b
-        |      GROUP BY 1, 2, 3 HAVING COUNT(*) >= 3) s
-        |  ON b.c_nationkey = s.c_nationkey AND b.c_mktsegment = s.c_mktsegment
-        | AND b.bal_band = s.bal_band
-        |ORDER BY c_custkey""".stripMargin,
-    "privacy_ldiv" ->
-      """SELECT event_type, (epoch_us(ts) // 86400000000) * 86400 AS day_s,
-        |  COUNT(*) AS grp_rows,
-        |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS sens_card,
-        |  CAST(CASE WHEN COUNT(DISTINCT user_id) >= 53 THEN 1 ELSE 0 END AS INT) AS diverse
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "privacy_risk" ->
-      """WITH g AS (SELECT COUNT(*) AS n FROM customer
-        |           GROUP BY c_nationkey, c_mktsegment, floor(c_acctbal/5000.0)*5000.0)
-        |SELECT 10000 // n AS risk_bp, CAST(SUM(n) AS BIGINT) AS n_rows,
-        |  COUNT(*) AS n_groups
-        |FROM g GROUP BY 1 ORDER BY risk_bp""".stripMargin,
-    "privacy_tclose" ->
-      // exact integer-EMD replay: same dense (group × band) grid, same
-      // cumulative-difference window, same basis-point floor division
-      """WITH b AS (SELECT c_nationkey, c_mktsegment,
-        |            floor(c_acctbal/1000.0)*1000.0 AS v FROM customer),
-        |gs AS (SELECT c_nationkey, c_mktsegment, COUNT(*) AS ng FROM b GROUP BY 1, 2),
-        |gd AS (SELECT v, COUNT(*) AS gc FROM b GROUP BY 1),
-        |tt AS (SELECT COUNT(*) AS nn, COUNT(DISTINCT v) AS mm FROM b),
-        |cells AS (SELECT c_nationkey, c_mktsegment, v, COUNT(*) AS c
-        |          FROM b GROUP BY 1, 2, 3),
-        |grid AS (SELECT gs.c_nationkey, gs.c_mktsegment, gs.ng, gd.v, gd.gc,
-        |           tt.nn, tt.mm, COALESCE(cells.c, 0) AS c
-        |         FROM gs CROSS JOIN gd CROSS JOIN tt
-        |         LEFT JOIN cells ON cells.c_nationkey = gs.c_nationkey
-        |           AND cells.c_mktsegment = gs.c_mktsegment AND cells.v = gd.v),
-        |cum AS (SELECT c_nationkey, c_mktsegment, ng, nn, mm,
-        |          SUM(c*nn - gc*ng) OVER (PARTITION BY c_nationkey, c_mktsegment
-        |            ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS d
-        |        FROM grid),
-        |r AS (SELECT c_nationkey, c_mktsegment, CAST(MAX(ng) AS BIGINT) AS grp_rows,
-        |        CAST(CASE WHEN MAX(mm) <= 1 THEN 0
-        |          ELSE (SUM(ABS(d)) * 10000) // (MAX(ng) * MAX(nn) * (MAX(mm) - 1))
-        |          END AS BIGINT) AS emd_bp
-        |      FROM cum GROUP BY 1, 2)
-        |SELECT c_nationkey, c_mktsegment, grp_rows, emd_bp,
-        |  CAST(CASE WHEN emd_bp <= 1500 THEN 1 ELSE 0 END AS INT) AS close
-        |FROM r ORDER BY c_nationkey, c_mktsegment""".stripMargin,
-    "privacy_generalize" ->
-      """WITH g0 AS (SELECT COUNT(*) AS n FROM customer
-        |            GROUP BY c_nationkey, c_mktsegment, floor(c_acctbal/100.0)*100.0),
-        |g1 AS (SELECT COUNT(*) AS n FROM customer
-        |       GROUP BY c_nationkey, c_mktsegment, floor(c_acctbal/1000.0)*1000.0),
-        |g2 AS (SELECT COUNT(*) AS n FROM customer
-        |       GROUP BY c_nationkey, c_mktsegment, floor(c_acctbal/5000.0)*5000.0),
-        |g3 AS (SELECT COUNT(*) AS n FROM customer GROUP BY c_nationkey, c_mktsegment),
-        |s AS (
-        |  SELECT 0 AS level, 'band100' AS level_name, COUNT(*) AS n_groups,
-        |    CAST(COALESCE(SUM(CASE WHEN n < 10 THEN n END), 0) AS BIGINT) AS suppressed_rows,
-        |    CAST(COALESCE(SUM(CASE WHEN n < 10 THEN n END), 0) * 10000 // SUM(n) AS BIGINT) AS suppress_bp
-        |  FROM g0
-        |  UNION ALL
-        |  SELECT 1, 'band1000', COUNT(*),
-        |    CAST(COALESCE(SUM(CASE WHEN n < 10 THEN n END), 0) AS BIGINT),
-        |    CAST(COALESCE(SUM(CASE WHEN n < 10 THEN n END), 0) * 10000 // SUM(n) AS BIGINT)
-        |  FROM g1
-        |  UNION ALL
-        |  SELECT 2, 'band5000', COUNT(*),
-        |    CAST(COALESCE(SUM(CASE WHEN n < 10 THEN n END), 0) AS BIGINT),
-        |    CAST(COALESCE(SUM(CASE WHEN n < 10 THEN n END), 0) * 10000 // SUM(n) AS BIGINT)
-        |  FROM g2
-        |  UNION ALL
-        |  SELECT 3, 'drop_bal', COUNT(*),
-        |    CAST(COALESCE(SUM(CASE WHEN n < 10 THEN n END), 0) AS BIGINT),
-        |    CAST(COALESCE(SUM(CASE WHEN n < 10 THEN n END), 0) * 10000 // SUM(n) AS BIGINT)
-        |  FROM g3)
-        |SELECT * FROM s ORDER BY level""".stripMargin,
-    "label_vote" -> {
-      // same synth + gopher fragments; majority at quorum 4, per-LF
-      // keep/agree counters from ONE aggregate, unioned to rows
-      val ruleSelect = GopherRulePreds.map { case (n, p) => s"CAST($p AS BIGINT) AS $n" }.mkString(", ")
-      val voteSum = GopherRuleNames.mkString(" + ")
-      val aggs = GopherRuleNames.map { n =>
-        s"CAST(SUM($n) AS BIGINT) AS k_$n, CAST(SUM(CASE WHEN $n = maj THEN 1 ELSE 0 END) AS BIGINT) AS a_$n"
-      }.mkString(", ")
-      val unions = GopherRuleNames.map { n =>
-        s"SELECT '$n' AS lf, n_docs, n_majority_keep, k_$n AS n_keep, a_$n AS n_agree, CAST((10000 * a_$n) // n_docs AS BIGINT) AS agree_bp FROM a"
-      }.mkString(" UNION ALL ")
-      s"""WITH synth AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 41 = 0 THEN text || ' ### ### ### ### ### ### ###'
-        |         WHEN doc_id % 43 = 0 THEN repeat('* a' || chr(10), 10) || text
-        |         WHEN doc_id % 47 = 0 THEN text || ' the be to of and that have with'
-        |         ELSE text END AS text FROM documents),
-        |${duckGopherMetrics("synth")},
-        |rules AS (SELECT doc_id, $ruleSelect FROM gm),
-        |voted AS (SELECT *, CAST(CASE WHEN $voteSum >= 4 THEN 1 ELSE 0 END AS BIGINT) AS maj FROM rules),
-        |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(maj) AS BIGINT) AS n_majority_keep, $aggs FROM voted)
-        |$unions
-        |ORDER BY lf""".stripMargin
-    },
-    "filter_attribution" -> {
-      // same plants, same duckGopherMetrics fragment, rule predicates
-      // from the ONE GopherRulePreds source shared with text_gopher_rules
-      val ruleSelect = GopherRulePreds.map { case (n, p) => s"CAST($p AS BIGINT) AS $n" }.mkString(", ")
-      val nfailSum = GopherRuleNames.mkString(" + ")
-      val aggs = GopherRuleNames.map { n =>
-        s"CAST(SUM(1 - $n) AS BIGINT) AS f_$n, CAST(SUM(CASE WHEN $n = 0 AND nfail = 1 THEN 1 ELSE 0 END) AS BIGINT) AS u_$n"
-      }.mkString(", ")
-      val unions = GopherRuleNames.map { n =>
-        s"SELECT '$n' AS rule, n_docs, f_$n AS n_fail, u_$n AS n_unique_fail FROM a"
-      }.mkString(" UNION ALL ")
-      s"""WITH synth AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 41 = 0 THEN text || ' ### ### ### ### ### ### ###'
-        |         WHEN doc_id % 43 = 0 THEN repeat('* a' || chr(10), 10) || text
-        |         WHEN doc_id % 47 = 0 THEN text || ' the be to of and that have with'
-        |         ELSE text END AS text FROM documents),
-        |${duckGopherMetrics("synth")},
-        |r AS (SELECT $ruleSelect FROM gm),
-        |f AS (SELECT *, ${GopherRulePreds.size} - ($nfailSum) AS nfail FROM r),
-        |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, $aggs FROM f),
-        |u AS ($unions)
-        |SELECT rule, n_docs, n_fail, n_unique_fail,
-        |  CAST((10000 * n_fail) // n_docs AS BIGINT) AS fail_bp,
-        |  CAST((10000 * n_unique_fail) // n_docs AS BIGINT) AS unique_fail_bp
-        |FROM u ORDER BY rule""".stripMargin
-    },
-    "stats_drift" ->
-      // same %5 split, same plant, same dataCard token/corruption
-      // formulas; full outer join replayed with USING-coalesced source
-      s"""WITH synth AS (SELECT doc_id, source,
-        |    CASE WHEN doc_id % 35 = 0 THEN text || ' cafÃ© naÃ¯ve' ELSE text END AS text
-        |  FROM documents),
-        |ob AS (SELECT source, CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS toks,
-        |    CASE WHEN len(regexp_extract_all(text, '${graft.ops.TextAnalysis.MojibakePattern}')) > 0 THEN 1 ELSE 0 END AS corrupt
-        |  FROM synth WHERE doc_id % 5 <> 0),
-        |oa AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS old_docs, CAST(SUM(toks) AS BIGINT) AS old_toks,
-        |        CAST(SUM(corrupt) AS BIGINT) AS old_corrupt FROM ob GROUP BY 1),
-        |nb AS (SELECT source, CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS toks,
-        |    CASE WHEN len(regexp_extract_all(text, '${graft.ops.TextAnalysis.MojibakePattern}')) > 0 THEN 1 ELSE 0 END AS corrupt
-        |  FROM synth WHERE doc_id % 5 = 0),
-        |na AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS new_docs, CAST(SUM(toks) AS BIGINT) AS new_toks,
-        |        CAST(SUM(corrupt) AS BIGINT) AS new_corrupt FROM nb GROUP BY 1),
-        |ot AS (SELECT CAST(coalesce(SUM(old_docs), 0) AS BIGINT) AS old_total FROM oa),
-        |nt AS (SELECT CAST(coalesce(SUM(new_docs), 0) AS BIGINT) AS new_total FROM na),
-        |j AS (SELECT source,
-        |    coalesce(old_docs, 0) AS old_docs, coalesce(old_toks, 0) AS old_toks,
-        |    coalesce(old_corrupt, 0) AS old_corrupt,
-        |    CASE WHEN coalesce(old_docs, 0) = 0 THEN 0 ELSE old_toks // old_docs END AS old_tokens_per_doc,
-        |    coalesce(new_docs, 0) AS new_docs, coalesce(new_toks, 0) AS new_toks,
-        |    coalesce(new_corrupt, 0) AS new_corrupt,
-        |    CASE WHEN coalesce(new_docs, 0) = 0 THEN 0 ELSE new_toks // new_docs END AS new_tokens_per_doc
-        |  FROM oa FULL OUTER JOIN na USING (source)),
-        |f AS (SELECT j.*, old_total, new_total,
-        |    CASE WHEN old_total = 0 THEN 0 ELSE (10000 * old_docs) // old_total END AS old_share_bp,
-        |    CASE WHEN new_total = 0 THEN 0 ELSE (10000 * new_docs) // new_total END AS new_share_bp,
-        |    CASE WHEN old_docs = 0 THEN 0 ELSE (10000 * old_corrupt) // old_docs END AS old_corrupt_bp,
-        |    CASE WHEN new_docs = 0 THEN 0 ELSE (10000 * new_corrupt) // new_docs END AS new_corrupt_bp
-        |  FROM j, ot, nt)
-        |SELECT source, old_docs, new_docs,
-        |  CAST(old_share_bp AS BIGINT) AS old_share_bp, CAST(new_share_bp AS BIGINT) AS new_share_bp,
-        |  CAST(new_share_bp - old_share_bp AS BIGINT) AS share_delta_bp,
-        |  CAST(old_tokens_per_doc AS BIGINT) AS old_tokens_per_doc,
-        |  CAST(new_tokens_per_doc AS BIGINT) AS new_tokens_per_doc,
-        |  CAST(new_tokens_per_doc - old_tokens_per_doc AS BIGINT) AS tokens_per_doc_delta,
-        |  CAST(old_corrupt_bp AS BIGINT) AS old_corrupt_bp, CAST(new_corrupt_bp AS BIGINT) AS new_corrupt_bp,
-        |  CAST(new_corrupt_bp - old_corrupt_bp AS BIGINT) AS corrupt_delta_bp
-        |FROM f ORDER BY source""".stripMargin,
-    "snapshot_diff" ->
-      // same hash-compare full outer join, status decided identically;
-      // shares over the id union with floor division
-      """WITH o AS (SELECT doc_id, md5(text) AS ho FROM documents WHERE doc_id % 5 <> 0),
-        |n AS (SELECT doc_id,
-        |    md5(CASE WHEN doc_id % 7 = 0 THEN 'edited ' || text ELSE text END) AS hn
-        |  FROM documents WHERE doc_id % 11 <> 0),
-        |j AS (SELECT CASE WHEN ho IS NULL THEN 'added' WHEN hn IS NULL THEN 'removed'
-        |    WHEN ho = hn THEN 'unchanged' ELSE 'changed' END AS status
-        |  FROM o FULL OUTER JOIN n USING (doc_id)),
-        |a AS (SELECT status, CAST(COUNT(*) AS BIGINT) AS n_docs FROM j GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS tot FROM a)
-        |SELECT status, n_docs, CAST((10000 * n_docs) // tot AS BIGINT) AS share_bp
-        |FROM a CROSS JOIN t ORDER BY status""".stripMargin,
-    "stats_mad" ->
-      // same ⌈q·n⌉ nearest-rank arithmetic, composed twice
-      """WITH r AS (SELECT source, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars) AS rn,
-        |    COUNT(*) OVER (PARTITION BY source) AS n
-        |  FROM documents WHERE n_chars IS NOT NULL),
-        |med AS (SELECT source, CAST(n_chars AS BIGINT) AS median FROM r
-        |        WHERE rn = (n * 5000 + 9999) // 10000),
-        |d AS (SELECT d.source, abs(d.n_chars - m.median) AS adev
-        |      FROM documents d JOIN med m USING (source)),
-        |r2 AS (SELECT source, adev,
-        |    row_number() OVER (PARTITION BY source ORDER BY adev) AS rn,
-        |    COUNT(*) OVER (PARTITION BY source) AS n
-        |  FROM d),
-        |mad AS (SELECT source, CAST(adev AS BIGINT) AS mad FROM r2
-        |        WHERE rn = (n * 5000 + 9999) // 10000)
-        |SELECT med.source, median, mad FROM med JOIN mad USING (source)
-        |ORDER BY med.source""".stripMargin,
-    "stats_outliers" ->
-      // the same composed nearest-rank chain, then the 3·MAD Hampel gate
-      // as a per-source count aggregate
-      """WITH r AS (SELECT source, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars) AS rn,
-        |    COUNT(*) OVER (PARTITION BY source) AS n
-        |  FROM documents WHERE n_chars IS NOT NULL),
-        |med AS (SELECT source, CAST(n_chars AS BIGINT) AS median FROM r
-        |        WHERE rn = (n * 5000 + 9999) // 10000),
-        |d AS (SELECT d.source, m.median, abs(d.n_chars - m.median) AS adev
-        |      FROM documents d JOIN med m USING (source)),
-        |r2 AS (SELECT source, adev,
-        |    row_number() OVER (PARTITION BY source ORDER BY adev) AS rn,
-        |    COUNT(*) OVER (PARTITION BY source) AS n
-        |  FROM d),
-        |mad AS (SELECT source, CAST(adev AS BIGINT) AS mad FROM r2
-        |        WHERE rn = (n * 5000 + 9999) // 10000)
-        |SELECT d.source, d.median, mad.mad,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CASE WHEN d.adev > 3 * mad.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged,
-        |  CAST(SUM(CASE WHEN d.adev > 3 * mad.mad THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS flagged_bp
-        |FROM d JOIN mad USING (source)
-        |GROUP BY 1, 2, 3 ORDER BY d.source""".stripMargin,
-    "stats_quantiles" ->
-      """WITH r AS (SELECT source, n_chars AS v,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars) AS rn,
-        |    COUNT(*) OVER (PARTITION BY source) AS n
-        |  FROM documents WHERE n_chars IS NOT NULL),
-        |q AS (SELECT r.*, q_bp FROM r CROSS JOIN (SELECT unnest([2500, 5000, 9000, 9900]) AS q_bp) qs)
-        |SELECT source, CAST(q_bp AS INT) AS q_bp, v AS value FROM q
-        |WHERE rn = (n * q_bp + 9999) // 10000
-        |ORDER BY source, q_bp""".stripMargin,
-    "quantile_sketch" ->
-      """WITH b AS (SELECT source, n_chars // 100 AS bin, COUNT(*) AS cnt
-        |           FROM documents WHERE n_chars IS NOT NULL GROUP BY 1, 2),
-        |c AS (SELECT *, SUM(cnt) OVER (PARTITION BY source ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cum,
-        |        SUM(cnt) OVER (PARTITION BY source) AS n FROM b),
-        |q AS (SELECT c.*, q_bp FROM c CROSS JOIN (SELECT unnest([5000, 9000, 9900]) AS q_bp) qs)
-        |SELECT source, CAST(q_bp AS INT) AS q_bp, CAST(bin * 100 AS BIGINT) AS est_lo
-        |FROM q
-        |WHERE cum >= (n * q_bp + 9999) // 10000 AND cum - cnt < (n * q_bp + 9999) // 10000
-        |ORDER BY source, q_bp""".stripMargin,
-    "zorder_key" ->
-      // the SAME generated bit-interleave expression text runs in both
-      // dialects — one derivation, zero drift
-      s"SELECT doc_id, ${graft.ops.ZOrder.zKeySql("n_chars", "doc_id % 1024", 16)} AS zkey FROM documents ORDER BY doc_id",
-    "layout_skipping" ->
-      // shared interleave text; // replaces div, same prefix cells and
-      // the same 50-wide predicate band
-      s"""WITH base AS (SELECT doc_id, n_chars,
-        |    ${graft.ops.ZOrder.zKeySql("n_chars", "doc_id % 1024", 16)} AS zkey FROM documents),
-        |mi AS (SELECT MAX(doc_id) AS max_id FROM documents),
-        |zb AS (SELECT zkey // 16384 AS bucket, MIN(n_chars) AS mn, MAX(n_chars) AS mx FROM base GROUP BY 1),
-        |ib AS (SELECT doc_id // ((mi.max_id // 64) + 1) AS bucket, MIN(n_chars) AS mn, MAX(n_chars) AS mx
-        |       FROM base CROSS JOIN mi GROUP BY 1),
-        |zc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets,
-        |         CAST(SUM(CASE WHEN mx < 280 OR mn > 329 THEN 1 ELSE 0 END) AS BIGINT) AS n_pruned FROM zb),
-        |ic AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets,
-        |         CAST(SUM(CASE WHEN mx < 280 OR mn > 329 THEN 1 ELSE 0 END) AS BIGINT) AS n_pruned FROM ib)
-        |SELECT 'zorder' AS layout, n_buckets, n_pruned,
-        |  CAST(n_pruned * 10000 // n_buckets AS BIGINT) AS pruned_bp FROM zc
-        |UNION ALL
-        |SELECT 'insertion' AS layout, n_buckets, n_pruned,
-        |  CAST(n_pruned * 10000 // n_buckets AS BIGINT) AS pruned_bp FROM ic
-        |ORDER BY layout""".stripMargin,
-    "inverted_index" ->
-      """WITH t0 AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term FROM documents),
-        |t AS (SELECT DISTINCT doc_id, term FROM t0),
-        |tt AS (SELECT doc_id, term, row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn
-        |       FROM t WHERE term <> ''),
-        |agg AS (SELECT term, COUNT(*) AS df,
-        |          string_agg(CASE WHEN rn <= 8 THEN CAST(doc_id AS VARCHAR) END, ',' ORDER BY doc_id) AS postings
-        |        FROM tt GROUP BY term)
-        |SELECT term, df, postings FROM agg WHERE df >= 25 ORDER BY term""".stripMargin,
-    "split_hash" ->
-      """WITH b AS (SELECT source,
-        |  CAST('0x' || substring(md5(coalesce(CAST(doc_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000 AS bp
-        |  FROM documents)
-        |SELECT source,
-        |  CASE WHEN bp < 9000 THEN 'train' WHEN bp < 9500 THEN 'val' ELSE 'test' END AS split,
-        |  COUNT(*) AS n
-        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "pack_concat" ->
-      // same tokenizer, same per-source cumsum offsets, same ctx-window
-      // span arithmetic (all integer)
-      """WITH t AS (SELECT source, doc_id,
-        |    CAST(len(list_filter(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '), x -> x <> '')) AS BIGINT) AS n
-        |  FROM documents),
-        |o AS (SELECT source, doc_id, n,
-        |    CAST(coalesce(SUM(n) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-        |  FROM t),
-        |e AS (SELECT source, doc_id, n, off,
-        |    unnest(generate_series(off // 512, (off + n - 1) // 512)) AS ex
-        |  FROM o WHERE n > 0)
-        |SELECT source, CAST(ex AS BIGINT) AS example_idx, doc_id,
-        |  CAST(greatest(0, ex * 512 - off) AS BIGINT) AS tok_start,
-        |  CAST(least(n, (ex + 1) * 512 - off) - greatest(0, ex * 512 - off) AS BIGINT) AS span_len
-        |FROM e ORDER BY source, example_idx, doc_id""".stripMargin,
-    "mix_epochs" ->
-      // same factor table, same seeded md5 bucket rule for the fractional
-      // copy, same inclusive series per copy count
-      """WITH f AS (SELECT doc_id, source,
-        |    CASE WHEN source = 'src0' THEN 23000 WHEN source = 'src1' THEN 15000
-        |         WHEN source IN ('src2','src3','src4') THEN 10000 ELSE 4000 END AS fbp,
-        |    CAST('0x' || substring(md5('23:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000 AS bp
-        |  FROM documents),
-        |c AS (SELECT doc_id, source, fbp // 10000 + CASE WHEN bp < fbp % 10000 THEN 1 ELSE 0 END AS n FROM f)
-        |SELECT source, doc_id, CAST(unnest(generate_series(0, n - 1)) AS BIGINT) AS copy_idx
-        |FROM c WHERE n > 0 ORDER BY source, doc_id, copy_idx""".stripMargin,
-    "mix_unimax" ->
-      // the waterfill as a recursive CTE in ascending (n, lang) visit
-      // order — same integer floor division, same min() branches — then
-      // the epochRepeat replay under each language's derived factor
-      """WITH RECURSIVE lc AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(row_number() OVER (ORDER BY COUNT(*), lang) AS BIGINT) AS rk,
-        |    CAST(COUNT(*) OVER () AS BIGINT) AS m FROM documents GROUP BY lang),
-        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM documents),
-        |wf(rk, lang, n, alloc, rem) AS (
-        |  SELECT c.rk, c.lang, c.n,
-        |    least((c.n * 12000) // 10000, t.t // c.m),
-        |    t.t - least((c.n * 12000) // 10000, t.t // c.m)
-        |  FROM lc c, tot t WHERE c.rk = 1
-        |  UNION ALL
-        |  SELECT c.rk, c.lang, c.n,
-        |    least((c.n * 12000) // 10000, w.rem // (c.m - c.rk + 1)),
-        |    w.rem - least((c.n * 12000) // 10000, w.rem // (c.m - c.rk + 1))
-        |  FROM lc c JOIN wf w ON c.rk = w.rk + 1),
-        |fb AS (SELECT lang, n AS n_key, alloc,
-        |         CASE WHEN n = 0 THEN 0 ELSE (alloc * 10000) // n END AS factor_bp FROM wf),
-        |f AS (SELECT d.doc_id, d.lang, fb.n_key, fb.alloc, fb.factor_bp,
-        |    CAST('0x' || substring(md5('29:' || CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000 AS bp
-        |  FROM documents d JOIN fb ON fb.lang = d.lang),
-        |c AS (SELECT *, factor_bp // 10000 + CASE WHEN bp < factor_bp % 10000 THEN 1 ELSE 0 END AS nc FROM f)
-        |SELECT lang, n_key, alloc, factor_bp, doc_id,
-        |  CAST(unnest(generate_series(0, nc - 1)) AS BIGINT) AS copy_idx
-        |FROM c WHERE nc > 0 ORDER BY lang, doc_id, copy_idx""".stripMargin,
-    "mv_incremental" ->
-      // the full recompute — exactly what the maintained-state merge must
-      // reproduce (commutative-monoid columns)
-      """SELECT source, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(MAX(n_chars) AS BIGINT) AS max_chars
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "stream_mv" ->
-      // the streaming fold must equal the batch merge — shared oracle
-      """SELECT source, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(MAX(n_chars) AS BIGINT) AS max_chars
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "train_order" ->
-      // same seeded md5 permutation word (no mod — the raw 60-bit key),
-      // same shard mod, same per-shard rank
-      """WITH k AS (SELECT doc_id,
-        |  CAST('0x' || substring(md5('17:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) AS pk
-        |  FROM documents)
-        |SELECT doc_id, pk % 8 AS shard,
-        |  CAST(row_number() OVER (PARTITION BY pk % 8 ORDER BY pk, doc_id) AS BIGINT) AS pos
-        |FROM k ORDER BY shard, pos""".stripMargin,
-    "train_curriculum" ->
-      // quality replay picks the phase by the same value bands; the
-      // train_order seeded-md5 word (seed 23) shards and positions
-      s"""WITH $DuckQualityScore,
-        |ck AS (SELECT doc_id, score,
-        |    CASE WHEN score >= 70 THEN 1 WHEN score >= 40 THEN 2 ELSE 3 END AS phase,
-        |    CAST('0x' || substring(md5('23:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) AS pk
-        |  FROM qsc)
-        |SELECT doc_id, CAST(score AS BIGINT) AS quality_score, CAST(phase AS BIGINT) AS phase,
-        |  pk % 8 AS shard,
-        |  CAST(row_number() OVER (PARTITION BY phase, pk % 8 ORDER BY pk, doc_id) AS BIGINT) AS pos
-        |FROM ck ORDER BY phase, shard, pos""".stripMargin,
-    "join_runtime_filter" ->
-      // plain-join replay: the bloom semi-join reduction must be
-      // result-invariant, so the oracle carries no trace of it
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n_items,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)*(100-CAST(ROUND(l_discount*100) AS BIGINT))) AS BIGINT) AS revenue_c4
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "sketch_hll" ->
-      // exact replay of the HLL register state: same md5 hash split, same
-      // integer rank via bin()-length, same MAX registers and scaled
-      // integer denominator — the float estimate never crosses engines
-      DuckHllSketch,
-    "sketch_hll_merge" ->
-      // SAME oracle as sketch_hll on purpose: max-merge of per-slice
-      // registers must land on the single-pass state exactly — the
-      // hash-equality IS the mergeability proof
-      DuckHllSketch,
-
-    "multimodal_resize" ->
-      s"""WITH m AS ($DuckSynthDims)
-        |SELECT media_id, width, height,
-        |  CAST(greatest(1, CASE WHEN width * 224 >= height * 224 THEN 224 ELSE (width * 224) // height END) AS INT) AS out_w,
-        |  CAST(greatest(1, CASE WHEN width * 224 >= height * 224 THEN (height * 224) // width ELSE 224 END) AS INT) AS out_h,
-        |  CAST((224 - greatest(1, CASE WHEN width * 224 >= height * 224 THEN 224 ELSE (width * 224) // height END)) // 2 AS INT) AS pad_x,
-        |  CAST((224 - greatest(1, CASE WHEN width * 224 >= height * 224 THEN (height * 224) // width ELSE 224 END)) // 2 AS INT) AS pad_y
-        |FROM m ORDER BY media_id""".stripMargin,
-    "curation_percentile" ->
-      // the text_quality score chain + the per-source rank window;
-      // rank ties share a percentile, single-row groups read 0
-      """WITH q AS (SELECT doc_id, source,
-        |  trim(regexp_replace(text, '\s+', ' ', 'g')) AS t,
-        |  string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents),
-        |m AS (SELECT doc_id, source,
-        |  CAST(length(t) AS BIGINT) AS n_chars_c,
-        |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','that'], x))) AS BIGINT) AS stop_count
-        |  FROM q),
-        |sc AS (SELECT doc_id, source,
-        |  least(40, n_tokens // 4)
-        |    + (CASE WHEN (10000 * stop_count) // n_tokens BETWEEN 200 AND 6000 THEN 30 ELSE 0 END)
-        |    + (CASE WHEN (1000 * (n_chars_c - (n_tokens - 1))) // n_tokens BETWEEN 2500 AND 9000 THEN 30 ELSE 0 END) AS quality_score
-        |  FROM m),
-        |r AS (SELECT doc_id, source, CAST(quality_score AS BIGINT) AS quality_score,
-        |  CAST(rank() OVER (PARTITION BY source ORDER BY quality_score) AS BIGINT) AS rnk,
-        |  CAST(COUNT(*) OVER (PARTITION BY source) AS BIGINT) AS n
-        |  FROM sc)
-        |SELECT doc_id, source, quality_score, rnk,
-        |  CAST((10000 * (rnk - 1)) // n AS BIGINT) AS pct_below_bp
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "text_watermark" ->
-      // same tokenizer, same md5-parity green bit over 1-indexed list
-      // positions; list_sum of the empty list coalesces to 0
-      """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ts FROM documents),
-        |b AS (SELECT doc_id,
-        |    CAST(greatest(len(ts) - 1, 0) AS BIGINT) AS n_bigrams,
-        |    CAST(coalesce(list_sum(list_transform(range(1, len(ts)),
-        |      i -> CASE WHEN CAST('0x' || substring(md5(ts[i] || ':' || ts[i + 1]), 1, 15) AS BIGINT) % 2 = 1
-        |                THEN 1 ELSE 0 END)), 0) AS BIGINT) AS greens
-        |  FROM t)
-        |SELECT doc_id, n_bigrams, greens,
-        |  CAST(CASE WHEN n_bigrams = 0 THEN 0 ELSE (10000 * greens) // n_bigrams END AS BIGINT) AS green_bp,
-        |  CAST(CASE WHEN n_bigrams > 0 AND (10000 * greens) // n_bigrams >= 5800 THEN 1 ELSE 0 END AS BIGINT) AS suspected
-        |FROM b ORDER BY doc_id""".stripMargin,
-    "text_ttr" ->
-      // same tokenizer fragment; (source, term) counts → per-source
-      // vocab collapse with floor-division bp
-      """WITH t AS (SELECT source, unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term FROM documents),
-        |tc AS (SELECT source, term, CAST(COUNT(*) AS BIGINT) AS c FROM t WHERE term <> '' GROUP BY 1, 2)
-        |SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens,
-        |  CAST(COUNT(*) AS BIGINT) AS vocab,
-        |  CAST((10000 * COUNT(*)) // SUM(c) AS BIGINT) AS ttr_bp,
-        |  CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-        |  CAST((10000 * SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)) // COUNT(*) AS BIGINT) AS hapax_bp
-        |FROM tc GROUP BY source ORDER BY source""".stripMargin,
-    "text_stats_by_source" ->
-      """WITH t AS (SELECT source, trim(regexp_replace(text, '\s+', ' ', 'g')) AS t FROM documents)
-        |SELECT source, COUNT(*) AS n_docs,
-        |  CAST(SUM(length(t)) AS BIGINT) AS sum_chars,
-        |  CAST(SUM(len(string_split(t, ' '))) AS BIGINT) AS sum_tokens,
-        |  CAST(SUM(length(t)) // COUNT(*) AS BIGINT) AS avg_chars
-        |FROM t GROUP BY 1 ORDER BY 1""".stripMargin,
-    "events_funnel" ->
-      """WITH v AS (SELECT user_id, MIN(epoch_us(ts)) AS t1 FROM events
-        |           WHERE event_type = 'view' GROUP BY 1),
-        |c AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS t2 FROM events e
-        |      JOIN v ON e.user_id = v.user_id AND epoch_us(e.ts) > v.t1
-        |      WHERE e.event_type = 'click' GROUP BY 1),
-        |p AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS t3 FROM events e
-        |      JOIN c ON e.user_id = c.user_id AND epoch_us(e.ts) > c.t2
-        |      WHERE e.event_type = 'purchase' GROUP BY 1)
-        |SELECT COUNT(v.t1) AS n_viewed, COUNT(c.t2) AS n_clicked_after_view,
-        |       COUNT(p.t3) AS n_purchased_after_click
-        |FROM v LEFT JOIN c ON v.user_id = c.user_id
-        |       LEFT JOIN p ON v.user_id = p.user_id""".stripMargin,
-    "events_retention" ->
-      """WITH days AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
-        |cohort AS (SELECT user_id, MIN(day) AS cohort_day FROM days GROUP BY 1)
-        |SELECT c.cohort_day, d.day - c.cohort_day AS day_offset,
-        |       COUNT(DISTINCT d.user_id) AS n_users
-        |FROM days d JOIN cohort c ON d.user_id = c.user_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "ngram_topk" ->
-      """WITH t AS (SELECT string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents),
-        |bg AS (SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
-        |                i -> toks[i] || ' ' || toks[i+1])) AS bigram
-        |       FROM t WHERE len(toks) >= 2)
-        |SELECT bigram, COUNT(*) AS n FROM bg GROUP BY 1
-        |ORDER BY n DESC, bigram LIMIT 20""".stripMargin,
-    "events_tumbling" ->
-      """SELECT (epoch_us(ts) // 3600000000) * 3600 AS win_start_s, event_type,
-        |  COUNT(*) AS n, CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS sum_value_c
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "events_sliding" ->
-      """WITH w AS (SELECT ((epoch_us(ts) // 900000000) - i) * 900 AS win_start_s,
-        |                  CAST(ROUND(value*100) AS BIGINT) AS value_c
-        |           FROM events, (SELECT unnest(generate_series(0, 3)) AS i))
-        |SELECT win_start_s, COUNT(*) AS n, CAST(SUM(value_c) AS BIGINT) AS sum_value_c
-        |FROM w GROUP BY 1 ORDER BY 1""".stripMargin,
-    "events_session" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-        |l AS (SELECT *, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM e),
-        |f AS (SELECT *, CASE WHEN prev IS NULL OR ts_us - prev > 1800000000 THEN 1 ELSE 0 END AS new_s FROM l),
-        |s AS (SELECT *, CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id FROM f)
-        |SELECT user_id, session_id, CAST(MIN(ts_us) // 1000000 AS BIGINT) AS session_start_s, COUNT(*) AS n_events
-        |FROM s GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "events_range" ->
-      // plain inequality join is the oracle for the bucketed formulation
-      """WITH clicks AS (SELECT user_id, event_id AS click_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'click'),
-        |w AS (SELECT user_id, event_id AS purchase_id, epoch_us(ts) AS win_lo, epoch_us(ts) + 1800000000 AS win_hi
-        |      FROM events WHERE event_type = 'purchase')
-        |SELECT c.click_id, w.purchase_id
-        |FROM clicks c JOIN w ON c.user_id = w.user_id AND c.ts_us >= w.win_lo AND c.ts_us <= w.win_hi
-        |ORDER BY 1, 2""".stripMargin,
-    "events_overlap" ->
-      // plain interval-overlap theta join is the oracle for the grid
-      // formulation's exact-once pair emission
-      """WITH c AS (SELECT user_id, event_id AS click_id, epoch_us(ts) AS c_lo, epoch_us(ts) + 600000000 AS c_hi
-        |      FROM events WHERE event_type = 'click'),
-        |e AS (SELECT user_id, event_id AS error_id, epoch_us(ts) - 120000000 AS e_lo, epoch_us(ts) + 120000000 AS e_hi
-        |      FROM events WHERE event_type = 'error')
-        |SELECT c.click_id, e.error_id
-        |FROM c JOIN e ON c.user_id = e.user_id AND c.c_lo <= e.e_hi AND e.e_lo <= c.c_hi
-        |ORDER BY 1, 2""".stripMargin,
-    "events_asof" ->
-      // DuckDB's NATIVE ASOF JOIN is the oracle for the Spark operator's
-      // union-sort-carry formulation; MAX() pre-dedup mirrors the
-      // greatest-tie-break rule
-      """WITH clicks AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'click'),
-        |p0 AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id AS purchase_id FROM events WHERE event_type = 'purchase'),
-        |purchases AS (SELECT user_id, ts_us, MAX(purchase_id) AS purchase_id FROM p0 GROUP BY 1, 2)
-        |SELECT c.event_id, c.user_id, c.ts_us, p.purchase_id
-        |FROM clicks c ASOF LEFT JOIN purchases p ON c.user_id = p.user_id AND c.ts_us >= p.ts_us
-        |ORDER BY c.event_id""".stripMargin,
-    "events_json" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "events_pruned" ->
-      // same three-day window over the RAW table: the oracle checks the
-      // pruned scan returns exactly what an unpartitioned filter computes
-      """WITH e AS (SELECT event_type, value, epoch_us(ts) // 86400000000 AS day FROM events),
-        |b AS (SELECT MIN(day) AS d0 FROM e)
-        |SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS value_c
-        |FROM e, b WHERE e.day BETWEEN b.d0 + 2 AND b.d0 + 4
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "stream_tumbling" ->
-      """SELECT (epoch_us(ts) // 3600000000) * 3600 AS win_start_s, event_type, COUNT(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "stream_session" ->
-      // session_window(gap=30min) groups events whose consecutive gap stays
-      // under the gap; replayed with the lag/cumulative-sum formulation
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-        |l AS (SELECT *, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM e),
-        |f AS (SELECT *, CASE WHEN prev IS NULL OR ts_us - prev >= 1800000000 THEN 1 ELSE 0 END AS new_s FROM l),
-        |s AS (SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM f)
-        |SELECT user_id, CAST(MIN(ts_us) // 1000000 AS BIGINT) AS session_start_s, COUNT(*) AS n_events
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start_s""".stripMargin,
-    "stream_dedup" ->
-      // dedup of the self-unioned feed must land exactly on the base counts
-      """SELECT event_type, COUNT(DISTINCT event_id) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "stream_late_drops" ->
-      // the emitted set under correct watermark semantics IS the on-time
-      // slice's plain hour-window aggregate: late rows dropped, open
-      // (pusher) window withheld
-      """SELECT (epoch_us(ts) // 3600000000) * 3600 AS win_start_s, event_type,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(floor(value * 1048576.0) AS BIGINT)) AS BIGINT) AS sum_vq
-        |FROM events WHERE event_id % 5 <> 0
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "stream_late_audit" ->
-      // drops are group-granular (Spark tallies them post-partial-agg;
-      // single staged file → one partition): the late slice shares one
-      // rewritten timestamp, so its groups are its distinct event types.
-      // windows = the on-time slice's distinct (hour, type) groups;
-      // input = all events + the pusher row
-      """SELECT
-        |  (SELECT CAST(COUNT(DISTINCT event_type) AS BIGINT) FROM events WHERE event_id % 5 = 0) AS n_dropped,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM (
-        |     SELECT DISTINCT epoch_us(ts) // 3600000000, event_type
-        |     FROM events WHERE event_id % 5 <> 0)) AS n_emitted_windows,
-        |  (SELECT CAST(COUNT(*) + 1 AS BIGINT) FROM events) AS n_input_rows""".stripMargin,
-    "stream_resume" ->
-      // run + restart with the same checkpoint must yield every event
-      // exactly once (event_id is unique in the fixture); doubles appear
-      // iff the restart re-commits an already-committed batch
-      """SELECT event_id, user_id, event_type,
-        |  CAST(floor(value * 1048576.0) AS BIGINT) AS value_q FROM events
-        |ORDER BY event_id""".stripMargin,
-    "stream_join" ->
-      // the batch form of the streaming interval join (inner join emits
-      // every match, so streaming ≡ batch)
-      """SELECT v.user_id, COUNT(*) AS n_pairs
-        |FROM events v JOIN events c ON v.user_id = c.user_id
-        |  AND v.event_type = 'view' AND c.event_type = 'click'
-        |  AND epoch_us(c.ts) >= epoch_us(v.ts)
-        |  AND epoch_us(c.ts) <= epoch_us(v.ts) + 600000000
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "stream_stateful_sessions" ->
-      // islands replay of the custom sessionizer's gap rule (continue at
-      // gap <= 30min — note: built-in session_window starts a NEW session
-      // at exactly 30min, the custom op does not), minus each user's final
-      // session (end-of-stream timeout boundary, excluded on both sides)
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-        |l AS (SELECT *, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM e),
-        |f AS (SELECT *, CASE WHEN prev IS NULL OR ts_us - prev > 1800000000 THEN 1 ELSE 0 END AS new_s FROM l),
-        |s AS (SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM f),
-        |agg AS (SELECT user_id, sid, CAST(MIN(ts_us) // 1000000 AS BIGINT) AS session_start_s, COUNT(*) AS n_events
-        |        FROM s GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY sid DESC) AS rk FROM agg)
-        |SELECT user_id, session_start_s, n_events FROM r WHERE rk > 1
-        |ORDER BY user_id, session_start_s""".stripMargin,
-    "stream_stateful_sessions_prod" ->
-      // IDENTICAL oracle to the default-posture row: the production
-      // posture (RocksDB provider + 32 state partitions) must be
-      // answer-invariant — this row exists to pin that invariance as a
-      // hash check rather than a BASELINE.md note
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-        |l AS (SELECT *, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM e),
-        |f AS (SELECT *, CASE WHEN prev IS NULL OR ts_us - prev > 1800000000 THEN 1 ELSE 0 END AS new_s FROM l),
-        |s AS (SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM f),
-        |agg AS (SELECT user_id, sid, CAST(MIN(ts_us) // 1000000 AS BIGINT) AS session_start_s, COUNT(*) AS n_events
-        |        FROM s GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY sid DESC) AS rk FROM agg)
-        |SELECT user_id, session_start_s, n_events FROM r WHERE rk > 1
-        |ORDER BY user_id, session_start_s""".stripMargin,
-    "stream_session_progress" ->
-      // the complement row: the OPEN session per user (the last island),
-      // which the progress mode snapshots with running aggregates — same
-      // islands CTEs, rk = 1 instead of rk > 1
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-        |l AS (SELECT *, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM e),
-        |f AS (SELECT *, CASE WHEN prev IS NULL OR ts_us - prev > 1800000000 THEN 1 ELSE 0 END AS new_s FROM l),
-        |s AS (SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM f),
-        |agg AS (SELECT user_id, sid, CAST(MIN(ts_us) // 1000000 AS BIGINT) AS session_start_s, COUNT(*) AS n_events
-        |        FROM s GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY sid DESC) AS rk FROM agg)
-        |SELECT user_id, session_start_s, n_events FROM r WHERE rk = 1
-        |ORDER BY user_id, session_start_s""".stripMargin,
-    "ann_ivf" -> duckIvfSearchSql(),
-    "search_mmr" -> duckMmrSql(candK = 20, selectK = 5, lambdaBp = 5000),
-    "ann_sq8" ->
-      // shared SQ8 replay → dequantized store (code·amax/(127·2^20), the
-      // dequantCol formula) → cosine top-10 → exact-truth flag via the
-      // knn oracle as a subquery
-      s"""WITH $DuckSq8CodesCtes,
-        |deq AS (SELECT vec_id,
-        |    list_transform(codes, v -> ((v::DOUBLE) * (amax_q::DOUBLE)) / (127.0 * 1048576.0)) AS dv
-        |  FROM c),
-        |qd AS (SELECT vec_id AS qid, dv AS qvec FROM deq WHERE vec_id < 5),
-        |simsq AS (SELECT qd.qid, e.vec_id, ${duckCosine("e.dv", "qd.qvec")} AS sim
-        |          FROM deq e CROSS JOIN qd WHERE e.vec_id <> qd.qid),
-        |rsq AS (SELECT qid, vec_id, CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS INT) AS rank FROM simsq),
-        |ex AS (SELECT query_id, neighbor_id FROM (
-        |${duckKnnSql()}
-        |))
-        |SELECT r.qid AS query_id, r.vec_id AS neighbor_id, r.rank,
-        |  CAST(CASE WHEN ex.neighbor_id IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS in_exact
-        |FROM rsq r LEFT JOIN ex ON ex.query_id = r.qid AND ex.neighbor_id = r.vec_id
-        |WHERE r.rank <= 10 ORDER BY query_id, rank""".stripMargin,
-    "mix_topic" ->
-      // training replay verbatim; the quota window rule (hash-bp order,
-      // the quota_per_source idiom) over the final assignment round
-      s"""WITH ${duckIvfTrainCtes()},
-        |tr AS (SELECT vec_id, cid,
-        |    CAST(row_number() OVER (PARTITION BY cid
-        |      ORDER BY CAST('0x' || substring(md5(coalesce(CAST(vec_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000, vec_id) AS BIGINT) AS pick_rank,
-        |    CAST(COUNT(*) OVER (PARTITION BY cid) AS BIGINT) AS n_cell
-        |  FROM asn3)
-        |SELECT CAST(cid AS INT) AS cluster, vec_id, n_cell, pick_rank,
-        |  CAST(pick_rank <= $MixTopicQuota AS BIGINT) AS kept
-        |FROM tr ORDER BY cluster, pick_rank""".stripMargin,
-    "mine_bitext" ->
-      // integer replay of the margin pipeline: quantize-once q, then the
-      // shared top-k / sums / margin / mutual-best tail + sentinel
-      s"""WITH a AS (SELECT vec_id AS id_a, embedding AS va FROM embeddings WHERE vec_id % 2 = 0),
-        |b AS (SELECT vec_id AS id_b, embedding AS vb FROM embeddings WHERE vec_id % 2 = 1),
-        |p AS (SELECT id_a, id_b,
-        |        CAST(floor(${duckCosine("va", "vb")} * 1048576.0) AS BIGINT) AS q
-        |      FROM a CROSS JOIN b),
-        |pp AS (SELECT * FROM p WHERE q > 0),
-        |${duckBitextTail()}""".stripMargin,
-    "mine_bitext_cell" ->
-      // same margin tail over within-cell candidates: the shared IVF
-      // assignment (asn3 = ann_ivf's 2-round codebook) blocks both sides
-      s"""WITH ${duckIvfTrainCtes()},
-        |a AS (SELECT e2.vec_id AS id_a, e2.embedding AS va, s2.cid
-        |      FROM embeddings e2 JOIN asn3 s2 ON s2.vec_id = e2.vec_id
-        |      WHERE e2.vec_id % 2 = 0),
-        |b AS (SELECT e2.vec_id AS id_b, e2.embedding AS vb, s2.cid
-        |      FROM embeddings e2 JOIN asn3 s2 ON s2.vec_id = e2.vec_id
-        |      WHERE e2.vec_id % 2 = 1),
-        |p AS (SELECT id_a, id_b,
-        |        CAST(floor(${duckCosine("va", "vb")} * 1048576.0) AS BIGINT) AS q
-        |      FROM a JOIN b ON a.cid = b.cid),
-        |pp AS (SELECT * FROM p WHERE q > 0),
-        |${duckBitextTail()}""".stripMargin,
-    "mine_bitext_auto" ->
-      // the corpus-sized-codebook replay: seeds = max(8, ceil(n/100)),
-      // the dedup_semantic_auto dynamic-k arithmetic under the hash gate
-      s"""WITH ${duckIvfTrainCtes(limitSql = "(SELECT CAST(greatest(8, CAST(ceil(COUNT(*) / 100.0) AS BIGINT)) AS BIGINT) FROM embeddings)")},
-        |a AS (SELECT e2.vec_id AS id_a, e2.embedding AS va, s2.cid
-        |      FROM embeddings e2 JOIN asn3 s2 ON s2.vec_id = e2.vec_id
-        |      WHERE e2.vec_id % 2 = 0),
-        |b AS (SELECT e2.vec_id AS id_b, e2.embedding AS vb, s2.cid
-        |      FROM embeddings e2 JOIN asn3 s2 ON s2.vec_id = e2.vec_id
-        |      WHERE e2.vec_id % 2 = 1),
-        |p AS (SELECT id_a, id_b,
-        |        CAST(floor(${duckCosine("va", "vb")} * 1048576.0) AS BIGINT) AS q
-        |      FROM a JOIN b ON a.cid = b.cid),
-        |pp AS (SELECT * FROM p WHERE q > 0),
-        |${duckBitextTail()}""".stripMargin,
-    "ann_matryoshka" ->
-      // prefix-dim truth, 30-candidate shortlist, full-dim rescore,
-      // recall in integer bp against the exact baseline
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-        |tr AS (SELECT qid, vec_id FROM (
-        |    SELECT q.qid, e.vec_id,
-        |      row_number() OVER (PARTITION BY q.qid
-        |        ORDER BY ${duckCosine("e.embedding", "q.qvec")} DESC, e.vec_id) AS rnk
-        |    FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid) WHERE rnk <= 10),
-        |nt AS (SELECT COUNT(*) AS n FROM tr),
-        |pf AS (SELECT qid, vec_id, rnk FROM (
-        |    SELECT q.qid, e.vec_id,
-        |      row_number() OVER (PARTITION BY q.qid
-        |        ORDER BY ${duckCosine("e.embedding[1:16]", "q.qvec[1:16]")} DESC, e.vec_id) AS rnk
-        |    FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid) WHERE rnk <= 30),
-        |rr AS (SELECT qid, vec_id FROM (
-        |    SELECT pf.qid, pf.vec_id,
-        |      row_number() OVER (PARTITION BY pf.qid
-        |        ORDER BY ${duckCosine("e.embedding", "q.qvec")} DESC, pf.vec_id) AS rnk2
-        |    FROM pf JOIN embeddings e ON e.vec_id = pf.vec_id
-        |    JOIN q ON q.qid = pf.qid) WHERE rnk2 <= 10)
-        |SELECT 'prefix16' AS tier,
-        |  CAST((10000 * (SELECT COUNT(*) FROM pf JOIN tr USING (qid, vec_id) WHERE pf.rnk <= 10))
-        |       // (SELECT n FROM nt) AS BIGINT) AS recall_bp
-        |UNION ALL
-        |SELECT 'prefix16_rerank30',
-        |  CAST((10000 * (SELECT COUNT(*) FROM rr JOIN tr USING (qid, vec_id)))
-        |       // (SELECT n FROM nt) AS BIGINT)
-        |ORDER BY tier""".stripMargin,
-    "mine_hard_negatives" ->
-      // training replay verbatim; probes for the 20-id query batch from
-      // the final-round sims (the probes-CTE shape with the batch's
-      // predicate), candidates = probed-cell members, exact-cosine bp
-      // rescore, label-mismatch + [0, 9800) band, integer-bp ranking
-      s"""WITH ${duckIvfTrainCtes()},
-        |mprobes AS (SELECT vec_id AS query_id, cid FROM (
-        |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY
-        |      (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) DESC, cid) AS rn
-        |    FROM sim3 WHERE vec_id % 25 = 0 AND vec_id < 500) WHERE rn <= 3),
-        |mcand AS (SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-        |          FROM asn3 a JOIN mprobes p ON a.cid = p.cid WHERE a.vec_id <> p.query_id),
-        |mres AS (SELECT c.query_id, c.neighbor_id,
-        |    CAST(floor(${duckCosine("en.embedding", "eq.embedding")} * 10000) AS BIGINT) AS sim_bp,
-        |    en.label AS neg_label, eq.label AS qlabel
-        |  FROM mcand c JOIN embeddings en ON en.vec_id = c.neighbor_id
-        |               JOIN embeddings eq ON eq.vec_id = c.query_id),
-        |mrank AS (SELECT query_id, neighbor_id AS neg_id, neg_label, sim_bp,
-        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim_bp DESC, neighbor_id) AS INT) AS rank
-        |  FROM mres WHERE neg_label <> qlabel AND sim_bp >= 0 AND sim_bp < 9800)
-        |SELECT query_id, neg_id, neg_label, rank, sim_bp
-        |FROM mrank WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "mine_triplets" ->
-      // the mine_hard_negatives probe/candidate/rescore chain, then a
-      // same-label top-1 positive leg and a diff-label top-3 negative
-      // leg joined per query with the margin
-      s"""WITH ${duckIvfTrainCtes()},
-        |mprobes AS (SELECT vec_id AS query_id, cid FROM (
-        |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY
-        |      (CASE WHEN sqrt(na) * sqrt(nb) = 0 THEN 0 ELSE dt / (sqrt(na) * sqrt(nb)) END) DESC, cid) AS rn
-        |    FROM sim3 WHERE vec_id % 25 = 0 AND vec_id < 500) WHERE rn <= 3),
-        |mcand AS (SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-        |          FROM asn3 a JOIN mprobes p ON a.cid = p.cid WHERE a.vec_id <> p.query_id),
-        |mres AS (SELECT c.query_id, c.neighbor_id,
-        |    CAST(floor(${duckCosine("en.embedding", "eq.embedding")} * 10000) AS BIGINT) AS sim_bp,
-        |    en.label AS n_label, eq.label AS qlabel
-        |  FROM mcand c JOIN embeddings en ON en.vec_id = c.neighbor_id
-        |               JOIN embeddings eq ON eq.vec_id = c.query_id
-        |  WHERE CAST(floor(${duckCosine("en.embedding", "eq.embedding")} * 10000) AS BIGINT) < 9800),
-        |mpos AS (SELECT query_id, neighbor_id AS pos_id, sim_bp AS pos_sim_bp FROM (
-        |    SELECT query_id, neighbor_id, sim_bp,
-        |      row_number() OVER (PARTITION BY query_id ORDER BY sim_bp DESC, neighbor_id) AS prn
-        |    FROM mres WHERE n_label = qlabel) WHERE prn = 1),
-        |mneg AS (SELECT query_id, neighbor_id AS neg_id, n_label AS neg_label, sim_bp AS neg_sim_bp,
-        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim_bp DESC, neighbor_id) AS INT) AS rank
-        |  FROM mres WHERE n_label <> qlabel AND sim_bp >= 0)
-        |SELECT p.query_id, pos_id, pos_sim_bp, neg_id, neg_label, rank, neg_sim_bp,
-        |  pos_sim_bp - neg_sim_bp AS margin_bp
-        |FROM mpos p JOIN mneg n USING (query_id) WHERE rank <= 3
-        |ORDER BY query_id, rank""".stripMargin,
-    "embed_ood" ->
-      // same training replay + winning-sim join, then the cell OOD
-      // collapse in the 10^-4 quantized domain
-      s"""WITH ${duckIvfTrainCtes()},
-        |simw AS (SELECT s.vec_id, s.cid,
-        |    CAST(floor((CASE WHEN sqrt(s.na) * sqrt(s.nb) = 0 THEN 0 ELSE s.dt / (sqrt(s.na) * sqrt(s.nb)) END) * 10000) AS BIGINT) AS sim_bp
-        |  FROM sim3 s JOIN asn3 a ON s.vec_id = a.vec_id AND s.cid = a.cid)
-        |SELECT CAST(cid AS INT) AS cluster, CAST(COUNT(*) AS BIGINT) AS n_cell,
-        |  CAST(SUM(CASE WHEN sim_bp < 1500 THEN 1 ELSE 0 END) AS BIGINT) AS n_ood,
-        |  CAST(MIN(sim_bp) AS BIGINT) AS min_sim_bp,
-        |  CAST((10000 * SUM(CASE WHEN sim_bp < 1500 THEN 1 ELSE 0 END)) // COUNT(*) AS BIGINT) AS ood_bp
-        |FROM simw GROUP BY cid ORDER BY cluster""".stripMargin,
-    "prune_prototypes" ->
-      // training replay verbatim (duckIvfTrainCtes); the winning sim per
-      // vector re-joined from the final assignment round, then the same
-      // per-cell rank and ceil drop quota
-      s"""WITH ${duckIvfTrainCtes()},
-        |simw AS (SELECT s.vec_id, s.cid,
-        |    (CASE WHEN sqrt(s.na) * sqrt(s.nb) = 0 THEN 0 ELSE s.dt / (sqrt(s.na) * sqrt(s.nb)) END) AS sim
-        |  FROM sim3 s JOIN asn3 a ON s.vec_id = a.vec_id AND s.cid = a.cid),
-        |r AS (SELECT vec_id, cid, sim,
-        |    CAST(row_number() OVER (PARTITION BY cid ORDER BY sim DESC, vec_id) AS BIGINT) AS proto_rank,
-        |    CAST(COUNT(*) OVER (PARTITION BY cid) AS BIGINT) AS n_cell
-        |  FROM simw)
-        |SELECT CAST(cid AS INT) AS cluster, vec_id, n_cell, proto_rank,
-        |  CAST(proto_rank <= (n_cell * 2500 + 9999) // 10000 AS BIGINT) AS dropped
-        |FROM r ORDER BY cluster, proto_rank""".stripMargin,
-    "ann_pq" ->
-      // full replay of 4-subspace product quantization: per-subspace
-      // integer k-means (seed + one Lloyd round, exact (sum, n) state),
-      // encoding = quantized-cosine assignment under the trained books,
-      // ADC score = Σ_s fixed-order subspace dot products (ascending dims,
-      // then ascending subspace) — bit-exact in both engines
-      s"""WITH e AS (SELECT vec_id, embedding,
-         |  list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS vq
-         |  FROM embeddings),
-         |dims16 AS (SELECT unnest(range(1, 17)) AS i),
-         |${(0 until 4).map(pqSubCtes).mkString(",\n")},
-         |$DuckPqCodes,
-         |q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 5),
-         |adc AS (SELECT q.query_id, c.vec_id AS neighbor_id, $DuckAdcScore AS score
-         |  FROM q CROSS JOIN codes c
-         |  JOIN pqcb0 b0 ON b0.cid = c.c0 JOIN pqcb1 b1 ON b1.cid = c.c1
-         |  JOIN pqcb2 b2 ON b2.cid = c.c2 JOIN pqcb3 b3 ON b3.cid = c.c3
-         |  WHERE c.vec_id <> q.query_id),
-         |ranked AS (SELECT query_id, neighbor_id,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS INT) AS rank
-         |  FROM adc)
-         |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-    "ann_ivfpq" ->
-      // the composed index: coarse IVF replay prunes candidates (asn3 ⋈
-      // probes from the shared fragment), PQ replay supplies codes and
-      // books, ADC scores ONLY the probed members — the billion-scale
-      // search path, verified end-to-end
-      s"""WITH $DuckIvfTrainCtes,
-         |dims16 AS (SELECT unnest(range(1, 17)) AS i),
-         |${(0 until 4).map(pqSubCtes).mkString(",\n")},
-         |$DuckPqCodes,
-         |cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
-         |         FROM asn3 a JOIN probes p ON a.cid = p.cid WHERE a.vec_id <> p.query_id),
-         |q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 5),
-         |adc AS (SELECT cd.query_id, cd.neighbor_id, $DuckAdcScore AS score
-         |  FROM cand cd
-         |  JOIN q ON q.query_id = cd.query_id
-         |  JOIN codes c ON c.vec_id = cd.neighbor_id
-         |  JOIN pqcb0 b0 ON b0.cid = c.c0 JOIN pqcb1 b1 ON b1.cid = c.c1
-         |  JOIN pqcb2 b2 ON b2.cid = c.c2 JOIN pqcb3 b3 ON b3.cid = c.c3),
-         |ranked AS (SELECT query_id, neighbor_id,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS INT) AS rank
-         |  FROM adc)
-         |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-    "ann_lsh" ->
-      // full replay of the ±1 sign-projection LSH: same md5-derived plane
-      // signs, same left-to-right projection fold, same bucket join, same
-      // exact-cosine re-rank (the established bit-exact float pattern)
-      s"""WITH planes AS (
-         |  SELECT t, b, list_transform(range(0, 64), i ->
-         |    CASE WHEN CAST('0x' || substring(md5('42|' || t || '|' || b || '|' || i), 1, 1) AS INT) >= 8
-         |         THEN 1.0 ELSE -1.0 END) AS w
-         |  FROM (SELECT unnest(range(0, 4)) AS t), (SELECT unnest(range(0, 12)) AS b)),
-         |proj AS (
-         |  SELECT e.vec_id, p.t, p.b,
-         |    list_sum(list_transform(range(0, 64), i -> p.w[i + 1] * (e.embedding[i + 1])::DOUBLE)) AS pr
-         |  FROM embeddings e CROSS JOIN planes p),
-         |sig AS (SELECT vec_id, t, CAST(SUM(CASE WHEN pr >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS bucket
-         |        FROM proj GROUP BY 1, 2),
-         |q AS (SELECT vec_id AS query_id, t, bucket FROM sig WHERE vec_id < 5),
-         |cand AS (SELECT DISTINCT q.query_id, s.vec_id AS neighbor_id
-         |         FROM sig s JOIN q ON s.t = q.t AND s.bucket = q.bucket WHERE s.vec_id <> q.query_id),
-         |qv AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |resc AS (SELECT c.query_id, c.neighbor_id, ${duckCosine("e.embedding", "qv.qvec")} AS sim
-         |         FROM cand c JOIN embeddings e ON e.vec_id = c.neighbor_id JOIN qv ON qv.query_id = c.query_id),
-         |ranked AS (SELECT query_id, neighbor_id, CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INT) AS rank FROM resc)
-         |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-    "csv_scan" ->
-      s"""WITH c AS (SELECT nullif(lower(trim(replace(regexp_replace(trim(doi, ' ' || $DuckWs), '(?i)^https?://(dx\\.)?doi\\.org/', ''), chr(8203), ''), ' ' || $DuckWs)), '') AS doi_norm
-        |           FROM read_csv('/root/repo/fixtures/input_dois.csv', header=true))
-        |SELECT doi_norm, COUNT(*) AS n_occurrences FROM c WHERE doi_norm IS NOT NULL
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "jsonl_coalesce" ->
-      """SELECT coalesce(id, pmcid, pmid) AS id, title, doi,
-        |       CAST(length(coalesce(full_text, text, body)) AS BIGINT) AS body_len
-        |FROM read_json('/root/repo/fixtures/articles.jsonl', format='newline_delimited')
-        |ORDER BY doi""".stripMargin,
-    // bib side reads the reviewed bib_scan golden (the bib PARSE is pinned
-    // there; this oracle replays only the dispatch-union-normalize algebra)
-    "format_dispatch" ->
-      s"""WITH u AS (
-         |  SELECT 'input_dois.csv' AS src, ${duckDoiNorm("doi")} AS doi_norm
-         |  FROM read_csv('/root/repo/fixtures/input_dois.csv', header=true)
-         |  UNION ALL
-         |  SELECT 'articles.jsonl', ${duckDoiNorm("doi")}
-         |  FROM read_json('/root/repo/fixtures/articles.jsonl', format='newline_delimited')
-         |  UNION ALL
-         |  SELECT 'fulltext_articles.json', ${duckDoiNorm("doi")}
-         |  FROM read_json('/root/repo/fixtures/fulltext_articles.json')
-         |  UNION ALL
-         |  SELECT 'sample_refs.bib', ${duckDoiNorm("doi")}
-         |  FROM read_csv('/root/repo/fixtures/expected/bib_scan.csv', header=true, nullstr='\\N'))
-         |SELECT src, coalesce(doi_norm, '(none)') AS doi_norm, COUNT(*) AS n
-         |FROM u GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // ------- pinned-output oracles for the fixture parsers -------
-    // bibtex/JATS-XML/nested-JSON parsing has no DuckDB-SQL formulation, so
-    // these compare against golden CSVs under fixtures/expected/. The pins
-    // were generated from reviewed Verify output (rows cross-checked against
-    // the fixture sources; parser semantics unit-tested in JatsSpec/
-    // ChunkersSpec/PipelinesSpec against reference file:line behavior) — so
-    // they guard against DRIFT; the parser specs carry the from-scratch
-    // correctness argument. Regenerate deliberately via
-    // tools/regen_expected.py and review the diff like any golden file.
-    "bib_scan" ->
-      """SELECT cite_key, entry_type, doi, title, journal
-        |FROM read_csv('/root/repo/fixtures/expected/bib_scan.csv', header=true, nullstr='\N')
-        |ORDER BY cite_key""".stripMargin,
-    "springer_jats" ->
-      """SELECT doi, status, picked_doi, doi_matched, title, n_sections, body_len, abstract_len, via
-        |FROM read_csv('/root/repo/fixtures/expected/springer_jats.csv', header=true, nullstr='\N')
-        |ORDER BY doi""".stripMargin,
-    "jats_parse" ->
-      """SELECT pmcid, article_title, body_len, n_sections
-        |FROM read_csv('/root/repo/fixtures/expected/jats_parse.csv', header=true, nullstr='\N')
-        |ORDER BY pmcid""".stripMargin,
-    "jats_abstract" ->
-      """SELECT pmcid, abstract_text, abstract_len
-        |FROM read_csv('/root/repo/fixtures/expected/jats_abstract.csv', header=true, nullstr='\N')
-        |ORDER BY pmcid""".stripMargin,
-    "fulltext_sections" ->
-      """SELECT doi, section_path, sec_len
-        |FROM read_csv('/root/repo/fixtures/expected/fulltext_sections.csv', header=true, nullstr='\N')
-        |ORDER BY doi, section_path""".stripMargin,
-    "chunk_by_section" ->
-      """SELECT chunk_id, doc_id, chunk_index, section_path, chunk_len
-        |FROM read_csv('/root/repo/fixtures/expected/chunk_by_section.csv', header=true, nullstr='\N')
-        |ORDER BY doc_id, chunk_index""".stripMargin,
-    "pipeline_fulltext" ->
-      """SELECT doi, title, journal, pmcid
-        |FROM read_csv('/root/repo/fixtures/expected/pipeline_fulltext.csv', header=true, nullstr='\N')
-        |ORDER BY doi""".stripMargin,
-    "pipeline_failures" ->
-      """SELECT doi, journal, reason
-        |FROM read_csv('/root/repo/fixtures/expected/pipeline_failures.csv', header=true, nullstr='\N')
-        |ORDER BY doi""".stripMargin,
-    "dedup_simhash" ->
-      s"""$DuckSimhashSim
-         |SELECT doc_id, simhash, band0, band1, band2, band3 FROM sim ORDER BY doc_id""".stripMargin,
-    "dedup_simhash_pairs" ->
-      s"""$DuckSimhashSim,
-         |bands AS (SELECT doc_id, 0 AS band_idx, band0 AS band_val FROM sim
-         |          UNION ALL SELECT doc_id, 1, band1 FROM sim
-         |          UNION ALL SELECT doc_id, 2, band2 FROM sim
-         |          UNION ALL SELECT doc_id, 3, band3 FROM sim)
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-         |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT)
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "embed_chunks" ->
-      // same windowing as chunk_fixed; the embedding itself is projected
-      // down to its dimensions in the query, so the oracle checks the chunk
-      // lineage plus the fixed dim contract
-      """WITH t AS (SELECT doc_id, trim(regexp_replace(text, '\s+', ' ', 'g')) AS t FROM documents),
-        |w AS (SELECT doc_id, t,
-        |        unnest(generate_series(0, CAST(1 + greatest(0, ceil((length(t) - 120) / 108.0)) AS INT) - 1)) AS chunk_index
-        |      FROM t WHERE length(t) > 0)
-        |SELECT doc_id || '::c' || chunk_index AS chunk_id, doc_id, chunk_index,
-        |       CAST(64 AS INT) AS embedding_dim, CAST(64 AS INT) AS dim_check
-        |FROM w WHERE trim(substring(t, chunk_index * 108 + 1, 120)) <> ''
-        |ORDER BY doc_id, chunk_index""".stripMargin,
-    "csv_scan_keepfirst" ->
-      s"""WITH c AS (SELECT doi, journal, row_number() OVER () AS ord
-         |           FROM read_csv('/root/repo/fixtures/input_dois.csv', header=true)),
-         |n AS (SELECT journal, ord, nullif(lower(trim(replace(regexp_replace(trim(doi, ' ' || $DuckWs), '(?i)^https?://(dx\\.)?doi\\.org/', ''), chr(8203), ''), ' ' || $DuckWs)), '') AS doi_norm FROM c),
-         |k AS (SELECT doi_norm, journal, row_number() OVER (PARTITION BY doi_norm ORDER BY ord) AS rn
-         |      FROM n WHERE doi_norm IS NOT NULL)
-         |SELECT doi_norm, journal FROM k WHERE rn = 1 ORDER BY doi_norm""".stripMargin,
-    "chunk_generator" ->
-      // replays Chunkers.splitTextWindows: after whitespace collapse the
-      // only whitespace is ' ', so the ≤40-char word-boundary bump is
-      // strpos of the next space; windows advance by (bumped end - overlap)
-      """WITH RECURSIVE base AS (
-        |  SELECT doc_id, trim(regexp_replace(text, '\s+', ' ', 'g')) AS t FROM documents),
-        |st AS (
-        |  SELECT doc_id, t, length(t) AS n, 0 AS idx, 0 AS s FROM base WHERE length(t) > 0
-        |  UNION ALL
-        |  SELECT doc_id, t, n, idx + 1, e - 12 AS s FROM (
-        |    SELECT *, CASE WHEN s + 120 >= n THEN n
-        |                   ELSE s + 120 + (CASE WHEN strpos(substring(t, s + 121, 40), ' ') > 0
-        |                                        THEN strpos(substring(t, s + 121, 40), ' ') - 1 ELSE 0 END) END AS e
-        |    FROM st) WHERE e < n),
-        |w AS (
-        |  SELECT doc_id, idx, s,
-        |         CASE WHEN s + 120 >= n THEN n
-        |              ELSE s + 120 + (CASE WHEN strpos(substring(t, s + 121, 40), ' ') > 0
-        |                                   THEN strpos(substring(t, s + 121, 40), ' ') - 1 ELSE 0 END) END AS e, t
-        |  FROM st),
-        |ch AS (
-        |  SELECT doc_id, trim(substring(t, s + 1, e - s)) AS chunk_text,
-        |         row_number() OVER (PARTITION BY doc_id ORDER BY s) - 1 AS chunk_index
-        |  FROM w WHERE trim(substring(t, s + 1, e - s)) <> '')
-        |SELECT doc_id || '::g' || chunk_index AS chunk_id, doc_id, CAST(chunk_index AS INT) AS chunk_index, chunk_text
-        |FROM ch ORDER BY doc_id, chunk_index""".stripMargin,
-    "sketch_minvals" ->
-      // same 60-bit hash; bucket = h % 256, rank value = h // 256 on
-      // [0, 2^52); summed-minima MinCount estimator, minima coarsened by
-      // // 256 so 2^60 is the single inversion numerator (R' = 2^44)
-      """WITH t AS (SELECT DISTINCT source, term FROM (
-        |    SELECT source, unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
-        |    FROM documents) WHERE term <> ''),
-        |h AS (SELECT source, CAST('0x' || substring(md5(term), 1, 15) AS BIGINT) AS h FROM t),
-        |s AS (SELECT source, h % 256 AS bucket, MIN(h // 256) AS m FROM h GROUP BY 1, 2),
-        |c AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS buckets_hit,
-        |        CAST(1152921504606846976 // (SUM(m // 256) + (256 - COUNT(*)) * 17592186044416 + COUNT(*)) - 256 AS BIGINT) AS est_distinct
-        |      FROM s GROUP BY 1),
-        |e AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS exact_distinct FROM t GROUP BY 1)
-        |SELECT c.source, buckets_hit, est_distinct, exact_distinct,
-        |  CAST(abs(est_distinct - exact_distinct) * 10000 // exact_distinct AS BIGINT) AS err_bp
-        |FROM c JOIN e USING (source) ORDER BY source""".stripMargin,
-    "cdc_diff" ->
-      // the oracle emits the change batch from the construction rules
-      // directly; the engine has to REDISCOVER it through the digest diff
-      """SELECT doc_id, 'D' AS op FROM documents WHERE doc_id % 7 = 0
-        |UNION ALL
-        |SELECT doc_id, 'U' AS op FROM documents WHERE doc_id % 7 <> 0 AND doc_id % 11 = 0
-        |UNION ALL
-        |SELECT doc_id + 10000000 AS doc_id, 'I' AS op FROM documents WHERE doc_id % 13 = 0
-        |ORDER BY doc_id""".stripMargin,
-    "cdc_merge" ->
-      // v2 constructed directly — merge∘diff must reproduce it exactly
-      """WITH v2 AS (
-        |  SELECT doc_id, lang, source, n_chars,
-        |    text || CASE WHEN doc_id % 11 = 0 THEN ' [rev2]' ELSE '' END AS text
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 10000000, lang, source, n_chars, 'fresh: ' || text
-        |  FROM documents WHERE doc_id % 13 = 0)
-        |SELECT doc_id, lang, source, n_chars, md5(text) AS text_md5
-        |FROM v2 ORDER BY doc_id""".stripMargin,
-    "sketch_minvals_merge" ->
-      // SINGLE-PASS replay — hash-equality proves the Spark-side
-      // slice-then-MIN-merge reaches identical sketch state
-      """WITH t AS (SELECT DISTINCT source, term FROM (
-        |    SELECT source, unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
-        |    FROM documents) WHERE term <> ''),
-        |h AS (SELECT source, CAST('0x' || substring(md5(term), 1, 15) AS BIGINT) AS h FROM t),
-        |s AS (SELECT source, h % 256 AS bucket, MIN(h // 256) AS m FROM h GROUP BY 1, 2)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS buckets_hit,
-        |  CAST(1152921504606846976 // (SUM(m // 256) + (256 - COUNT(*)) * 17592186044416 + COUNT(*)) - 256 AS BIGINT) AS est_distinct
-        |FROM s GROUP BY source ORDER BY source""".stripMargin,
-    "sketch_growth" ->
-      // both generations replayed from the data: then = %5≠0 single
-      // pass, now = full-corpus single pass (MIN-merge of the retained
-      // gen + delta ≡ single pass over the union, the pinned algebra)
-      """WITH t AS (SELECT DISTINCT source, term, (CASE WHEN dmod = 0 THEN 1 ELSE 0 END) AS is_new FROM (
-        |    SELECT source, doc_id % 5 AS dmod,
-        |      unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
-        |    FROM documents) WHERE term <> ''),
-        |h AS (SELECT source, term, MIN(is_new) AS only_new,
-        |        CAST('0x' || substring(md5(term), 1, 15) AS BIGINT) AS h
-        |      FROM t GROUP BY 1, 2, 4),
-        |s_then AS (SELECT source, h % 256 AS bucket, MIN(h // 256) AS m FROM h WHERE only_new = 0 GROUP BY 1, 2),
-        |s_now AS (SELECT source, h % 256 AS bucket, MIN(h // 256) AS m FROM h GROUP BY 1, 2),
-        |c_then AS (SELECT source,
-        |    CAST(1152921504606846976 // (SUM(m // 256) + (256 - COUNT(*)) * 17592186044416 + COUNT(*)) - 256 AS BIGINT) AS est_then
-        |  FROM s_then GROUP BY 1),
-        |c_now AS (SELECT source,
-        |    CAST(1152921504606846976 // (SUM(m // 256) + (256 - COUNT(*)) * 17592186044416 + COUNT(*)) - 256 AS BIGINT) AS est_now
-        |  FROM s_now GROUP BY 1)
-        |SELECT c_then.source, est_then, est_now,
-        |  CAST(greatest(est_now - est_then, 0) AS BIGINT) AS growth
-        |FROM c_then JOIN c_now USING (source) ORDER BY c_then.source""".stripMargin,
-    "sketch_acquisition" ->
-      """WITH t AS (SELECT DISTINCT source, term FROM (
-        |    SELECT source, unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
-        |    FROM documents) WHERE term <> ''),
-        |h AS (SELECT source, CAST('0x' || substring(md5(term), 1, 15) AS BIGINT) AS h FROM t),
-        |s AS (SELECT source, h % 256 AS bucket, MIN(h // 256) AS m FROM h GROUP BY 1, 2),
-        |g AS (SELECT DISTINCT source AS excl FROM s),
-        |loo AS (SELECT g.excl, s.bucket, MIN(s.m) AS m FROM s JOIN g ON s.source <> g.excl GROUP BY 1, 2),
-        |woc AS (SELECT excl,
-        |    CAST(1152921504606846976 // (SUM(m // 256) + (256 - COUNT(*)) * 17592186044416 + COUNT(*)) - 256 AS BIGINT) AS est_without
-        |  FROM loo GROUP BY 1),
-        |fullu AS (SELECT bucket, MIN(m) AS m FROM s GROUP BY 1),
-        |fc AS (SELECT CAST(1152921504606846976 // (SUM(m // 256) + (256 - COUNT(*)) * 17592186044416 + COUNT(*)) - 256 AS BIGINT) AS est_union FROM fullu)
-        |SELECT g.excl AS source,
-        |  CAST(coalesce(woc.est_without, 0) AS BIGINT) AS est_without,
-        |  fc.est_union,
-        |  CAST(greatest(fc.est_union - coalesce(woc.est_without, 0), 0) AS BIGINT) AS est_marginal
-        |FROM g LEFT JOIN woc USING (excl) CROSS JOIN fc ORDER BY source""".stripMargin,
-    "source_overlap_sketch" ->
-      """WITH t AS (SELECT DISTINCT source, term FROM (
-        |    SELECT source, unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
-        |    FROM documents) WHERE term <> ''),
-        |h AS (SELECT source, term, CAST('0x' || substring(md5(term), 1, 15) AS BIGINT) AS h FROM t),
-        |s AS (SELECT source, h % 256 AS bucket, MIN(h // 256) AS m FROM h GROUP BY 1, 2),
-        |est AS (SELECT a.source AS src_a, b.source AS src_b,
-        |    CAST(COUNT(*) AS BIGINT) AS co_buckets,
-        |    CAST(SUM(CASE WHEN a.m = b.m THEN 1 ELSE 0 END) AS BIGINT) AS match_buckets
-        |  FROM s a JOIN s b ON a.bucket = b.bucket AND a.source < b.source
-        |  GROUP BY 1, 2),
-        |sz AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n FROM t GROUP BY 1),
-        |inter AS (SELECT a.source AS src_a, b.source AS src_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-        |  FROM t a JOIN t b ON a.term = b.term AND a.source < b.source GROUP BY 1, 2)
-        |SELECT e.src_a, e.src_b, e.co_buckets, e.match_buckets,
-        |  CAST(e.match_buckets * 10000 // e.co_buckets AS BIGINT) AS jaccard_est_bp,
-        |  CAST(i.n_inter * 10000 // (sa.n + sb.n - i.n_inter) AS BIGINT) AS jaccard_exact_bp
-        |FROM est e JOIN inter i ON e.src_a = i.src_a AND e.src_b = i.src_b
-        |JOIN sz sa ON sa.source = e.src_a JOIN sz sb ON sb.source = e.src_b
-        |ORDER BY e.src_a, e.src_b""".stripMargin,
-    "sample_priority" ->
-      // q = (w << 40) // (top-40-bits-of-seeded-hash + 1); top-64 by
-      // (q DESC, doc_id); est_w = max(w, 65th priority)
-      """WITH t AS (SELECT doc_id,
-        |    CAST(len(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS BIGINT) AS w
-        |  FROM documents),
-        |p AS (SELECT doc_id, w,
-        |    (w * 1099511627776) // ((CAST('0x' || substring(md5('7:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) // 1048576) + 1) AS q
-        |  FROM t),
-        |r AS (SELECT doc_id, w, q,
-        |    CAST(row_number() OVER (ORDER BY q DESC, doc_id) AS BIGINT) AS rank FROM p)
-        |SELECT rank, doc_id, w,
-        |  CAST(greatest(w, coalesce((SELECT q FROM r WHERE rank = 65), 0)) AS BIGINT) AS est_w
-        |FROM r WHERE rank <= 64 ORDER BY rank""".stripMargin,
-    "text_keyphrases" ->
-      // same stopword-run segmentation idiom (running-sum ids), ORDER BY
-      // string_agg phrase rebuild, doc-level word stats, milli division
-      """WITH t AS (SELECT doc_id, string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS tk FROM documents),
-        |x AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS i, tk FROM t),
-        |y AS (SELECT doc_id, i, tk[i] AS tok FROM x WHERE tk[i] <> ''),
-        |f AS (SELECT doc_id, i, tok,
-        |    CASE WHEN list_contains(['the','a','of','and','to','in','is','that'], tok) THEN 1 ELSE 0 END AS st FROM y),
-        |s AS (SELECT doc_id, i, tok, st,
-        |    SUM(st) OVER (PARTITION BY doc_id ORDER BY i ROWS UNBOUNDED PRECEDING) AS seg FROM f),
-        |n AS (SELECT doc_id, i, tok, seg FROM s WHERE st = 0),
-        |p AS (SELECT doc_id, seg, CAST(COUNT(*) AS BIGINT) AS plen,
-        |    string_agg(tok, ' ' ORDER BY i) AS phrase, list(tok) AS words FROM n GROUP BY 1, 2),
-        |pc AS (SELECT * FROM p WHERE plen <= 4),
-        |wx AS (SELECT doc_id, plen, unnest(words) AS word FROM pc),
-        |ws AS (SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS freq,
-        |    CAST(SUM(plen) AS BIGINT) AS deg FROM wx GROUP BY 1, 2),
-        |wm AS (SELECT doc_id, word, CAST((1000 * deg) // freq AS BIGINT) AS wscore FROM ws),
-        |px AS (SELECT doc_id, seg, phrase, unnest(words) AS word FROM pc),
-        |sc AS (SELECT px.doc_id, px.seg, px.phrase, CAST(SUM(wm.wscore) AS BIGINT) AS score_milli
-        |    FROM px JOIN wm ON wm.doc_id = px.doc_id AND wm.word = px.word GROUP BY 1, 2, 3),
-        |cc AS (SELECT doc_id, phrase, MAX(score_milli) AS score_milli FROM sc GROUP BY 1, 2),
-        |r AS (SELECT doc_id, phrase, score_milli,
-        |    CAST(row_number() OVER (PARTITION BY doc_id ORDER BY score_milli DESC, phrase ASC) AS BIGINT) AS rank FROM cc)
-        |SELECT doc_id, rank, phrase, score_milli FROM r WHERE rank <= 3
-        |ORDER BY doc_id, rank""".stripMargin,
-    "text_segments" ->
-      // 0-based positions (i-1) to match posexplode, empty tokens dropped
-      // AFTER positioning, 40-token tumbling blocks, list-exact Jaccard
-      """WITH t AS (SELECT doc_id, string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS tk FROM documents),
-        |x AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS i, tk FROM t),
-        |y AS (SELECT doc_id, (i - 1) // 40 AS win, tk[i] AS tok FROM x WHERE tk[i] <> ''),
-        |v AS (SELECT doc_id, win, CAST(COUNT(*) AS BIGINT) AS wtok,
-        |    list_distinct(list(tok)) AS vocab FROM y GROUP BY 1, 2),
-        |l AS (SELECT doc_id, win, wtok, vocab,
-        |    lag(vocab) OVER (PARTITION BY doc_id ORDER BY win) AS pv FROM v),
-        |j AS (SELECT doc_id, wtok,
-        |    CASE WHEN pv IS NULL THEN -1
-        |         ELSE CAST(len(list_filter(vocab, x -> list_contains(pv, x))) * 10000
-        |           // len(list_distinct(list_concat(vocab, pv))) AS BIGINT) END AS jacc_bp
-        |  FROM l),
-        |o AS (SELECT doc_id, CAST(SUM(wtok) AS BIGINT) AS n_tokens,
-        |    CAST(COUNT(*) AS BIGINT) AS n_windows,
-        |    CAST(SUM(CASE WHEN jacc_bp >= 0 AND jacc_bp < 1500 THEN 1 ELSE 0 END) AS BIGINT) AS n_boundaries,
-        |    MIN(CASE WHEN jacc_bp >= 0 THEN jacc_bp END) AS minj,
-        |    SUM(CASE WHEN jacc_bp >= 0 THEN jacc_bp END) AS sumj,
-        |    SUM(CASE WHEN jacc_bp >= 0 THEN 1 ELSE 0 END) AS npairs
-        |  FROM j GROUP BY 1)
-        |SELECT doc_id, n_tokens, n_windows, n_boundaries,
-        |  CAST(n_boundaries + 1 AS BIGINT) AS n_segments,
-        |  CAST(coalesce(minj, -1) AS BIGINT) AS min_jacc_bp,
-        |  CAST(CASE WHEN npairs = 0 THEN -1 ELSE sumj // npairs END AS BIGINT) AS mean_jacc_bp
-        |FROM o ORDER BY doc_id""".stripMargin,
-    "chunk_tiling" ->
-      // text_segments' CTE chain extended: boundary flag per window, the
-      // running-sum segment index, tokens regrouped by (doc, seg) with
-      // string_agg ordered by token position
-      """WITH t AS (SELECT doc_id, string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS tk FROM documents),
-        |x AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS i, tk FROM t),
-        |y AS (SELECT doc_id, (i - 1) // 40 AS win, i - 1 AS pos, tk[i] AS tok FROM x WHERE tk[i] <> ''),
-        |v AS (SELECT doc_id, win, list_distinct(list(tok)) AS vocab FROM y GROUP BY 1, 2),
-        |l AS (SELECT doc_id, win, vocab,
-        |    lag(vocab) OVER (PARTITION BY doc_id ORDER BY win) AS pv FROM v),
-        |j AS (SELECT doc_id, win,
-        |    CASE WHEN pv IS NULL THEN -1
-        |         ELSE CAST(len(list_filter(vocab, x -> list_contains(pv, x))) * 10000
-        |           // len(list_distinct(list_concat(vocab, pv))) AS BIGINT) END AS jacc_bp
-        |  FROM l),
-        |s AS (SELECT doc_id, win,
-        |    SUM(CASE WHEN jacc_bp >= 0 AND jacc_bp < 1500 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY win) AS seg
-        |  FROM j),
-        |z AS (SELECT y.doc_id, y.win, s.seg, y.pos, y.tok
-        |      FROM y JOIN s ON s.doc_id = y.doc_id AND s.win = y.win)
-        |SELECT doc_id || '::s' || seg AS chunk_id, doc_id, CAST(seg AS BIGINT) AS seg_index,
-        |  CAST(COUNT(DISTINCT win) AS BIGINT) AS n_windows,
-        |  CAST(COUNT(*) AS BIGINT) AS n_tokens,
-        |  string_agg(tok, ' ' ORDER BY pos) AS chunk_text
-        |FROM z GROUP BY doc_id, seg ORDER BY doc_id, seg""".stripMargin,
-    "sample_uniform" ->
-      // bottom-64 by the seeded 60-bit md5 word (ties on doc_id) — the
-      // mergeable uniform sample's membership rule replayed exactly
-      """WITH h AS (SELECT doc_id,
-        |    CAST('0x' || substring(md5('7:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) AS h60
-        |  FROM documents),
-        |r AS (SELECT doc_id, h60,
-        |    CAST(row_number() OVER (ORDER BY h60, doc_id) AS BIGINT) AS rank FROM h)
-        |SELECT rank, doc_id, h60 FROM r WHERE rank <= 64 ORDER BY rank""".stripMargin,
-    "stats_corr" ->
-      // same tokenization, HUGEINT-exact numerator products cast back to
-      // BIGINT after the subtract (the engine runs DECIMAL(38,0))
-      """WITH t AS (SELECT source,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents),
-        |d AS (SELECT source, CAST(len(toks) AS BIGINT) AS nt,
-        |    CAST(len(list_distinct(toks)) AS BIGINT) AS vocab FROM t),
-        |a AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(nt) AS BIGINT) AS sum_x, CAST(SUM(vocab) AS BIGINT) AS sum_y,
-        |    CAST(SUM(nt * nt) AS BIGINT) AS sum_xx, CAST(SUM(vocab * vocab) AS BIGINT) AS sum_yy,
-        |    CAST(SUM(nt * vocab) AS BIGINT) AS sum_xy
-        |  FROM d GROUP BY 1)
-        |SELECT source, n, sum_x, sum_y, sum_xx, sum_yy, sum_xy,
-        |  CAST(CAST(n AS HUGEINT) * sum_xy - CAST(sum_x AS HUGEINT) * sum_y AS BIGINT) AS cov_num,
-        |  CAST(CAST(n AS HUGEINT) * sum_xx - CAST(sum_x AS HUGEINT) * sum_x AS BIGINT) AS varx_num,
-        |  CAST(CAST(n AS HUGEINT) * sum_yy - CAST(sum_y AS HUGEINT) * sum_y AS BIGINT) AS vary_num,
-        |  CAST(CASE WHEN CAST(n AS HUGEINT) * sum_xy > CAST(sum_x AS HUGEINT) * sum_y THEN 1
-        |       WHEN CAST(n AS HUGEINT) * sum_xy < CAST(sum_x AS HUGEINT) * sum_y THEN -1
-        |       ELSE 0 END AS BIGINT) AS corr_sign
-        |FROM a ORDER BY source""".stripMargin,
-    "text_simpson" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term FROM documents),
-        |tc AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS c FROM t WHERE term <> '' GROUP BY 1, 2),
-        |d AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
-        |        CAST(COUNT(*) AS BIGINT) AS vocab, CAST(MAX(c) AS BIGINT) AS top_term_n,
-        |        CAST((SUM(c * c) * 10000) // (SUM(c) * SUM(c)) AS BIGINT) AS simpson_bp
-        |      FROM tc GROUP BY 1)
-        |SELECT doc_id, n_tokens, vocab, top_term_n, simpson_bp
-        |FROM d ORDER BY simpson_bp DESC, doc_id LIMIT 20""".stripMargin
-  )
+  /** The setup steps Bench runs (and times separately) before measuring
+    * the matching query; see [[graft.queries.QueryDef.prep]]. */
+  lazy val benchPrepare: Map[String, (SparkSession, String) => Unit] =
+    defs.flatMap(d => d.prep.map(d.name -> _)).toMap
 }

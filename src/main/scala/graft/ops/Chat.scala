@@ -152,8 +152,8 @@ object Chat {
     * once and `array_join` concatenates once: O(rendered length). The
     * CASE guard preserves the fold's null semantics exactly (any null
     * role/content nulls the whole render; array_join alone would SKIP
-    * null fragments) — [[renderChatFold]] keeps the fold form and
-    * ChatSpec pins fold ≡ join over the null/empty edges. */
+    * null fragments) — ChatSpec keeps the fold form and pins
+    * fold ≡ join over the null/empty edges. */
   def renderChat(df: DataFrame, idCol: String, turnsCol: String): DataFrame =
     df.withColumn("rendered", expr(
         s"""CASE WHEN exists($turnsCol, t -> t.role IS NULL OR t.content IS NULL)
@@ -161,19 +161,6 @@ object Chat {
            |  ELSE array_join(transform($turnsCol,
            |    t -> '<|' || t.role || '|>' || chr(10) || t.content || '<|end|>' || chr(10)), '')
            |  END""".stripMargin))
-      .withColumn("content_tokens", expr(
-        s"""CAST(aggregate($turnsCol, 0L,
-           |  (acc, t) -> acc + size(filter(split(t.content, '\\\\s+'), x -> x <> ''))) AS BIGINT)""".stripMargin))
-      .select(col(idCol), col("rendered"), length(col("rendered")).cast("long").as("rendered_chars"),
-        col("content_tokens"))
-
-  /** The original accumulator-fold render, kept as the spec's equivalence
-    * reference for [[renderChat]] (quadratic in rendered length — not a
-    * production path). */
-  private[graft] def renderChatFold(df: DataFrame, idCol: String, turnsCol: String): DataFrame =
-    df.withColumn("rendered", expr(
-        s"""aggregate($turnsCol, CAST('' AS STRING),
-           |  (acc, t) -> acc || '<|' || t.role || '|>' || chr(10) || t.content || '<|end|>' || chr(10))""".stripMargin))
       .withColumn("content_tokens", expr(
         s"""CAST(aggregate($turnsCol, 0L,
            |  (acc, t) -> acc + size(filter(split(t.content, '\\\\s+'), x -> x <> ''))) AS BIGINT)""".stripMargin))

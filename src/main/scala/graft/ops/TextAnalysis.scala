@@ -602,63 +602,13 @@ object TextAnalysis {
     // window → phrase/word-stat aggregates + rescore join → rank window —
     // three corpus-token shuffles on the doc id) collapses into ONE
     // map-only kernel pass per row. RakeKernelSpec pins kernel ≡ the
-    // relational form (kept below as rakeKeyphrasesRelational); the
-    // text_keyphrases oracle replays the relational form in DuckDB.
+    // relational form (kept there as the reference); the text_keyphrases
+    // oracle replays the relational form in DuckDB.
     df.select(col(idCol),
       explode(org.apache.spark.sql.graft.RakeTopK(
         col(textCol), Stopwords("en"), maxLen, k)).as("_kp"))
       .select(col(idCol), col("_kp.rank").as("rank"),
         col("_kp.phrase").as("phrase"), col("_kp.score_milli").as("score_milli"))
-  }
-
-  /** The pre-r18 relational RAKE formulation — retained as the
-    * equivalence reference for RakeKernelSpec (and the shape the DuckDB
-    * oracle replays); not on any query path. */
-  private[graft] def rakeKeyphrasesRelational(df: DataFrame, idCol: String, textCol: String,
-                     maxLen: Int = 4, k: Int = 3): DataFrame = {
-    require(maxLen >= 1 && k >= 1, s"maxLen/k must be >= 1, got $maxLen/$k")
-    val stops = Stopwords("en")
-    val toks = df
-      .select(col(idCol), posexplode(Dedup.tokensCol(col(textCol))).as(Seq("i", "tok")))
-      .filter(col("tok") =!= "")
-    val isStop = col("tok").isin(stops.map(_.asInstanceOf[Any]): _*)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("i"))
-    val seg = toks
-      .withColumn("_s", when(isStop, 1L).otherwise(0L))
-      .withColumn("seg", sum(col("_s")).over(w.rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)))
-      .filter(!isStop)
-    val phrases = seg.groupBy(col(idCol), col("seg"))
-      .agg(count(lit(1)).as("plen"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("i"), col("tok")))),
-          s => s.getField("tok")), " ").as("phrase"),
-        collect_list(col("tok")).as("words"))
-      .filter(col("plen") <= maxLen)
-      .localCheckpoint(false) // feeds BOTH the word stats and the rescore
-    val wordStats = phrases
-      .select(col(idCol), col("plen"), explode(col("words")).as("word"))
-      .groupBy(col(idCol), col("word"))
-      .agg(count(lit(1)).as("freq"), sum(col("plen")).as("deg"))
-      .withColumn("wscore_milli", expr("(1000 * deg) div freq"))
-    val scored = phrases
-      .select(col(idCol), col("seg"), col("phrase"), explode(col("words")).as("word"))
-      .join(wordStats.select(col(idCol).as("_wid"), col("word").as("_wword"),
-        col("wscore_milli")),
-        col(idCol) === col("_wid") && col("word") === col("_wword"))
-      .groupBy(col(idCol), col("seg"), col("phrase"))
-      .agg(sum(col("wscore_milli")).as("score_milli"))
-      // identical phrase texts in one doc carry identical scores (the
-      // word stats are doc-level) — collapse before ranking
-      .groupBy(col(idCol), col("phrase"))
-      .agg(max(col("score_milli")).as("score_milli"))
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(desc("score_milli"), col("phrase"))
-    scored.withColumn("rank", row_number().over(rankW).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col(idCol), col("rank"), col("phrase"), col("score_milli"))
   }
 
   /** TextTiling topic segmentation (Hearst 1997, "TextTiling: Segmenting

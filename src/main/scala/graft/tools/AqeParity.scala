@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   * results. Recorded side-by-side in BASELINE.md.
   *
   * Since r12 this is a PER-ROUND ARTIFACT: with no args it runs the
-  * top-15-by-anchor family (derived from [[graft.BenchAnchors.Sf01]] at
-  * runtime, so it tracks re-pins), amortizes persisted builds through
+  * top-15-by-anchor family (derived from the queries' bench anchors,
+  * [[graft.Bench.anchors]], at runtime, so it tracks re-pins), amortizes persisted builds through
   * `SparkEntry.benchPrepare` exactly like `graft.Bench`, and writes the
   * full record to `AQE_LOCAL.json` (override: SPARK_GRAFT_AQE_OUT) —
   * copied to `AQE_r<N>.json` beside the round's BENCH. Drift rule (see
@@ -32,11 +32,10 @@ import org.apache.spark.sql.SparkSession
   * `spark.sql.adaptive.coalescePartitions.enabled=false`).
   */
 object AqeParity {
-  /** The K largest-anchor queries that exist in the registry — the rows
-    * where an AQE-sensitive plan regression would cost the most. */
+  /** The K largest-anchor queries — the rows where an AQE-sensitive plan
+    * regression would cost the most. */
   private[tools] def topByAnchor(k: Int): Seq[String] =
-    graft.BenchAnchors.Sf01.toSeq
-      .filter { case (n, _) => graft.SparkEntry.queries.contains(n) }
+    graft.Bench.anchors.toSeq
       .sortBy { case (n, a) => (-a, n) }
       .take(k).map(_._1)
 

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Min-of-N scale-linearity audit harness: times a set of queries across a
   * set of SF directories IN THE SAME JVM AND WINDOW, so per-decade slopes
@@ -72,7 +73,7 @@ object ScaleAudit {
     val warmDir = if (new java.io.File(small).isDirectory) small else dirs.head
     for (n <- names) {
       try graft.SparkEntry.queries(n)(spark, warmDir).count()
-      catch { case e: Throwable => System.err.println(s"[audit] warmup $n failed: ${e.getMessage}") }
+      catch { case NonFatal(e) => System.err.println(s"[audit] warmup $n failed: ${e.getMessage}") }
     }
     reclaim()
     // dirs outermost so each (query, dir) cell's reps are contiguous — the
@@ -88,7 +89,7 @@ object ScaleAudit {
         val t0 = System.nanoTime()
         val ok =
           try { graft.SparkEntry.queries(n)(spark, dir).count(); true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[audit] $n @ $dir failed: ${e.getMessage}"); false }
         val dt = (System.nanoTime() - t0) / 1e9
         reclaim()

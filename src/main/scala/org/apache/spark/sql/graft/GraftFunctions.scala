@@ -9,29 +9,28 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * access. */
 object GraftFunctions {
 
-  val cosineBuilder: Seq[Expression] => Expression =
-    exprs => CosineSimilarity(exprs(0), exprs(1))
+  /** A native expression under its SQL name. */
+  final case class SqlFunction(name: String, clazz: Class[_ <: Expression],
+                               builder: Seq[Expression] => Expression) {
+    def info: ExpressionInfo = new ExpressionInfo(clazz.getName, name)
+  }
 
-  val chunkWindowsBuilder: Seq[Expression] => Expression =
-    exprs => ChunkWindows(exprs(0), exprs(1), exprs(2))
-
-  val mortonBuilder: Seq[Expression] => Expression =
-    exprs => MortonInterleave(exprs(0), exprs(1), exprs(2))
-
-  val sortedIntersectBuilder: Seq[Expression] => Expression =
-    exprs => SortedIntersectCount(exprs(0), exprs(1))
+  /** The SQL functions both registration routes install. */
+  val all: Seq[SqlFunction] = Seq(
+    SqlFunction("cosine_similarity", classOf[CosineSimilarity],
+      exprs => CosineSimilarity(exprs(0), exprs(1))),
+    SqlFunction("chunk_windows", classOf[ChunkWindows],
+      exprs => ChunkWindows(exprs(0), exprs(1), exprs(2))),
+    SqlFunction("morton_interleave", classOf[MortonInterleave],
+      exprs => MortonInterleave(exprs(0), exprs(1), exprs(2))),
+    SqlFunction("sorted_intersect_count", classOf[SortedIntersectCount],
+      exprs => SortedIntersectCount(exprs(0), exprs(1))))
 
   /** Make `cosine_similarity(a, b)`, `chunk_windows(text, size, ov)`,
     * `morton_interleave(x, y, bits)` and `sorted_intersect_count(a, b)`
     * available to SQL in this session. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("cosine_similarity", cosineBuilder, "scala_udf")
-    registry.createOrReplaceTempFunction("chunk_windows", chunkWindowsBuilder, "scala_udf")
-    registry.createOrReplaceTempFunction("morton_interleave", mortonBuilder, "scala_udf")
-    registry.createOrReplaceTempFunction("sorted_intersect_count", sortedIntersectBuilder, "scala_udf")
+    all.foreach(f => registry.createOrReplaceTempFunction(f.name, f.builder, "scala_udf"))
   }
-
-  def info(name: String, clazz: Class[_]): ExpressionInfo =
-    new ExpressionInfo(clazz.getName, name)
 }

@@ -22,8 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`array_join(slice(...))`), one md5 HEX string (32-char UTF8String),
   * two `substring` slices, two `conv(_, 16, 10)` radix parses, and
   * numHashes hash-aggregate probes. A scoped decomposition at sf0.1
-  * (tools/KernelProbe) measured the scan at 0.10 s and the full signature
-  * pipeline at 1.17 s — more than 10× the data cost, with `conv` alone
+  * measured the scan at 0.10 s and the full signature pipeline at 1.17 s — more than 10× the data cost, with `conv` alone
   * (0.26 s) costing more than the md5 digests themselves (0.19 s).
   *
   * These kernels compute the SAME values — bit-for-bit, the DuckDB

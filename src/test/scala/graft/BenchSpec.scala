@@ -16,10 +16,16 @@ class BenchSpec extends AnyFunSuite {
       "failed prep must report -1 (failed-query convention), not its time-to-failure — " +
         "otherwise a broken index build masquerades as a fast prep while the query " +
         "silently re-times the build")
+    // a fatal error (interrupt, OOM) is not a failed prep: it propagates
+    // instead of becoming a -1 row in an artifact of record
+    intercept[InterruptedException] {
+      Bench.timePreps(spark, "unused-dir", Map(
+        "fatal" -> ((_, _) => throw new InterruptedException("synthetic interrupt"))))
+    }
   }
 
   test("every bench anchor names a real query (BASELINE.md and SparkEntry stay in sync)") {
-    val unknown = BenchAnchors.Sf01.keySet -- SparkEntry.queries.keySet
+    val unknown = Bench.anchors.keySet -- SparkEntry.queries.keySet
     assert(unknown.isEmpty,
       s"anchors without a matching query (renamed or removed?): ${unknown.mkString(", ")}")
   }
@@ -113,16 +119,12 @@ class BenchSpec extends AnyFunSuite {
     assert(clean.get("stall_retries").isObject && clean.get("stall_retries").size() == 0)
   }
 
-  test("anchor_gaps lists the anchors<->queries symmetric difference in the JSON line") {
-    // every gap entry is labeled; with the table in sync the field is empty.
-    // The drift denominators silently shrink for any query_without_anchor
-    // row, so the gap list is the tripwire that keeps the table current.
+  test("anchor_gaps lists the queries without an anchor in the JSON line") {
+    // the drift denominators silently shrink for any query_without_anchor
+    // row, so the gap list is the tripwire that keeps the anchors current
     val gaps = Bench.anchorGaps
-    val unanchored = SparkEntry.queries.keySet -- BenchAnchors.Sf01.keySet
-    val orphans = BenchAnchors.Sf01.keySet -- SparkEntry.queries.keySet
-    assert(gaps.size == unanchored.size + orphans.size)
-    unanchored.foreach(n => assert(gaps.contains(s"query_without_anchor:$n")))
-    orphans.foreach(n => assert(gaps.contains(s"anchor_without_query:$n")))
+    val unanchored = SparkEntry.defs.filter(_.anchorS.isEmpty).map(_.name)
+    assert(gaps == unanchored.sorted.map("query_without_anchor:" + _))
     val root = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Bench.renderJson(Map("q1_agg" -> 0.5), Map(), "/root/testdata/sf0.1"))
     val arr = root.get("anchor_gaps")

@@ -1,10 +1,29 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Chat
 
 case class ChatTurn(role: String, content: String)
 case class ChatConv(conv_id: Long, turns: Seq[ChatTurn])
+
+/** Test-only reference forms for [[Chat]]. */
+object ChatReference {
+  import org.apache.spark.sql.functions._
+
+  /** The original accumulator-fold render, kept as the spec's equivalence
+    * reference for [[Chat.renderChat]] (quadratic in rendered length — not a
+    * production path). */
+  def renderChatFold(df: DataFrame, idCol: String, turnsCol: String): DataFrame =
+    df.withColumn("rendered", expr(
+        s"""aggregate($turnsCol, CAST('' AS STRING),
+           |  (acc, t) -> acc || '<|' || t.role || '|>' || chr(10) || t.content || '<|end|>' || chr(10))""".stripMargin))
+      .withColumn("content_tokens", expr(
+        s"""CAST(aggregate($turnsCol, 0L,
+           |  (acc, t) -> acc + size(filter(split(t.content, '\\\\s+'), x -> x <> ''))) AS BIGINT)""".stripMargin))
+      .select(col(idCol), col("rendered"), length(col("rendered")).cast("long").as("rendered_chars"),
+        col("content_tokens"))
+}
 
 class ChatSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -116,7 +135,7 @@ class ChatSpec extends AnyFunSuite {
       .toDS.toDF
     val got = Chat.renderChat(convs, "conv_id", "turns")
       .orderBy("conv_id").collect().toSeq
-    val ref = Chat.renderChatFold(convs, "conv_id", "turns")
+    val ref = ChatReference.renderChatFold(convs, "conv_id", "turns")
       .orderBy("conv_id").collect().toSeq
     assert(got == ref)
     // and the null-propagation edges hold the fold's exact semantics

@@ -111,7 +111,7 @@ class ScaleSpec extends AnyFunSuite {
     // and the planned file set confined to _day ∈ [d0+2, d0+4]
     val dir = TestSpark.sf0001
     assert(SparkEntry.queries("events_pruned")(spark, dir).collect().nonEmpty)
-    val path = SparkEntry.ensureEventsPartitioned(spark, dir)
+    val path = graft.queries.QuerySupport.ensureEventsPartitioned(spark, dir)
     val ev = spark.read.parquet(path)
     val dayType = ev.schema("_day").dataType
     val d0 = ev.agg(min(col("_day"))).head.get(0).asInstanceOf[Number].longValue
